@@ -72,7 +72,8 @@ object Bench {
         // inputs), but MEMORY_AND_DISK blocks otherwise outlive the gate
         // until a full GC — by late suite they evict execution memory and
         // inflate unrelated gates (round-14 anti-scaling, VERDICT item 2)
-        graft.ops.CheckpointUtil.releaseAll(spark)
+        // blocking: the removal must finish before the next rep's t0
+        graft.ops.CheckpointUtil.releaseAll(spark, blocking = true)
         t
       }
       name -> (if (times.exists(_ < 0)) -1.0 else times.min)

@@ -35,7 +35,7 @@ object IsolateBench {
       val t0 = System.nanoTime()
       force(fn(spark, sfDir))
       val t = (System.nanoTime() - t0) / 1e9
-      graft.ops.CheckpointUtil.releaseAll(spark) // outside the timer, as in Bench
+      graft.ops.CheckpointUtil.releaseAll(spark, blocking = true) // outside the timer, as in Bench
       t
     }
     println(s"""{"gate":"$name","sf":"$sfDir","reps":${times.mkString("[", ",", "]")},"min":${times.min}}""")

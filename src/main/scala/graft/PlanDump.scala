@@ -39,10 +39,12 @@ object PlanDump {
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
         System.err.println(s"[plandump] wrote $name ($suffix)")
+        // inside the try too: a context left broken by this gate must not
+        // abort the remaining dumps (the next gate's release frees this one's)
+        graft.ops.CheckpointUtil.releaseAll(spark)
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
       }
-      graft.ops.CheckpointUtil.releaseAll(spark)
     } finally spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft.agg
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.graftshim.{AbstractDataType, TypeCollection}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -89,40 +89,20 @@ case class HllMergeAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[HllMergeAgg.Holder]
-  with UnaryLike[Expression] with ImplicitCastInputTypes {
+  extends DecodeOnceMergeAgg[Hll] with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
   override def prettyName: String = "hll_merge_agg"
 
-  override def createAggregationBuffer(): HllMergeAgg.Holder =
-    new HllMergeAgg.Holder(null)
-
-  override def update(buf: HllMergeAgg.Holder,
-      input: InternalRow): HllMergeAgg.Holder = {
-    val v = child.eval(input)
-    if (v != null) {
-      val other = Hll.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf.s == null) buf.s = other else buf.s.merge(other)
-    }
-    buf
-  }
-
-  override def merge(b1: HllMergeAgg.Holder,
-      b2: HllMergeAgg.Holder): HllMergeAgg.Holder = {
-    if (b2.s != null) { if (b1.s == null) b1.s = b2.s else b1.s.merge(b2.s) }
-    b1
-  }
-
-  override def eval(buf: HllMergeAgg.Holder): Any =
-    if (buf.s == null) null else buf.s.serialize()
-  override def serialize(buf: HllMergeAgg.Holder): Array[Byte] =
-    if (buf.s == null) Array.emptyByteArray else buf.s.serialize()
-  override def deserialize(b: Array[Byte]): HllMergeAgg.Holder =
-    if (b.isEmpty) new HllMergeAgg.Holder(null)
-    else new HllMergeAgg.Holder(Hll.deserialize(b))
+  // any valid blob re-serializes to itself, and its checks are O(1)
+  override protected def admit(b: Array[Byte]): Boolean = { Hll.checkSerialized(b); true }
+  override protected def checkHeader(b: Array[Byte]): Unit = Hll.checkSerialized(b)
+  override protected def decode(b: Array[Byte]): Hll = Hll.deserialize(b)
+  override protected def encode(h: Hll): Array[Byte] = h.serialize()
+  override protected def mergeBytes(into: Hll, b: Array[Byte]): Unit = into.mergeSerialized(b)
+  override protected def mergeSketch(into: Hll, other: Hll): Unit = into.merge(other)
 
   override def withNewMutableAggBufferOffset(n: Int): HllMergeAgg =
     copy(mutableAggBufferOffset = n)
@@ -130,8 +110,4 @@ case class HllMergeAgg(
     copy(inputAggBufferOffset = n)
   override protected def withNewChildInternal(c: Expression): HllMergeAgg =
     copy(child = c)
-}
-
-object HllMergeAgg {
-  final class Holder(var s: Hll)
 }

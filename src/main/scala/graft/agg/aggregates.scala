@@ -20,6 +20,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * O(groups × sketch size) — row-count independent — which is what makes the
   * design hold at 100 TB (SURVEY.md §7.4 item 9). Spill safety comes from the
   * sort-based fallback (spark.sql.objectHashAggregate.sortBased.fallbackThreshold).
+  *
+  * The merge aggregates over stored sketches (tdigest_merge_agg,
+  * ss_merge_agg, hll_merge_agg; [[DecodeOnceMergeAgg]]) decode each sketch at
+  * most once, and only when a merge needs it: a buffer keeps the first
+  * sketch's bytes, checked on arrival as decoding would check them, until a
+  * second sketch arrives; serialize / eval of such a buffer return the bytes
+  * and a shuffled buffer's deserialize checks only its header. Output stays
+  * byte-identical to decode → merge → serialize.
   */
 object StatsStruct {
   val schema: StructType = StructType(Seq(
@@ -210,50 +218,89 @@ case class TDigestAgg(
     copy(first = f, second = s, third = t)
 }
 
-/** Mutable holder so merge-aggregates can adopt parameters (compression,
-  * capacity, key type) from the first sketch they see. */
-final class TDigestHolder(var t: TDigest)
+/** Buffer of a merge aggregate ([[DecodeOnceMergeAgg]]): empty (both
+  * null), the first sketch's checked bytes, or the decoded sketch. */
+final class MergeBuffer[S >: Null <: AnyRef](var bytes: Array[Byte], var sketch: S)
+
+/** The decode-once buffer lifecycle of the merge aggregates (see the file
+  * header). Bytes are kept only when `encode(decode(b)) == b` ([[admit]]),
+  * and every merge runs the same kernel calls as decoding first would, so
+  * output is byte-identical to decode → merge → serialize. In a rollup where
+  * most partial-stage groups see one stored sketch, most sketches are never
+  * decoded at all. */
+trait DecodeOnceMergeAgg[S >: Null <: AnyRef]
+  extends TypedImperativeAggregate[MergeBuffer[S]] with UnaryLike[Expression] {
+
+  /** Check a stored sketch, throwing what `decode` would throw; false when
+    * it must be decoded now because `encode(decode(b))` would differ. */
+  protected def admit(b: Array[Byte]): Boolean
+  /** O(1) check of a shuffled buffer's header. */
+  protected def checkHeader(b: Array[Byte]): Unit
+  protected def decode(b: Array[Byte]): S
+  protected def encode(s: S): Array[Byte]
+  /** `into.merge(decode(b))`. */
+  protected def mergeBytes(into: S, b: Array[Byte]): Unit
+  protected def mergeSketch(into: S, other: S): Unit
+
+  override def createAggregationBuffer(): MergeBuffer[S] = new MergeBuffer[S](null, null)
+
+  private def decoded(buf: MergeBuffer[S]): S = {
+    if (buf.sketch == null) { buf.sketch = decode(buf.bytes); buf.bytes = null }
+    buf.sketch
+  }
+
+  override def update(buf: MergeBuffer[S], input: InternalRow): MergeBuffer[S] = {
+    val v = child.eval(input)
+    if (v != null) {
+      val b = v.asInstanceOf[Array[Byte]]
+      if (buf.bytes != null || buf.sketch != null) mergeBytes(decoded(buf), b)
+      else if (admit(b)) buf.bytes = b
+      else buf.sketch = decode(b)
+    }
+    buf
+  }
+
+  override def merge(b1: MergeBuffer[S], b2: MergeBuffer[S]): MergeBuffer[S] = {
+    if (b1.bytes == null && b1.sketch == null) { b1.bytes = b2.bytes; b1.sketch = b2.sketch }
+    else if (b2.sketch != null) mergeSketch(decoded(b1), b2.sketch)
+    else if (b2.bytes != null) mergeBytes(decoded(b1), b2.bytes)
+    b1
+  }
+
+  override def eval(buf: MergeBuffer[S]): Any =
+    if (buf.bytes != null) buf.bytes
+    else if (buf.sketch != null) encode(buf.sketch)
+    else null
+  override def serialize(buf: MergeBuffer[S]): Array[Byte] =
+    if (buf.bytes != null) buf.bytes
+    else if (buf.sketch != null) encode(buf.sketch)
+    else Array.emptyByteArray
+  override def deserialize(b: Array[Byte]): MergeBuffer[S] =
+    if (b.isEmpty) createAggregationBuffer()
+    else { checkHeader(b); new MergeBuffer[S](b, null) }
+}
 
 /** tdigest_merge_agg(sketch_col) → merged sketch: re-aggregates stored
-  * t-digest sketch columns (reference merge T11). */
+  * t-digest sketch columns (reference merge T11). The result takes the
+  * first sketch's compression. */
 case class TDigestMergeAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TDigestHolder]
-  with UnaryLike[Expression] with ImplicitCastInputTypes {
+  extends DecodeOnceMergeAgg[TDigest] with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
   override def prettyName: String = "tdigest_merge_agg"
 
-  override def createAggregationBuffer(): TDigestHolder = new TDigestHolder(null)
-
-  override def update(buf: TDigestHolder, input: InternalRow): TDigestHolder = {
-    val v = child.eval(input)
-    if (v != null) {
-      val other = TDigest.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf.t == null) buf.t = other // fresh object owned by the buffer
-      else buf.t.merge(other)
-    }
-    buf
-  }
-
-  override def merge(b1: TDigestHolder, b2: TDigestHolder): TDigestHolder = {
-    if (b2.t != null) {
-      if (b1.t == null) b1.t = b2.t
-      else b1.t.merge(b2.t)
-    }
-    b1
-  }
-
-  override def eval(buf: TDigestHolder): Any =
-    if (buf.t == null) null else buf.t.serialize()
-  override def serialize(buf: TDigestHolder): Array[Byte] =
-    if (buf.t == null) Array.emptyByteArray else buf.t.serialize()
-  override def deserialize(b: Array[Byte]): TDigestHolder =
-    new TDigestHolder(if (b.isEmpty) null else TDigest.deserialize(b))
+  // a valid digest re-serializes to its own bytes, and its checks are O(1)
+  override protected def admit(b: Array[Byte]): Boolean = { TDigest.checkSerialized(b); true }
+  override protected def checkHeader(b: Array[Byte]): Unit = TDigest.checkSerialized(b)
+  override protected def decode(b: Array[Byte]): TDigest = TDigest.deserialize(b)
+  override protected def encode(t: TDigest): Array[Byte] = t.serialize()
+  override protected def mergeBytes(into: TDigest, b: Array[Byte]): Unit = into.mergeSerialized(b)
+  override protected def mergeSketch(into: TDigest, other: TDigest): Unit = into.merge(other)
 
   override def withNewMutableAggBufferOffset(n: Int): TDigestMergeAgg =
     copy(mutableAggBufferOffset = n)
@@ -719,69 +766,51 @@ case class VecExactSumAgg(
     copy(child = c)
 }
 
-final class SSHolder(var tag: Byte, var s: SpaceSavingBase)
+/** A decoded Space-Saving sketch with its key-type tag. */
+final class TaggedSpaceSaving(val tag: Byte, val s: SpaceSavingBase)
 
-/** ss_merge_agg(sketch_col) → merged Space-Saving sketch (Cafaro merge S8). */
+/** ss_merge_agg(sketch_col) → merged Space-Saving sketch (Cafaro merge S8).
+  * int64-arm sketches are kept as bytes when canonical; object-arm
+  * (string / binary) sketches are decoded on arrival, since checking their
+  * keys costs as much as decoding them. */
 case class SpaceSavingMergeAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SSHolder]
-  with UnaryLike[Expression] with ImplicitCastInputTypes {
+  extends DecodeOnceMergeAgg[TaggedSpaceSaving] with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
   override def prettyName: String = "ss_merge_agg"
 
-  override def createAggregationBuffer(): SSHolder = new SSHolder(-1, null)
+  override protected def admit(b: Array[Byte]): Boolean = SpaceSaving.canonicalLong(b)
+  override protected def checkHeader(b: Array[Byte]): Unit = SpaceSaving.checkHeader(b)
 
-  private def parse(b: Array[Byte]): (Byte, SpaceSavingBase) = {
+  override protected def decode(b: Array[Byte]): TaggedSpaceSaving = {
     val tag = SpaceSaving.deserializeTag(b)
-    val s: SpaceSavingBase =
+    new TaggedSpaceSaving(tag,
       if (tag == SpaceSaving.TagString || tag == SpaceSaving.TagBinary)
         SpaceSaving.deserializeObj(b)
-      else SpaceSaving.deserializeLong(b)
-    (tag, s)
+      else SpaceSaving.deserializeLong(b))
   }
 
-  private def mergeInto(h: SSHolder, tag: Byte, other: SpaceSavingBase): Unit = {
-    if (h.s == null) { h.tag = tag; h.s = other }
-    else {
-      require(h.tag == tag, "All arguments to merge must have same dtype")
-      (h.s, other) match {
-        case (a: SpaceSavingLong, b: SpaceSavingLong) => a.merge(b)
-        case (a: SpaceSavingObj, b: SpaceSavingObj) => a.merge(b)
-        case _ => throw new IllegalStateException("mismatched space-saving buffers")
-      }
+  override protected def encode(t: TaggedSpaceSaving): Array[Byte] = t.s match {
+    case a: SpaceSavingLong => a.serialize(t.tag)
+    case a: SpaceSavingObj => a.serialize(t.tag)
+  }
+
+  override protected def mergeBytes(into: TaggedSpaceSaving, b: Array[Byte]): Unit =
+    mergeSketch(into, decode(b))
+
+  override protected def mergeSketch(into: TaggedSpaceSaving, other: TaggedSpaceSaving): Unit = {
+    require(into.tag == other.tag, "All arguments to merge must have same dtype")
+    (into.s, other.s) match {
+      case (a: SpaceSavingLong, b: SpaceSavingLong) => a.merge(b)
+      case (a: SpaceSavingObj, b: SpaceSavingObj) => a.merge(b)
+      case _ => throw new IllegalStateException("mismatched space-saving buffers")
     }
   }
-
-  override def update(buf: SSHolder, input: InternalRow): SSHolder = {
-    val v = child.eval(input)
-    if (v != null) {
-      val (tag, s) = parse(v.asInstanceOf[Array[Byte]])
-      mergeInto(buf, tag, s)
-    }
-    buf
-  }
-
-  override def merge(b1: SSHolder, b2: SSHolder): SSHolder = {
-    if (b2.s != null) mergeInto(b1, b2.tag, b2.s)
-    b1
-  }
-
-  override def eval(buf: SSHolder): Any =
-    if (buf.s == null) null else serialize(buf)
-  override def serialize(buf: SSHolder): Array[Byte] =
-    if (buf.s == null) Array.emptyByteArray
-    else buf.s match {
-      case a: SpaceSavingLong => a.serialize(buf.tag)
-      case a: SpaceSavingObj => a.serialize(buf.tag)
-    }
-  override def deserialize(b: Array[Byte]): SSHolder =
-    if (b.isEmpty) new SSHolder(-1, null)
-    else { val (t, s) = parse(b); new SSHolder(t, s) }
 
   override def withNewMutableAggBufferOffset(n: Int): SpaceSavingMergeAgg =
     copy(mutableAggBufferOffset = n)

@@ -44,6 +44,18 @@ final class Hll private (val p: Int, val registers: Array[Byte]) {
     }
   }
 
+  /** `merge(Hll.deserialize(bytes))`, reading the registers in place. */
+  def mergeSerialized(bytes: Array[Byte]): Unit = {
+    val op = Hll.checkSerialized(bytes)
+    require(op == p, s"precision mismatch ($p vs $op)")
+    var i = 0
+    while (i < registers.length) {
+      val r = bytes(i + 1)
+      if (r > registers(i)) registers(i) = r
+      i += 1
+    }
+  }
+
   /** Registers with ρ > 0 — the linear-counting occupancy. */
   def nonzero: Int = {
     var n = 0
@@ -63,7 +75,7 @@ final class Hll private (val p: Int, val registers: Array[Byte]) {
     var sum = 0.0
     var i = 0
     while (i < registers.length) {
-      sum += java.lang.Math.pow(2.0, -registers(i).toDouble)
+      sum += Hll.InversePow2(registers(i) & 0xFF)
       i += 1
     }
     val raw = alpha * mm * mm / sum
@@ -82,12 +94,23 @@ final class Hll private (val p: Int, val registers: Array[Byte]) {
 }
 
 object Hll {
-  def deserialize(bytes: Array[Byte]): Hll = {
+  /** 2^-r for every register byte r (negative bytes included), indexed by
+    * `r & 0xFF`: the estimator's harmonic-sum terms, bit-for-bit. */
+  private val InversePow2: Array[Double] =
+    Array.tabulate(256)(i => java.lang.Math.pow(2.0, -i.toByte.toDouble))
+
+  /** Validate a serialized sketch (O(1)) and return its precision. */
+  def checkSerialized(bytes: Array[Byte]): Int = {
     require(bytes.length >= 1, "empty HLL blob")
     val p = bytes(0).toInt
     require(p >= 4 && p <= 16, s"corrupt HLL blob (p=$p)")
     require(bytes.length == 1 + (1 << p),
       s"corrupt HLL blob (${bytes.length} bytes for p=$p)")
+    p
+  }
+
+  def deserialize(bytes: Array[Byte]): Hll = {
+    val p = checkSerialized(bytes)
     val regs = new Array[Byte](1 << p)
     System.arraycopy(bytes, 1, regs, 0, regs.length)
     new Hll(p, regs)

@@ -44,21 +44,39 @@ abstract class SpaceSavingBase(val capacity: Int) extends Serializable {
     * degenerates to O(n·capacity) — at 100 TB scale the dominant cost.
     * The run-head index lets the walk hop entire equal-count runs in O(1)
     * while producing EXACTLY the same insertion position (ordering and
-    * tie-breaking are unchanged; only the walk is accelerated). */
-  private val runHead = new java.util.HashMap[java.lang.Long, Integer]()
+    * tie-breaking are unchanged; only the walk is accelerated).
+    *
+    * Built from the list on the first insert walk ([[runHeads]]) and kept
+    * up to date from then on, so a decoded sketch that is only read or
+    * merged from never pays for it. */
+  private var runHead: LongIntMap = null
+
+  private def runHeads: LongIntMap = {
+    if (runHead == null) {
+      runHead = new LongIntMap(capacity)
+      if (head != NIL) {
+        var x = head
+        do {
+          if (x == head || counts(prev(x)) != counts(x)) runHead.put(counts(x), x)
+          x = next(x)
+        } while (x != head)
+      }
+    }
+    runHead
+  }
 
   /** Record slot x (just linked / repositioned) as its run's head if it is
     * the head-most node of its count run. */
   @inline private def noteLinked(x: Int): Unit =
-    if (x == head || counts(prev(x)) != counts(x)) runHead.put(counts(x), x)
+    if (runHead != null && (x == head || counts(prev(x)) != counts(x)))
+      runHead.put(counts(x), x)
 
   /** Fix the run-head index before slot x leaves its current count run
     * (count change or physical unlink). Must run while x is still linked
     * and still carries its OLD count. */
-  @inline private def noteUnlink(x: Int): Unit = {
+  @inline private def noteUnlink(x: Int): Unit = if (runHead != null) {
     val c = counts(x)
-    val rh = runHead.get(c)
-    if (rh != null && rh.intValue() == x) {
+    if (runHead.get(c) == x) {
       val nx = next(x)
       if (nx != x && nx != head && counts(nx) == c) runHead.put(c, nx)
       else runHead.remove(c)
@@ -81,6 +99,7 @@ abstract class SpaceSavingBase(val capacity: Int) extends Serializable {
   protected final def counterInsert(c: Int, prevIdx0: Int): Unit = {
     var prevIdx = prevIdx0
     val tail = prev(head)
+    val runHead = runHeads
     var done = false
     while (!done) {
       if (counterGe(prevIdx, counts(c), errors(c), 0L)) done = true
@@ -88,7 +107,7 @@ abstract class SpaceSavingBase(val capacity: Int) extends Serializable {
         if (counts(prevIdx) < counts(c)) {
           // every node of this run fails counterGe — hop to its head
           val rh = runHead.get(counts(prevIdx))
-          if (rh != null) prevIdx = rh.intValue()
+          if (rh != NIL) prevIdx = rh
         }
         prevIdx = prev(prevIdx)
         if (prevIdx == tail) { head = c; done = true }
@@ -201,79 +220,31 @@ abstract class SpaceSavingBase(val capacity: Int) extends Serializable {
 /** Space-Saving over int64 keys (also carries bit-cast float64 keys). */
 final class SpaceSavingLong(capacity0: Int) extends SpaceSavingBase(capacity0) {
   val items = new Array[Long](capacity)
-  // open-addressing item→slot index; tables are tiny (≤ ~4·capacity slots)
-  private val mask = {
-    var m = 4
-    while (m < capacity * 2) m <<= 1
-    m - 1
-  }
-  private val hKeys = new Array[Long](mask + 1)
-  private val hVals = new Array[Int](mask + 1)
-  java.util.Arrays.fill(hVals, NIL)
+  private val index = new LongIntMap(capacity) // item → slot
 
-  /** khash int64 hash (crick/klib/khash.h:612-613). */
-  @inline private def hashOf(k: Long): Int =
-    (((k >> 33) ^ k ^ (k << 11)) & mask).toInt
-
-  private def hFind(item: Long): Int = {
-    var i = hashOf(item)
-    while (hVals(i) != NIL) {
-      if (hKeys(i) == item) return i
-      i = (i + 1) & mask
-    }
-    i
-  }
-
-  private def hRemove(item: Long): Unit = {
-    // tombstone-free removal via backward-shift deletion
-    var i = hFind(item)
-    if (hVals(i) == NIL) return
-    hVals(i) = NIL
-    var j = (i + 1) & mask
-    while (hVals(j) != NIL) {
-      val ideal = hashOf(hKeys(j))
-      // can slot j's entry legally move to i? (ideal position not between i and j)
-      val between =
-        if (i <= j) ideal > i && ideal <= j
-        else ideal > i || ideal <= j
-      if (!between) {
-        hKeys(i) = hKeys(j); hVals(i) = hVals(j)
-        hVals(j) = NIL
-        i = j
-      }
-      j = (j + 1) & mask
-    }
-  }
-
-  def lookup(item: Long): Int = {
-    val i = hFind(item)
-    if (hVals(i) == NIL) NIL else hVals(i)
-  }
+  def lookup(item: Long): Int = index.get(item)
 
   /** Evict slot's item and replace (spsv_swap, space_saving_stubs.c.in:186-210). */
   private def swap(index: Int, item: Long, count: Long, error: Long): Unit = {
-    hRemove(items(index))
+    this.index.remove(items(index))
     items(index) = item
-    val i = hFind(item)
-    hKeys(i) = item; hVals(i) = index
+    this.index.put(item, index)
     updateCounter(index, count, error)
   }
 
   /** spsv_add (space_saving_stubs.c.in:213-250). */
   def add(item: Long, count: Long = 1L): Unit = {
-    val i = hFind(item)
-    if (hVals(i) != NIL) {
-      val index = hVals(i)
-      updateCounter(index, counts(index) + count, errors(index))
+    val slot = index.get(item)
+    if (slot != NIL) {
+      updateCounter(slot, counts(slot) + count, errors(slot))
     } else if (size == capacity) {
       // full: evict global min; NOTE supplied count is ignored (reference quirk)
-      val index = prev(head)
-      swap(index, item, counts(index) + 1L, counts(index))
+      val min = prev(head)
+      swap(min, item, counts(min) + 1L, counts(min))
     } else {
-      val index = counterNew(count, 0L)
-      items(index) = item
-      val j = hFind(item)
-      hKeys(j) = item; hVals(j) = index
+      val slot = counterNew(count, 0L)
+      items(slot) = item
+      index.put(item, slot)
     }
   }
 
@@ -284,18 +255,40 @@ final class SpaceSavingLong(capacity0: Int) extends SpaceSavingBase(capacity0) {
   override protected def replaceItemFrom(slot: Int, other: SpaceSavingBase,
       otherSlot: Int): Unit = {
     val item = other.asInstanceOf[SpaceSavingLong].items(otherSlot)
-    hRemove(items(slot))
+    index.remove(items(slot))
     items(slot) = item
-    val i = hFind(item)
-    hKeys(i) = item; hVals(i) = slot
+    index.put(item, slot)
   }
   override protected def appendItemFrom(other: SpaceSavingBase, otherSlot: Int,
       count: Long, error: Long): Unit = {
     val item = other.asInstanceOf[SpaceSavingLong].items(otherSlot)
     val idx = counterNew(count, error)
     items(idx) = item
-    val j = hFind(item)
-    hKeys(j) = item; hVals(j) = idx
+    index.put(item, idx)
+  }
+
+  /** Link n serialized counters straight into slots 0..n-1 in list order,
+    * in one pass: what [[setState]]'s walk builds from counters already in
+    * list order. False, leaving this sketch unusable, at the first counter
+    * out of order. */
+  private[core] def linkSorted(bytes: Array[Byte], n: Int): Boolean = {
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    var i = 0
+    var off = 9
+    while (i < n) {
+      val item = bb.getLong(off)
+      val c = bb.getLong(off + 8); val e = bb.getLong(off + 16)
+      if (i > 0 && !counterGe(i - 1, c, e, 0L)) return false
+      require(index.get(item) == NIL, "deserialization failed, duplicate items found")
+      index.put(item, i)
+      items(i) = item; counts(i) = c; errors(i) = e
+      prev(i) = if (i == 0) n - 1 else i - 1
+      next(i) = if (i == n - 1) 0 else i + 1
+      i += 1; off += 24
+    }
+    size = n
+    head = if (n == 0) NIL else 0
+    true
   }
 
   /** Rebuild from counters in sorted order (spsv_set_state,
@@ -307,8 +300,7 @@ final class SpaceSavingLong(capacity0: Int) extends SpaceSavingBase(capacity0) {
       require(lookup(its(i)) == NIL, "deserialization failed, duplicate items found")
       val idx = counterNew(cts(i), ers(i))
       items(idx) = its(i)
-      val j = hFind(its(i))
-      hKeys(j) = its(i); hVals(j) = idx
+      index.put(its(i), idx)
       i += 1
     }
   }
@@ -438,32 +430,84 @@ object SpaceSaving {
     tag
   }
 
+  /** khash int64 hash (crick/klib/khash.h:612-613), before masking. */
+  @inline private[core] def khash(k: Long): Int = ((k >> 33) ^ k ^ (k << 11)).toInt
+
+  @inline private def isLongTag(tag: Byte): Boolean = tag == TagLong || tag == TagDouble
+
+  /** O(1) check of the tag, capacity, size and (int64 arm) length, as the
+    * decoders run it before reading counters; returns the tag. */
+  def checkHeader(bytes: Array[Byte]): Byte = {
+    val tag = deserializeTag(bytes)
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    val cap = bb.getInt(1)
+    val n = bb.getInt(5)
+    if (isLongTag(tag))
+      require(cap > 0 && n >= 0 && n <= cap && bytes.length == 9 + 24 * n,
+        s"corrupt space-saving sketch: capacity=$cap size=$n in ${bytes.length} bytes")
+    else
+      require(cap > 0 && n >= 0 && n <= cap,
+        s"corrupt space-saving sketch: capacity=$cap size=$n")
+    tag
+  }
+
+  /** Check a sketch's header, and an int64-arm sketch as [[deserializeLong]]
+    * would (throwing the same errors) without building it. True when the
+    * bytes are canonical int64-arm counters (list order, no duplicate items),
+    * i.e. exactly what `deserializeLong(bytes).serialize(bytes(0))` returns;
+    * false for the object arm or when decoding would reorder the counters
+    * (the decode walk then checks the rest). */
+  def canonicalLong(bytes: Array[Byte]): Boolean =
+    isLongTag(checkHeader(bytes)) && {
+      val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+      val n = bb.getInt(5)
+      val seen = new LongIntMap(n)
+      var i = 0
+      var off = 9
+      var sorted = true
+      var c0 = 0L; var e0 = 0L
+      while (sorted && i < n) {
+        val item = bb.getLong(off)
+        val c = bb.getLong(off + 8); val e = bb.getLong(off + 16)
+        sorted = i == 0 || c0 > c || (c0 == c && e0 <= e)
+        if (sorted) {
+          require(seen.get(item) == -1, "deserialization failed, duplicate items found")
+          seen.put(item, i)
+        }
+        c0 = c; e0 = e
+        i += 1; off += 24
+      }
+      sorted
+    }
+
+  /** Decode an int64-arm sketch. Canonical counters are linked in one pass;
+    * any other order takes the reference insert walk, which normalises it. */
   def deserializeLong(bytes: Array[Byte]): SpaceSavingLong = {
-    deserializeTag(bytes)
+    checkHeader(bytes)
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     bb.get() // tag
     val cap = bb.getInt()
     val n = bb.getInt()
-    require(cap > 0 && n >= 0 && n <= cap && bytes.length == 9 + 24 * n,
-      s"corrupt space-saving sketch: capacity=$cap size=$n in ${bytes.length} bytes")
-    val s = new SpaceSavingLong(cap)
-    val its = new Array[Long](n); val cts = new Array[Long](n); val ers = new Array[Long](n)
-    var i = 0
-    while (i < n) { its(i) = bb.getLong(); cts(i) = bb.getLong(); ers(i) = bb.getLong(); i += 1 }
-    s.setState(its, cts, ers)
-    s
+    val fast = new SpaceSavingLong(cap)
+    if (fast.linkSorted(bytes, n)) fast
+    else {
+      val s = new SpaceSavingLong(cap)
+      val its = new Array[Long](n); val cts = new Array[Long](n); val ers = new Array[Long](n)
+      var i = 0
+      while (i < n) { its(i) = bb.getLong(); cts(i) = bb.getLong(); ers(i) = bb.getLong(); i += 1 }
+      s.setState(its, cts, ers)
+      s
+    }
   }
 
   def deserializeObj(bytes: Array[Byte]): SpaceSavingObj = {
-    val tag = deserializeTag(bytes)
+    val tag = checkHeader(bytes)
     val cs = if (tag == TagBinary) StandardCharsets.ISO_8859_1
              else StandardCharsets.UTF_8
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     bb.get() // tag
     val cap = bb.getInt()
     val n = bb.getInt()
-    require(cap > 0 && n >= 0 && n <= cap,
-      s"corrupt space-saving sketch: capacity=$cap size=$n")
     val s = new SpaceSavingObj(cap)
     val its = new Array[String](n); val cts = new Array[Long](n); val ers = new Array[Long](n)
     var i = 0
@@ -477,5 +521,53 @@ object SpaceSaving {
     }
     s.setState(its, cts, ers)
     s
+  }
+}
+
+/** Open-addressing Long → Int map for at most `maxKeys` keys, -1 for
+  * absent: khash probing, linear, with tombstone-free backward-shift
+  * deletion. Tables are tiny (2-4 slots per key); a slot stores value + 1,
+  * so a fresh table is all empty without a fill. */
+private[core] final class LongIntMap(maxKeys: Int) extends Serializable {
+  private val mask = {
+    var m = 4
+    while (m < maxKeys * 2) m <<= 1
+    m - 1
+  }
+  private val keys = new Array[Long](mask + 1)
+  private val vals = new Array[Int](mask + 1)
+
+  /** Slot holding k, or the empty slot where it would go. */
+  private def find(k: Long): Int = {
+    var i = SpaceSaving.khash(k) & mask
+    while (vals(i) != 0 && keys(i) != k) i = (i + 1) & mask
+    i
+  }
+
+  def get(k: Long): Int = vals(find(k)) - 1
+
+  def put(k: Long, v: Int): Unit = {
+    val i = find(k)
+    keys(i) = k; vals(i) = v + 1
+  }
+
+  def remove(k: Long): Unit = {
+    var i = find(k)
+    if (vals(i) == 0) return
+    vals(i) = 0
+    var j = (i + 1) & mask
+    while (vals(j) != 0) {
+      val ideal = SpaceSaving.khash(keys(j)) & mask
+      // can slot j's entry legally move to i? (ideal position not between i and j)
+      val between =
+        if (i <= j) ideal > i && ideal <= j
+        else ideal > i || ideal <= j
+      if (!between) {
+        keys(i) = keys(j); vals(i) = vals(j)
+        vals(j) = 0
+        i = j
+      }
+      j = (j + 1) & mask
+    }
   }
 }

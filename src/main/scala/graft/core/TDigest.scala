@@ -33,19 +33,23 @@ final class TDigest private (val compression: Double, val size: Int,
 
   var nCentroids: Int = 0
   var totalWeight: Double = 0.0
-  var means: Array[Double] = new Array[Double](size)
-  var weights: Array[Double] = new Array[Double](size)
+  // length >= nCentroids: empty until the first flush swaps in `size`-long
+  // merge scratch; exactly n after deserialize
+  var means: Array[Double] = TDigest.NoCentroids
+  var weights: Array[Double] = TDigest.NoCentroids
 
-  // merge scratch; after queryPrep, cumWeights holds cumulative mid-weights
-  private var mergeMeans: Array[Double] = new Array[Double](size)
-  private var mergeWeights: Array[Double] = new Array[Double](size)
+  // merge scratch, allocated on first flush or query; after queryPrep,
+  // mergeWeights holds cumulative mid-weights
+  private var mergeMeans: Array[Double] = null
+  private var mergeWeights: Array[Double] = null
 
+  // ingest buffer and its sort scratch, allocated on the first add
   private var bufN: Int = 0
   private var bufTotalWeight: Double = 0.0
-  private val bufMeans = new Array[Double](bufferSize)
-  private val bufWeights = new Array[Double](bufferSize)
-  private val sortMeans = new Array[Double](bufferSize)
-  private val sortWeights = new Array[Double](bufferSize)
+  private var bufMeans: Array[Double] = null
+  private var bufWeights: Array[Double] = null
+  private var sortMeans: Array[Double] = null
+  private var sortWeights: Array[Double] = null
 
   def bufferedWeight: Double = bufTotalWeight
   /** Total ingested weight including the unflushed buffer (tdigest.pyx:118-122). */
@@ -59,6 +63,13 @@ final class TDigest private (val compression: Double, val size: Int,
     * [0, n), stable, using (sortMeans, sortWeights) as scratch —
     * mirrors centroid_sort (tdigest_stubs.c:116-175). */
   private def sortBuffer(n: Int): Unit = {
+    // a stable sort of already-sorted input is the identity
+    var s = 1
+    while (s < n && !(bufMeans(s) < bufMeans(s - 1))) s += 1
+    if (s >= n) return
+    if (sortMeans == null) {
+      sortMeans = new Array[Double](bufferSize); sortWeights = new Array[Double](bufferSize)
+    }
     var aM = bufMeans; var aW = bufWeights
     var bM = sortMeans; var bW = sortWeights
     var width = 1
@@ -124,6 +135,9 @@ final class TDigest private (val compression: Double, val size: Int,
   def flush(): Unit = {
     if (bufN == 0) return
     sortBuffer(bufN)
+    if (mergeMeans == null || mergeMeans.length < size) {
+      mergeMeans = new Array[Double](size); mergeWeights = new Array[Double](size)
+    }
     if (min > bufMeans(0)) min = bufMeans(0)
     if (max < bufMeans(bufN - 1)) max = bufMeans(bufN - 1)
 
@@ -161,6 +175,9 @@ final class TDigest private (val compression: Double, val size: Int,
   def add(x: Double, w: Double = 1.0): Unit = {
     if (java.lang.Double.isInfinite(x) || java.lang.Double.isNaN(x) ||
         w <= TDigest.DblEpsilon) return
+    if (bufMeans == null) {
+      bufMeans = new Array[Double](bufferSize); bufWeights = new Array[Double](bufferSize)
+    }
     if (bufN == bufferSize) flush()
     bufMeans(bufN) = x
     bufWeights(bufN) = w
@@ -172,6 +189,9 @@ final class TDigest private (val compression: Double, val size: Int,
     * tdigest_stubs.c:301-316). Invalidated by any subsequent add/merge. */
   def queryPrep(): Unit = {
     flush()
+    if (mergeMeans == null || mergeMeans.length < nCentroids) {
+      mergeMeans = new Array[Double](nCentroids); mergeWeights = new Array[Double](nCentroids)
+    }
     var cum = 0.0
     var i = 0
     while (i < nCentroids) {
@@ -310,6 +330,25 @@ final class TDigest private (val compression: Double, val size: Int,
     }
   }
 
+  /** `merge(TDigest.deserialize(bytes))` without building the other digest:
+    * the same checks, then the same `add` sequence straight from the bytes,
+    * so the result is byte-identical. */
+  def mergeSerialized(bytes: Array[Byte]): Unit = {
+    val n = TDigest.checkSerialized(bytes)
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    if (bb.getDouble(24) != 0) {
+      var i = 0
+      var off = 36
+      while (i < n) {
+        add(bb.getDouble(off), bb.getDouble(off + 8))
+        off += 16; i += 1
+      }
+      val oMin = bb.getDouble(8); val oMax = bb.getDouble(16)
+      if (min > oMin) min = oMin
+      if (max < oMax) max = oMax
+    }
+  }
+
   /** In-place weight scaling (tdigest_scale, tdigest_stubs.c:609-629). */
   def scaleInPlace(factor: Double): Unit = {
     flush()
@@ -350,6 +389,7 @@ final class TDigest private (val compression: Double, val size: Int,
 
 object TDigest {
   val DblEpsilon: Double = java.lang.Math.ulp(1.0) // 2.220446049250313e-16
+  private val NoCentroids = new Array[Double](0)
 
   // FDLIBM asin rational approximation R(z) = z·P(z)/Q(z) on z ∈ [0, 0.25]
   // (freely-distributable libm, Sun Microsystems; standard constants).
@@ -387,30 +427,45 @@ object TDigest {
     if (x < 0) -r else r
   }
 
+  private def centroidCapacity(c: Double): Int = 2 * math.ceil(c).toInt
+
   def apply(compression: Double = 100.0): TDigest = {
     val c = if (compression < 20) 20.0
             else if (compression > 1000) 1000.0 else compression
-    val size = 2 * math.ceil(c).toInt
+    val size = centroidCapacity(c)
     val bufferSize = (7.5 + 0.37 * c - 2e-4 * c * c).toInt
     new TDigest(c, size, bufferSize)
   }
 
-  def deserialize(bytes: Array[Byte]): TDigest = {
+  /** Validate a serialized digest's header and length (O(1)) and return
+    * its centroid count; throws on anything `deserialize` would reject. */
+  def checkSerialized(bytes: Array[Byte]): Int = {
     require(bytes.length >= 36,
       s"not a t-digest sketch: ${bytes.length} bytes (need >= 36)")
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val c = bb.getDouble()
+    val c = bb.getDouble(0)
     require(c >= 20.0 && c <= 1000.0,
       s"not a t-digest sketch: compression $c outside [20, 1000]")
-    val t = TDigest(c)
+    val n = bb.getInt(32)
+    require(n >= 0 && n <= centroidCapacity(c) && bytes.length == 36 + 16 * n,
+      s"corrupt t-digest sketch: $n centroids in ${bytes.length} bytes")
+    n
+  }
+
+  /** Decode into centroid arrays of exactly n entries; scratch and ingest
+    * buffers are allocated only if the digest is later added to or queried. */
+  def deserialize(bytes: Array[Byte]): TDigest = {
+    val n = checkSerialized(bytes)
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    val t = TDigest(bb.getDouble())
     t.min = bb.getDouble(); t.max = bb.getDouble()
     t.totalWeight = bb.getDouble()
-    val n = bb.getInt()
-    require(n >= 0 && n <= t.means.length && bytes.length == 36 + 16 * n,
-      s"corrupt t-digest sketch: $n centroids in ${bytes.length} bytes")
+    bb.getInt() // the centroid count, checked above
     t.nCentroids = n
+    val means = new Array[Double](n); val weights = new Array[Double](n)
     var i = 0
-    while (i < n) { t.means(i) = bb.getDouble(); t.weights(i) = bb.getDouble(); i += 1 }
+    while (i < n) { means(i) = bb.getDouble(); weights(i) = bb.getDouble(); i += 1 }
+    t.means = means; t.weights = weights
     t
   }
 }

@@ -212,20 +212,30 @@ case class SSTopK(left: Expression, right: Expression, itemType: DataType)
         r.setLong(1, s.counts(i)); r.setLong(2, s.errors(i))
         r: Any
       }
+    } else if (SpaceSaving.canonicalLong(bytes)) {
+      // canonical counters are already in list order: read the first k
+      val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      Array.tabulate[Any](math.min(k, bb.getInt(5))) { i =>
+        val off = 9 + 24 * i
+        longRow(tag, bb.getLong(off), bb.getLong(off + 8), bb.getLong(off + 16))
+      }
     } else {
       val s = SpaceSaving.deserializeLong(bytes)
-      s.topkSlots(k).map { i =>
-        val r = new GenericInternalRow(3)
-        if (tag == SpaceSaving.TagDouble && itemType == DoubleType)
-          r.setDouble(0, SpaceSaving.keyToDouble(s.items(i)))
-        else if (itemType == DoubleType) r.setDouble(0, s.items(i).toDouble)
-        else r.setLong(0, s.items(i))
-        r.setLong(1, s.counts(i)); r.setLong(2, s.errors(i))
-        r: Any
-      }
+      s.topkSlots(k).map(i => longRow(tag, s.items(i), s.counts(i), s.errors(i)): Any)
     }
     new GenericArrayData(rows)
   }
+
+  private def longRow(tag: Byte, item: Long, count: Long, error: Long): InternalRow = {
+    val r = new GenericInternalRow(3)
+    if (tag == SpaceSaving.TagDouble && itemType == DoubleType)
+      r.setDouble(0, SpaceSaving.keyToDouble(item))
+    else if (itemType == DoubleType) r.setDouble(0, item.toDouble)
+    else r.setLong(0, item)
+    r.setLong(1, count); r.setLong(2, error)
+    r
+  }
+
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }

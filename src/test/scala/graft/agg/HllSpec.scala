@@ -36,6 +36,35 @@ class HllSpec extends SparkTestBase {
     assert(rt.estimate == all.estimate)
   }
 
+  test("core: estimate's register table equals Math.pow for every byte value") {
+    val r = new scala.util.Random(8)
+    // every byte value, negative ones included, plus random register files
+    val blobs = Seq(Array.tabulate[Byte](256)(_.toByte)) ++
+      Seq.fill(5)(Array.tabulate[Byte](256)(_ => r.nextInt(256).toByte)) ++
+      Seq(Array.fill[Byte](256)(0), Array.tabulate[Byte](256)(i => (i % 5).toByte))
+    blobs.foreach { regs =>
+      val h = Hll.deserialize(8.toByte +: regs)
+      val mm = 256.0
+      val sum = regs.map(b => java.lang.Math.pow(2.0, -b.toDouble)).foldLeft(0.0)(_ + _)
+      val raw = 0.7213 / (1.0 + 1.079 / mm) * mm * mm / sum
+      val zeros = regs.count(_ == 0)
+      val want = if (raw <= 2.5 * mm && zeros > 0) mm * math.log(mm / zeros) else raw
+      assert(h.estimate == want)
+    }
+  }
+
+  test("core: mergeSerialized == merge(deserialize), precision checked") {
+    val a = new Hll(6); val b = new Hll(6)
+    (0 until 500).foreach { i => a.add(KmvHash.ofLong(i)); b.add(KmvHash.ofLong(i * 7L)) }
+    val x = a.copy(); x.merge(Hll.deserialize(b.serialize()))
+    val y = a.copy(); y.mergeSerialized(b.serialize())
+    assert(y.serialize().toSeq == x.serialize().toSeq)
+    assert(intercept[IllegalArgumentException](y.mergeSerialized(new Hll(7).serialize()))
+      .getMessage.contains("precision mismatch"))
+    assert(intercept[IllegalArgumentException](y.mergeSerialized(Array[Byte](6, 1)))
+      .getMessage.contains("corrupt HLL blob"))
+  }
+
   test("agg: small cardinalities are near-exact (linear counting)") {
     val df = (0 until 10000).map(i => i % 37).toDF("v")
     val est = df.agg(gf.hll_distinct(gf.hll_agg(col("v"), 12)))

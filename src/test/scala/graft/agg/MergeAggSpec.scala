@@ -1,0 +1,185 @@
+package graft.agg
+
+import graft.SparkTestBase
+import graft.api.{functions => gf}
+import graft.core.{Hll, SpaceSaving, SpaceSavingLong, SpaceSavingObj, TDigest}
+import java.nio.{ByteBuffer, ByteOrder}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
+import scala.util.Random
+
+/** The decode-once merge aggregates (tdigest_merge_agg, ss_merge_agg,
+  * hll_merge_agg) against the kernel fold deserialize → merge → serialize,
+  * byte for byte, on the hash path and on the sort-based fallback. */
+class MergeAggSpec extends SparkTestBase {
+  import spark.implicits._
+
+  // with the fallback threshold at 2 the hash map spills right after the
+  // second group's only row, so every group is still folded in row order
+  private val GroupSizes = Seq(1, 1, 50, 2, 1)
+  private val Reordered = 4
+
+  private def tdBytes(r: Random, i: Int): Array[Byte] = {
+    val t = TDigest(if (i % 7 == 3) 20.0 else 100.0)
+    // every 11th stored digest is empty, every 13th holds one centroid
+    val n = if (i % 11 == 5) 0 else if (i % 13 == 6) 1 else 1 + r.nextInt(400)
+    (0 until n).foreach(_ => t.add(r.nextGaussian() * 10 + i, 1.0 + r.nextInt(3)))
+    t.serialize()
+  }
+
+  private def ssBytes(r: Random): Array[Byte] = {
+    val s = new SpaceSavingLong(16)
+    (0 until 1 + r.nextInt(80)).foreach(_ => s.add(math.abs(r.nextGaussian() * 12).toLong))
+    s.serialize(SpaceSaving.TagLong)
+  }
+
+  private def ssStrBytes(r: Random): Array[Byte] = {
+    val s = new SpaceSavingObj(8)
+    (0 until 1 + r.nextInt(40)).foreach(_ => s.add(s"k${r.nextInt(20)}"))
+    s.serialize(SpaceSaving.TagString)
+  }
+
+  private def hllBytes(r: Random): Array[Byte] = {
+    val h = new Hll(8)
+    (0 until r.nextInt(300)).foreach(_ => h.add(r.nextLong()))
+    h.serialize()
+  }
+
+  /** Counters of a canonical int64 sketch written back in reverse order:
+    * valid, but decoding re-sorts them. */
+  private def reversed(canonical: Array[Byte]): Array[Byte] = {
+    val n = (canonical.length - 9) / 24
+    val out = canonical.clone()
+    (0 until n).foreach(i =>
+      System.arraycopy(canonical, 9 + 24 * i, out, 9 + 24 * (n - 1 - i), 24))
+    out
+  }
+
+  /** Rows (g, td, ss, sss, hll), each group's rows contiguous; the
+    * [[Reordered]] group's int64 Space-Saving sketch is stored out of list
+    * order. */
+  private lazy val rows: Seq[(Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])] = {
+    val r = new Random(17)
+    var i = 0
+    GroupSizes.zipWithIndex.flatMap { case (n, g) =>
+      (0 until n).map { _ =>
+        i += 1
+        val ss = ssBytes(r)
+        (g, tdBytes(r, i), if (g == Reordered) reversed(ss) else ss, ssStrBytes(r), hllBytes(r))
+      }
+    }
+  }
+
+  private def fold[S](bs: Seq[Array[Byte]], de: Array[Byte] => S)(merge: (S, S) => Unit): S = {
+    val acc = de(bs.head)
+    bs.tail.foreach(b => merge(acc, de(b)))
+    acc
+  }
+
+  private def expected(g: Int): Seq[Seq[Byte]] = {
+    val rs = rows.filter(_._1 == g)
+    Seq(
+      fold(rs.map(_._2), TDigest.deserialize)(_.merge(_)).serialize(),
+      fold(rs.map(_._3), SpaceSaving.deserializeLong)(_.merge(_)).serialize(SpaceSaving.TagLong),
+      fold(rs.map(_._4), SpaceSaving.deserializeObj)(_.merge(_)).serialize(SpaceSaving.TagString),
+      fold(rs.map(_._5), Hll.deserialize)(_.merge(_)).serialize()).map(_.toSeq)
+  }
+
+  /** One partition, rows in group order: every group's fold order is its
+    * row order, on the hash path and on the sort fallback alike. */
+  private def merged(): Map[Int, Seq[Seq[Byte]]] =
+    rows.toDF("g", "td", "ss", "sss", "hll").coalesce(1)
+      .groupBy("g").agg(
+        gf.tdigest_merge_agg(col("td")), gf.ss_merge_agg(col("ss")),
+        gf.ss_merge_agg(col("sss")), gf.hll_merge_agg(col("hll")))
+      .collect().map(r => r.getInt(0) -> (1 to 4).map(r.getAs[Array[Byte]](_).toSeq)).toMap
+
+  private def checkAll(): Unit = {
+    val got = merged()
+    assert(got.keySet == GroupSizes.indices.toSet)
+    val names = Seq("tdigest_merge_agg", "ss_merge_agg(long)", "ss_merge_agg(string)",
+      "hll_merge_agg")
+    GroupSizes.indices.foreach { g =>
+      expected(g).zip(got(g)).zip(names).foreach { case ((e, a), name) =>
+        assert(a == e, s"$name: group $g (${GroupSizes(g)} sketches) differs from the kernel fold")
+      }
+    }
+  }
+
+  test("merge aggregates equal the kernel fold byte for byte (groups of 1, 2, 50)") {
+    checkAll()
+    // a lone out-of-order sketch comes out normalised, not echoed back
+    assert(expected(Reordered)(1) != rows.find(_._1 == Reordered).get._3.toSeq)
+  }
+
+  test("merge aggregates equal the kernel fold under the sort fallback (threshold=2)") {
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val orig = spark.conf.get(key)
+    try { spark.conf.set(key, "2"); checkAll() }
+    finally spark.conf.set(key, orig)
+  }
+
+  test("buffer lifecycle equals the kernel fold for any partial/final tree") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+    import org.apache.spark.sql.types.BinaryType
+    val r = new Random(23)
+    val in = BoundReference(0, BinaryType, nullable = true)
+    type Agg = org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[AnyRef]
+    val kinds: Seq[(Agg, Int => Array[Byte], Seq[Array[Byte]] => Array[Byte])] = Seq(
+      (TDigestMergeAgg(in).asInstanceOf[Agg], (i: Int) => tdBytes(r, i),
+        (bs: Seq[Array[Byte]]) => fold(bs, TDigest.deserialize)(_.merge(_)).serialize()),
+      (SpaceSavingMergeAgg(in).asInstanceOf[Agg], (_: Int) => ssBytes(r),
+        (bs: Seq[Array[Byte]]) =>
+          fold(bs, SpaceSaving.deserializeLong)(_.merge(_)).serialize(SpaceSaving.TagLong)),
+      (HllMergeAgg(in).asInstanceOf[Agg], (_: Int) => hllBytes(r),
+        (bs: Seq[Array[Byte]]) => fold(bs, Hll.deserialize)(_.merge(_)).serialize()))
+    for ((agg, gen, fold1) <- kinds; trial <- 0 until 12) {
+      val bs = (0 until 1 + r.nextInt(12)).map(gen)
+      // split into partials, each updated row by row and shuffled as bytes
+      val cuts = (0 +: (1 until bs.length).filter(_ => r.nextInt(3) == 0) :+ bs.length).distinct
+      val parts = cuts.zip(cuts.tail).map { case (a, b) => bs.slice(a, b) }
+      val shuffled = parts.map { p =>
+        val buf = agg.createAggregationBuffer()
+        p.foreach(b => agg.update(buf, new GenericInternalRow(Array[Any](b)): InternalRow))
+        agg.serialize(buf)
+      }
+      val fin = shuffled.foldLeft(agg.createAggregationBuffer())((acc, b) =>
+        agg.merge(acc, agg.deserialize(b)))
+      val want = fold1(parts.map(p => fold1(p)))
+      assert(agg.eval(fin).asInstanceOf[Array[Byte]].toSeq == want.toSeq,
+        s"${agg.prettyName}: partials of ${parts.map(_.size)} differ from the kernel fold")
+    }
+  }
+
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  test("corrupt bytes in a one-sketch group are still rejected") {
+    val cases = Seq(
+      (gf.tdigest_merge_agg _, Array[Byte](1, 2, 3), "not a t-digest sketch"),
+      (gf.hll_merge_agg _, Array[Byte](3, 0, 0), "corrupt HLL blob"),
+      (gf.ss_merge_agg _, Array.fill[Byte](9)(9), "not a space-saving sketch"))
+    cases.foreach { case (f, bad, msg) =>
+      val e = intercept[Exception](
+        Seq((1, bad)).toDF("g", "b").groupBy("g").agg(f(col("b"))).collect())
+      assert(messages(e).contains(msg), messages(e))
+    }
+  }
+
+  test("ss_topk reads canonical bytes directly and normalises other orders") {
+    val r = new Random(5)
+    val canonical = ssBytes(r)
+    Seq(canonical, reversed(canonical)).foreach { b =>
+      val s = SpaceSaving.deserializeLong(b)
+      val want = s.topkSlots(5).map(i => (s.items(i), s.counts(i), s.errors(i))).toSeq
+      val got = Seq(Tuple1(b)).toDF("s").select(gf.ss_topk_long(col("s"), 5)).head()
+        .getSeq[Row](0).map(t => (t.getLong(0), t.getLong(1), t.getLong(2)))
+      assert(got == want)
+    }
+    // k beyond the size returns every counter
+    val n = ByteBuffer.wrap(canonical).order(ByteOrder.LITTLE_ENDIAN).getInt(5)
+    assert(Seq(Tuple1(canonical)).toDF("s").select(gf.ss_topk_long(col("s"), 1000))
+      .head().getSeq[Row](0).size == n)
+  }
+}

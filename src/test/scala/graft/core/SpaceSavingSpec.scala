@@ -216,4 +216,74 @@ class SpaceSavingSpec extends AnyFunSuite {
       assert(mine == m.list, s"trial $trial: counter order diverged")
     }
   }
+
+  /** Serialized int64 sketch with the given counters, in the given order. */
+  private def bytesOf(cap: Int, cs: Seq[(Long, Long, Long)]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(9 + 24 * cs.size).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put(SpaceSaving.TagLong).putInt(cap).putInt(cs.size)
+    cs.foreach { case (i, c, e) => bb.putLong(i).putLong(c).putLong(e) }
+    bb.array()
+  }
+
+  /** Decode through the reference insert walk ([[SpaceSavingLong.setState]]). */
+  private def walkDecode(s: SpaceSavingLong): SpaceSavingLong = {
+    val w = new SpaceSavingLong(s.capacity)
+    val cs = counters(s)
+    w.setState(cs.map(_._1).toArray, cs.map(_._2).toArray, cs.map(_._3).toArray)
+    w
+  }
+
+  test("canonical decode fast path matches the insert walk") {
+    val r = new Random(21)
+    for (trial <- 0 until 20) {
+      val cap = 4 + r.nextInt(40)
+      val s = new SpaceSavingLong(cap)
+      (0 until r.nextInt(500)).foreach(_ => s.add(r.nextInt(cap * 2).toLong, 1L + r.nextInt(3)))
+      val bytes = s.serialize(SpaceSaving.TagLong)
+      assert(SpaceSaving.canonicalLong(bytes))
+      val fast = SpaceSaving.deserializeLong(bytes)
+      val walk = walkDecode(s)
+      assert(fast.serialize(SpaceSaving.TagLong).toSeq == bytes.toSeq)
+      assert(fast.items.toSeq == walk.items.toSeq && fast.next.toSeq == walk.next.toSeq &&
+        fast.prev.toSeq == walk.prev.toSeq && fast.head == walk.head)
+      // both keep behaving identically: adds (run-head index rebuilt on
+      // demand) and merges in either direction
+      val other = new SpaceSavingLong(cap)
+      (0 until 300).foreach(_ => other.add(r.nextInt(cap * 3).toLong))
+      val more = Array.fill(200)(r.nextInt(cap * 2).toLong)
+      more.foreach { x => fast.add(x); walk.add(x) }
+      fast.merge(other); walk.merge(other)
+      assert(counters(fast) == counters(walk), s"trial $trial diverged")
+      val intoFast = SpaceSaving.deserializeLong(other.serialize(SpaceSaving.TagLong))
+      intoFast.merge(SpaceSaving.deserializeLong(bytes))
+      val intoWalk = walkDecode(other)
+      intoWalk.merge(walkDecode(s))
+      assert(counters(intoFast) == counters(intoWalk))
+    }
+  }
+
+  test("out-of-order counters come out normalised; duplicates still rejected") {
+    val sorted = Seq((7L, 9L, 0L), (3L, 5L, 1L), (4L, 5L, 2L), (1L, 2L, 0L))
+    val canonical = bytesOf(8, sorted)
+    assert(SpaceSaving.canonicalLong(canonical))
+    val shuffled = bytesOf(8, Seq(sorted(2), sorted(0), sorted(3), sorted(1)))
+    assert(!SpaceSaving.canonicalLong(shuffled))
+    assert(SpaceSaving.deserializeLong(shuffled).serialize(SpaceSaving.TagLong).toSeq ==
+      canonical.toSeq)
+    val dupSorted = bytesOf(8, sorted :+ ((3L, 1L, 0L)))
+    val dupShuffled = bytesOf(8, ((3L, 10L, 0L)) +: sorted)
+    Seq(dupSorted, dupShuffled).foreach { b =>
+      val e = intercept[IllegalArgumentException](SpaceSaving.deserializeLong(b))
+      assert(e.getMessage.contains("duplicate items found"))
+    }
+    assert(intercept[IllegalArgumentException](SpaceSaving.canonicalLong(dupSorted))
+      .getMessage.contains("duplicate items found"))
+    // header checks match the decoder's
+    val short = canonical.take(canonical.length - 1)
+    assert(intercept[IllegalArgumentException](SpaceSaving.canonicalLong(short)).getMessage ==
+      intercept[IllegalArgumentException](SpaceSaving.deserializeLong(short)).getMessage)
+    // object-arm sketches are never treated as canonical int64 bytes
+    val so = new SpaceSavingObj(4); so.add("a")
+    assert(!SpaceSaving.canonicalLong(so.serialize(SpaceSaving.TagString)))
+  }
 }

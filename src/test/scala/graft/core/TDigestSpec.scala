@@ -227,4 +227,57 @@ class TDigestSpec extends AnyFunSuite {
     assert(TDigest.fastAsin(-1.0) == math.asin(-1.0))
     assert(TDigest.fastAsin(Double.NaN).isNaN && TDigest.fastAsin(1.5).isNaN)
   }
+
+  /** Stored digests: empty, one centroid, many centroids, an unflushed
+    * tail, at the compression bounds 20 and 1000. */
+  private def storedDigests: Seq[Array[Byte]] = {
+    val r = new Random(9)
+    for {
+      c <- Seq(20.0, 100.0, 1000.0)
+      n <- Seq(0, 1, 7, 3000)
+    } yield {
+      val t = TDigest(c)
+      (0 until n).foreach(_ => t.add(r.nextGaussian() * 5, 1.0 + r.nextInt(4)))
+      t.serialize()
+    }
+  }
+
+  test("serialize(deserialize(b)) == b, empty and one-centroid digests included") {
+    storedDigests.foreach { b =>
+      assert(TDigest.deserialize(b).serialize().toSeq == b.toSeq)
+      assert(TDigest.checkSerialized(b) == TDigest.deserialize(b).nCentroids)
+    }
+  }
+
+  test("mergeSerialized(b) is byte-identical to merge(deserialize(b))") {
+    val bs = storedDigests
+    for (a <- bs; b <- bs) {
+      val viaDecode = TDigest.deserialize(a)
+      viaDecode.merge(TDigest.deserialize(b))
+      val viaBytes = TDigest.deserialize(a)
+      viaBytes.mergeSerialized(b)
+      assert(viaBytes.serialize().toSeq == viaDecode.serialize().toSeq)
+    }
+    // into a digest with points still in its ingest buffer
+    val r = new Random(4)
+    val xs = Array.fill(10)(r.nextDouble())
+    val (x, y) = (TDigest(), TDigest())
+    xs.foreach { v => x.add(v); y.add(v) }
+    bs.foreach { b => x.merge(TDigest.deserialize(b)); y.mergeSerialized(b) }
+    assert(y.serialize().toSeq == x.serialize().toSeq)
+  }
+
+  test("checkSerialized and mergeSerialized reject what deserialize rejects") {
+    val good = storedDigests(2)
+    val bad = Seq(
+      Array[Byte](1, 2, 3),
+      good.updated(0, 0.toByte).updated(7, 0.toByte), // compression 0
+      good.take(good.length - 1),
+      good ++ Array[Byte](0))
+    bad.foreach { b =>
+      val want = intercept[IllegalArgumentException](TDigest.deserialize(b)).getMessage
+      assert(intercept[IllegalArgumentException](TDigest.checkSerialized(b)).getMessage == want)
+      assert(intercept[IllegalArgumentException](TDigest().mergeSerialized(b)).getMessage == want)
+    }
+  }
 }
