@@ -108,7 +108,12 @@ object Bench {
     // contended host — the suite total should then be re-swept, not read
     // as an engine regression
     val calPost = calibrateMs(cpus.toInt)
-    val compact = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"sf":"$sfDir","cal_pre_ms":${fmt(calPre)},"cal_post_ms":${fmt(calPost)},"slowest":$slow}"""
+    // the failing gates by name, as many as fit in 600 characters, so the
+    // line stays inside the tail window; the rest are only counted
+    val failedNames = results.filter(_._2 < 0.0).map(_._1)
+    val nNamed = failedNames.scanLeft(0)(_ + _.length + 3).tail.takeWhile(_ <= 600).size
+    val failed = failedNames.take(nNamed).map(k => "\"" + k + "\"").mkString("[", ",", "]")
+    val compact = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"failed":$failed,"n_failed_unnamed":${nFailed - nNamed},"sf":"$sfDir","cal_pre_ms":${fmt(calPre)},"cal_post_ms":${fmt(calPost)},"slowest":$slow}"""
     // side artifact: the same compact JSON, readable even if stdout capture
     // mangles the tail (build.sbt's showSuccess := false keeps sbt's
     // [success] banner from displacing the line below as stdout's last)

@@ -2,9 +2,8 @@ package graft.agg
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.{TernaryLike, UnaryLike}
-import org.apache.spark.sql.graftshim.{AbstractDataType, TypeCollection}
+import org.apache.spark.sql.catalyst.trees.TernaryLike
+import org.apache.spark.sql.graftshim.AbstractDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -38,7 +37,7 @@ case class CountMinAgg(
     third: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMin]
+  extends SketchAddAgg[CountMin]
   with TernaryLike[Expression] with ImplicitCastInputTypes {
 
   def this(item: Expression, depth: Expression, width: Expression) =
@@ -49,18 +48,9 @@ case class CountMinAgg(
   private lazy val depth: Int = second.eval().asInstanceOf[Number].intValue()
   private lazy val width: Int = third.eval().asInstanceOf[Number].intValue()
 
-  override def inputTypes: Seq[AbstractDataType] = {
-    val itemType = first.dataType match {
-      case FloatType | DoubleType | _: DecimalType => DoubleType
-      case ByteType | ShortType | IntegerType | LongType => LongType
-      case BinaryType => BinaryType
-      case StringType => StringType
-      case _ => TypeCollection(LongType, DoubleType, StringType, BinaryType)
-    }
-    Seq(itemType, IntegerType, IntegerType)
-  }
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
+  override protected def codec = CountMin
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(KmvHash.routedType(first.dataType), IntegerType, IntegerType)
   override def prettyName: String = "cms_agg"
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -81,11 +71,6 @@ case class CountMinAgg(
     buf
   }
 
-  override def merge(b1: CountMin, b2: CountMin): CountMin = { b1.merge(b2); b1 }
-  override def eval(buf: CountMin): Any = buf.serialize()
-  override def serialize(buf: CountMin): Array[Byte] = buf.serialize()
-  override def deserialize(b: Array[Byte]): CountMin = CountMin.deserialize(b)
-
   override def withNewMutableAggBufferOffset(n: Int): CountMinAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): CountMinAgg =
@@ -94,43 +79,16 @@ case class CountMinAgg(
       t: Expression): CountMinAgg = copy(first = f, second = s, third = t)
 }
 
-/** cms_merge_agg(sketch) → binary: re-aggregates stored CMS sketches. */
+/** cms_merge_agg(sketch) → binary: re-aggregates stored CMS sketches; a
+  * group of one sketch never builds its grid. */
 case class CountMinMergeAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMinMergeAgg.Holder]
-  with UnaryLike[Expression] with ImplicitCastInputTypes {
+  extends DecodeOnceMergeAgg[CountMin] {
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
+  override protected def codec = CountMin
   override def prettyName: String = "cms_merge_agg"
-
-  override def createAggregationBuffer(): CountMinMergeAgg.Holder =
-    new CountMinMergeAgg.Holder(null)
-
-  override def update(buf: CountMinMergeAgg.Holder, input: InternalRow): CountMinMergeAgg.Holder = {
-    val v = child.eval(input)
-    if (v != null) {
-      val other = CountMin.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf.s == null) buf.s = other else buf.s.merge(other)
-    }
-    buf
-  }
-
-  override def merge(b1: CountMinMergeAgg.Holder, b2: CountMinMergeAgg.Holder): CountMinMergeAgg.Holder = {
-    if (b2.s != null) { if (b1.s == null) b1.s = b2.s else b1.s.merge(b2.s) }
-    b1
-  }
-
-  override def eval(buf: CountMinMergeAgg.Holder): Any =
-    if (buf.s == null) null else buf.s.serialize()
-  override def serialize(buf: CountMinMergeAgg.Holder): Array[Byte] =
-    if (buf.s == null) Array.emptyByteArray else buf.s.serialize()
-  override def deserialize(b: Array[Byte]): CountMinMergeAgg.Holder =
-    if (b.isEmpty) new CountMinMergeAgg.Holder(null)
-    else new CountMinMergeAgg.Holder(CountMin.deserialize(b))
 
   override def withNewMutableAggBufferOffset(n: Int): CountMinMergeAgg =
     copy(mutableAggBufferOffset = n)
@@ -138,8 +96,4 @@ case class CountMinMergeAgg(
     copy(inputAggBufferOffset = n)
   override protected def withNewChildInternal(c: Expression): CountMinMergeAgg =
     copy(child = c)
-}
-
-object CountMinMergeAgg {
-  final class Holder(var s: CountMin) extends Serializable
 }

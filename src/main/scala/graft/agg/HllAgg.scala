@@ -2,11 +2,9 @@ package graft.agg
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.graftshim.{AbstractDataType, TypeCollection}
+import org.apache.spark.sql.graftshim.AbstractDataType
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Hll
 
@@ -20,25 +18,15 @@ case class HllAgg(
     right: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Hll]
+  extends SketchAddAgg[Hll]
   with BinaryLike[Expression] with ImplicitCastInputTypes {
 
   def this(value: Expression) = this(value, Literal(12))
 
   private lazy val p: Int = right.eval().asInstanceOf[Number].intValue()
 
-  override def inputTypes: Seq[AbstractDataType] = {
-    val valueType = left.dataType match {
-      case FloatType | DoubleType | _: DecimalType => DoubleType
-      case ByteType | ShortType | IntegerType | LongType => LongType
-      case BinaryType => BinaryType
-      case StringType => StringType
-      case _ => TypeCollection(LongType, DoubleType, StringType, BinaryType)
-    }
-    Seq(valueType, IntegerType)
-  }
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
+  override protected def codec = Hll
+  override def inputTypes: Seq[AbstractDataType] = Seq(KmvHash.routedType(left.dataType), IntegerType)
   override def prettyName: String = "hll_agg"
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -58,22 +46,9 @@ case class HllAgg(
 
   override def update(buf: Hll, input: InternalRow): Hll = {
     val v = left.eval(input)
-    if (v != null) {
-      val h = left.dataType match {
-        case LongType => KmvHash.ofLong(v.asInstanceOf[Long])
-        case DoubleType => KmvHash.ofDouble(v.asInstanceOf[Double])
-        case BinaryType => KmvHash.ofBytes(v.asInstanceOf[Array[Byte]])
-        case _ => KmvHash.ofBytes(v.asInstanceOf[UTF8String].getBytes)
-      }
-      buf.add(h)
-    }
+    if (v != null) buf.add(KmvHash.ofAny(left.dataType, v))
     buf
   }
-
-  override def merge(b1: Hll, b2: Hll): Hll = { b1.merge(b2); b1 }
-  override def eval(buf: Hll): Any = buf.serialize()
-  override def serialize(buf: Hll): Array[Byte] = buf.serialize()
-  override def deserialize(b: Array[Byte]): Hll = Hll.deserialize(b)
 
   override def withNewMutableAggBufferOffset(n: Int): HllAgg =
     copy(mutableAggBufferOffset = n)
@@ -89,20 +64,10 @@ case class HllMergeAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends DecodeOnceMergeAgg[Hll] with ImplicitCastInputTypes {
+  extends DecodeOnceMergeAgg[Hll] {
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
+  override protected def codec = Hll
   override def prettyName: String = "hll_merge_agg"
-
-  // any valid blob re-serializes to itself, and its checks are O(1)
-  override protected def admit(b: Array[Byte]): Boolean = { Hll.checkSerialized(b); true }
-  override protected def checkHeader(b: Array[Byte]): Unit = Hll.checkSerialized(b)
-  override protected def decode(b: Array[Byte]): Hll = Hll.deserialize(b)
-  override protected def encode(h: Hll): Array[Byte] = h.serialize()
-  override protected def mergeBytes(into: Hll, b: Array[Byte]): Unit = into.mergeSerialized(b)
-  override protected def mergeSketch(into: Hll, other: Hll): Unit = into.merge(other)
 
   override def withNewMutableAggBufferOffset(n: Int): HllMergeAgg =
     copy(mutableAggBufferOffset = n)

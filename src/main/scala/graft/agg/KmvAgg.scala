@@ -2,8 +2,7 @@ package graft.agg
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.graftshim.{AbstractDataType, TypeCollection}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,6 +20,28 @@ object KmvHash {
   @inline def ofDouble(v: Double): Long =
     ofLong(java.lang.Double.doubleToLongBits(if (v == 0.0) 0.0 else v))
   @inline def ofBytes(b: Array[Byte]): Long = TextHash.hashBytes(b, 0, b.length, 0L)
+
+  /** Hash a value of the (routed) type `dataType`, one arm per type. */
+  @inline def ofAny(dataType: DataType, v: Any): Long = dataType match {
+    case LongType => ofLong(v.asInstanceOf[Long])
+    case DoubleType => ofDouble(v.asInstanceOf[Double])
+    case BinaryType => ofBytes(v.asInstanceOf[Array[Byte]])
+    case _ => ofBytes(v.asInstanceOf[UTF8String].getBytes)
+  }
+
+  /** The input type that routes a value to the hash arm matching its SQL
+    * distinctness semantics, shared by kmv_agg, hll_agg, cms_agg and
+    * cms_count: fractional numerics widen to Double (a TypeCollection
+    * would implicit-cast a float/decimal to the FIRST numeric member —
+    * LongType — truncating 1.1/1.2/1.9 to one distinct value), integrals
+    * widen to Long, strings/binaries stay byte-hashed. */
+  def routedType(dataType: DataType): AbstractDataType = dataType match {
+    case FloatType | DoubleType | _: DecimalType => DoubleType
+    case ByteType | ShortType | IntegerType | LongType => LongType
+    case BinaryType => BinaryType
+    case StringType => StringType
+    case _ => TypeCollection(LongType, DoubleType, StringType, BinaryType)
+  }
 }
 
 /** kmv_agg(value[, k]) → binary sketch: KMV distinct-value sketch over any
@@ -31,30 +52,15 @@ case class KmvAgg(
     right: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvSketch]
+  extends SketchAddAgg[KmvSketch]
   with BinaryLike[Expression] with ImplicitCastInputTypes {
 
   def this(value: Expression) = this(value, Literal(1024))
 
   private lazy val k: Int = right.eval().asInstanceOf[Number].intValue()
 
-  /** Route the value to the hash arm matching its SQL distinctness
-    * semantics: fractional numerics widen to Double (a TypeCollection
-    * would implicit-cast a float/decimal to the FIRST numeric member —
-    * LongType — truncating 1.1/1.2/1.9 to one distinct value), integrals
-    * widen to Long, strings/binaries stay byte-hashed. */
-  override def inputTypes: Seq[AbstractDataType] = {
-    val valueType = left.dataType match {
-      case FloatType | DoubleType | _: DecimalType => DoubleType
-      case ByteType | ShortType | IntegerType | LongType => LongType
-      case BinaryType => BinaryType
-      case StringType => StringType
-      case _ => TypeCollection(LongType, DoubleType, StringType, BinaryType)
-    }
-    Seq(valueType, IntegerType)
-  }
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
+  override protected def codec = KmvSketch
+  override def inputTypes: Seq[AbstractDataType] = Seq(KmvHash.routedType(left.dataType), IntegerType)
   override def prettyName: String = "kmv_agg"
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -66,30 +72,13 @@ case class KmvAgg(
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
   }
 
-  override def createAggregationBuffer(): KmvSketch = {
-    if (k < 2 || k > (1 << 20))
-      throw new IllegalArgumentException("k must be in [2, 1048576]")
-    new KmvSketch(k)
-  }
+  override def createAggregationBuffer(): KmvSketch = new KmvSketch(k)
 
   override def update(buf: KmvSketch, input: InternalRow): KmvSketch = {
     val v = left.eval(input)
-    if (v != null) {
-      val h = left.dataType match {
-        case LongType => KmvHash.ofLong(v.asInstanceOf[Long])
-        case DoubleType => KmvHash.ofDouble(v.asInstanceOf[Double])
-        case BinaryType => KmvHash.ofBytes(v.asInstanceOf[Array[Byte]])
-        case _ => KmvHash.ofBytes(v.asInstanceOf[UTF8String].getBytes)
-      }
-      buf.add(h)
-    }
+    if (v != null) buf.add(KmvHash.ofAny(left.dataType, v))
     buf
   }
-
-  override def merge(b1: KmvSketch, b2: KmvSketch): KmvSketch = { b1.merge(b2); b1 }
-  override def eval(buf: KmvSketch): Any = buf.serialize()
-  override def serialize(buf: KmvSketch): Array[Byte] = buf.serialize()
-  override def deserialize(b: Array[Byte]): KmvSketch = KmvSketch.deserialize(b)
 
   override def withNewMutableAggBufferOffset(n: Int): KmvAgg =
     copy(mutableAggBufferOffset = n)
@@ -105,38 +94,10 @@ case class KmvMergeAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvMergeAgg.Holder]
-  with UnaryLike[Expression] with ImplicitCastInputTypes {
+  extends DecodeOnceMergeAgg[KmvSketch] {
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
+  override protected def codec = KmvSketch
   override def prettyName: String = "kmv_merge_agg"
-
-  override def createAggregationBuffer(): KmvMergeAgg.Holder =
-    new KmvMergeAgg.Holder(null)
-
-  override def update(buf: KmvMergeAgg.Holder, input: InternalRow): KmvMergeAgg.Holder = {
-    val v = child.eval(input)
-    if (v != null) {
-      val other = KmvSketch.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf.s == null) buf.s = other else buf.s.merge(other)
-    }
-    buf
-  }
-
-  override def merge(b1: KmvMergeAgg.Holder, b2: KmvMergeAgg.Holder): KmvMergeAgg.Holder = {
-    if (b2.s != null) { if (b1.s == null) b1.s = b2.s else b1.s.merge(b2.s) }
-    b1
-  }
-
-  override def eval(buf: KmvMergeAgg.Holder): Any =
-    if (buf.s == null) null else buf.s.serialize()
-  override def serialize(buf: KmvMergeAgg.Holder): Array[Byte] =
-    if (buf.s == null) Array.emptyByteArray else buf.s.serialize()
-  override def deserialize(b: Array[Byte]): KmvMergeAgg.Holder =
-    if (b.isEmpty) new KmvMergeAgg.Holder(null)
-    else new KmvMergeAgg.Holder(KmvSketch.deserialize(b))
 
   override def withNewMutableAggBufferOffset(n: Int): KmvMergeAgg =
     copy(mutableAggBufferOffset = n)
@@ -144,8 +105,4 @@ case class KmvMergeAgg(
     copy(inputAggBufferOffset = n)
   override protected def withNewChildInternal(c: Expression): KmvMergeAgg =
     copy(child = c)
-}
-
-object KmvMergeAgg {
-  final class Holder(var s: KmvSketch) extends Serializable
 }

@@ -21,13 +21,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * design hold at 100 TB (SURVEY.md §7.4 item 9). Spill safety comes from the
   * sort-based fallback (spark.sql.objectHashAggregate.sortBased.fallbackThreshold).
   *
-  * The merge aggregates over stored sketches (tdigest_merge_agg,
-  * ss_merge_agg, hll_merge_agg; [[DecodeOnceMergeAgg]]) decode each sketch at
-  * most once, and only when a merge needs it: a buffer keeps the first
-  * sketch's bytes, checked on arrival as decoding would check them, until a
-  * second sketch arrives; serialize / eval of such a buffer return the bytes
-  * and a shuffled buffer's deserialize checks only its header. Output stays
-  * byte-identical to decode → merge → serialize.
+  * Every sketch kind's bytes go through one [[graft.core.SketchCodec]], the
+  * kernel's companion object: the aggregates that build sketches
+  * ([[SketchAddAgg]]) merge, serialize and deserialize through it, and so do
+  * all five merge aggregates over stored sketches (tdigest_merge_agg,
+  * ss_merge_agg, hll_merge_agg, kmv_merge_agg, cms_merge_agg;
+  * [[DecodeOnceMergeAgg]]). Those decode each sketch at most once, and only
+  * when a merge needs it: a buffer keeps the first sketch's bytes, checked
+  * on arrival as decoding would check them, until a second sketch arrives,
+  * which the codec merges from its bytes; serialize / eval of such a buffer
+  * return the bytes and a shuffled buffer's deserialize checks only its
+  * header. Output stays byte-identical to decode → merge → serialize.
   */
 object StatsStruct {
   val schema: StructType = StructType(Seq(
@@ -156,6 +160,22 @@ case class StatsMergeAgg(
     copy(child = c)
 }
 
+/** An aggregate that adds values into a sketch and returns its bytes; the
+  * kind's codec merges, serializes and deserializes the buffers. `codec` is
+  * a def returning the kernel's companion object, so it takes no part in
+  * case-class equality or task serialization. */
+trait SketchAddAgg[S <: AnyRef] extends TypedImperativeAggregate[S] {
+  protected def codec: SketchCodec[S]
+
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+
+  override def merge(b1: S, b2: S): S = { codec.mergeSketch(b1, b2); b1 }
+  override def eval(buf: S): Any = codec.serialize(buf)
+  override def serialize(buf: S): Array[Byte] = codec.serialize(buf)
+  override def deserialize(b: Array[Byte]): S = codec.deserialize(b)
+}
+
 /** tdigest(x[, w][, compression]) → serialized t-digest sketch (BinaryType).
   * Reference TDigest construct/add/update (T1–T4, SURVEY.md §2.1). */
 case class TDigestAgg(
@@ -164,7 +184,7 @@ case class TDigestAgg(
     third: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TDigest]
+  extends SketchAddAgg[TDigest]
   with TernaryLike[Expression] with ImplicitCastInputTypes {
 
   def this(child: Expression) = this(child, Literal(1.0), Literal(100.0))
@@ -173,9 +193,8 @@ case class TDigestAgg(
   private lazy val compression: Double =
     third.eval().asInstanceOf[Number].doubleValue()
 
+  override protected def codec = TDigest
   override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, DoubleType, DoubleType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "tdigest"
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -204,11 +223,6 @@ case class TDigestAgg(
     buf
   }
 
-  override def merge(b1: TDigest, b2: TDigest): TDigest = { b1.merge(b2); b1 }
-  override def eval(buf: TDigest): Any = buf.serialize()
-  override def serialize(buf: TDigest): Array[Byte] = buf.serialize()
-  override def deserialize(b: Array[Byte]): TDigest = TDigest.deserialize(b)
-
   override def withNewMutableAggBufferOffset(n: Int): TDigestAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): TDigestAgg =
@@ -223,29 +237,26 @@ case class TDigestAgg(
 final class MergeBuffer[S >: Null <: AnyRef](var bytes: Array[Byte], var sketch: S)
 
 /** The decode-once buffer lifecycle of the merge aggregates (see the file
-  * header). Bytes are kept only when `encode(decode(b)) == b` ([[admit]]),
-  * and every merge runs the same kernel calls as decoding first would, so
-  * output is byte-identical to decode → merge → serialize. In a rollup where
-  * most partial-stage groups see one stored sketch, most sketches are never
-  * decoded at all. */
+  * header), over the kind's codec. Bytes are kept only when the codec
+  * admits them (`serialize(deserialize(b)) == b`), and every merge runs the
+  * same kernel calls as decoding first would, so output is byte-identical
+  * to decode → merge → serialize. In a rollup where most partial-stage
+  * groups see one stored sketch, most sketches are never decoded at all.
+  * `codec` is a def returning an object, as in [[SketchAddAgg]]. */
 trait DecodeOnceMergeAgg[S >: Null <: AnyRef]
-  extends TypedImperativeAggregate[MergeBuffer[S]] with UnaryLike[Expression] {
+  extends TypedImperativeAggregate[MergeBuffer[S]] with UnaryLike[Expression]
+  with ImplicitCastInputTypes {
 
-  /** Check a stored sketch, throwing what `decode` would throw; false when
-    * it must be decoded now because `encode(decode(b))` would differ. */
-  protected def admit(b: Array[Byte]): Boolean
-  /** O(1) check of a shuffled buffer's header. */
-  protected def checkHeader(b: Array[Byte]): Unit
-  protected def decode(b: Array[Byte]): S
-  protected def encode(s: S): Array[Byte]
-  /** `into.merge(decode(b))`. */
-  protected def mergeBytes(into: S, b: Array[Byte]): Unit
-  protected def mergeSketch(into: S, other: S): Unit
+  protected def codec: SketchCodec[S]
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = true
 
   override def createAggregationBuffer(): MergeBuffer[S] = new MergeBuffer[S](null, null)
 
   private def decoded(buf: MergeBuffer[S]): S = {
-    if (buf.sketch == null) { buf.sketch = decode(buf.bytes); buf.bytes = null }
+    if (buf.sketch == null) { buf.sketch = codec.deserialize(buf.bytes); buf.bytes = null }
     buf.sketch
   }
 
@@ -253,31 +264,31 @@ trait DecodeOnceMergeAgg[S >: Null <: AnyRef]
     val v = child.eval(input)
     if (v != null) {
       val b = v.asInstanceOf[Array[Byte]]
-      if (buf.bytes != null || buf.sketch != null) mergeBytes(decoded(buf), b)
-      else if (admit(b)) buf.bytes = b
-      else buf.sketch = decode(b)
+      if (buf.bytes != null || buf.sketch != null) codec.mergeBytes(decoded(buf), b)
+      else if (codec.admit(b)) buf.bytes = b
+      else buf.sketch = codec.deserialize(b)
     }
     buf
   }
 
   override def merge(b1: MergeBuffer[S], b2: MergeBuffer[S]): MergeBuffer[S] = {
     if (b1.bytes == null && b1.sketch == null) { b1.bytes = b2.bytes; b1.sketch = b2.sketch }
-    else if (b2.sketch != null) mergeSketch(decoded(b1), b2.sketch)
-    else if (b2.bytes != null) mergeBytes(decoded(b1), b2.bytes)
+    else if (b2.sketch != null) codec.mergeSketch(decoded(b1), b2.sketch)
+    else if (b2.bytes != null) codec.mergeBytes(decoded(b1), b2.bytes)
     b1
   }
 
   override def eval(buf: MergeBuffer[S]): Any =
     if (buf.bytes != null) buf.bytes
-    else if (buf.sketch != null) encode(buf.sketch)
+    else if (buf.sketch != null) codec.serialize(buf.sketch)
     else null
   override def serialize(buf: MergeBuffer[S]): Array[Byte] =
     if (buf.bytes != null) buf.bytes
-    else if (buf.sketch != null) encode(buf.sketch)
+    else if (buf.sketch != null) codec.serialize(buf.sketch)
     else Array.emptyByteArray
   override def deserialize(b: Array[Byte]): MergeBuffer[S] =
     if (b.isEmpty) createAggregationBuffer()
-    else { checkHeader(b); new MergeBuffer[S](b, null) }
+    else { codec.checkSerialized(b); new MergeBuffer[S](b, null) }
 }
 
 /** tdigest_merge_agg(sketch_col) → merged sketch: re-aggregates stored
@@ -287,20 +298,10 @@ case class TDigestMergeAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends DecodeOnceMergeAgg[TDigest] with ImplicitCastInputTypes {
+  extends DecodeOnceMergeAgg[TDigest] {
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
+  override protected def codec = TDigest
   override def prettyName: String = "tdigest_merge_agg"
-
-  // a valid digest re-serializes to its own bytes, and its checks are O(1)
-  override protected def admit(b: Array[Byte]): Boolean = { TDigest.checkSerialized(b); true }
-  override protected def checkHeader(b: Array[Byte]): Unit = TDigest.checkSerialized(b)
-  override protected def decode(b: Array[Byte]): TDigest = TDigest.deserialize(b)
-  override protected def encode(t: TDigest): Array[Byte] = t.serialize()
-  override protected def mergeBytes(into: TDigest, b: Array[Byte]): Unit = into.mergeSerialized(b)
-  override protected def mergeSketch(into: TDigest, other: TDigest): Unit = into.merge(other)
 
   override def withNewMutableAggBufferOffset(n: Int): TDigestMergeAgg =
     copy(mutableAggBufferOffset = n)
@@ -330,7 +331,7 @@ case class SpaceSavingAgg(
     third: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SpaceSavingBase]
+  extends SketchAddAgg[SpaceSavingBase]
   with TernaryLike[Expression] with ImplicitCastInputTypes {
 
   def this(item: Expression) = this(item, Literal(1L), Literal(20))
@@ -339,10 +340,9 @@ case class SpaceSavingAgg(
   private lazy val capacity: Int = third.eval().asInstanceOf[Number].intValue()
   private lazy val tag: Byte = SpaceSavingAgg.tagFor(first.dataType)
 
+  override protected def codec = SpaceSaving
   override def inputTypes: Seq[AbstractDataType] =
     Seq(TypeCollection(LongType, DoubleType, StringType, BinaryType), LongType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "ss_topk_agg"
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -354,12 +354,7 @@ case class SpaceSavingAgg(
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
   }
 
-  override def createAggregationBuffer(): SpaceSavingBase = {
-    if (capacity <= 0) throw new IllegalArgumentException("capacity must be > 0")
-    if (tag == SpaceSaving.TagString || tag == SpaceSaving.TagBinary)
-      new SpaceSavingObj(capacity)
-    else new SpaceSavingLong(capacity)
-  }
+  override def createAggregationBuffer(): SpaceSavingBase = SpaceSaving.empty(tag, capacity)
 
   override def update(buf: SpaceSavingBase, input: InternalRow): SpaceSavingBase = {
     val v = first.eval(input)
@@ -383,27 +378,6 @@ case class SpaceSavingAgg(
       }
     }
     buf
-  }
-
-  override def merge(b1: SpaceSavingBase, b2: SpaceSavingBase): SpaceSavingBase = {
-    (b1, b2) match {
-      case (a: SpaceSavingLong, b: SpaceSavingLong) => a.merge(b)
-      case (a: SpaceSavingObj, b: SpaceSavingObj) => a.merge(b)
-      case _ => throw new IllegalStateException("mismatched space-saving buffers")
-    }
-    b1
-  }
-
-  override def eval(buf: SpaceSavingBase): Any = serialize(buf)
-  override def serialize(buf: SpaceSavingBase): Array[Byte] = buf match {
-    case a: SpaceSavingLong => a.serialize(tag)
-    case a: SpaceSavingObj => a.serialize(tag)
-  }
-  override def deserialize(b: Array[Byte]): SpaceSavingBase = {
-    val tag = SpaceSaving.deserializeTag(b)
-    if (tag == SpaceSaving.TagString || tag == SpaceSaving.TagBinary)
-      SpaceSaving.deserializeObj(b)
-    else SpaceSaving.deserializeLong(b)
   }
 
   override def withNewMutableAggBufferOffset(n: Int): SpaceSavingAgg =
@@ -766,9 +740,6 @@ case class VecExactSumAgg(
     copy(child = c)
 }
 
-/** A decoded Space-Saving sketch with its key-type tag. */
-final class TaggedSpaceSaving(val tag: Byte, val s: SpaceSavingBase)
-
 /** ss_merge_agg(sketch_col) → merged Space-Saving sketch (Cafaro merge S8).
   * int64-arm sketches are kept as bytes when canonical; object-arm
   * (string / binary) sketches are decoded on arrival, since checking their
@@ -777,40 +748,10 @@ case class SpaceSavingMergeAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends DecodeOnceMergeAgg[TaggedSpaceSaving] with ImplicitCastInputTypes {
+  extends DecodeOnceMergeAgg[SpaceSavingBase] {
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
+  override protected def codec = SpaceSaving
   override def prettyName: String = "ss_merge_agg"
-
-  override protected def admit(b: Array[Byte]): Boolean = SpaceSaving.canonicalLong(b)
-  override protected def checkHeader(b: Array[Byte]): Unit = SpaceSaving.checkHeader(b)
-
-  override protected def decode(b: Array[Byte]): TaggedSpaceSaving = {
-    val tag = SpaceSaving.deserializeTag(b)
-    new TaggedSpaceSaving(tag,
-      if (tag == SpaceSaving.TagString || tag == SpaceSaving.TagBinary)
-        SpaceSaving.deserializeObj(b)
-      else SpaceSaving.deserializeLong(b))
-  }
-
-  override protected def encode(t: TaggedSpaceSaving): Array[Byte] = t.s match {
-    case a: SpaceSavingLong => a.serialize(t.tag)
-    case a: SpaceSavingObj => a.serialize(t.tag)
-  }
-
-  override protected def mergeBytes(into: TaggedSpaceSaving, b: Array[Byte]): Unit =
-    mergeSketch(into, decode(b))
-
-  override protected def mergeSketch(into: TaggedSpaceSaving, other: TaggedSpaceSaving): Unit = {
-    require(into.tag == other.tag, "All arguments to merge must have same dtype")
-    (into.s, other.s) match {
-      case (a: SpaceSavingLong, b: SpaceSavingLong) => a.merge(b)
-      case (a: SpaceSavingObj, b: SpaceSavingObj) => a.merge(b)
-      case _ => throw new IllegalStateException("mismatched space-saving buffers")
-    }
-  }
 
   override def withNewMutableAggBufferOffset(n: Int): SpaceSavingMergeAgg =
     copy(mutableAggBufferOffset = n)

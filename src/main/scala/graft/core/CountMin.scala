@@ -19,6 +19,8 @@ final class CountMin(val depth: Int, val width: Int) extends Serializable {
   require(depth >= 1 && depth <= 16, "depth must be in [1, 16]")
   require(width >= 2 && (width & (width - 1)) == 0 && width <= (1 << 24),
     "width must be a power of two in [2, 2^24]")
+  require(depth.toLong * width <= CountMin.MaxCells,
+    s"CMS($depth,$width) is too large to serialize (depth * width <= ${CountMin.MaxCells})")
 
   val counts = new Array[Long](depth * width)
   var total: Long = 0L
@@ -65,7 +67,7 @@ final class CountMin(val depth: Int, val width: Int) extends Serializable {
   }
 }
 
-object CountMin {
+object CountMin extends SketchCodec[CountMin] {
   /** Per-row decorrelation constant (Knuth's 32-bit golden multiplier —
     * small, so key + row·RowMix wraps identically under mod-2^64 SQL). */
   final val RowMix: Long = 2654435761L
@@ -77,8 +79,9 @@ object CountMin {
     * (128 KB at 4×4096) never happens on the query path. Called from
     * generated code (see [[graft.expr.CmsCount]]). */
   def estimateFromBlob(bytes: Array[Byte], key: Long): Long = {
-    val width = checkHeader(bytes)
+    checkSerialized(bytes)
     val depth = readIntBE(bytes, 1)
+    val width = readIntBE(bytes, 5)
     var m = Long.MaxValue
     var r = 0
     while (r < depth) {
@@ -92,7 +95,7 @@ object CountMin {
 
   /** O(1) total straight off the serialized blob's header. */
   def totalFromBlob(bytes: Array[Byte]): Long = {
-    checkHeader(bytes)
+    checkSerialized(bytes)
     readLongBE(bytes, 9)
   }
 
@@ -107,10 +110,9 @@ object CountMin {
     * planned" regardless of the exact magnitude). O(depth·width) reads
     * straight off the blobs, once per estimate. */
   def innerProductFromBlobs(a: Array[Byte], b: Array[Byte]): Long = {
-    val widthA = checkHeader(a)
-    val widthB = checkHeader(b)
-    val depthA = readIntBE(a, 1)
-    val depthB = readIntBE(b, 1)
+    checkSerialized(a); checkSerialized(b)
+    val depthA = readIntBE(a, 1); val widthA = readIntBE(a, 5)
+    val depthB = readIntBE(b, 1); val widthB = readIntBE(b, 5)
     require(depthA == depthB && widthA == widthB,
       s"cannot dot CMS($depthA,$widthA) with CMS($depthB,$widthB)")
     var best = Long.MaxValue
@@ -137,18 +139,23 @@ object CountMin {
     best
   }
 
-  /** Validates magic/shape/length; returns the width. */
-  private def checkHeader(bytes: Array[Byte]): Int = {
+  /** Grid cells whose serialized sketch, 17 + 8 per cell bytes, still
+    * fits in one array. */
+  final val MaxCells: Int = (Int.MaxValue - 17) / 8
+
+  /** Magic, shape and length; returns depth * width. Any blob that passes
+    * re-serializes to itself, so every one is admitted. */
+  override def checkSerialized(bytes: Array[Byte]): Int = {
     require(bytes.length >= 17, s"CMS blob too short: ${bytes.length} bytes")
     require(bytes(0) == Magic, f"bad CMS magic 0x${bytes(0)}%02x")
     val depth = readIntBE(bytes, 1)
     val width = readIntBE(bytes, 5)
     require(depth >= 1 && depth <= 16 && width >= 2 &&
-      (width & (width - 1)) == 0 && width <= (1 << 24),
+      (width & (width - 1)) == 0 && width <= (1 << 24) && depth.toLong * width <= MaxCells,
       s"corrupt CMS header: depth=$depth width=$width")
     require(bytes.length == 17 + depth * width * 8,
       s"CMS blob length ${bytes.length} != ${17 + depth * width * 8}")
-    width
+    depth * width
   }
 
   @inline private def readIntBE(b: Array[Byte], off: Int): Int =
@@ -161,18 +168,25 @@ object CountMin {
       ((b(off + 4) & 0xffL) << 24) | ((b(off + 5) & 0xffL) << 16) |
       ((b(off + 6) & 0xffL) << 8) | (b(off + 7) & 0xffL)
 
-  def deserialize(bytes: Array[Byte]): CountMin = {
-    require(bytes.length >= 17, s"CMS blob too short: ${bytes.length} bytes")
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val magic = bb.get()
-    require(magic == Magic, f"bad CMS magic 0x$magic%02x")
-    val depth = bb.getInt; val width = bb.getInt
-    val s = new CountMin(depth, width)
-    s.total = bb.getLong
-    require(bytes.length == 17 + depth * width * 8,
-      s"CMS blob length ${bytes.length} != ${17 + depth * width * 8}")
-    var i = 0
-    while (i < s.counts.length) { s.counts(i) = bb.getLong; i += 1 }
+  override def deserialize(bytes: Array[Byte]): CountMin = {
+    checkSerialized(bytes)
+    val s = new CountMin(readIntBE(bytes, 1), readIntBE(bytes, 5))
+    mergeBytes(s, bytes)
     s
   }
+
+  override def serialize(s: CountMin): Array[Byte] = s.serialize()
+
+  /** Adds the big-endian counters in place, without building the grid. */
+  override def mergeBytes(into: CountMin, bytes: Array[Byte]): Unit = {
+    val cells = checkSerialized(bytes)
+    val depth = readIntBE(bytes, 1); val width = readIntBE(bytes, 5)
+    require(depth == into.depth && width == into.width,
+      s"cannot merge CMS(${into.depth},${into.width}) with CMS($depth,$width)")
+    var i = 0
+    while (i < cells) { into.counts(i) += readLongBE(bytes, 17 + 8 * i); i += 1 }
+    into.total += readLongBE(bytes, 9)
+  }
+
+  override def mergeSketch(into: CountMin, other: CountMin): Unit = into.merge(other)
 }

@@ -46,7 +46,8 @@ final class Hll private (val p: Int, val registers: Array[Byte]) {
 
   /** `merge(Hll.deserialize(bytes))`, reading the registers in place. */
   def mergeSerialized(bytes: Array[Byte]): Unit = {
-    val op = Hll.checkSerialized(bytes)
+    Hll.checkSerialized(bytes)
+    val op = bytes(0).toInt
     require(op == p, s"precision mismatch ($p vs $op)")
     var i = 0
     while (i < registers.length) {
@@ -93,26 +94,30 @@ final class Hll private (val p: Int, val registers: Array[Byte]) {
   def copy(): Hll = new Hll(p, registers.clone())
 }
 
-object Hll {
+object Hll extends SketchCodec[Hll] {
   /** 2^-r for every register byte r (negative bytes included), indexed by
     * `r & 0xFF`: the estimator's harmonic-sum terms, bit-for-bit. */
   private val InversePow2: Array[Double] =
     Array.tabulate(256)(i => java.lang.Math.pow(2.0, -i.toByte.toDouble))
 
-  /** Validate a serialized sketch (O(1)) and return its precision. */
-  def checkSerialized(bytes: Array[Byte]): Int = {
+  /** Precision byte and length; any blob that passes re-serializes to
+    * itself, so every one is admitted. */
+  override def checkSerialized(bytes: Array[Byte]): Int = {
     require(bytes.length >= 1, "empty HLL blob")
     val p = bytes(0).toInt
     require(p >= 4 && p <= 16, s"corrupt HLL blob (p=$p)")
     require(bytes.length == 1 + (1 << p),
       s"corrupt HLL blob (${bytes.length} bytes for p=$p)")
-    p
+    1 << p
   }
 
-  def deserialize(bytes: Array[Byte]): Hll = {
-    val p = checkSerialized(bytes)
-    val regs = new Array[Byte](1 << p)
+  override def deserialize(bytes: Array[Byte]): Hll = {
+    val regs = new Array[Byte](checkSerialized(bytes))
     System.arraycopy(bytes, 1, regs, 0, regs.length)
-    new Hll(p, regs)
+    new Hll(bytes(0), regs)
   }
+
+  override def serialize(h: Hll): Array[Byte] = h.serialize()
+  override def mergeBytes(into: Hll, bytes: Array[Byte]): Unit = into.mergeSerialized(bytes)
+  override def mergeSketch(into: Hll, other: Hll): Unit = into.merge(other)
 }

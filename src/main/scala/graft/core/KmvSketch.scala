@@ -19,7 +19,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   * true distinct count of hashed inputs.
   */
 final class KmvSketch(initialK: Int) extends Serializable {
-  require(initialK >= 2, "k must be >= 2")
+  require(initialK >= 2 && initialK <= KmvSketch.MaxK, s"k must be in [2, ${KmvSketch.MaxK}]")
 
   /** Effective capacity: shrinks on merge with a smaller-k sketch (a union
     * is only a valid KMV at k′ = min of the inputs' capacities). */
@@ -98,7 +98,9 @@ final case class KmvSetOps(aD: Double, bD: Double, unionD: Double,
     intersectD: Double, jaccard: Double, containA: Double, containB: Double,
     unionSe: Double, intersectSe: Double, exact: Boolean)
 
-object KmvSketch {
+object KmvSketch extends SketchCodec[KmvSketch] {
+  final val MaxK: Int = 1 << 20
+
   /** Unsigned 64-bit → (0, 1]: (h + 1) / 2^64 computed in two 32-bit halves
     * to keep double rounding benign. */
   @inline def toUnit(h: Long): Double = {
@@ -107,14 +109,56 @@ object KmvSketch {
     (hi * 4294967296.0 + lo + 1.0) / 1.8446744073709552e19
   }
 
-  def deserialize(bytes: Array[Byte]): KmvSketch = {
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val k = buf.getInt
-    val n = buf.getInt
-    val s = new KmvSketch(k)
-    var i = 0
-    while (i < n) { s.add(buf.getLong); i += 1 }
+  /** Little-endian k, n, then n hashes. */
+  override def checkSerialized(bytes: Array[Byte]): Int = {
+    require(bytes.length >= 8, s"not a KMV sketch: ${bytes.length} bytes (need >= 8)")
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    val k = bb.getInt(0)
+    val n = bb.getInt(4)
+    require(k >= 2 && k <= MaxK, s"corrupt KMV sketch: k=$k outside [2, $MaxK]")
+    require(n >= 0 && bytes.length == 8 + 8L * n,
+      s"corrupt KMV sketch: $n hashes in ${bytes.length} bytes")
+    n
+  }
+
+  /** The encoder writes at most k hashes in strictly increasing unsigned
+    * order; any other valid blob decodes to the k smallest distinct ones. */
+  override def admit(bytes: Array[Byte]): Boolean = {
+    val n = checkSerialized(bytes)
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    var ok = n <= bb.getInt(0)
+    var i = 1
+    while (ok && i < n) {
+      ok = java.lang.Long.compareUnsigned(bb.getLong(8 * i), bb.getLong(8 + 8 * i)) < 0
+      i += 1
+    }
+    ok
+  }
+
+  override def deserialize(bytes: Array[Byte]): KmvSketch = {
+    val n = checkSerialized(bytes)
+    val s = new KmvSketch(ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).getInt(0))
+    addAll(s, bytes, n)
     s
+  }
+
+  override def serialize(s: KmvSketch): Array[Byte] = s.serialize()
+
+  /** The state depends only on the hash set and the smaller k, so shrinking
+    * first and adding every stored hash equals merging the decoded sketch. */
+  override def mergeBytes(into: KmvSketch, bytes: Array[Byte]): Unit = {
+    val n = checkSerialized(bytes)
+    val k = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).getInt(0)
+    if (k < into.effK) into.shrinkTo(k)
+    addAll(into, bytes, n)
+  }
+
+  override def mergeSketch(into: KmvSketch, other: KmvSketch): Unit = into.merge(other)
+
+  private def addAll(s: KmvSketch, bytes: Array[Byte], n: Int): Unit = {
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    var i = 0
+    while (i < n) { s.add(bb.getLong(8 + 8 * i)); i += 1 }
   }
 
   /** Jaccard |A∩B| / |A∪B| from two sketches over the same hash function:

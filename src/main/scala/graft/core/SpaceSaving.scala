@@ -26,9 +26,12 @@ import java.nio.charset.StandardCharsets
   *
   * The int64/object template split (space_saving_stubs.c.in:46-52) maps to
   * [[SpaceSavingLong]] (int64 + bit-cast float64) and [[SpaceSavingObj]]
-  * (strings / arbitrary byte keys).
+  * (strings / arbitrary byte keys); `tag` names the key type a sketch was
+  * built over and is written with it.
   */
-abstract class SpaceSavingBase(val capacity: Int) extends Serializable {
+abstract class SpaceSavingBase(val capacity: Int, val tag: Byte) extends Serializable {
+  require(capacity > 0 && capacity <= SpaceSaving.MaxCapacity,
+    s"capacity must be in [1, ${SpaceSaving.MaxCapacity}]")
   final val NIL = -1
   var size: Int = 0
   var head: Int = NIL
@@ -206,6 +209,8 @@ abstract class SpaceSavingBase(val capacity: Int) extends Serializable {
   protected final def minOffset: Long =
     if (size < capacity) 0L else counts(prev(head))
 
+  def serialize(tag: Byte): Array[Byte]
+
   /** Slots in sorted order (head → tail), first min(k, size) entries. */
   final def topkSlots(k: Int): Array[Int] = {
     val n = math.min(k, size)
@@ -218,7 +223,8 @@ abstract class SpaceSavingBase(val capacity: Int) extends Serializable {
 }
 
 /** Space-Saving over int64 keys (also carries bit-cast float64 keys). */
-final class SpaceSavingLong(capacity0: Int) extends SpaceSavingBase(capacity0) {
+final class SpaceSavingLong(capacity0: Int, tag0: Byte = SpaceSaving.TagLong)
+  extends SpaceSavingBase(capacity0, tag0) {
   val items = new Array[Long](capacity)
   private val index = new LongIntMap(capacity) // item → slot
 
@@ -279,7 +285,7 @@ final class SpaceSavingLong(capacity0: Int) extends SpaceSavingBase(capacity0) {
       val item = bb.getLong(off)
       val c = bb.getLong(off + 8); val e = bb.getLong(off + 16)
       if (i > 0 && !counterGe(i - 1, c, e, 0L)) return false
-      require(index.get(item) == NIL, "deserialization failed, duplicate items found")
+      require(index.get(item) == NIL, SpaceSaving.Duplicates)
       index.put(item, i)
       items(i) = item; counts(i) = c; errors(i) = e
       prev(i) = if (i == 0) n - 1 else i - 1
@@ -297,7 +303,7 @@ final class SpaceSavingLong(capacity0: Int) extends SpaceSavingBase(capacity0) {
     require(its.length <= capacity, "deserialization failed, size > capacity")
     var i = 0
     while (i < its.length) {
-      require(lookup(its(i)) == NIL, "deserialization failed, duplicate items found")
+      require(lookup(its(i)) == NIL, SpaceSaving.Duplicates)
       val idx = counterNew(cts(i), ers(i))
       items(idx) = its(i)
       index.put(its(i), idx)
@@ -322,7 +328,8 @@ final class SpaceSavingLong(capacity0: Int) extends SpaceSavingBase(capacity0) {
 
 /** Space-Saving over arbitrary reference keys (strings, byte arrays as
   * Base64-stable strings). Mirrors the reference `object` template arm. */
-final class SpaceSavingObj(capacity0: Int) extends SpaceSavingBase(capacity0) {
+final class SpaceSavingObj(capacity0: Int, tag0: Byte = SpaceSaving.TagString)
+  extends SpaceSavingBase(capacity0, tag0) {
   val items = new Array[String](capacity)
   private val index = new java.util.HashMap[String, Integer](capacity * 2)
 
@@ -376,7 +383,7 @@ final class SpaceSavingObj(capacity0: Int) extends SpaceSavingBase(capacity0) {
     require(its.length <= capacity, "deserialization failed, size > capacity")
     var i = 0
     while (i < its.length) {
-      require(lookup(its(i)) == NIL, "deserialization failed, duplicate items found")
+      require(lookup(its(i)) == NIL, SpaceSaving.Duplicates)
       val idx = counterNew(cts(i), ers(i))
       items(idx) = its(i)
       index.put(its(i), idx)
@@ -386,8 +393,7 @@ final class SpaceSavingObj(capacity0: Int) extends SpaceSavingBase(capacity0) {
 
   def serialize(tag: Byte): Array[Byte] = {
     val slots = topkSlots(size)
-    val cs = if (tag == SpaceSaving.TagBinary) StandardCharsets.ISO_8859_1
-             else StandardCharsets.UTF_8
+    val cs = SpaceSaving.charset(tag)
     val bytes = slots.map(s => items(s).getBytes(cs))
     val payload = bytes.map(_.length + 4 + 16).sum
     val bb = ByteBuffer.allocate(1 + 4 + 4 + payload)
@@ -404,12 +410,18 @@ final class SpaceSavingObj(capacity0: Int) extends SpaceSavingBase(capacity0) {
   }
 }
 
-object SpaceSaving {
+object SpaceSaving extends SketchCodec[SpaceSavingBase] {
   /** serialized key-type tags */
   val TagLong: Byte = 0
   val TagDouble: Byte = 1 // int64-backed, items are doubleToRawLongBits
   val TagString: Byte = 2
   val TagBinary: Byte = 3 // Obj arm; bytes held as ISO-8859-1 strings (1:1)
+
+  /** Largest capacity: a sketch's arrays are sized by it, so a stored
+    * header may not claim more. */
+  final val MaxCapacity: Int = 1 << 20
+
+  private[core] val Duplicates = "corrupt space-saving sketch: duplicate items found"
 
   /** Lossless byte↔string bridge for binary keys on the Obj arm. */
   def binaryKey(b: Array[Byte]): String =
@@ -422,45 +434,44 @@ object SpaceSaving {
   @inline def doubleKey(x: Double): Long = java.lang.Double.doubleToRawLongBits(x)
   @inline def keyToDouble(k: Long): Double = java.lang.Double.longBitsToDouble(k)
 
-  def deserializeTag(bytes: Array[Byte]): Byte = {
-    require(bytes.length >= 9, s"not a space-saving sketch: ${bytes.length} bytes")
-    val tag = bytes(0)
-    require(tag == TagLong || tag == TagDouble || tag == TagString || tag == TagBinary,
-      s"not a space-saving sketch: unknown key-type tag $tag")
-    tag
-  }
-
   /** khash int64 hash (crick/klib/khash.h:612-613), before masking. */
   @inline private[core] def khash(k: Long): Int = ((k >> 33) ^ k ^ (k << 11)).toInt
 
   @inline private def isLongTag(tag: Byte): Boolean = tag == TagLong || tag == TagDouble
 
-  /** O(1) check of the tag, capacity, size and (int64 arm) length, as the
-    * decoders run it before reading counters; returns the tag. */
-  def checkHeader(bytes: Array[Byte]): Byte = {
-    val tag = deserializeTag(bytes)
+  private[core] def charset(tag: Byte) =
+    if (tag == TagBinary) StandardCharsets.ISO_8859_1 else StandardCharsets.UTF_8
+
+  /** An empty sketch on the arm that holds `tag`'s keys. */
+  def empty(tag: Byte, capacity: Int): SpaceSavingBase =
+    if (isLongTag(tag)) new SpaceSavingLong(capacity, tag) else new SpaceSavingObj(capacity, tag)
+
+  /** Tag, capacity, size and length: exact for the int64 arm, at least 20
+    * bytes a counter for the object arm. Returns the size. */
+  override def checkSerialized(bytes: Array[Byte]): Int = {
+    require(bytes.length >= 9, s"not a space-saving sketch: ${bytes.length} bytes")
+    val tag = bytes(0)
+    require(tag == TagLong || tag == TagDouble || tag == TagString || tag == TagBinary,
+      s"not a space-saving sketch: unknown key-type tag $tag")
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val cap = bb.getInt(1)
     val n = bb.getInt(5)
-    if (isLongTag(tag))
-      require(cap > 0 && n >= 0 && n <= cap && bytes.length == 9 + 24 * n,
-        s"corrupt space-saving sketch: capacity=$cap size=$n in ${bytes.length} bytes")
-    else
-      require(cap > 0 && n >= 0 && n <= cap,
-        s"corrupt space-saving sketch: capacity=$cap size=$n")
-    tag
+    require(cap > 0 && cap <= MaxCapacity && n >= 0 && n <= cap &&
+      (if (isLongTag(tag)) bytes.length == 9 + 24 * n else n <= (bytes.length - 9) / 20),
+      s"corrupt space-saving sketch: capacity=$cap size=$n in ${bytes.length} bytes")
+    n
   }
 
-  /** Check a sketch's header, and an int64-arm sketch as [[deserializeLong]]
-    * would (throwing the same errors) without building it. True when the
-    * bytes are canonical int64-arm counters (list order, no duplicate items),
-    * i.e. exactly what `deserializeLong(bytes).serialize(bytes(0))` returns;
-    * false for the object arm or when decoding would reorder the counters
-    * (the decode walk then checks the rest). */
-  def canonicalLong(bytes: Array[Byte]): Boolean =
-    isLongTag(checkHeader(bytes)) && {
+  /** Check a sketch as [[deserialize]] would, throwing the same errors,
+    * without building it. True when the bytes are canonical int64-arm
+    * counters (list order, no duplicate items), i.e. exactly what
+    * `serialize(deserialize(bytes))` returns; false for the object arm,
+    * whose keys cost a decode to check, or when decoding would reorder the
+    * counters (the decode walk then checks the rest). */
+  override def admit(bytes: Array[Byte]): Boolean = {
+    val n = checkSerialized(bytes)
+    isLongTag(bytes(0)) && {
       val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-      val n = bb.getInt(5)
       val seen = new LongIntMap(n)
       var i = 0
       var off = 9
@@ -471,7 +482,7 @@ object SpaceSaving {
         val c = bb.getLong(off + 8); val e = bb.getLong(off + 16)
         sorted = i == 0 || c0 > c || (c0 == c && e0 <= e)
         if (sorted) {
-          require(seen.get(item) == -1, "deserialization failed, duplicate items found")
+          require(seen.get(item) == -1, Duplicates)
           seen.put(item, i)
         }
         c0 = c; e0 = e
@@ -479,20 +490,35 @@ object SpaceSaving {
       }
       sorted
     }
+  }
+
+  /** The one arm dispatch: int64 and float64 keys decode to
+    * [[SpaceSavingLong]], strings and binaries to [[SpaceSavingObj]]. */
+  override def deserialize(bytes: Array[Byte]): SpaceSavingBase = {
+    checkSerialized(bytes)
+    if (isLongTag(bytes(0))) deserializeLong(bytes) else deserializeObj(bytes)
+  }
+
+  override def serialize(s: SpaceSavingBase): Array[Byte] = s.serialize(s.tag)
+
+  override def mergeSketch(into: SpaceSavingBase, other: SpaceSavingBase): Unit = {
+    require(into.tag == other.tag, "All arguments to merge must have same dtype")
+    into.mergeBase(other)
+  }
 
   /** Decode an int64-arm sketch. Canonical counters are linked in one pass;
     * any other order takes the reference insert walk, which normalises it. */
   def deserializeLong(bytes: Array[Byte]): SpaceSavingLong = {
-    checkHeader(bytes)
+    val n = checkSerialized(bytes)
+    require(isLongTag(bytes(0)), s"space-saving sketch holds object keys (tag ${bytes(0)})")
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    bb.get() // tag
-    val cap = bb.getInt()
-    val n = bb.getInt()
-    val fast = new SpaceSavingLong(cap)
+    val cap = bb.getInt(1)
+    val fast = new SpaceSavingLong(cap, bytes(0))
     if (fast.linkSorted(bytes, n)) fast
     else {
-      val s = new SpaceSavingLong(cap)
+      val s = new SpaceSavingLong(cap, bytes(0))
       val its = new Array[Long](n); val cts = new Array[Long](n); val ers = new Array[Long](n)
+      bb.position(9)
       var i = 0
       while (i < n) { its(i) = bb.getLong(); cts(i) = bb.getLong(); ers(i) = bb.getLong(); i += 1 }
       s.setState(its, cts, ers)
@@ -500,25 +526,26 @@ object SpaceSaving {
     }
   }
 
-  def deserializeObj(bytes: Array[Byte]): SpaceSavingObj = {
-    val tag = checkHeader(bytes)
-    val cs = if (tag == TagBinary) StandardCharsets.ISO_8859_1
-             else StandardCharsets.UTF_8
+  /** Each item's length is bounded by the bytes left after it, less the
+    * 20-byte minimum of every later counter; no byte may be left over. */
+  private[core] def deserializeObj(bytes: Array[Byte]): SpaceSavingObj = {
+    val n = checkSerialized(bytes)
+    val cs = charset(bytes(0))
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    bb.get() // tag
-    val cap = bb.getInt()
-    val n = bb.getInt()
-    val s = new SpaceSavingObj(cap)
+    val s = new SpaceSavingObj(bb.getInt(1), bytes(0))
     val its = new Array[String](n); val cts = new Array[Long](n); val ers = new Array[Long](n)
+    bb.position(9)
     var i = 0
     while (i < n) {
       val len = bb.getInt()
-      val b = new Array[Byte](len)
-      bb.get(b)
-      its(i) = new String(b, cs)
+      require(len >= 0 && len <= bb.remaining - 16 - 20 * (n - 1 - i),
+        s"corrupt space-saving sketch: item $i of $len bytes in ${bytes.length} bytes")
+      its(i) = new String(bytes, bb.position(), len, cs)
+      bb.position(bb.position() + len)
       cts(i) = bb.getLong(); ers(i) = bb.getLong()
       i += 1
     }
+    require(!bb.hasRemaining, s"corrupt space-saving sketch: ${bb.remaining} trailing bytes")
     s.setState(its, cts, ers)
     s
   }

@@ -387,7 +387,7 @@ final class TDigest private (val compression: Double, val size: Int,
   }
 }
 
-object TDigest {
+object TDigest extends SketchCodec[TDigest] {
   val DblEpsilon: Double = java.lang.Math.ulp(1.0) // 2.220446049250313e-16
   private val NoCentroids = new Array[Double](0)
 
@@ -437,9 +437,9 @@ object TDigest {
     new TDigest(c, size, bufferSize)
   }
 
-  /** Validate a serialized digest's header and length (O(1)) and return
-    * its centroid count; throws on anything `deserialize` would reject. */
-  def checkSerialized(bytes: Array[Byte]): Int = {
+  /** Compression, centroid count and length; a digest that passes
+    * re-serializes to its own bytes, so every one is admitted. */
+  override def checkSerialized(bytes: Array[Byte]): Int = {
     require(bytes.length >= 36,
       s"not a t-digest sketch: ${bytes.length} bytes (need >= 36)")
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
@@ -454,7 +454,7 @@ object TDigest {
 
   /** Decode into centroid arrays of exactly n entries; scratch and ingest
     * buffers are allocated only if the digest is later added to or queried. */
-  def deserialize(bytes: Array[Byte]): TDigest = {
+  override def deserialize(bytes: Array[Byte]): TDigest = {
     val n = checkSerialized(bytes)
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val t = TDigest(bb.getDouble())
@@ -468,4 +468,8 @@ object TDigest {
     t.means = means; t.weights = weights
     t
   }
+
+  override def serialize(t: TDigest): Array[Byte] = t.serialize()
+  override def mergeBytes(into: TDigest, bytes: Array[Byte]): Unit = into.mergeSerialized(bytes)
+  override def mergeSketch(into: TDigest, other: TDigest): Unit = into.merge(other)
 }

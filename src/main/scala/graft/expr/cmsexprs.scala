@@ -2,10 +2,10 @@ package graft.expr
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftshim.{AbstractDataType, TypeCollection}
+import org.apache.spark.sql.graftshim.AbstractDataType
 import org.apache.spark.sql.types._
 
-import graft.agg.CmsKey
+import graft.agg.{CmsKey, KmvHash}
 import graft.core.CountMin
 
 /** cms_count(sketch, item) → long: the Count-Min point estimate for
@@ -19,16 +19,8 @@ import graft.core.CountMin
   * Participates in whole-stage codegen (no CodegenFallback). */
 case class CmsCount(left: Expression, right: Expression)
   extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = {
-    val itemType = right.dataType match {
-      case FloatType | DoubleType | _: DecimalType => DoubleType
-      case ByteType | ShortType | IntegerType | LongType => LongType
-      case BinaryType => BinaryType
-      case StringType => StringType
-      case _ => TypeCollection(LongType, DoubleType, StringType, BinaryType)
-    }
-    Seq(BinaryType, itemType)
-  }
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(BinaryType, KmvHash.routedType(right.dataType))
   override def dataType: DataType = LongType
   override def prettyName: String = "cms_count"
   override protected def nullSafeEval(sketch: Any, item: Any): Any =

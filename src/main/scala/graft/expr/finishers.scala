@@ -198,39 +198,37 @@ case class SSTopK(left: Expression, right: Expression, itemType: DataType)
     val bytes = sketch.asInstanceOf[Array[Byte]]
     val k = kAny.asInstanceOf[Int]
     if (k < 0) throw new IllegalArgumentException("k must be >= 0")
-    val tag = SpaceSaving.deserializeTag(bytes)
-    val expected = SSTopK.itemTypeFor(tag)
+    val n = SpaceSaving.checkSerialized(bytes)
+    val expected = SSTopK.itemTypeFor(bytes(0))
     require(expected == itemType,
       s"sketch holds ${expected.simpleString} items; use the matching " +
         s"ss_topk variant (got ${itemType.simpleString})")
-    val rows: Array[Any] = if (tag == SpaceSaving.TagString || tag == SpaceSaving.TagBinary) {
-      val s = SpaceSaving.deserializeObj(bytes)
-      s.topkSlots(k).map { i =>
-        val r = new GenericInternalRow(3)
-        if (itemType == BinaryType) r.update(0, SpaceSaving.keyToBinary(s.items(i)))
-        else r.update(0, UTF8String.fromString(s.items(i)))
-        r.setLong(1, s.counts(i)); r.setLong(2, s.errors(i))
-        r: Any
-      }
-    } else if (SpaceSaving.canonicalLong(bytes)) {
+    val rows: Array[Any] = if (SpaceSaving.admit(bytes)) {
       // canonical counters are already in list order: read the first k
       val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      Array.tabulate[Any](math.min(k, bb.getInt(5))) { i =>
+      Array.tabulate[Any](math.min(k, n)) { i =>
         val off = 9 + 24 * i
-        longRow(tag, bb.getLong(off), bb.getLong(off + 8), bb.getLong(off + 16))
+        longRow(bb.getLong(off), bb.getLong(off + 8), bb.getLong(off + 16))
       }
-    } else {
-      val s = SpaceSaving.deserializeLong(bytes)
-      s.topkSlots(k).map(i => longRow(tag, s.items(i), s.counts(i), s.errors(i)): Any)
+    } else SpaceSaving.deserialize(bytes) match {
+      case s: SpaceSavingLong =>
+        s.topkSlots(k).map(i => longRow(s.items(i), s.counts(i), s.errors(i)): Any)
+      case s: SpaceSavingObj =>
+        s.topkSlots(k).map { i =>
+          val r = new GenericInternalRow(3)
+          if (itemType == BinaryType) r.update(0, SpaceSaving.keyToBinary(s.items(i)))
+          else r.update(0, UTF8String.fromString(s.items(i)))
+          r.setLong(1, s.counts(i)); r.setLong(2, s.errors(i))
+          r: Any
+        }
     }
     new GenericArrayData(rows)
   }
 
-  private def longRow(tag: Byte, item: Long, count: Long, error: Long): InternalRow = {
+  /** A row of the int64 arm; the item type already matches the tag. */
+  private def longRow(item: Long, count: Long, error: Long): InternalRow = {
     val r = new GenericInternalRow(3)
-    if (tag == SpaceSaving.TagDouble && itemType == DoubleType)
-      r.setDouble(0, SpaceSaving.keyToDouble(item))
-    else if (itemType == DoubleType) r.setDouble(0, item.toDouble)
+    if (itemType == DoubleType) r.setDouble(0, SpaceSaving.keyToDouble(item))
     else r.setLong(0, item)
     r.setLong(1, count); r.setLong(2, error)
     r
@@ -248,9 +246,8 @@ case class SSCapacity(child: Expression)
   override def prettyName: String = "ss_capacity"
   override protected def nullSafeEval(sketch: Any): Any = {
     val bytes = sketch.asInstanceOf[Array[Byte]]
-    SpaceSaving.deserializeTag(bytes) // validates header
-    java.nio.ByteBuffer.wrap(bytes, 1, 4)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt()
+    SpaceSaving.checkSerialized(bytes)
+    java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(1)
   }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -261,12 +258,7 @@ case class SSSize(child: Expression)
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "ss_size"
-  override protected def nullSafeEval(sketch: Any): Any = {
-    val bytes = sketch.asInstanceOf[Array[Byte]]
-    val tag = SpaceSaving.deserializeTag(bytes)
-    if (tag == SpaceSaving.TagString || tag == SpaceSaving.TagBinary)
-      SpaceSaving.deserializeObj(bytes).size
-    else SpaceSaving.deserializeLong(bytes).size
-  }
+  override protected def nullSafeEval(sketch: Any): Any =
+    SpaceSaving.deserialize(sketch.asInstanceOf[Array[Byte]]).size
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }

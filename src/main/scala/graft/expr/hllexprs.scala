@@ -44,9 +44,9 @@ case class HllUnion(left: Expression, right: Expression)
   override def dataType: DataType = BinaryType
   override def prettyName: String = "hll_union"
   override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val ha = Hll.deserialize(a.asInstanceOf[Array[Byte]]).copy()
-    ha.merge(Hll.deserialize(b.asInstanceOf[Array[Byte]]))
-    ha.serialize()
+    val h = Hll.deserialize(a.asInstanceOf[Array[Byte]])
+    h.mergeSerialized(b.asInstanceOf[Array[Byte]])
+    h.serialize()
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)

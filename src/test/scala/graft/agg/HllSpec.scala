@@ -130,6 +130,26 @@ class HllSpec extends SparkTestBase {
     assert(dj >= 0.0 && dj < 200.0, s"disjoint est $dj")
   }
 
+  test("hll_union decodes one side and merges the other from its bytes") {
+    val r = new scala.util.Random(31)
+    def sketch(p: Int): Array[Byte] = {
+      val h = new Hll(p)
+      (0 until r.nextInt(3000)).foreach(_ => h.add(r.nextLong()))
+      h.serialize()
+    }
+    val pairs = Seq.fill(20) { val p = 4 + r.nextInt(9); (sketch(p), sketch(p)) }
+    // what hll_union returned when it decoded, copied and merged both sides
+    val old = pairs.map { case (a, b) =>
+      val h = Hll.deserialize(a).copy(); h.merge(Hll.deserialize(b)); h.serialize().toSeq
+    }
+    assert(pairs.toDF("a", "b").select(gf.hll_union(col("a"), col("b"))).collect()
+      .map(_.getAs[Array[Byte]](0).toSeq).toSeq == old)
+    val e = intercept[Exception](Seq((sketch(8), sketch(6))).toDF("a", "b")
+      .select(gf.hll_union(col("a"), col("b"))).collect())
+    val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.endsWith("precision mismatch (8 vs 6)")))
+  }
+
   test("SQL surface and precision validation") {
     val est = spark.sql(
       "SELECT hll_distinct(hll_agg(id, 12)) FROM range(1000)")

@@ -2,15 +2,16 @@ package graft.agg
 
 import graft.SparkTestBase
 import graft.api.{functions => gf}
-import graft.core.{Hll, SpaceSaving, SpaceSavingLong, SpaceSavingObj, TDigest}
+import graft.core.{CountMin, Hll, KmvSketch, SpaceSaving, SpaceSavingLong, SpaceSavingObj, TDigest}
 import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
 /** The decode-once merge aggregates (tdigest_merge_agg, ss_merge_agg,
-  * hll_merge_agg) against the kernel fold deserialize → merge → serialize,
-  * byte for byte, on the hash path and on the sort-based fallback. */
+  * hll_merge_agg, kmv_merge_agg, cms_merge_agg) against the kernel fold
+  * deserialize → merge → serialize, byte for byte, on the hash path and on
+  * the sort-based fallback. */
 class MergeAggSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -45,30 +46,49 @@ class MergeAggSpec extends SparkTestBase {
     h.serialize()
   }
 
-  /** Counters of a canonical int64 sketch written back in reverse order:
-    * valid, but decoding re-sorts them. */
-  private def reversed(canonical: Array[Byte]): Array[Byte] = {
-    val n = (canonical.length - 9) / 24
-    val out = canonical.clone()
-    (0 until n).foreach(i =>
-      System.arraycopy(canonical, 9 + 24 * i, out, 9 + 24 * (n - 1 - i), 24))
-    out
+  private def kmvBytes(r: Random, i: Int): Array[Byte] = {
+    // mixed k, so merges shrink to the smaller one; many sketches saturate
+    val s = new KmvSketch(if (i % 5 == 2) 8 else 32)
+    (0 until r.nextInt(60)).foreach(_ => s.add(r.nextInt(200).toLong * 0x9e3779b97f4a7c15L))
+    s.serialize()
   }
 
-  /** Rows (g, td, ss, sss, hll), each group's rows contiguous; the
-    * [[Reordered]] group's int64 Space-Saving sketch is stored out of list
-    * order. */
-  private lazy val rows: Seq[(Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])] = {
+  private def cmsBytes(r: Random): Array[Byte] = {
+    val c = new CountMin(3, 64)
+    (0 until r.nextInt(200)).foreach(_ => c.add(r.nextInt(100).toLong, 1L + r.nextInt(3)))
+    c.serialize()
+  }
+
+  /** Fixed-width entries after a header written back in reverse order:
+    * valid, but decoding re-sorts them. */
+  private def reversed(canonical: Array[Byte], header: Int, width: Int): Array[Byte] = {
+    val n = (canonical.length - header) / width
+    val out = canonical.clone()
+    (0 until n).foreach(i =>
+      System.arraycopy(canonical, header + width * i, out, header + width * (n - 1 - i), width))
+    out
+  }
+  private def reversed(canonical: Array[Byte]): Array[Byte] = reversed(canonical, 9, 24)
+
+  /** Rows (g, td, ss, sss, hll, kmv, cms), each group's rows contiguous;
+    * the [[Reordered]] group's int64 Space-Saving and KMV sketches are
+    * stored out of order. */
+  private lazy val rows: Seq[(Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte],
+      Array[Byte], Array[Byte])] = {
     val r = new Random(17)
     var i = 0
     GroupSizes.zipWithIndex.flatMap { case (n, g) =>
       (0 until n).map { _ =>
         i += 1
         val ss = ssBytes(r)
-        (g, tdBytes(r, i), if (g == Reordered) reversed(ss) else ss, ssStrBytes(r), hllBytes(r))
+        val kmv = kmvBytes(r, i)
+        (g, tdBytes(r, i), if (g == Reordered) reversed(ss) else ss, ssStrBytes(r), hllBytes(r),
+          if (g == Reordered) reversed(kmv, 8, 8) else kmv, cmsBytes(r))
       }
     }
   }
+
+  private def ssObj(b: Array[Byte]) = SpaceSaving.deserialize(b).asInstanceOf[SpaceSavingObj]
 
   private def fold[S](bs: Seq[Array[Byte]], de: Array[Byte] => S)(merge: (S, S) => Unit): S = {
     val acc = de(bs.head)
@@ -81,24 +101,27 @@ class MergeAggSpec extends SparkTestBase {
     Seq(
       fold(rs.map(_._2), TDigest.deserialize)(_.merge(_)).serialize(),
       fold(rs.map(_._3), SpaceSaving.deserializeLong)(_.merge(_)).serialize(SpaceSaving.TagLong),
-      fold(rs.map(_._4), SpaceSaving.deserializeObj)(_.merge(_)).serialize(SpaceSaving.TagString),
-      fold(rs.map(_._5), Hll.deserialize)(_.merge(_)).serialize()).map(_.toSeq)
+      fold(rs.map(_._4), ssObj)(_.merge(_)).serialize(SpaceSaving.TagString),
+      fold(rs.map(_._5), Hll.deserialize)(_.merge(_)).serialize(),
+      fold(rs.map(_._6), KmvSketch.deserialize)(_.merge(_)).serialize(),
+      fold(rs.map(_._7), CountMin.deserialize)(_.merge(_)).serialize()).map(_.toSeq)
   }
 
   /** One partition, rows in group order: every group's fold order is its
     * row order, on the hash path and on the sort fallback alike. */
   private def merged(): Map[Int, Seq[Seq[Byte]]] =
-    rows.toDF("g", "td", "ss", "sss", "hll").coalesce(1)
+    rows.toDF("g", "td", "ss", "sss", "hll", "kmv", "cms").coalesce(1)
       .groupBy("g").agg(
         gf.tdigest_merge_agg(col("td")), gf.ss_merge_agg(col("ss")),
-        gf.ss_merge_agg(col("sss")), gf.hll_merge_agg(col("hll")))
-      .collect().map(r => r.getInt(0) -> (1 to 4).map(r.getAs[Array[Byte]](_).toSeq)).toMap
+        gf.ss_merge_agg(col("sss")), gf.hll_merge_agg(col("hll")),
+        gf.kmv_merge_agg(col("kmv")), gf.cms_merge_agg(col("cms")))
+      .collect().map(r => r.getInt(0) -> (1 to 6).map(r.getAs[Array[Byte]](_).toSeq)).toMap
 
   private def checkAll(): Unit = {
     val got = merged()
     assert(got.keySet == GroupSizes.indices.toSet)
     val names = Seq("tdigest_merge_agg", "ss_merge_agg(long)", "ss_merge_agg(string)",
-      "hll_merge_agg")
+      "hll_merge_agg", "kmv_merge_agg", "cms_merge_agg")
     GroupSizes.indices.foreach { g =>
       expected(g).zip(got(g)).zip(names).foreach { case ((e, a), name) =>
         assert(a == e, s"$name: group $g (${GroupSizes(g)} sketches) differs from the kernel fold")
@@ -109,7 +132,9 @@ class MergeAggSpec extends SparkTestBase {
   test("merge aggregates equal the kernel fold byte for byte (groups of 1, 2, 50)") {
     checkAll()
     // a lone out-of-order sketch comes out normalised, not echoed back
-    assert(expected(Reordered)(1) != rows.find(_._1 == Reordered).get._3.toSeq)
+    val lone = rows.find(_._1 == Reordered).get
+    assert(expected(Reordered)(1) != lone._3.toSeq)
+    assert(expected(Reordered)(4) != lone._6.toSeq)
   }
 
   test("merge aggregates equal the kernel fold under the sort fallback (threshold=2)") {
@@ -133,7 +158,11 @@ class MergeAggSpec extends SparkTestBase {
         (bs: Seq[Array[Byte]]) =>
           fold(bs, SpaceSaving.deserializeLong)(_.merge(_)).serialize(SpaceSaving.TagLong)),
       (HllMergeAgg(in).asInstanceOf[Agg], (_: Int) => hllBytes(r),
-        (bs: Seq[Array[Byte]]) => fold(bs, Hll.deserialize)(_.merge(_)).serialize()))
+        (bs: Seq[Array[Byte]]) => fold(bs, Hll.deserialize)(_.merge(_)).serialize()),
+      (KmvMergeAgg(in).asInstanceOf[Agg], (i: Int) => kmvBytes(r, i),
+        (bs: Seq[Array[Byte]]) => fold(bs, KmvSketch.deserialize)(_.merge(_)).serialize()),
+      (CountMinMergeAgg(in).asInstanceOf[Agg], (_: Int) => cmsBytes(r),
+        (bs: Seq[Array[Byte]]) => fold(bs, CountMin.deserialize)(_.merge(_)).serialize()))
     for ((agg, gen, fold1) <- kinds; trial <- 0 until 12) {
       val bs = (0 until 1 + r.nextInt(12)).map(gen)
       // split into partials, each updated row by row and shuffled as bytes
@@ -159,7 +188,9 @@ class MergeAggSpec extends SparkTestBase {
     val cases = Seq(
       (gf.tdigest_merge_agg _, Array[Byte](1, 2, 3), "not a t-digest sketch"),
       (gf.hll_merge_agg _, Array[Byte](3, 0, 0), "corrupt HLL blob"),
-      (gf.ss_merge_agg _, Array.fill[Byte](9)(9), "not a space-saving sketch"))
+      (gf.ss_merge_agg _, Array.fill[Byte](9)(9), "not a space-saving sketch"),
+      (gf.kmv_merge_agg _, Array[Byte](1, 2, 3), "not a KMV sketch"),
+      (gf.cms_merge_agg _, Array.fill[Byte](17)(CountMin.Magic), "corrupt CMS header"))
     cases.foreach { case (f, bad, msg) =>
       val e = intercept[Exception](
         Seq((1, bad)).toDF("g", "b").groupBy("g").agg(f(col("b"))).collect())

@@ -1,0 +1,248 @@
+package graft.agg
+
+import graft.SparkTestBase
+import graft.api.{functions => gf}
+import graft.core._
+import java.nio.{ByteBuffer, ByteOrder}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
+import scala.util.{Failure, Random, Success, Try}
+
+/** Seeded mutation property over the five sketch codecs: valid sketches of
+  * every kind are truncated, extended, bit-flipped and have their length
+  * fields inflated; the three blobs that once killed an executor ride along
+  * byte for byte. Every decode either round-trips or throws an
+  * IllegalArgumentException naming the kind, and the codec's other entry
+  * points agree with it. The same inputs then run through each merge
+  * aggregate (one- and two-sketch groups) and each finisher in SQL. */
+class SketchCodecPropSpec extends SparkTestBase {
+  import spark.implicits._
+
+  /** A length field: byte offset, width (1 or 4) and byte order. */
+  private case class Field(offset: Int, width: Int, bigEndian: Boolean = false)
+
+  private case class Kind(word: String, codec: SketchCodec[_ <: AnyRef],
+      valid: Seq[Array[Byte]], fields: Array[Byte] => Seq[Field],
+      mergeAgg: Column => Column, finishers: (Column, Array[Byte]) => Seq[Column])
+
+  private val r0 = new Random(0x5eed)
+
+  private def tdigests: Seq[Array[Byte]] = Seq(TDigest(), TDigest(20.0), TDigest(), TDigest(300.0))
+    .zipWithIndex.map { case (t, i) =>
+      (0 until Seq(0, 1, 50, 700)(i)).foreach(_ => t.add(r0.nextGaussian(), 1.0 + r0.nextInt(3)))
+      t.serialize()
+    }
+
+  private def spaceSavings: Seq[Array[Byte]] = {
+    val long = new SpaceSavingLong(16)
+    (0 until 200).foreach(_ => long.add(r0.nextInt(40).toLong))
+    val dbl = new SpaceSavingLong(8, SpaceSaving.TagDouble)
+    (0 until 50).foreach(_ => dbl.add(SpaceSaving.doubleKey(r0.nextInt(12) * 0.5)))
+    val str = new SpaceSavingObj(8)
+    (0 until 60).foreach(_ => str.add(s"key${r0.nextInt(15)}"))
+    val bin = new SpaceSavingObj(4, SpaceSaving.TagBinary)
+    (0 until 20).foreach(_ => bin.add(SpaceSaving.binaryKey(Array.fill(3)(r0.nextInt(4).toByte))))
+    Seq(long, dbl, str, bin, new SpaceSavingLong(5)).map(SpaceSaving.serialize)
+  }
+
+  private def hlls: Seq[Array[Byte]] = Seq(4, 6, 8).map { p =>
+    val h = new Hll(p)
+    (0 until 30 * p).foreach(_ => h.add(r0.nextLong()))
+    h.serialize()
+  }
+
+  private def kmvs: Seq[Array[Byte]] = Seq((8, 40), (32, 20), (4, 0)).map { case (k, n) =>
+    val s = new KmvSketch(k)
+    (0 until n).foreach(_ => s.add(r0.nextLong()))
+    s.serialize()
+  }
+
+  private def cmss: Seq[Array[Byte]] = Seq((1, 2), (3, 64)).map { case (d, w) =>
+    val c = new CountMin(d, w)
+    (0 until 100).foreach(_ => c.add(r0.nextInt(30).toLong))
+    c.serialize()
+  }
+
+  private def le(b: Array[Byte]) = ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
+
+  private lazy val kinds: Seq[Kind] = Seq(
+    Kind("t-digest", TDigest, tdigests, _ => Seq(Field(32, 4)), gf.tdigest_merge_agg,
+      (s, _) => Seq(gf.tdigest_quantile(s, 0.5), gf.tdigest_quantiles(s, Seq(0.1, 0.9)),
+        gf.tdigest_cdf(s, lit(0.0)), gf.tdigest_cdfs(s, array(lit(0.0), lit(1.0))),
+        gf.tdigest_histogram(s, 4), gf.tdigest_histogram_at(s, array(lit(-1.0), lit(1.0))),
+        gf.tdigest_scale(s, 2.0), gf.tdigest_centroids(s), gf.tdigest_size(s),
+        gf.tdigest_min(s), gf.tdigest_max(s))),
+    Kind("space-saving", SpaceSaving, spaceSavings,
+      b => Seq(Field(1, 4), Field(5, 4)) ++
+        (if (b(0) >= SpaceSaving.TagString && le(b).getInt(5) > 0) Seq(Field(9, 4)) else Nil),
+      gf.ss_merge_agg,
+      (s, b) => Seq(gf.ss_size(s), gf.ss_capacity(s)) ++ (b.headOption.getOrElse(0) match {
+        case SpaceSaving.TagLong => Seq(gf.ss_topk_long(s, 3), gf.ss_counters_long(s))
+        case SpaceSaving.TagDouble => Seq(gf.ss_topk_double(s, 3), gf.ss_counters_double(s))
+        case SpaceSaving.TagString => Seq(gf.ss_topk_string(s, 3), gf.ss_counters_string(s))
+        case _ => Seq(gf.ss_topk_binary(s, 3), gf.ss_counters_binary(s))
+      })),
+    Kind("HLL", Hll, hlls, _ => Seq(Field(0, 1)), gf.hll_merge_agg,
+      (s, _) => Seq(gf.hll_distinct(s), gf.hll_nonzero(s), gf.hll_register_xor(s),
+        gf.hll_union(s, s), gf.hll_intersect_est(s, s))),
+    Kind("KMV", KmvSketch, kmvs, _ => Seq(Field(0, 4), Field(4, 4)), gf.kmv_merge_agg,
+      (s, _) => Seq(gf.kmv_distinct(s), gf.kmv_size(s), gf.kmv_jaccard(s, s),
+        gf.kmv_set_ops(s, s))),
+    Kind("CMS", CountMin, cmss, _ => Seq(Field(1, 4, bigEndian = true),
+      Field(5, 4, bigEndian = true)), gf.cms_merge_agg,
+      (s, _) => Seq(gf.cms_count(s, lit(7L)), gf.cms_total(s), gf.cms_dot(s, s))))
+
+  /** The blobs that ran an executor out of memory or off the end of its
+    * buffer before the decoders bounded their allocations. */
+  private val probes: Map[String, Seq[Array[Byte]]] = Map(
+    // [tag 1][capacity 2^31-1][size 0]
+    "space-saving" -> Seq(Array[Byte](1, -1, -1, -1, 127, 0, 0, 0, 0)),
+    // magic, depth 16, width 2^24, total 0
+    "CMS" -> Seq(Array[Byte](0x43, 0, 0, 0, 16, 1, 0, 0, 0) ++ new Array[Byte](8)),
+    "KMV" -> Seq(Array[Byte](1, 2, 3)))
+
+  private def setField(b: Array[Byte], f: Field, v: Int): Array[Byte] = {
+    val out = b.clone()
+    if (f.width == 1) out(f.offset) = v.toByte
+    else ByteBuffer.wrap(out).order(if (f.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
+      .putInt(f.offset, v)
+    out
+  }
+
+  private def fieldValue(b: Array[Byte], f: Field): Int =
+    if (f.width == 1) b(f.offset).toInt
+    else ByteBuffer.wrap(b).order(if (f.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
+      .getInt(f.offset)
+
+  /** Seeded mutations of every valid sketch of a kind, then its probes. */
+  private def mutations(k: Kind): Seq[Array[Byte]] = {
+    val r = new Random(k.word.hashCode)
+    k.valid.flatMap { b =>
+      val truncated = Seq(0, 1, b.length / 2, b.length - 1).distinct.filter(_ < b.length).map(b.take)
+      val extended = Seq(b :+ 0.toByte, b ++ Array.fill[Byte](24)(1))
+      val flipped = (0 until 8).map { _ =>
+        val out = b.clone()
+        (0 to r.nextInt(3)).foreach { _ =>
+          val i = r.nextInt(out.length)
+          out(i) = (out(i) ^ (1 << r.nextInt(8))).toByte
+        }
+        out
+      }
+      val inflated = k.fields(b).flatMap { f =>
+        val v = fieldValue(b, f)
+        val values = if (f.width == 1) Seq(v + 1, 17, 31, 127, -1)
+                     else Seq(v + 1, 2 * v + 1, -1, 1 << 20, (1 << 20) + 1, 1 << 24, Int.MaxValue)
+        values.map(setField(b, f, _))
+      }
+      truncated ++ extended ++ flipped ++ inflated
+    } ++ probes.getOrElse(k.word, Nil)
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  private def rejects(k: Kind, e: Throwable): Boolean = e match {
+    case e: IllegalArgumentException => e.getMessage.contains(k.word)
+    case _ => false
+  }
+
+  private def roundTrip[S <: AnyRef](c: SketchCodec[S], b: Array[Byte]): Array[Byte] =
+    c.serialize(c.deserialize(b))
+
+  /** mergeBytes(into, b) and mergeSketch(into, deserialize(b)) into a fresh
+    * decode of `into`: the merged bytes, or the IllegalArgumentException. */
+  private def mergeBoth[S <: AnyRef](c: SketchCodec[S], into: Array[Byte],
+      b: Array[Byte]): (Try[Seq[Byte]], Try[Seq[Byte]]) = {
+    def run(f: S => Unit): Try[Seq[Byte]] = Try { val s = c.deserialize(into); f(s); c.serialize(s).toSeq }
+    (run(c.mergeBytes(_, b)), run(s => c.mergeSketch(s, c.deserialize(b))))
+  }
+
+  test("kernels: every mutated blob round-trips or is rejected naming its kind") {
+    for (k <- kinds; b <- mutations(k)) {
+      val what = s"${k.word} blob ${b.take(40).mkString(",")} (${b.length} bytes)"
+      Try(roundTrip(k.codec, b)) match {
+        case Success(out) =>
+          assert(roundTrip(k.codec, out).toSeq == out.toSeq, s"$what: re-encoding is not a fixed point")
+          assert(k.codec.checkSerialized(b) >= 0)
+          // admit may decline bytes that would round-trip, never the reverse
+          if (k.codec.admit(b)) assert(out.toSeq == b.toSeq, s"$what: admitted bytes do not round-trip")
+        case Failure(e) =>
+          assert(rejects(k, e), s"$what: $e")
+          // admit may stop at the first counter out of order, leaving the rest
+          // to the decode walk; otherwise it throws what the decode throws
+          Try(k.codec.admit(b)) match {
+            case Failure(a) => assert(a.getMessage == e.getMessage, what)
+            case Success(admitted) => assert(!admitted, s"$what: admitted a blob the decoder rejects")
+          }
+      }
+      for (into <- k.valid) {
+        val (viaBytes, viaSketch) = mergeBoth(k.codec, into, b)
+        assert(viaBytes.toOption == viaSketch.toOption, s"$what: mergeBytes differs")
+        assert(viaBytes.failed.map(_.getMessage).toOption == viaSketch.failed.map(_.getMessage).toOption,
+          s"$what: mergeBytes fails differently")
+        Seq(viaBytes, viaSketch).foreach {
+          case Failure(e) => assert(e.isInstanceOf[IllegalArgumentException], s"$what: $e")
+          case _ =>
+        }
+      }
+    }
+  }
+
+  /** A query that must fail with an IllegalArgumentException naming the
+    * kind, or with `message` when one is given. */
+  private def assertRejected(k: Kind, what: String, message: Option[String])(q: => Any): Unit = {
+    val e = intercept[Exception](q)
+    assert(causes(e).exists(t => message.fold(rejects(k, t))(m =>
+      t.isInstanceOf[IllegalArgumentException] && t.getMessage == m)),
+      s"$what: ${causes(e).map(_.toString).mkString(" | ")}")
+  }
+
+  /** Every input of a kind, sampled down to at most `n` rejected ones. */
+  private def sqlInputs(k: Kind, n: Int): Seq[Array[Byte]] = {
+    val (ok, bad) = mutations(k).partition(b => Try(k.codec.deserialize(b)).isSuccess)
+    val keep = probes.getOrElse(k.word, Nil).map(_.toSeq).toSet
+    ok ++ new Random(7).shuffle(bad.filterNot(b => keep(b.toSeq))).take(n) ++
+      bad.filter(b => keep(b.toSeq))
+  }
+
+  test("SQL: merge aggregates over mutated sketches, one- and two-sketch groups") {
+    for (k <- kinds) {
+      val partner = k.valid.head
+      // (group, rows in order, expected output or the kernel's error)
+      val cases = sqlInputs(k, 10).zipWithIndex.flatMap { case (b, i) =>
+        val one = Try(roundTrip(k.codec, b).toSeq)
+        val two = mergeBoth(k.codec, partner, b)._1
+        Seq((2 * i, Seq(b), one), (2 * i + 1, Seq(partner, b), two))
+      }
+      val (good, bad) = cases.partition(_._3.isSuccess)
+      val got = good.flatMap { case (g, bs, _) => bs.map(b => (g, b)) }.toDF("g", "b").coalesce(1)
+        .groupBy("g").agg(k.mergeAgg(col("b")).as("m")).collect()
+        .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+      good.foreach { case (g, bs, want) =>
+        assert(got(g) == want.get, s"${k.word}: group of ${bs.size} differs from the kernel")
+      }
+      bad.foreach { case (g, bs, err) =>
+        assertRejected(k, s"${k.word} merge of ${bs.size}", Some(err.failed.get.getMessage)) {
+          bs.map(b => (g, b)).toDF("g", "b").coalesce(1).groupBy("g").agg(k.mergeAgg(col("b"))).collect()
+        }
+      }
+    }
+  }
+
+  test("SQL: finishers over mutated sketches succeed or reject naming the kind") {
+    for (k <- kinds) {
+      val (ok, bad) = sqlInputs(k, 10).partition(b => Try(k.codec.deserialize(b)).isSuccess)
+      // one query per leading byte: Space-Saving's ss_topk variant follows the tag
+      ok.groupBy(_.head).values.foreach { bs =>
+        val cols = k.finishers(col("s"), bs.head)
+        val rows = bs.map(Tuple1(_)).toDF("s").select(cols: _*).collect()
+        assert(rows.length == bs.length)
+      }
+      bad.foreach { b =>
+        assertRejected(k, s"${k.word} finishers on ${b.length} bytes", None) {
+          Seq(Tuple1(b)).toDF("s").select(k.finishers(col("s"), b): _*).collect()
+        }
+      }
+    }
+  }
+}

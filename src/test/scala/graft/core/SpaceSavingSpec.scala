@@ -240,7 +240,7 @@ class SpaceSavingSpec extends AnyFunSuite {
       val s = new SpaceSavingLong(cap)
       (0 until r.nextInt(500)).foreach(_ => s.add(r.nextInt(cap * 2).toLong, 1L + r.nextInt(3)))
       val bytes = s.serialize(SpaceSaving.TagLong)
-      assert(SpaceSaving.canonicalLong(bytes))
+      assert(SpaceSaving.admit(bytes))
       val fast = SpaceSaving.deserializeLong(bytes)
       val walk = walkDecode(s)
       assert(fast.serialize(SpaceSaving.TagLong).toSeq == bytes.toSeq)
@@ -265,9 +265,9 @@ class SpaceSavingSpec extends AnyFunSuite {
   test("out-of-order counters come out normalised; duplicates still rejected") {
     val sorted = Seq((7L, 9L, 0L), (3L, 5L, 1L), (4L, 5L, 2L), (1L, 2L, 0L))
     val canonical = bytesOf(8, sorted)
-    assert(SpaceSaving.canonicalLong(canonical))
+    assert(SpaceSaving.admit(canonical))
     val shuffled = bytesOf(8, Seq(sorted(2), sorted(0), sorted(3), sorted(1)))
-    assert(!SpaceSaving.canonicalLong(shuffled))
+    assert(!SpaceSaving.admit(shuffled))
     assert(SpaceSaving.deserializeLong(shuffled).serialize(SpaceSaving.TagLong).toSeq ==
       canonical.toSeq)
     val dupSorted = bytesOf(8, sorted :+ ((3L, 1L, 0L)))
@@ -276,14 +276,14 @@ class SpaceSavingSpec extends AnyFunSuite {
       val e = intercept[IllegalArgumentException](SpaceSaving.deserializeLong(b))
       assert(e.getMessage.contains("duplicate items found"))
     }
-    assert(intercept[IllegalArgumentException](SpaceSaving.canonicalLong(dupSorted))
+    assert(intercept[IllegalArgumentException](SpaceSaving.admit(dupSorted))
       .getMessage.contains("duplicate items found"))
     // header checks match the decoder's
     val short = canonical.take(canonical.length - 1)
-    assert(intercept[IllegalArgumentException](SpaceSaving.canonicalLong(short)).getMessage ==
+    assert(intercept[IllegalArgumentException](SpaceSaving.admit(short)).getMessage ==
       intercept[IllegalArgumentException](SpaceSaving.deserializeLong(short)).getMessage)
     // object-arm sketches are never treated as canonical int64 bytes
     val so = new SpaceSavingObj(4); so.add("a")
-    assert(!SpaceSaving.canonicalLong(so.serialize(SpaceSaving.TagString)))
+    assert(!SpaceSaving.admit(so.serialize(SpaceSaving.TagString)))
   }
 }
