@@ -37,8 +37,7 @@ case class CountMinAgg(
     third: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends SketchAddAgg[CountMin]
-  with TernaryLike[Expression] with ImplicitCastInputTypes {
+  extends SketchAddAgg[CountMin] with TernaryLike[Expression] {
 
   def this(item: Expression, depth: Expression, width: Expression) =
     this(item, depth, width, 0, 0)
@@ -49,19 +48,10 @@ case class CountMinAgg(
   private lazy val width: Int = third.eval().asInstanceOf[Number].intValue()
 
   override protected def codec = CountMin
+  override protected def sizeParams = Seq("depth" -> second, "width" -> third)
   override def inputTypes: Seq[AbstractDataType] =
     Seq(KmvHash.routedType(first.dataType), IntegerType, IntegerType)
   override def prettyName: String = "cms_agg"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!second.foldable || second.eval() == null ||
-             !third.foldable || third.eval() == null)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "depth and width must be non-null constants")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
 
   override def createAggregationBuffer(): CountMin = new CountMin(depth, width)
 

@@ -18,31 +18,18 @@ case class HllAgg(
     right: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends SketchAddAgg[Hll]
-  with BinaryLike[Expression] with ImplicitCastInputTypes {
+  extends SketchAddAgg[Hll] with BinaryLike[Expression] {
 
   def this(value: Expression) = this(value, Literal(12))
 
   private lazy val p: Int = right.eval().asInstanceOf[Number].intValue()
 
   override protected def codec = Hll
+  override protected def sizeParams = Seq("p" -> right)
   override def inputTypes: Seq[AbstractDataType] = Seq(KmvHash.routedType(left.dataType), IntegerType)
   override def prettyName: String = "hll_agg"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!right.foldable || right.eval() == null)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "precision must be a non-null constant")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def createAggregationBuffer(): Hll = {
-    if (p < 4 || p > 16)
-      throw new IllegalArgumentException("precision must be in [4, 16]")
-    new Hll(p)
-  }
+  override def createAggregationBuffer(): Hll = new Hll(p)
 
   override def update(buf: Hll, input: InternalRow): Hll = {
     val v = left.eval(input)

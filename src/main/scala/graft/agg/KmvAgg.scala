@@ -52,25 +52,16 @@ case class KmvAgg(
     right: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends SketchAddAgg[KmvSketch]
-  with BinaryLike[Expression] with ImplicitCastInputTypes {
+  extends SketchAddAgg[KmvSketch] with BinaryLike[Expression] {
 
   def this(value: Expression) = this(value, Literal(1024))
 
   private lazy val k: Int = right.eval().asInstanceOf[Number].intValue()
 
   override protected def codec = KmvSketch
+  override protected def sizeParams = Seq("k" -> right)
   override def inputTypes: Seq[AbstractDataType] = Seq(KmvHash.routedType(left.dataType), IntegerType)
   override def prettyName: String = "kmv_agg"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!right.foldable || right.eval() == null)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "k must be a non-null constant")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
 
   override def createAggregationBuffer(): KmvSketch = new KmvSketch(k)
 

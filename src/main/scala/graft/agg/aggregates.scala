@@ -2,6 +2,7 @@ package graft.agg
 
 import graft.core._
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, TernaryLike, UnaryLike}
@@ -32,6 +33,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * which the codec merges from its bytes; serialize / eval of such a buffer
   * return the bytes and a shuffled buffer's deserialize checks only its
   * header. Output stays byte-identical to decode → merge → serialize.
+  *
+  * The five add aggregates declare their size parameters (compression,
+  * capacity, p, k, depth, width) to [[SketchAddAgg]], which checks in one
+  * place that each is a non-null constant; the kernels' constructors check
+  * their ranges.
   */
 object StatsStruct {
   val schema: StructType = StructType(Seq(
@@ -125,15 +131,15 @@ case class StatsMergeAgg(
   override def dataType: DataType = StatsStruct.schema
   override def nullable: Boolean = false
   override def prettyName: String = "stats_merge_agg"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
       // field types must match exactly (names are free) — a loose 9-field
       // check would defer the mismatch to a ClassCastException in executors
       case s: StructType if s.length == StatsStruct.schema.length &&
           s.fields.iterator.zip(StatsStruct.schema.fields.iterator)
             .forall { case (a, b) => a.dataType == b.dataType } =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
         s"stats_merge_agg expects a summary_stats struct " +
           s"${StatsStruct.schema.simpleString}, got ${other.simpleString}")
     }
@@ -164,11 +170,24 @@ case class StatsMergeAgg(
   * kind's codec merges, serializes and deserializes the buffers. `codec` is
   * a def returning the kernel's companion object, so it takes no part in
   * case-class equality or task serialization. */
-trait SketchAddAgg[S <: AnyRef] extends TypedImperativeAggregate[S] {
+trait SketchAddAgg[S <: AnyRef] extends TypedImperativeAggregate[S]
+  with ImplicitCastInputTypes {
   protected def codec: SketchCodec[S]
+  /** The arguments that size the sketch, by name: analysis rejects any that
+    * is not a non-null constant. Each aggregate reads them in a lazy val. */
+  protected def sizeParams: Seq[(String, Expression)]
 
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val base = super.checkInputDataTypes()
+    if (base.isFailure) base
+    else sizeParams.collectFirst {
+      case (name, e) if !e.foldable || e.eval() == null =>
+        TypeCheckResult.TypeCheckFailure(s"$name must be a non-null constant")
+    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
+  }
 
   override def merge(b1: S, b2: S): S = { codec.mergeSketch(b1, b2); b1 }
   override def eval(buf: S): Any = codec.serialize(buf)
@@ -184,8 +203,7 @@ case class TDigestAgg(
     third: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends SketchAddAgg[TDigest]
-  with TernaryLike[Expression] with ImplicitCastInputTypes {
+  extends SketchAddAgg[TDigest] with TernaryLike[Expression] {
 
   def this(child: Expression) = this(child, Literal(1.0), Literal(100.0))
   def this(child: Expression, weight: Expression) = this(child, weight, Literal(100.0))
@@ -194,17 +212,9 @@ case class TDigestAgg(
     third.eval().asInstanceOf[Number].doubleValue()
 
   override protected def codec = TDigest
+  override protected def sizeParams = Seq("compression" -> third)
   override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, DoubleType, DoubleType)
   override def prettyName: String = "tdigest"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!third.foldable)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "compression must be a constant")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
 
   override def createAggregationBuffer(): TDigest = TDigest(compression)
 
@@ -312,14 +322,16 @@ case class TDigestMergeAgg(
 }
 
 object SpaceSavingAgg {
-  /** serialized-sketch key-type tag from the (implicitly cast) item type */
-  def tagFor(dt: DataType): Byte = dt match {
-    case LongType => SpaceSaving.TagLong
-    case DoubleType => SpaceSaving.TagDouble
-    case StringType => SpaceSaving.TagString
-    case BinaryType => SpaceSaving.TagBinary
-    case other => throw new IllegalArgumentException(s"unsupported item type $other")
-  }
+  /** Each serialized-sketch key-type tag and its SQL item type. */
+  private val itemTypes: Map[Byte, DataType] = Map(
+    SpaceSaving.TagLong -> LongType, SpaceSaving.TagDouble -> DoubleType,
+    SpaceSaving.TagString -> StringType, SpaceSaving.TagBinary -> BinaryType)
+
+  /** The tag of the (implicitly cast) item type. */
+  def tagFor(dt: DataType): Byte = itemTypes.collectFirst { case (tag, `dt`) => tag }
+    .getOrElse(throw new IllegalArgumentException(s"unsupported item type $dt"))
+  /** The item type of a checked sketch's tag. */
+  def itemTypeFor(tag: Byte): DataType = itemTypes(tag)
 }
 
 /** ss_topk_agg(item[, count][, capacity]) → serialized Space-Saving sketch.
@@ -331,8 +343,7 @@ case class SpaceSavingAgg(
     third: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends SketchAddAgg[SpaceSavingBase]
-  with TernaryLike[Expression] with ImplicitCastInputTypes {
+  extends SketchAddAgg[SpaceSavingBase] with TernaryLike[Expression] {
 
   def this(item: Expression) = this(item, Literal(1L), Literal(20))
   def this(item: Expression, count: Expression) = this(item, count, Literal(20))
@@ -341,18 +352,10 @@ case class SpaceSavingAgg(
   private lazy val tag: Byte = SpaceSavingAgg.tagFor(first.dataType)
 
   override protected def codec = SpaceSaving
+  override protected def sizeParams = Seq("capacity" -> third)
   override def inputTypes: Seq[AbstractDataType] =
     Seq(TypeCollection(LongType, DoubleType, StringType, BinaryType), LongType, IntegerType)
   override def prettyName: String = "ss_topk_agg"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!third.foldable)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "capacity must be a constant")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
 
   override def createAggregationBuffer(): SpaceSavingBase = SpaceSaving.empty(tag, capacity)
 

@@ -11,9 +11,9 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.functions._
 
 /** Column DSL mirroring org.apache.spark.sql.functions for the graft sketch
-  * library, plus SQL registration. Stats finishers are plain column
-  * arithmetic over the summary_stats struct — fully codegen'd by Catalyst,
-  * no custom expression in the hot path. */
+  * library, plus SQL registration. Stats finishers are plain Catalyst
+  * arithmetic over the summary_stats struct ([[StatsFinishers]], shared
+  * with SQL) — fully codegen'd, no custom expression in the hot path. */
 object functions {
   private def agg(e: Expression): Column =
     toColumn(e.asInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction]
@@ -26,46 +26,18 @@ object functions {
   def stats_merge_agg(statsStruct: Column): Column =
     agg(StatsMergeAgg(toExpr(statsStruct)))
 
-  /** Finishers over the summary_stats struct (codegen'd column arithmetic). */
+  /** Finishers over the summary_stats struct. */
   def stats_count(s: Column): Column = s("count")
   def stats_sum(s: Column): Column = s("sum")
   def stats_min(s: Column): Column = s("min")
   def stats_max(s: Column): Column = s("max")
-  def stats_mean(s: Column): Column =
-    when(s("count") === 0L, lit(Double.NaN)).otherwise(s("sum") / s("count"))
-  /** var with arbitrary integer ddof (stats_stubs.c:103-105). IEEE division
-    * semantics via pow(denom, -1): count == ddof yields ±Inf/NaN exactly like
-    * the reference's C division instead of an ANSI-mode error. */
-  def stats_var(s: Column, ddof: Int = 0): Column =
-    when(s("count") === 0L, lit(Double.NaN))
-      .otherwise(s("m2") * pow((s("count") - lit(ddof)).cast(DoubleType), -1.0))
-  def stats_std(s: Column, ddof: Int = 0): Column = sqrt(stats_var(s, ddof))
-
-  /** Skewness with bias option (stats_stubs.c:113-123). */
-  def stats_skew(s: Column, bias: Boolean = true): Column = {
-    val n = s("count").cast(DoubleType)
-    val m2 = s("m2") / n
-    val m3 = s("m3") / n
-    val g1 = when(m2 === 0.0, 0.0).otherwise(m3 / (sqrt(m2) * m2))
-    val res =
-      if (bias) g1
-      else when(n > 2 && m2 > 0, sqrt((n - 1) * n) / (n - 2) * g1).otherwise(g1)
-    when(s("homogeneous"), lit(Double.NaN)).otherwise(res)
-  }
-
-  /** Kurtosis with fisher/bias options (stats_stubs.c:126-136). */
-  def stats_kurt(s: Column, fisher: Boolean = true, bias: Boolean = true): Column = {
-    val n = s("count").cast(DoubleType)
-    val m2 = s("m2") / n
-    val m4 = s("m4") / n
-    val g2 = when(m2 === 0.0, 0.0).otherwise(m4 / (m2 * m2))
-    val corrected =
-      if (bias) g2
-      else when(n > 3 && m2 > 0,
-        ((n * n - 1) * g2 - lit(9) * n + 15) / ((n - 2) * (n - 3))).otherwise(g2)
-    val res = if (fisher) corrected - 3.0 else corrected
-    when(s("homogeneous"), lit(Double.NaN)).otherwise(res)
-  }
+  def stats_mean(s: Column): Column = toColumn(StatsFinishers.mean(toExpr(s)))
+  def stats_var(s: Column, ddof: Int = 0): Column = toColumn(StatsFinishers.variance(toExpr(s), ddof))
+  def stats_std(s: Column, ddof: Int = 0): Column = toColumn(StatsFinishers.std(toExpr(s), ddof))
+  def stats_skew(s: Column, bias: Boolean = true): Column =
+    toColumn(StatsFinishers.skew(toExpr(s), bias))
+  def stats_kurt(s: Column, fisher: Boolean = true, bias: Boolean = true): Column =
+    toColumn(StatsFinishers.kurt(toExpr(s), fisher, bias))
 
   // ---- TDigest (T1–T13) ----
   def tdigest(x: Column): Column = agg(new TDigestAgg(toExpr(x)))
@@ -264,71 +236,43 @@ object functions {
 }
 
 /** SQL registration of every graft function, for spark.sql(...) use.
-  * Idempotent; callable on any session. */
+  * Idempotent; callable on any session. A builder's patterns are the one
+  * declaration of the argument counts its function accepts. */
 object GraftFunctions {
-  type Builder = Seq[Expression] => Expression
+  type Builder = PartialFunction[Seq[Expression], Expression]
 
-  private def aggB(f: Seq[Expression] => Expression): Builder =
-    es => f(es).asInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction]
-      .toAggregateExpression()
+  private def aggB(f: Builder): Builder =
+    f.andThen(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction]
+      .toAggregateExpression())
 
-  /** Arity accepted by each SQL function, for clean WRONG_NUM_ARGS errors. */
-  private val arities: Map[String, Seq[Int]] = Map(
-    "summary_stats" -> Seq(1, 2), "tdigest" -> Seq(1, 2, 3),
-    "cms_agg" -> Seq(1, 3), "cms_total" -> Seq(1), "cms_dot" -> Seq(2),
-    "kmv_agg" -> Seq(1, 2), "kmv_jaccard" -> Seq(2), "kmv_set_ops" -> Seq(2),
-    "hll_agg" -> Seq(1, 2),
-    "exact_sum" -> Seq(1), "vec_exact_sum" -> Seq(1), "gram_agg" -> Seq(1),
-    "ss_topk_agg" -> Seq(1, 2, 3), "minhash_signature" -> Seq(4),
-    "ngram_jaccard" -> Seq(3), "srp_signature" -> Seq(3),
-    "nearest_centroids" -> Seq(3), "stats_mean" -> Seq(1),
-    "stats_var" -> Seq(1, 2), "stats_std" -> Seq(1, 2),
-    "stats_skew" -> Seq(1, 2), "stats_kurt" -> Seq(1, 2, 3)
-  ).withDefault {
-    case n if n.endsWith("_merge_agg") || n == "ss_size" || n == "tdigest_centroids" ||
-              n == "tdigest_size" || n == "tdigest_min" || n == "tdigest_max" ||
-              n == "token_count" || n == "token_count_bpe" || n == "lang_id" ||
-              n == "hash64" ||
-              n == "text_stats" || n == "char_entropy" ||
-              n == "pii_stats" || n == "redact_pii" ||
-              n == "pseudonymize_pii" || n == "normalize_text" ||
-              n == "deflate_ratio" || n == "script_stats" ||
-              n == "ss_capacity" || n == "kmv_distinct" || n == "kmv_size" ||
-              n == "hll_distinct" || n == "hll_nonzero" ||
-              n == "hll_register_xor" ||
-              n == "vec_norm" || n == "strip_html" ||
-              n == "registrable_domain" => Seq(1)
-    case _ => Seq(2)
-  }
+  /** The argument counts up to 8 that `b`'s patterns accept. */
+  private[api] def arities(b: Builder): Seq[Int] =
+    (0 to 8).filter(n => b.isDefinedAt(Seq.fill(n)(Literal(null))))
 
-  private[api] def checkedBuilder(name: String, b: Builder): Builder = checked(name, b)
-
-  private def checked(name: String, b: Builder): Builder = es => {
-    val ok = arities(name)
-    if (!ok.contains(es.length))
-      throw org.apache.spark.sql.graftshim.wrongNumArgs(name, ok, es.length)
-    b(es)
+  /** `b` as a registry builder: any other count of arguments is a
+    * WRONG_NUM_ARGS error listing the counts `b` accepts. */
+  private[api] def checked(name: String, b: Builder): Seq[Expression] => Expression = {
+    val ok = arities(b)
+    es => b.applyOrElse(es, (_: Seq[Expression]) =>
+      throw org.apache.spark.sql.graftshim.wrongNumArgs(name, ok, es.length))
   }
 
   val builders: Seq[(String, Builder)] = Seq(
     "summary_stats" -> aggB {
       case Seq(x) => new SummaryStatsAgg(x)
       case Seq(x, c) => SummaryStatsAgg(x, c)
-      case es => throw new IllegalArgumentException(s"summary_stats takes 1-2 args, got ${es.length}")
     },
     "stats_merge_agg" -> aggB { case Seq(s) => StatsMergeAgg(s) },
     "tdigest" -> aggB {
       case Seq(x) => new TDigestAgg(x)
       case Seq(x, w) => new TDigestAgg(x, w)
       case Seq(x, w, c) => TDigestAgg(x, w, c)
-      case es => throw new IllegalArgumentException(s"tdigest takes 1-3 args, got ${es.length}")
     },
     "tdigest_merge_agg" -> aggB { case Seq(s) => TDigestMergeAgg(s) },
     "ss_topk_agg" -> aggB {
       case Seq(i) => new SpaceSavingAgg(i)
       case Seq(i, c) => new SpaceSavingAgg(i, c)
       case Seq(i, c, cap) => SpaceSavingAgg(i, c, cap)
-      case es => throw new IllegalArgumentException(s"ss_topk_agg takes 1-3 args, got ${es.length}")
     },
     "ss_merge_agg" -> aggB { case Seq(s) => SpaceSavingMergeAgg(s) },
     "tdigest_quantile" -> { case Seq(s, q) => TDigestQuantile(s, q) },
@@ -415,8 +359,8 @@ object GraftFunctions {
     "vec_norm" -> { case Seq(a) => VecNorm(a) },
     "srp_signature" -> { case Seq(v, b, s) => SrpSignature(v, b, s) },
     "nearest_centroids" -> { case Seq(v, c, k) => NearestCentroids(v, c, k) },
-    // stats finishers as SQL functions (same column arithmetic as the DSL;
-    // optional args must be foldable literals)
+    // stats finishers as SQL functions (the DSL's trees; optional args
+    // must be non-null constants)
     "stats_mean" -> { case Seq(st) => StatsFinishers.mean(st) },
     "stats_var" -> {
       case Seq(st) => StatsFinishers.variance(st, 0)
@@ -447,14 +391,15 @@ object GraftFunctions {
       toExprTree(graft.ops.Web.registrableDomain(toColumn(h))) }
   )
 
-  private def foldInt(e: Expression, name: String): Int = {
-    require(e.foldable, s"$name must be a constant")
-    e.eval().asInstanceOf[Number].intValue()
+  private def fold(e: Expression, name: String): Any = {
+    val v = if (e.foldable) e.eval() else null
+    require(v != null, s"$name must be a non-null constant")
+    v
   }
-  private def foldBool(e: Expression, name: String): Boolean = {
-    require(e.foldable, s"$name must be a constant")
-    e.eval().asInstanceOf[Boolean]
-  }
+  private def foldInt(e: Expression, name: String): Int =
+    fold(e, name).asInstanceOf[Number].intValue()
+  private def foldBool(e: Expression, name: String): Boolean =
+    fold(e, name).asInstanceOf[Boolean]
 
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
@@ -472,7 +417,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((
         FunctionIdentifier(name),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(classOf[GraftExtensions].getName, name),
-        GraftFunctions.checkedBuilder(name, b)))
+        GraftFunctions.checked(name, b)))
     }
   }
 }

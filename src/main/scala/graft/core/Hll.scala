@@ -22,8 +22,7 @@ package graft.core
   * 64-bit regime needs no large-range correction; below 2.5m with empty
   * registers the linear-counting estimate applies (standard practice). */
 final class Hll private (val p: Int, val registers: Array[Byte]) {
-  def this(p: Int) = this(p, new Array[Byte](1 << p))
-  require(p >= 4 && p <= 16, "precision must be in [4, 16]")
+  def this(p: Int) = this(p, new Array[Byte](1 << Hll.checkPrecision(p)))
 
   def m: Int = 1 << p
 
@@ -99,6 +98,12 @@ object Hll extends SketchCodec[Hll] {
     * `r & 0xFF`: the estimator's harmonic-sum terms, bit-for-bit. */
   private val InversePow2: Array[Double] =
     Array.tabulate(256)(i => java.lang.Math.pow(2.0, -i.toByte.toDouble))
+
+  /** `p` once it is in [4, 16], checked before the registers are allocated. */
+  private def checkPrecision(p: Int): Int = {
+    require(p >= 4 && p <= 16, "precision must be in [4, 16]")
+    p
+  }
 
   /** Precision byte and length; any blob that passes re-serializes to
     * itself, so every one is admitted. */

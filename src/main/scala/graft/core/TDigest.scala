@@ -334,7 +334,7 @@ final class TDigest private (val compression: Double, val size: Int,
     * the same checks, then the same `add` sequence straight from the bytes,
     * so the result is byte-identical. */
   def mergeSerialized(bytes: Array[Byte]): Unit = {
-    val n = TDigest.checkSerialized(bytes)
+    val n = TDigest.checkValues(bytes)
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     if (bb.getDouble(24) != 0) {
       var i = 0
@@ -437,8 +437,7 @@ object TDigest extends SketchCodec[TDigest] {
     new TDigest(c, size, bufferSize)
   }
 
-  /** Compression, centroid count and length; a digest that passes
-    * re-serializes to its own bytes, so every one is admitted. */
+  /** Compression, centroid count and length. */
   override def checkSerialized(bytes: Array[Byte]): Int = {
     require(bytes.length >= 36,
       s"not a t-digest sketch: ${bytes.length} bytes (need >= 36)")
@@ -452,10 +451,35 @@ object TDigest extends SketchCodec[TDigest] {
     n
   }
 
+  /** [[checkSerialized]], then the values no encoder writes: a centroid
+    * weight that is NaN or <= 0, a total weight that is NaN or negative, and
+    * min > max beside centroids. Mean order, means within [min, max] and
+    * Σ weights == total are not checked, because rounding and weight
+    * overflow let the encoder write them. Returns the centroid count. */
+  private def checkValues(bytes: Array[Byte]): Int = {
+    val n = checkSerialized(bytes)
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    val total = bb.getDouble(24)
+    require(total >= 0, s"corrupt t-digest sketch: total weight $total")
+    val min = bb.getDouble(8); val max = bb.getDouble(16)
+    require(n == 0 || !(min > max), s"corrupt t-digest sketch: min $min > max $max")
+    var off = 44
+    while (off < bytes.length) {
+      val w = bb.getDouble(off)
+      require(w > 0, s"corrupt t-digest sketch: centroid weight $w")
+      off += 16
+    }
+    n
+  }
+
+  /** A digest whose values pass re-serializes to its own bytes, so every
+    * one is admitted. */
+  override def admit(bytes: Array[Byte]): Boolean = { checkValues(bytes); true }
+
   /** Decode into centroid arrays of exactly n entries; scratch and ingest
     * buffers are allocated only if the digest is later added to or queried. */
   override def deserialize(bytes: Array[Byte]): TDigest = {
-    val n = checkSerialized(bytes)
+    val n = checkValues(bytes)
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val t = TDigest(bb.getDouble())
     t.min = bb.getDouble(); t.max = bb.getDouble()

@@ -1,5 +1,6 @@
 package graft.expr
 
+import graft.agg.SpaceSavingAgg
 import graft.core._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
@@ -173,15 +174,6 @@ case class TDigestStat(child: Expression, stat: String)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-object SSTopK {
-  def itemTypeFor(tag: Byte): DataType = tag match {
-    case SpaceSaving.TagLong => LongType
-    case SpaceSaving.TagDouble => DoubleType
-    case SpaceSaving.TagBinary => BinaryType
-    case _ => StringType
-  }
-}
-
 /** ss_topk(sketch, k) → array<struct<item,count,error>> (S5,
   * space_saving.pyx:304-341). The item field type is fixed per function
   * variant (long/double/string), mirroring the reference's dtype arms. */
@@ -199,7 +191,7 @@ case class SSTopK(left: Expression, right: Expression, itemType: DataType)
     val k = kAny.asInstanceOf[Int]
     if (k < 0) throw new IllegalArgumentException("k must be >= 0")
     val n = SpaceSaving.checkSerialized(bytes)
-    val expected = SSTopK.itemTypeFor(bytes(0))
+    val expected = SpaceSavingAgg.itemTypeFor(bytes(0))
     require(expected == itemType,
       s"sketch holds ${expected.simpleString} items; use the matching " +
         s"ss_topk variant (got ${itemType.simpleString})")

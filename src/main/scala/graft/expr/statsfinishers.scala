@@ -4,9 +4,9 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 
-/** Catalyst-level builders for the summary_stats finishers, used by the SQL
-  * function registry (the Column DSL variants in graft.api.functions compile
-  * to the same arithmetic). Field extraction is left unresolved so the
+/** The summary_stats finisher formulas, built once as Catalyst trees for
+  * both the Column DSL (graft.api.functions.stats_*) and the SQL function
+  * registry. Field extraction is left unresolved so the
   * analyzer resolves + type-coerces it against the actual struct, and the
   * repeated aggregate child dedups in the Aggregate operator. */
 object StatsFinishers {

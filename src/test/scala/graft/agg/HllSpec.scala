@@ -150,6 +150,14 @@ class HllSpec extends SparkTestBase {
     assert(msgs.exists(m => m != null && m.endsWith("precision mismatch (8 vs 6)")))
   }
 
+  test("core: precision is checked before the registers are allocated") {
+    // 31 once overflowed the register count, 30 allocated 1 GB before failing
+    for (p <- Seq(-1, 3, 17, 30, 31)) {
+      val e = intercept[IllegalArgumentException](new Hll(p))
+      assert(e.getMessage.endsWith("precision must be in [4, 16]"), s"p=$p: ${e.getMessage}")
+    }
+  }
+
   test("SQL surface and precision validation") {
     val est = spark.sql(
       "SELECT hll_distinct(hll_agg(id, 12)) FROM range(1000)")

@@ -75,7 +75,7 @@ class KmvAggSpec extends SparkTestBase {
       e2.getMessage.contains("DATATYPE_MISMATCH"))
   }
 
-  test("fractional inputs keep distinctness; signed zero and NULL k handled") {
+  test("fractional inputs keep distinctness; signed zero handled") {
     // float column must NOT truncate to long
     val f = Seq(1.1f, 1.2f, 1.9f, 1.1f).toDF("v")
     assert(f.agg(gf.kmv_distinct(gf.kmv_agg(col("v"), 64))).head().getDouble(0) == 3.0)
@@ -86,12 +86,5 @@ class KmvAggSpec extends SparkTestBase {
     // -0.0 == 0.0 per SQL DISTINCT semantics
     val z = Seq(0.0, -0.0, 1.0).toDF("v")
     assert(z.agg(gf.kmv_distinct(gf.kmv_agg(col("v"), 64))).head().getDouble(0) == 2.0)
-    // NULL k rejected at analysis, not NPE at execution
-    graft.api.GraftFunctions.register(spark)
-    spark.range(3).createOrReplaceTempView("__kmv_nullk")
-    val e = intercept[Exception](
-      spark.sql("SELECT kmv_agg(id, CAST(NULL AS INT)) FROM __kmv_nullk").collect())
-    assert(e.getMessage.contains("non-null constant") ||
-      e.getMessage.contains("DATATYPE_MISMATCH"))
   }
 }

@@ -188,6 +188,43 @@ class SketchCodecPropSpec extends SparkTestBase {
     }
   }
 
+  test("t-digest: impossible weights and bounds are rejected alike by every entry point") {
+    val t = TDigest(); (0 until 300).foreach(i => t.add(i % 17 * 1.5, 1.0 + i % 3))
+    val good = t.serialize()
+    val n = le(good).getInt(32)
+    def edit(f: ByteBuffer => Unit): Array[Byte] = { val b = good.clone(); f(le(b)); b }
+    val lastWeight = 36 + 16 * (n - 1) + 8
+    val rejected = Seq(
+      "first weight NaN" -> edit(_.putDouble(44, Double.NaN)),
+      "last weight 0" -> edit(_.putDouble(lastWeight, 0.0)),
+      "weight -0.0" -> edit(_.putDouble(44, -0.0)),
+      "negative weight" -> edit(_.putDouble(60, -2.0)),
+      "total NaN" -> edit(_.putDouble(24, Double.NaN)),
+      "negative total" -> edit(_.putDouble(24, -1.0)),
+      "min > max" -> edit { bb => bb.putDouble(8, 5.0); bb.putDouble(16, 4.0) })
+    for ((what, b) <- rejected) {
+      val e = intercept[IllegalArgumentException](TDigest.deserialize(b))
+      assert(e.getMessage.contains("corrupt t-digest sketch"), s"$what: ${e.getMessage}")
+      assert(intercept[IllegalArgumentException](TDigest.admit(b)).getMessage == e.getMessage, what)
+      assert(intercept[IllegalArgumentException](TDigest().mergeSerialized(b)).getMessage ==
+        e.getMessage, what)
+    }
+    // rounding and weight overflow let the encoder write these, so they decode
+    val empty = TDigest().serialize()
+    val accepted = Seq(
+      "means out of order" -> edit { bb =>
+        val m0 = bb.getDouble(36); bb.putDouble(36, bb.getDouble(52)); bb.putDouble(52, m0) },
+      "mean outside [min, max]" -> edit(_.putDouble(36, -1e9)),
+      "total != sum of weights" -> edit(_.putDouble(24, 1.0)),
+      "infinite weight and total" -> edit { bb =>
+        bb.putDouble(44, Double.PositiveInfinity); bb.putDouble(24, Double.PositiveInfinity) },
+      "empty with min > max" -> empty)
+    for ((what, b) <- accepted) {
+      assert(TDigest.admit(b), what)
+      assert(TDigest.deserialize(b).serialize().toSeq == b.toSeq, what)
+    }
+  }
+
   /** A query that must fail with an IllegalArgumentException naming the
     * kind, or with `message` when one is given. */
   private def assertRejected(k: Kind, what: String, message: Option[String])(q: => Any): Unit = {

@@ -1,17 +1,27 @@
 package graft.api
 
 import graft.SparkTestBase
+import graft.api.{functions => gf}
+import org.apache.spark.sql.{AnalysisException, Column}
+import org.apache.spark.sql.functions._
 
-/** Smoke coverage of the complete SQL surface: every registered function
-  * resolves, runs over a real table, and returns a sane value. Guards the
-  * registry against silent arity/builder drift. */
+/** SQL surface: smoke queries run most registered functions over real
+  * tables and check sane values; table-driven tests cover every registered
+  * name's argument counts, the functions taking three arguments against the
+  * DSL, and the size parameters of the five sketch add aggregates. */
 class SqlSurfaceSpec extends SparkTestBase {
 
-  private def one(sql: String): org.apache.spark.sql.Row = {
+  private def views(): Unit = {
     spark.read.parquet(sf("lineitem")).createOrReplaceTempView("li")
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs")
     spark.read.parquet(sf("embeddings")).createOrReplaceTempView("emb")
-    spark.sql(sql).head()
+  }
+
+  private def one(sql: String): org.apache.spark.sql.Row = { views(); spark.sql(sql).head() }
+
+  private def analysisError(sql: String): AnalysisException = {
+    views()
+    intercept[AnalysisException](spark.sql(sql))
   }
 
   test("every registered function is callable from SQL") {
@@ -110,6 +120,12 @@ class SqlSurfaceSpec extends SparkTestBase {
     assert(math.abs(r.getDouble(1) - b.getDouble(1)) < 1e-6)
     assert(math.abs(r.getDouble(2) - b.getDouble(2)) < 1e-6)
     assert(!r.isNullAt(3) && !r.isNullAt(4))
+    // an option must be a non-null constant, not an NPE in the builder
+    for ((call, option) <- Seq("stats_var(summary_stats(l_quantity), CAST(NULL AS INT))" -> "ddof",
+        "stats_kurt(summary_stats(l_quantity), true, CAST(NULL AS BOOLEAN))" -> "bias")) {
+      val e = intercept[IllegalArgumentException](one(s"SELECT $call FROM li"))
+      assert(e.getMessage.endsWith(s"$option must be a non-null constant"), call)
+    }
   }
 
   test("single-row group: var_samp yields Inf/NaN (IEEE), not ANSI error") {
@@ -144,5 +160,58 @@ class SqlSurfaceSpec extends SparkTestBase {
       .contains("not a t-digest sketch"))
     assert(msgOf("SELECT ss_topk(cast('garbagebytes' as binary), 3)")
       .contains("not a space-saving sketch"))
+  }
+
+  test("every registered name: a count its builder lacks is WRONG_NUM_ARGS listing the counts") {
+    val derived = GraftFunctions.builders.map { case (n, b) => n -> GraftFunctions.arities(b) }.toMap
+    // the counts the builders' patterns declare, spot-checked by hand
+    Map("winnow_fingerprints" -> Seq(3), "gram_overlap_counts" -> Seq(3),
+      "char_gram_overlap_counts" -> Seq(3), "minhash_signature" -> Seq(4),
+      "tdigest" -> Seq(1, 2, 3), "ss_topk_agg" -> Seq(1, 2, 3), "cms_agg" -> Seq(1, 3),
+      "stats_kurt" -> Seq(1, 2, 3), "tdigest_merge_agg" -> Seq(1), "hll_union" -> Seq(2)
+    ).foreach { case (n, want) => assert(derived(n) == want, n) }
+    for ((name, ok) <- derived) {
+      assert(ok.nonEmpty, name)
+      for (n <- (0 to ok.max + 1).filterNot(ok.contains)) {
+        val e = analysisError(s"SELECT $name(${Seq.fill(n)("1").mkString(", ")})")
+        assert(e.getCondition.startsWith("WRONG_NUM_ARGS"), s"$name/$n: ${e.getMessage}")
+        assert(e.getMessageParameters.get("actualNum") == n.toString, s"$name/$n")
+        val listed = e.getMessageParameters.get("expectedNum")
+        assert(listed == (if (ok.size == 1) ok.head.toString else ok.mkString("[", ", ", "]")),
+          s"$name/$n: $listed")
+      }
+    }
+  }
+
+  test("functions taking three arguments give the same rows from SQL as from the DSL") {
+    val docs = spark.read.parquet(sf("documents")).withColumn("cand", lower(col("text")))
+    docs.createOrReplaceTempView("docs3")
+    val cases: Seq[(String, Column)] = Seq(
+      "winnow_fingerprints(text, 8, 4)" -> gf.winnow_fingerprints(col("text"), 8, 4),
+      "gram_overlap_counts(text, cand, 4)" -> gf.gram_overlap_counts(col("text"), col("cand"), 4),
+      "char_gram_overlap_counts(text, cand, 4)" ->
+        gf.char_gram_overlap_counts(col("text"), col("cand"), 4))
+    for ((sql, dsl) <- cases) {
+      val viaSql = spark.sql(s"SELECT doc_id, $sql FROM docs3 ORDER BY doc_id").collect().toSeq
+      val viaDsl = docs.select(col("doc_id"), dsl).orderBy("doc_id").collect().toSeq
+      assert(viaSql.size == 500 && viaSql == viaDsl, sql)
+    }
+  }
+
+  test("size parameters of the add aggregates must be non-null constants, checked at analysis") {
+    Seq(
+      "tdigest(l_quantity, 1.0, CAST(NULL AS DOUBLE))" -> "compression",
+      "tdigest(l_quantity, 1.0, l_quantity)" -> "compression",
+      "ss_topk_agg(l_partkey, 1L, CAST(NULL AS INT))" -> "capacity",
+      "ss_topk_agg(l_partkey, 1L, l_linenumber)" -> "capacity",
+      "hll_agg(l_partkey, CAST(NULL AS INT))" -> "p",
+      "kmv_agg(l_partkey, CAST(NULL AS INT))" -> "k",
+      "kmv_agg(l_partkey, l_linenumber)" -> "k",
+      "cms_agg(l_partkey, CAST(NULL AS INT), 64)" -> "depth",
+      "cms_agg(l_partkey, 4, CAST(NULL AS INT))" -> "width"
+    ).foreach { case (call, param) =>
+      val e = analysisError(s"SELECT $call FROM li")
+      assert(e.getMessage.contains(s"$param must be a non-null constant"), s"$call: ${e.getMessage}")
+    }
   }
 }
