@@ -32,7 +32,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * on arrival as decoding would check them, until a second sketch arrives,
   * which the codec merges from its bytes; serialize / eval of such a buffer
   * return the bytes and a shuffled buffer's deserialize checks only its
-  * header. Output stays byte-identical to decode → merge → serialize.
+  * header. Every codec accepts exactly what its encoder writes, so kept
+  * bytes are the bytes decode → serialize would return, for every kind
+  * and every Space-Saving key type, and output stays byte-identical to
+  * decode → merge → serialize.
   *
   * The five add aggregates declare their size parameters (compression,
   * capacity, p, k, depth, width) to [[SketchAddAgg]], which checks in one
@@ -247,11 +250,12 @@ case class TDigestAgg(
 final class MergeBuffer[S >: Null <: AnyRef](var bytes: Array[Byte], var sketch: S)
 
 /** The decode-once buffer lifecycle of the merge aggregates (see the file
-  * header), over the kind's codec. Bytes are kept only when the codec
-  * admits them (`serialize(deserialize(b)) == b`), and every merge runs the
-  * same kernel calls as decoding first would, so output is byte-identical
-  * to decode → merge → serialize. In a rollup where most partial-stage
-  * groups see one stored sketch, most sketches are never decoded at all.
+  * header), over the kind's codec. A first sketch's bytes are kept once the
+  * codec admits them (then `serialize(deserialize(b)) == b`), and every
+  * merge runs the same kernel calls as decoding first would, so output is
+  * byte-identical to decode → merge → serialize. In a rollup where most
+  * partial-stage groups see one stored sketch, most sketches are never
+  * decoded at all.
   * `codec` is a def returning an object, as in [[SketchAddAgg]]. */
 trait DecodeOnceMergeAgg[S >: Null <: AnyRef]
   extends TypedImperativeAggregate[MergeBuffer[S]] with UnaryLike[Expression]
@@ -275,8 +279,7 @@ trait DecodeOnceMergeAgg[S >: Null <: AnyRef]
     if (v != null) {
       val b = v.asInstanceOf[Array[Byte]]
       if (buf.bytes != null || buf.sketch != null) codec.mergeBytes(decoded(buf), b)
-      else if (codec.admit(b)) buf.bytes = b
-      else buf.sketch = codec.deserialize(b)
+      else { codec.admit(b); buf.bytes = b }
     }
     buf
   }
@@ -373,10 +376,9 @@ case class SpaceSavingAgg(
             buf.asInstanceOf[SpaceSavingLong]
               .add(SpaceSaving.doubleKey(v.asInstanceOf[Double]), c)
           case SpaceSaving.TagBinary =>
-            buf.asInstanceOf[SpaceSavingObj]
-              .add(SpaceSaving.binaryKey(v.asInstanceOf[Array[Byte]]), c)
+            buf.asInstanceOf[SpaceSavingObj].add(UTF8String.fromBytes(v.asInstanceOf[Array[Byte]]), c)
           case _ =>
-            buf.asInstanceOf[SpaceSavingObj].add(v.asInstanceOf[UTF8String].toString, c)
+            buf.asInstanceOf[SpaceSavingObj].add(v.asInstanceOf[UTF8String], c)
         }
       }
     }
@@ -743,10 +745,8 @@ case class VecExactSumAgg(
     copy(child = c)
 }
 
-/** ss_merge_agg(sketch_col) → merged Space-Saving sketch (Cafaro merge S8).
-  * int64-arm sketches are kept as bytes when canonical; object-arm
-  * (string / binary) sketches are decoded on arrival, since checking their
-  * keys costs as much as decoding them. */
+/** ss_merge_agg(sketch_col) → merged Space-Saving sketch (Cafaro merge S8)
+  * over any of the four key types. */
 case class SpaceSavingMergeAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,

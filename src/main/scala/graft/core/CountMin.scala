@@ -144,7 +144,7 @@ object CountMin extends SketchCodec[CountMin] {
   final val MaxCells: Int = (Int.MaxValue - 17) / 8
 
   /** Magic, shape and length; returns depth * width. Any blob that passes
-    * re-serializes to itself, so every one is admitted. */
+    * re-serializes to itself. */
   override def checkSerialized(bytes: Array[Byte]): Int = {
     require(bytes.length >= 17, s"CMS blob too short: ${bytes.length} bytes")
     require(bytes(0) == Magic, f"bad CMS magic 0x${bytes(0)}%02x")

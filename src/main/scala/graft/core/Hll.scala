@@ -106,7 +106,7 @@ object Hll extends SketchCodec[Hll] {
   }
 
   /** Precision byte and length; any blob that passes re-serializes to
-    * itself, so every one is admitted. */
+    * itself. */
   override def checkSerialized(bytes: Array[Byte]): Int = {
     require(bytes.length >= 1, "empty HLL blob")
     val p = bytes(0).toInt

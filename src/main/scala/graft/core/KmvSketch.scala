@@ -109,34 +109,36 @@ object KmvSketch extends SketchCodec[KmvSketch] {
     (hi * 4294967296.0 + lo + 1.0) / 1.8446744073709552e19
   }
 
-  /** Little-endian k, n, then n hashes. */
+  /** Little-endian k, n <= k, then n hashes. */
   override def checkSerialized(bytes: Array[Byte]): Int = {
     require(bytes.length >= 8, s"not a KMV sketch: ${bytes.length} bytes (need >= 8)")
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val k = bb.getInt(0)
     val n = bb.getInt(4)
     require(k >= 2 && k <= MaxK, s"corrupt KMV sketch: k=$k outside [2, $MaxK]")
-    require(n >= 0 && bytes.length == 8 + 8L * n,
-      s"corrupt KMV sketch: $n hashes in ${bytes.length} bytes")
+    require(n >= 0 && n <= k && bytes.length == 8 + 8L * n,
+      s"corrupt KMV sketch: $n hashes for k=$k in ${bytes.length} bytes")
     n
   }
 
-  /** The encoder writes at most k hashes in strictly increasing unsigned
-    * order; any other valid blob decodes to the k smallest distinct ones. */
-  override def admit(bytes: Array[Byte]): Boolean = {
+  /** [[checkSerialized]], then the order the encoder writes: strictly
+    * increasing unsigned hashes. Returns n. */
+  private def checkHashes(bytes: Array[Byte]): Int = {
     val n = checkSerialized(bytes)
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    var ok = n <= bb.getInt(0)
     var i = 1
-    while (ok && i < n) {
-      ok = java.lang.Long.compareUnsigned(bb.getLong(8 * i), bb.getLong(8 + 8 * i)) < 0
+    while (i < n) {
+      require(java.lang.Long.compareUnsigned(bb.getLong(8 * i), bb.getLong(8 + 8 * i)) < 0,
+        s"corrupt KMV sketch: hash $i out of increasing order")
       i += 1
     }
-    ok
+    n
   }
 
+  override def admit(bytes: Array[Byte]): Unit = { checkHashes(bytes); () }
+
   override def deserialize(bytes: Array[Byte]): KmvSketch = {
-    val n = checkSerialized(bytes)
+    val n = checkHashes(bytes)
     val s = new KmvSketch(ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).getInt(0))
     addAll(s, bytes, n)
     s
@@ -147,7 +149,7 @@ object KmvSketch extends SketchCodec[KmvSketch] {
   /** The state depends only on the hash set and the smaller k, so shrinking
     * first and adding every stored hash equals merging the decoded sketch. */
   override def mergeBytes(into: KmvSketch, bytes: Array[Byte]): Unit = {
-    val n = checkSerialized(bytes)
+    val n = checkHashes(bytes)
     val k = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).getInt(0)
     if (k < into.effK) into.shrinkTo(k)
     addAll(into, bytes, n)

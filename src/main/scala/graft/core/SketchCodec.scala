@@ -6,19 +6,22 @@ package graft.core
   * place. Each kernel's companion object implements it, and every
   * aggregate and finisher decodes through it.
   *
-  * Decoders bound what they allocate by the blob's length: anything the
-  * encoder cannot have written is rejected with an IllegalArgumentException
-  * naming the kind before a sketch is built. */
+  * Each decoder accepts exactly what its encoder writes, so every blob it
+  * accepts re-encodes to itself, byte for byte: anything else (a bad
+  * header or length, counters or hashes out of the order the encoder
+  * keeps, duplicate items, impossible values) is rejected with an
+  * IllegalArgumentException naming the kind. Decoders bound what they
+  * allocate by the blob's length. */
 trait SketchCodec[S <: AnyRef] {
   /** O(1) check of a blob's header and length, as [[deserialize]] runs it
     * first; returns the number of entries the body holds (centroids,
     * counters, registers, hashes or cells). */
   def checkSerialized(bytes: Array[Byte]): Int
 
-  /** Check a blob, throwing what [[deserialize]] would throw; true when
-    * `serialize(deserialize(bytes))` equals `bytes`, so the bytes may stand
-    * for the sketch until it has to be merged into. */
-  def admit(bytes: Array[Byte]): Boolean = { checkSerialized(bytes); true }
+  /** Check a blob, throwing exactly what [[deserialize]] would throw. A
+    * blob that passes is what `serialize(deserialize(bytes))` returns, so
+    * the bytes may stand for the sketch until it has to be merged into. */
+  def admit(bytes: Array[Byte]): Unit = { checkSerialized(bytes); () }
 
   def deserialize(bytes: Array[Byte]): S
   def serialize(s: S): Array[Byte]

@@ -1,7 +1,7 @@
 package graft.core
 
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.charset.StandardCharsets
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Space-Saving heavy-hitter sketch (Metwally et al.) with the Cafaro et al.
   * parallel merge, ported semantically from the reference kernel
@@ -28,6 +28,10 @@ import java.nio.charset.StandardCharsets
   * [[SpaceSavingLong]] (int64 + bit-cast float64) and [[SpaceSavingObj]]
   * (strings / arbitrary byte keys); `tag` names the key type a sketch was
   * built over and is written with it.
+  *
+  * The slot arrays and both indexes are sized by what is stored and
+  * doubled up to `capacity` ([[reserve]]), so a sketch costs what it holds;
+  * eviction keys on `capacity`, never on the arrays' length.
   */
 abstract class SpaceSavingBase(val capacity: Int, val tag: Byte) extends Serializable {
   require(capacity > 0 && capacity <= SpaceSaving.MaxCapacity,
@@ -35,10 +39,25 @@ abstract class SpaceSavingBase(val capacity: Int, val tag: Byte) extends Seriali
   final val NIL = -1
   var size: Int = 0
   var head: Int = NIL
-  val counts = new Array[Long](capacity)
-  val errors = new Array[Long](capacity)
-  val next = new Array[Int](capacity)
-  val prev = new Array[Int](capacity)
+  var counts = new Array[Long](math.min(capacity, SpaceSaving.InitialSlots))
+  var errors = new Array[Long](counts.length)
+  var next = new Array[Int](counts.length)
+  var prev = new Array[Int](counts.length)
+
+  /** Grow every slot array to hold at least n counters: to n or to twice
+    * the current length, whichever is larger, but never past capacity. */
+  protected[core] final def reserve(n: Int): Unit = if (n > counts.length) {
+    val len = math.min(capacity, math.max(n, 2 * counts.length))
+    counts = java.util.Arrays.copyOf(counts, len)
+    errors = java.util.Arrays.copyOf(errors, len)
+    next = java.util.Arrays.copyOf(next, len)
+    prev = java.util.Arrays.copyOf(prev, len)
+    if (runHead != null) runHead.reserve(len)
+    resizeItems(len)
+  }
+
+  /** Grow the arm's item array and item index to `len` slots. */
+  protected def resizeItems(len: Int): Unit
 
   /** Skip index: count value → head-most slot of that count's run.
     *
@@ -56,7 +75,7 @@ abstract class SpaceSavingBase(val capacity: Int, val tag: Byte) extends Seriali
 
   private def runHeads: LongIntMap = {
     if (runHead == null) {
-      runHead = new LongIntMap(capacity)
+      runHead = new LongIntMap(counts.length)
       if (head != NIL) {
         var x = head
         do {
@@ -128,6 +147,7 @@ abstract class SpaceSavingBase(val capacity: Int, val tag: Byte) extends Seriali
     * item and the hash entry. */
   protected final def counterNew(count: Long, error: Long): Int = {
     val c = size
+    reserve(c + 1)
     size += 1
     counts(c) = count
     errors(c) = error
@@ -163,6 +183,34 @@ abstract class SpaceSavingBase(val capacity: Int, val tag: Byte) extends Seriali
   /** append other's item (at other-slot) as a new counter with (count, error). */
   protected def appendItemFrom(other: SpaceSavingBase, otherSlot: Int,
       count: Long, error: Long): Unit
+  /** Store slot's item read from a checked blob at `off` (slot of n),
+    * rejecting a duplicate; returns the offset of the slot's count. */
+  protected def takeItem(bytes: Array[Byte], bb: ByteBuffer, slot: Int, off: Int, n: Int): Int
+
+  /** Link a checked blob's n counters into slots 0..n-1 in one pass. The
+    * encoder writes them in list order with distinct items and no byte to
+    * spare, so anything else is rejected: every blob that links re-encodes
+    * to itself. */
+  private[core] final def linkAll(bytes: Array[Byte], n: Int): Unit = {
+    reserve(n)
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    var off = 9
+    var i = 0
+    while (i < n) {
+      off = takeItem(bytes, bb, i, off, n)
+      val c = bb.getLong(off); val e = bb.getLong(off + 8)
+      require(i == 0 || counterGe(i - 1, c, e, 0L),
+        s"corrupt space-saving sketch: counter $i out of list order")
+      counts(i) = c; errors(i) = e
+      prev(i) = if (i == 0) n - 1 else i - 1
+      next(i) = if (i == n - 1) 0 else i + 1
+      off += 16; i += 1
+    }
+    require(off == bytes.length,
+      s"corrupt space-saving sketch: ${bytes.length - off} trailing bytes")
+    size = n
+    head = if (n == 0) NIL else 0
+  }
 
   /** Cafaro parallel merge, in place into this (spsv_merge,
     * space_saving_stubs.c.in:289-364). `other` is not mutated. One shared
@@ -225,8 +273,13 @@ abstract class SpaceSavingBase(val capacity: Int, val tag: Byte) extends Seriali
 /** Space-Saving over int64 keys (also carries bit-cast float64 keys). */
 final class SpaceSavingLong(capacity0: Int, tag0: Byte = SpaceSaving.TagLong)
   extends SpaceSavingBase(capacity0, tag0) {
-  val items = new Array[Long](capacity)
-  private val index = new LongIntMap(capacity) // item → slot
+  var items = new Array[Long](counts.length)
+  private val index = new LongIntMap(counts.length) // item → slot
+
+  override protected def resizeItems(len: Int): Unit = {
+    items = java.util.Arrays.copyOf(items, len)
+    index.reserve(len)
+  }
 
   def lookup(item: Long): Int = index.get(item)
 
@@ -273,42 +326,13 @@ final class SpaceSavingLong(capacity0: Int, tag0: Byte = SpaceSaving.TagLong)
     index.put(item, idx)
   }
 
-  /** Link n serialized counters straight into slots 0..n-1 in list order,
-    * in one pass: what [[setState]]'s walk builds from counters already in
-    * list order. False, leaving this sketch unusable, at the first counter
-    * out of order. */
-  private[core] def linkSorted(bytes: Array[Byte], n: Int): Boolean = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    var i = 0
-    var off = 9
-    while (i < n) {
-      val item = bb.getLong(off)
-      val c = bb.getLong(off + 8); val e = bb.getLong(off + 16)
-      if (i > 0 && !counterGe(i - 1, c, e, 0L)) return false
-      require(index.get(item) == NIL, SpaceSaving.Duplicates)
-      index.put(item, i)
-      items(i) = item; counts(i) = c; errors(i) = e
-      prev(i) = if (i == 0) n - 1 else i - 1
-      next(i) = if (i == n - 1) 0 else i + 1
-      i += 1; off += 24
-    }
-    size = n
-    head = if (n == 0) NIL else 0
-    true
-  }
-
-  /** Rebuild from counters in sorted order (spsv_set_state,
-    * space_saving_stubs.c.in:253-286). */
-  def setState(its: Array[Long], cts: Array[Long], ers: Array[Long]): Unit = {
-    require(its.length <= capacity, "deserialization failed, size > capacity")
-    var i = 0
-    while (i < its.length) {
-      require(lookup(its(i)) == NIL, SpaceSaving.Duplicates)
-      val idx = counterNew(cts(i), ers(i))
-      items(idx) = its(i)
-      index.put(its(i), idx)
-      i += 1
-    }
+  override protected def takeItem(bytes: Array[Byte], bb: ByteBuffer, slot: Int,
+      off: Int, n: Int): Int = {
+    val item = bb.getLong(off)
+    require(index.get(item) == NIL, SpaceSaving.Duplicates)
+    index.put(item, slot)
+    items(slot) = item
+    off + 8
   }
 
   def serialize(tag: Byte): Array[Byte] = {
@@ -326,37 +350,44 @@ final class SpaceSavingLong(capacity0: Int, tag0: Byte = SpaceSaving.TagLong)
   }
 }
 
-/** Space-Saving over arbitrary reference keys (strings, byte arrays as
-  * Base64-stable strings). Mirrors the reference `object` template arm. */
+/** Space-Saving over byte-string keys, the reference `object` template arm:
+  * strings as their UTF-8 bytes and binaries as themselves, each held as a
+  * [[UTF8String]], which compares and hashes by bytes. Distinct byte
+  * sequences, invalid UTF-8 included, stay distinct items. */
 final class SpaceSavingObj(capacity0: Int, tag0: Byte = SpaceSaving.TagString)
   extends SpaceSavingBase(capacity0, tag0) {
-  val items = new Array[String](capacity)
-  private val index = new java.util.HashMap[String, Integer](capacity * 2)
+  var items = new Array[UTF8String](counts.length)
+  private val index = new java.util.HashMap[UTF8String, Integer]()
 
-  def lookup(item: String): Int = {
+  override protected def resizeItems(len: Int): Unit =
+    items = java.util.Arrays.copyOf(items, len)
+
+  def lookup(item: UTF8String): Int = {
     val v = index.get(item)
     if (v == null) NIL else v.intValue()
   }
 
-  private def swap(idx: Int, item: String, count: Long, error: Long): Unit = {
+  private def swap(idx: Int, item: UTF8String, count: Long, error: Long): Unit = {
     index.remove(items(idx))
     items(idx) = item
     index.put(item, idx)
     updateCounter(idx, count, error)
   }
 
-  def add(item: String, count: Long = 1L): Unit = {
+  /** A stored item is a copy: a row's string may point into a buffer that
+    * the next row reuses. */
+  def add(item: UTF8String, count: Long = 1L): Unit = {
     val existing = index.get(item)
     if (existing != null) {
       val idx = existing.intValue()
       updateCounter(idx, counts(idx) + count, errors(idx))
     } else if (size == capacity) {
       val idx = prev(head)
-      swap(idx, item, counts(idx) + 1L, counts(idx))
+      swap(idx, item.copy(), counts(idx) + 1L, counts(idx))
     } else {
       val idx = counterNew(count, 0L)
-      items(idx) = item
-      index.put(item, idx)
+      items(idx) = item.copy()
+      index.put(items(idx), idx)
     }
   }
 
@@ -379,32 +410,29 @@ final class SpaceSavingObj(capacity0: Int, tag0: Byte = SpaceSaving.TagString)
     index.put(item, idx)
   }
 
-  def setState(its: Array[String], cts: Array[Long], ers: Array[Long]): Unit = {
-    require(its.length <= capacity, "deserialization failed, size > capacity")
-    var i = 0
-    while (i < its.length) {
-      require(lookup(its(i)) == NIL, SpaceSaving.Duplicates)
-      val idx = counterNew(cts(i), ers(i))
-      items(idx) = its(i)
-      index.put(its(i), idx)
-      i += 1
-    }
+  /** The item's length is bounded by the bytes left after it, less the
+    * 20-byte minimum of every later counter. */
+  override protected def takeItem(bytes: Array[Byte], bb: ByteBuffer, slot: Int,
+      off: Int, n: Int): Int = {
+    val len = bb.getInt(off)
+    require(len >= 0 && len <= bytes.length - off - 20 - 20 * (n - 1 - slot),
+      s"corrupt space-saving sketch: item $slot of $len bytes in ${bytes.length} bytes")
+    val item = UTF8String.fromBytes(bytes, off + 4, len)
+    require(index.putIfAbsent(item, slot) == null, SpaceSaving.Duplicates)
+    items(slot) = item
+    off + 4 + len
   }
 
   def serialize(tag: Byte): Array[Byte] = {
     val slots = topkSlots(size)
-    val cs = SpaceSaving.charset(tag)
-    val bytes = slots.map(s => items(s).getBytes(cs))
-    val payload = bytes.map(_.length + 4 + 16).sum
+    val payload = slots.iterator.map(s => items(s).numBytes + 20).sum
     val bb = ByteBuffer.allocate(1 + 4 + 4 + payload)
       .order(ByteOrder.LITTLE_ENDIAN)
     bb.put(tag).putInt(capacity).putInt(size)
-    var i = 0
-    while (i < slots.length) {
-      val s = slots(i)
-      bb.putInt(bytes(i).length).put(bytes(i))
+    slots.foreach { s =>
+      bb.putInt(items(s).numBytes)
+      items(s).writeTo(bb)
       bb.putLong(counts(s)).putLong(errors(s))
-      i += 1
     }
     bb.array()
   }
@@ -414,20 +442,16 @@ object SpaceSaving extends SketchCodec[SpaceSavingBase] {
   /** serialized key-type tags */
   val TagLong: Byte = 0
   val TagDouble: Byte = 1 // int64-backed, items are doubleToRawLongBits
-  val TagString: Byte = 2
-  val TagBinary: Byte = 3 // Obj arm; bytes held as ISO-8859-1 strings (1:1)
+  val TagString: Byte = 2 // object arm, items are UTF-8 bytes
+  val TagBinary: Byte = 3 // object arm, items are the bytes themselves
 
-  /** Largest capacity: a sketch's arrays are sized by it, so a stored
-    * header may not claim more. */
+  /** Largest capacity: a stored header may not claim more. */
   final val MaxCapacity: Int = 1 << 20
 
-  private[core] val Duplicates = "corrupt space-saving sketch: duplicate items found"
+  /** Slots a new sketch starts with; [[SpaceSavingBase.reserve]] doubles them. */
+  private[core] final val InitialSlots = 4
 
-  /** Lossless byte↔string bridge for binary keys on the Obj arm. */
-  def binaryKey(b: Array[Byte]): String =
-    new String(b, StandardCharsets.ISO_8859_1)
-  def keyToBinary(s: String): Array[Byte] =
-    s.getBytes(StandardCharsets.ISO_8859_1)
+  private[core] val Duplicates = "corrupt space-saving sketch: duplicate items found"
 
   /** float64 keys ride the int64 implementation via raw bits
     * (asint64, space_saving_stubs.c.in:462-466). */
@@ -438,9 +462,6 @@ object SpaceSaving extends SketchCodec[SpaceSavingBase] {
   @inline private[core] def khash(k: Long): Int = ((k >> 33) ^ k ^ (k << 11)).toInt
 
   @inline private def isLongTag(tag: Byte): Boolean = tag == TagLong || tag == TagDouble
-
-  private[core] def charset(tag: Byte) =
-    if (tag == TagBinary) StandardCharsets.ISO_8859_1 else StandardCharsets.UTF_8
 
   /** An empty sketch on the arm that holds `tag`'s keys. */
   def empty(tag: Byte, capacity: Int): SpaceSavingBase =
@@ -462,41 +483,17 @@ object SpaceSaving extends SketchCodec[SpaceSavingBase] {
     n
   }
 
-  /** Check a sketch as [[deserialize]] would, throwing the same errors,
-    * without building it. True when the bytes are canonical int64-arm
-    * counters (list order, no duplicate items), i.e. exactly what
-    * `serialize(deserialize(bytes))` returns; false for the object arm,
-    * whose keys cost a decode to check, or when decoding would reorder the
-    * counters (the decode walk then checks the rest). */
-  override def admit(bytes: Array[Byte]): Boolean = {
-    val n = checkSerialized(bytes)
-    isLongTag(bytes(0)) && {
-      val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-      val seen = new LongIntMap(n)
-      var i = 0
-      var off = 9
-      var sorted = true
-      var c0 = 0L; var e0 = 0L
-      while (sorted && i < n) {
-        val item = bb.getLong(off)
-        val c = bb.getLong(off + 8); val e = bb.getLong(off + 16)
-        sorted = i == 0 || c0 > c || (c0 == c && e0 <= e)
-        if (sorted) {
-          require(seen.get(item) == -1, Duplicates)
-          seen.put(item, i)
-        }
-        c0 = c; e0 = e
-        i += 1; off += 24
-      }
-      sorted
-    }
-  }
+  /** The decoder's own scan: its counters hold the item index that finds
+    * duplicates, so checking costs what decoding does. */
+  override def admit(bytes: Array[Byte]): Unit = deserialize(bytes)
 
   /** The one arm dispatch: int64 and float64 keys decode to
     * [[SpaceSavingLong]], strings and binaries to [[SpaceSavingObj]]. */
   override def deserialize(bytes: Array[Byte]): SpaceSavingBase = {
-    checkSerialized(bytes)
-    if (isLongTag(bytes(0))) deserializeLong(bytes) else deserializeObj(bytes)
+    val n = checkSerialized(bytes)
+    val s = empty(bytes(0), ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).getInt(1))
+    s.linkAll(bytes, n)
+    s
   }
 
   override def serialize(s: SpaceSavingBase): Array[Byte] = s.serialize(s.tag)
@@ -506,63 +503,29 @@ object SpaceSaving extends SketchCodec[SpaceSavingBase] {
     into.mergeBase(other)
   }
 
-  /** Decode an int64-arm sketch. Canonical counters are linked in one pass;
-    * any other order takes the reference insert walk, which normalises it. */
-  def deserializeLong(bytes: Array[Byte]): SpaceSavingLong = {
-    val n = checkSerialized(bytes)
-    require(isLongTag(bytes(0)), s"space-saving sketch holds object keys (tag ${bytes(0)})")
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val cap = bb.getInt(1)
-    val fast = new SpaceSavingLong(cap, bytes(0))
-    if (fast.linkSorted(bytes, n)) fast
-    else {
-      val s = new SpaceSavingLong(cap, bytes(0))
-      val its = new Array[Long](n); val cts = new Array[Long](n); val ers = new Array[Long](n)
-      bb.position(9)
-      var i = 0
-      while (i < n) { its(i) = bb.getLong(); cts(i) = bb.getLong(); ers(i) = bb.getLong(); i += 1 }
-      s.setState(its, cts, ers)
-      s
-    }
-  }
-
-  /** Each item's length is bounded by the bytes left after it, less the
-    * 20-byte minimum of every later counter; no byte may be left over. */
-  private[core] def deserializeObj(bytes: Array[Byte]): SpaceSavingObj = {
-    val n = checkSerialized(bytes)
-    val cs = charset(bytes(0))
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val s = new SpaceSavingObj(bb.getInt(1), bytes(0))
-    val its = new Array[String](n); val cts = new Array[Long](n); val ers = new Array[Long](n)
-    bb.position(9)
-    var i = 0
-    while (i < n) {
-      val len = bb.getInt()
-      require(len >= 0 && len <= bb.remaining - 16 - 20 * (n - 1 - i),
-        s"corrupt space-saving sketch: item $i of $len bytes in ${bytes.length} bytes")
-      its(i) = new String(bytes, bb.position(), len, cs)
-      bb.position(bb.position() + len)
-      cts(i) = bb.getLong(); ers(i) = bb.getLong()
-      i += 1
-    }
-    require(!bb.hasRemaining, s"corrupt space-saving sketch: ${bb.remaining} trailing bytes")
-    s.setState(its, cts, ers)
-    s
+  /** Decode an int64-arm sketch. */
+  def deserializeLong(bytes: Array[Byte]): SpaceSavingLong = deserialize(bytes) match {
+    case s: SpaceSavingLong => s
+    case s => throw new IllegalArgumentException(
+      s"space-saving sketch holds object keys (tag ${s.tag})")
   }
 }
 
-/** Open-addressing Long → Int map for at most `maxKeys` keys, -1 for
-  * absent: khash probing, linear, with tombstone-free backward-shift
-  * deletion. Tables are tiny (2-4 slots per key); a slot stores value + 1,
-  * so a fresh table is all empty without a fill. */
+/** Open-addressing Long → Int map, -1 for absent: khash probing, linear,
+  * with tombstone-free backward-shift deletion. The table holds 2-4 slots
+  * per key for up to `maxKeys` keys, and [[reserve]] rehashes it for more;
+  * a slot stores value + 1, so a fresh table is all empty without a fill. */
 private[core] final class LongIntMap(maxKeys: Int) extends Serializable {
-  private val mask = {
+  /** Table mask for n keys: at least 2n slots, a power of two, at least 4. */
+  private def maskFor(n: Int): Int = {
     var m = 4
-    while (m < maxKeys * 2) m <<= 1
+    while (m < n * 2) m <<= 1
     m - 1
   }
-  private val keys = new Array[Long](mask + 1)
-  private val vals = new Array[Int](mask + 1)
+
+  private var mask = maskFor(maxKeys)
+  private var keys = new Array[Long](mask + 1)
+  private var vals = new Array[Int](mask + 1)
 
   /** Slot holding k, or the empty slot where it would go. */
   private def find(k: Long): Int = {
@@ -576,6 +539,18 @@ private[core] final class LongIntMap(maxKeys: Int) extends Serializable {
   def put(k: Long, v: Int): Unit = {
     val i = find(k)
     keys(i) = k; vals(i) = v + 1
+  }
+
+  /** Make room for n keys. */
+  def reserve(n: Int): Unit = if (mask + 1 < 2 * n) {
+    val ks = keys; val vs = vals
+    mask = maskFor(n)
+    keys = new Array[Long](mask + 1); vals = new Array[Int](mask + 1)
+    var j = 0
+    while (j < ks.length) {
+      if (vs(j) != 0) { val i = find(ks(j)); keys(i) = ks(j); vals(i) = vs(j) }
+      j += 1
+    }
   }
 
   def remove(k: Long): Unit = {

@@ -472,9 +472,7 @@ object TDigest extends SketchCodec[TDigest] {
     n
   }
 
-  /** A digest whose values pass re-serializes to its own bytes, so every
-    * one is admitted. */
-  override def admit(bytes: Array[Byte]): Boolean = { checkValues(bytes); true }
+  override def admit(bytes: Array[Byte]): Unit = { checkValues(bytes); () }
 
   /** Decode into centroid arrays of exactly n entries; scratch and ingest
     * buffers are allocated only if the digest is later added to or queried. */

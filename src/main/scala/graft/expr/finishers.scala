@@ -2,19 +2,19 @@ package graft.expr
 
 import graft.agg.SpaceSavingAgg
 import graft.core._
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.AbstractDataType
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Scalar finalizer expressions over serialized sketches (SURVEY.md §2 T5–T12,
   * S5–S6). These run post-aggregation on a handful of rows, so per-call
   * deserialization is cheap relative to the aggregation itself; the array
   * variants amortize one query-prep pass over all probes
-  * (tdigest_stubs.c:560). */
+  * (tdigest_stubs.c:560). Every finisher reads a sketch through its kind's
+  * codec ([[graft.core.SketchCodec]]) on one path for every key type, and
+  * reads no byte of it directly. */
 
 /** tdigest_quantile(sketch, q) → double (T5, tdigest_stubs.c:483-516). */
 case class TDigestQuantile(left: Expression, right: Expression)
@@ -187,43 +187,25 @@ case class SSTopK(left: Expression, right: Expression, itemType: DataType)
   override def prettyName: String = "ss_topk"
 
   override protected def nullSafeEval(sketch: Any, kAny: Any): Any = {
-    val bytes = sketch.asInstanceOf[Array[Byte]]
     val k = kAny.asInstanceOf[Int]
     if (k < 0) throw new IllegalArgumentException("k must be >= 0")
-    val n = SpaceSaving.checkSerialized(bytes)
-    val expected = SpaceSavingAgg.itemTypeFor(bytes(0))
+    val s = SpaceSaving.deserialize(sketch.asInstanceOf[Array[Byte]])
+    val expected = SpaceSavingAgg.itemTypeFor(s.tag)
     require(expected == itemType,
       s"sketch holds ${expected.simpleString} items; use the matching " +
         s"ss_topk variant (got ${itemType.simpleString})")
-    val rows: Array[Any] = if (SpaceSaving.admit(bytes)) {
-      // canonical counters are already in list order: read the first k
-      val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      Array.tabulate[Any](math.min(k, n)) { i =>
-        val off = 9 + 24 * i
-        longRow(bb.getLong(off), bb.getLong(off + 8), bb.getLong(off + 16))
+    new GenericArrayData(s.topkSlots(k).map { i =>
+      val r = new GenericInternalRow(3)
+      s match {
+        case l: SpaceSavingLong =>
+          if (itemType == DoubleType) r.setDouble(0, SpaceSaving.keyToDouble(l.items(i)))
+          else r.setLong(0, l.items(i))
+        case o: SpaceSavingObj =>
+          r.update(0, if (itemType == BinaryType) o.items(i).getBytes else o.items(i))
       }
-    } else SpaceSaving.deserialize(bytes) match {
-      case s: SpaceSavingLong =>
-        s.topkSlots(k).map(i => longRow(s.items(i), s.counts(i), s.errors(i)): Any)
-      case s: SpaceSavingObj =>
-        s.topkSlots(k).map { i =>
-          val r = new GenericInternalRow(3)
-          if (itemType == BinaryType) r.update(0, SpaceSaving.keyToBinary(s.items(i)))
-          else r.update(0, UTF8String.fromString(s.items(i)))
-          r.setLong(1, s.counts(i)); r.setLong(2, s.errors(i))
-          r: Any
-        }
-    }
-    new GenericArrayData(rows)
-  }
-
-  /** A row of the int64 arm; the item type already matches the tag. */
-  private def longRow(item: Long, count: Long, error: Long): InternalRow = {
-    val r = new GenericInternalRow(3)
-    if (itemType == DoubleType) r.setDouble(0, SpaceSaving.keyToDouble(item))
-    else r.setLong(0, item)
-    r.setLong(1, count); r.setLong(2, error)
-    r
+      r.setLong(1, s.counts(i)); r.setLong(2, s.errors(i))
+      r: Any
+    })
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
@@ -236,11 +218,8 @@ case class SSCapacity(child: Expression)
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "ss_capacity"
-  override protected def nullSafeEval(sketch: Any): Any = {
-    val bytes = sketch.asInstanceOf[Array[Byte]]
-    SpaceSaving.checkSerialized(bytes)
-    java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(1)
-  }
+  override protected def nullSafeEval(sketch: Any): Any =
+    SpaceSaving.deserialize(sketch.asInstanceOf[Array[Byte]]).capacity
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 

@@ -206,4 +206,23 @@ class AggregatesSpec extends SparkTestBase {
     assert(merged.toSet == Set(
       (Seq[Byte](0, 1, -1, 127, -128), 6L), (Seq[Byte](42), 4L), (Seq[Byte](-5, -6), 2L)))
   }
+
+  test("an ss_topk_agg buffer allocates by the items it has seen, not by its capacity") {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, Literal}
+    import org.apache.spark.sql.types.LongType
+    val agg = SpaceSavingAgg(BoundReference(0, LongType, nullable = false), Literal(1L), Literal(32768))
+    val rows = Seq(3L, 5L, 3L, 7L).map(x => new GenericInternalRow(Array[Any](x)))
+    def fill(): Unit = {
+      val buf = agg.createAggregationBuffer()
+      rows.foreach(agg.update(buf, _))
+      assert(buf.size == 3)
+    }
+    fill() // warm up: class loading and the capacity's lazy val
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val id = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(id)
+    fill()
+    assert(mx.getThreadAllocatedBytes(id) - before < 64 * 1024)
+  }
 }

@@ -6,6 +6,7 @@ import graft.core.{CountMin, Hll, KmvSketch, SpaceSaving, SpaceSavingLong, Space
 import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.util.Random
 
 /** The decode-once merge aggregates (tdigest_merge_agg, ss_merge_agg,
@@ -18,7 +19,6 @@ class MergeAggSpec extends SparkTestBase {
   // with the fallback threshold at 2 the hash map spills right after the
   // second group's only row, so every group is still folded in row order
   private val GroupSizes = Seq(1, 1, 50, 2, 1)
-  private val Reordered = 4
 
   private def tdBytes(r: Random, i: Int): Array[Byte] = {
     val t = TDigest(if (i % 7 == 3) 20.0 else 100.0)
@@ -36,7 +36,7 @@ class MergeAggSpec extends SparkTestBase {
 
   private def ssStrBytes(r: Random): Array[Byte] = {
     val s = new SpaceSavingObj(8)
-    (0 until 1 + r.nextInt(40)).foreach(_ => s.add(s"k${r.nextInt(20)}"))
+    (0 until 1 + r.nextInt(40)).foreach(_ => s.add(UTF8String.fromString(s"k${r.nextInt(20)}")))
     s.serialize(SpaceSaving.TagString)
   }
 
@@ -59,8 +59,8 @@ class MergeAggSpec extends SparkTestBase {
     c.serialize()
   }
 
-  /** Fixed-width entries after a header written back in reverse order:
-    * valid, but decoding re-sorts them. */
+  /** Fixed-width entries after a header written back in reverse order,
+    * which no encoder writes. */
   private def reversed(canonical: Array[Byte], header: Int, width: Int): Array[Byte] = {
     val n = (canonical.length - header) / width
     val out = canonical.clone()
@@ -70,9 +70,7 @@ class MergeAggSpec extends SparkTestBase {
   }
   private def reversed(canonical: Array[Byte]): Array[Byte] = reversed(canonical, 9, 24)
 
-  /** Rows (g, td, ss, sss, hll, kmv, cms), each group's rows contiguous;
-    * the [[Reordered]] group's int64 Space-Saving and KMV sketches are
-    * stored out of order. */
+  /** Rows (g, td, ss, sss, hll, kmv, cms), each group's rows contiguous. */
   private lazy val rows: Seq[(Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte],
       Array[Byte], Array[Byte])] = {
     val r = new Random(17)
@@ -80,10 +78,7 @@ class MergeAggSpec extends SparkTestBase {
     GroupSizes.zipWithIndex.flatMap { case (n, g) =>
       (0 until n).map { _ =>
         i += 1
-        val ss = ssBytes(r)
-        val kmv = kmvBytes(r, i)
-        (g, tdBytes(r, i), if (g == Reordered) reversed(ss) else ss, ssStrBytes(r), hllBytes(r),
-          if (g == Reordered) reversed(kmv, 8, 8) else kmv, cmsBytes(r))
+        (g, tdBytes(r, i), ssBytes(r), ssStrBytes(r), hllBytes(r), kmvBytes(r, i), cmsBytes(r))
       }
     }
   }
@@ -131,10 +126,6 @@ class MergeAggSpec extends SparkTestBase {
 
   test("merge aggregates equal the kernel fold byte for byte (groups of 1, 2, 50)") {
     checkAll()
-    // a lone out-of-order sketch comes out normalised, not echoed back
-    val lone = rows.find(_._1 == Reordered).get
-    assert(expected(Reordered)(1) != lone._3.toSeq)
-    assert(expected(Reordered)(4) != lone._6.toSeq)
   }
 
   test("merge aggregates equal the kernel fold under the sort fallback (threshold=2)") {
@@ -198,19 +189,54 @@ class MergeAggSpec extends SparkTestBase {
     }
   }
 
-  test("ss_topk reads canonical bytes directly and normalises other orders") {
+  /** A canonical sketch and the same one written back to front, which the
+    * decoder rejects with `message`. */
+  private def outOfOrder(gen: Random => Array[Byte], rev: Array[Byte] => Array[Byte],
+      decode: Array[Byte] => Any, message: String): (Array[Byte], Array[Byte]) = {
+    val r = new Random(5)
+    Iterator.continually(gen(r)).take(100).map(b => (b, rev(b))).find { case (_, back) =>
+      scala.util.Try(decode(back)).failed.toOption.exists(_.getMessage.contains(message))
+    }.getOrElse(fail(s"no sketch written back to front was rejected with '$message'"))
+  }
+
+  test("out-of-order Space-Saving and KMV sketches are rejected in any group") {
+    val ss = outOfOrder(ssBytes, reversed, SpaceSaving.deserialize, "out of list order")
+    val kmv = outOfOrder(kmvBytes(_, 1), reversed(_, 8, 8), KmvSketch.deserialize,
+      "out of increasing order")
+    for (((good, back), f, decode) <- Seq((ss, gf.ss_merge_agg _, SpaceSaving.deserialize _),
+        (kmv, gf.kmv_merge_agg _, KmvSketch.deserialize _))) {
+      val want = intercept[IllegalArgumentException](decode(back)).getMessage
+      for (group <- Seq(Seq(back), Seq(good, back), Seq(back, good))) {
+        val e = intercept[Exception](
+          group.map(b => (1, b)).toDF("g", "b").coalesce(1).groupBy("g").agg(f(col("b"))).collect())
+        assert(messages(e).contains(want), messages(e))
+      }
+    }
+  }
+
+  test("ss_topk reads every counter through the codec and rejects other orders") {
     val r = new Random(5)
     val canonical = ssBytes(r)
-    Seq(canonical, reversed(canonical)).foreach { b =>
-      val s = SpaceSaving.deserializeLong(b)
-      val want = s.topkSlots(5).map(i => (s.items(i), s.counts(i), s.errors(i))).toSeq
-      val got = Seq(Tuple1(b)).toDF("s").select(gf.ss_topk_long(col("s"), 5)).head()
-        .getSeq[Row](0).map(t => (t.getLong(0), t.getLong(1), t.getLong(2)))
-      assert(got == want)
-    }
+    val s = SpaceSaving.deserializeLong(canonical)
+    val want = s.topkSlots(5).map(i => (s.items(i), s.counts(i), s.errors(i))).toSeq
+    val got = Seq(Tuple1(canonical)).toDF("s").select(gf.ss_topk_long(col("s"), 5)).head()
+      .getSeq[Row](0).map(t => (t.getLong(0), t.getLong(1), t.getLong(2)))
+    assert(got == want)
     // k beyond the size returns every counter
     val n = ByteBuffer.wrap(canonical).order(ByteOrder.LITTLE_ENDIAN).getInt(5)
     assert(Seq(Tuple1(canonical)).toDF("s").select(gf.ss_topk_long(col("s"), 1000))
       .head().getSeq[Row](0).size == n)
+    val (_, back) = outOfOrder(ssBytes, reversed, SpaceSaving.deserialize, "out of list order")
+    val e = intercept[Exception](
+      Seq(Tuple1(back)).toDF("s").select(gf.ss_topk_long(col("s"), 5)).collect())
+    assert(messages(e).contains("out of list order"), messages(e))
+  }
+
+  test("ss_topk_string keeps invalid UTF-8 items apart") {
+    val raw = spark.sql("""SELECT inline(ss_topk_string(ss_topk_agg(x), 5))
+        |FROM VALUES (CAST(X'FF' AS STRING)), (CAST(X'FE' AS STRING)), (CAST(X'FF' AS STRING)) AS v(x)
+        |""".stripMargin).selectExpr("CAST(item AS BINARY)", "`count`").collect()
+      .map(r => (r.getAs[Array[Byte]](0).toSeq, r.getLong(1))).toSeq
+    assert(raw == Seq((Seq(0xFF.toByte), 2L), (Seq(0xFE.toByte), 1L)))
   }
 }

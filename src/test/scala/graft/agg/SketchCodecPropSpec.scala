@@ -6,15 +6,19 @@ import graft.core._
 import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.util.{Failure, Random, Success, Try}
 
 /** Seeded mutation property over the five sketch codecs: valid sketches of
-  * every kind are truncated, extended, bit-flipped and have their length
-  * fields inflated; the three blobs that once killed an executor ride along
-  * byte for byte. Every decode either round-trips or throws an
-  * IllegalArgumentException naming the kind, and the codec's other entry
-  * points agree with it. The same inputs then run through each merge
-  * aggregate (one- and two-sketch groups) and each finisher in SQL. */
+  * every kind are truncated, extended, bit-flipped, have their length
+  * fields inflated and (Space-Saving, KMV) their entries written back to
+  * front; the three blobs that once killed an executor ride along byte for
+  * byte, with hand-built out-of-order ones. Each codec accepts exactly what
+  * its encoder writes: every blob either re-encodes to itself, byte for
+  * byte, or is rejected with an IllegalArgumentException naming the kind,
+  * and the codec's other entry points agree with it. The same inputs then
+  * run through each merge aggregate (one- and two-sketch groups) and each
+  * finisher in SQL. */
 class SketchCodecPropSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -39,9 +43,9 @@ class SketchCodecPropSpec extends SparkTestBase {
     val dbl = new SpaceSavingLong(8, SpaceSaving.TagDouble)
     (0 until 50).foreach(_ => dbl.add(SpaceSaving.doubleKey(r0.nextInt(12) * 0.5)))
     val str = new SpaceSavingObj(8)
-    (0 until 60).foreach(_ => str.add(s"key${r0.nextInt(15)}"))
+    (0 until 60).foreach(_ => str.add(UTF8String.fromString(s"key${r0.nextInt(15)}")))
     val bin = new SpaceSavingObj(4, SpaceSaving.TagBinary)
-    (0 until 20).foreach(_ => bin.add(SpaceSaving.binaryKey(Array.fill(3)(r0.nextInt(4).toByte))))
+    (0 until 20).foreach(_ => bin.add(UTF8String.fromBytes(Array.fill(3)(r0.nextInt(4).toByte))))
     Seq(long, dbl, str, bin, new SpaceSavingLong(5)).map(SpaceSaving.serialize)
   }
 
@@ -92,14 +96,41 @@ class SketchCodecPropSpec extends SparkTestBase {
       Field(5, 4, bigEndian = true)), gf.cms_merge_agg,
       (s, _) => Seq(gf.cms_count(s, lit(7L)), gf.cms_total(s), gf.cms_dot(s, s))))
 
+  /** Little-endian header ints followed by little-endian longs. */
+  private def leBlob(head: Array[Byte], ints: Seq[Int], longs: Seq[Long]): Array[Byte] = {
+    val bb = ByteBuffer.allocate(head.length + 4 * ints.size + 8 * longs.size).order(ByteOrder.LITTLE_ENDIAN)
+    bb.put(head); ints.foreach(bb.putInt); longs.foreach(bb.putLong)
+    bb.array()
+  }
+
   /** The blobs that ran an executor out of memory or off the end of its
-    * buffer before the decoders bounded their allocations. */
+    * buffer before the decoders bounded their allocations, then blobs no
+    * encoder writes that decoders once accepted and re-sorted. */
   private val probes: Map[String, Seq[Array[Byte]]] = Map(
-    // [tag 1][capacity 2^31-1][size 0]
-    "space-saving" -> Seq(Array[Byte](1, -1, -1, -1, 127, 0, 0, 0, 0)),
+    // [tag 1][capacity 2^31-1][size 0]; then counters (item, count, error)
+    // out of list order: count ascending, and error descending in a tie
+    "space-saving" -> Seq(Array[Byte](1, -1, -1, -1, 127, 0, 0, 0, 0),
+      leBlob(Array(SpaceSaving.TagLong), Seq(8, 2), Seq(1L, 1L, 0L, 2L, 5L, 0L)),
+      leBlob(Array(SpaceSaving.TagLong), Seq(8, 2), Seq(1L, 5L, 2L, 2L, 5L, 1L))),
     // magic, depth 16, width 2^24, total 0
     "CMS" -> Seq(Array[Byte](0x43, 0, 0, 0, 16, 1, 0, 0, 0) ++ new Array[Byte](8)),
-    "KMV" -> Seq(Array[Byte](1, 2, 3)))
+    // too short; then n > k; a repeated hash; hashes out of unsigned order
+    "KMV" -> Seq(Array[Byte](1, 2, 3), leBlob(Array.empty, Seq(2, 3), Seq(1L, 2L, 3L)),
+      leBlob(Array.empty, Seq(4, 2), Seq(7L, 7L)), leBlob(Array.empty, Seq(4, 2), Seq(-1L, 1L))))
+
+  /** A Space-Saving or KMV blob with its entries (counters or hashes)
+    * written back to front. */
+  private def reversed(k: Kind, b: Array[Byte]): Seq[Array[Byte]] = {
+    val (header, ends) = k.word match {
+      case "KMV" => (8, (8 to b.length by 8).drop(1))
+      case "space-saving" if b(0) >= SpaceSaving.TagString =>
+        (9, Iterator.iterate(9)(o => o + 20 + le(b).getInt(o)).drop(1).take(le(b).getInt(5)).toSeq)
+      case "space-saving" => (9, (9 to b.length by 24).drop(1))
+      case _ => return Nil
+    }
+    val entries = (header +: ends).zip(ends).map { case (from, to) => b.slice(from, to) }
+    if (entries.size < 2) Nil else Seq(b.take(header) ++ entries.reverse.flatten)
+  }
 
   private def setField(b: Array[Byte], f: Field, v: Int): Array[Byte] = {
     val out = b.clone()
@@ -134,7 +165,7 @@ class SketchCodecPropSpec extends SparkTestBase {
                      else Seq(v + 1, 2 * v + 1, -1, 1 << 20, (1 << 20) + 1, 1 << 24, Int.MaxValue)
         values.map(setField(b, f, _))
       }
-      truncated ++ extended ++ flipped ++ inflated
+      truncated ++ extended ++ flipped ++ inflated ++ reversed(k, b)
     } ++ probes.getOrElse(k.word, Nil)
   }
 
@@ -162,18 +193,12 @@ class SketchCodecPropSpec extends SparkTestBase {
       val what = s"${k.word} blob ${b.take(40).mkString(",")} (${b.length} bytes)"
       Try(roundTrip(k.codec, b)) match {
         case Success(out) =>
-          assert(roundTrip(k.codec, out).toSeq == out.toSeq, s"$what: re-encoding is not a fixed point")
+          assert(out.toSeq == b.toSeq, s"$what: accepted bytes do not re-encode to themselves")
           assert(k.codec.checkSerialized(b) >= 0)
-          // admit may decline bytes that would round-trip, never the reverse
-          if (k.codec.admit(b)) assert(out.toSeq == b.toSeq, s"$what: admitted bytes do not round-trip")
+          k.codec.admit(b)
         case Failure(e) =>
           assert(rejects(k, e), s"$what: $e")
-          // admit may stop at the first counter out of order, leaving the rest
-          // to the decode walk; otherwise it throws what the decode throws
-          Try(k.codec.admit(b)) match {
-            case Failure(a) => assert(a.getMessage == e.getMessage, what)
-            case Success(admitted) => assert(!admitted, s"$what: admitted a blob the decoder rejects")
-          }
+          assert(intercept[IllegalArgumentException](k.codec.admit(b)).getMessage == e.getMessage, what)
       }
       for (into <- k.valid) {
         val (viaBytes, viaSketch) = mergeBoth(k.codec, into, b)
@@ -186,6 +211,11 @@ class SketchCodecPropSpec extends SparkTestBase {
         }
       }
     }
+    // every probe is a blob no encoder writes: rejected, even where it
+    // would re-encode to itself
+    for (k <- kinds; b <- probes.getOrElse(k.word, Nil))
+      assert(Try(k.codec.deserialize(b)).failed.toOption.exists(rejects(k, _)),
+        s"${k.word} probe ${b.mkString(",")} accepted")
   }
 
   test("t-digest: impossible weights and bounds are rejected alike by every entry point") {
@@ -220,7 +250,7 @@ class SketchCodecPropSpec extends SparkTestBase {
         bb.putDouble(44, Double.PositiveInfinity); bb.putDouble(24, Double.PositiveInfinity) },
       "empty with min > max" -> empty)
     for ((what, b) <- accepted) {
-      assert(TDigest.admit(b), what)
+      TDigest.admit(b)
       assert(TDigest.deserialize(b).serialize().toSeq == b.toSeq, what)
     }
   }

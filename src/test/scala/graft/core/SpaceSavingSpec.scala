@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
@@ -147,9 +148,9 @@ class SpaceSavingSpec extends AnyFunSuite {
     assert(r.size <= 20)
 
     val so = new SpaceSavingObj(10)
-    Seq("a", "b", "a", "c", "a", "b").foreach(so.add(_))
-    val ro = SpaceSaving.deserializeObj(so.serialize(SpaceSaving.TagString))
-    assert(ro.topkSlots(3).map(i => (ro.items(i), ro.counts(i))).toSeq ==
+    Seq("a", "b", "a", "c", "a", "b").foreach(x => so.add(UTF8String.fromString(x)))
+    val ro = SpaceSaving.deserialize(so.serialize(SpaceSaving.TagString)).asInstanceOf[SpaceSavingObj]
+    assert(ro.topkSlots(3).map(i => (ro.items(i).toString, ro.counts(i))).toSeq ==
       Seq(("a", 3L), ("b", 2L), ("c", 1L)))
   }
 
@@ -225,13 +226,26 @@ class SpaceSavingSpec extends AnyFunSuite {
     bb.array()
   }
 
-  /** Decode through the reference insert walk ([[SpaceSavingLong.setState]]). */
+  /** Serialized string sketch with the given counters, in the given order. */
+  private def strBytesOf(cap: Int, cs: Seq[(Array[Byte], Long, Long)]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(9 + cs.map(_._1.length + 20).sum)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put(SpaceSaving.TagString).putInt(cap).putInt(cs.size)
+    cs.foreach { case (i, c, e) => bb.putInt(i.length).put(i).putLong(c).putLong(e) }
+    bb.array()
+  }
+
+  /** The reference insert walk: merging into an empty sketch appends each
+    * counter through spsv_counter_insert. */
   private def walkDecode(s: SpaceSavingLong): SpaceSavingLong = {
     val w = new SpaceSavingLong(s.capacity)
-    val cs = counters(s)
-    w.setState(cs.map(_._1).toArray, cs.map(_._2).toArray, cs.map(_._3).toArray)
+    w.merge(s)
     w
   }
+
+  /** The first `size` slots of a sketch's links and items. */
+  private def layout(s: SpaceSavingLong) =
+    (s.head, s.items.take(s.size).toSeq, s.next.take(s.size).toSeq, s.prev.take(s.size).toSeq)
 
   test("canonical decode fast path matches the insert walk") {
     val r = new Random(21)
@@ -240,12 +254,11 @@ class SpaceSavingSpec extends AnyFunSuite {
       val s = new SpaceSavingLong(cap)
       (0 until r.nextInt(500)).foreach(_ => s.add(r.nextInt(cap * 2).toLong, 1L + r.nextInt(3)))
       val bytes = s.serialize(SpaceSaving.TagLong)
-      assert(SpaceSaving.admit(bytes))
+      SpaceSaving.admit(bytes)
       val fast = SpaceSaving.deserializeLong(bytes)
       val walk = walkDecode(s)
       assert(fast.serialize(SpaceSaving.TagLong).toSeq == bytes.toSeq)
-      assert(fast.items.toSeq == walk.items.toSeq && fast.next.toSeq == walk.next.toSeq &&
-        fast.prev.toSeq == walk.prev.toSeq && fast.head == walk.head)
+      assert(layout(fast) == layout(walk))
       // both keep behaving identically: adds (run-head index rebuilt on
       // demand) and merges in either direction
       val other = new SpaceSavingLong(cap)
@@ -262,28 +275,75 @@ class SpaceSavingSpec extends AnyFunSuite {
     }
   }
 
-  test("out-of-order counters come out normalised; duplicates still rejected") {
+  /** The decoder's IllegalArgumentException, which admit must throw too. */
+  private def rejection(b: Array[Byte]): String = {
+    val e = intercept[IllegalArgumentException](SpaceSaving.deserialize(b))
+    assert(intercept[IllegalArgumentException](SpaceSaving.admit(b)).getMessage == e.getMessage)
+    assert(e.getMessage.contains("space-saving"), e.getMessage)
+    e.getMessage
+  }
+
+  test("out-of-order counters and duplicate items are rejected, both key arms") {
     val sorted = Seq((7L, 9L, 0L), (3L, 5L, 1L), (4L, 5L, 2L), (1L, 2L, 0L))
     val canonical = bytesOf(8, sorted)
-    assert(SpaceSaving.admit(canonical))
-    val shuffled = bytesOf(8, Seq(sorted(2), sorted(0), sorted(3), sorted(1)))
-    assert(!SpaceSaving.admit(shuffled))
-    assert(SpaceSaving.deserializeLong(shuffled).serialize(SpaceSaving.TagLong).toSeq ==
+    SpaceSaving.admit(canonical)
+    assert(SpaceSaving.deserializeLong(canonical).serialize(SpaceSaving.TagLong).toSeq ==
       canonical.toSeq)
+    // count ascending, and in a tie error descending
+    val shuffled = bytesOf(8, Seq(sorted(2), sorted(0), sorted(3), sorted(1)))
+    val tieSwapped = bytesOf(8, Seq(sorted(0), sorted(2), sorted(1), sorted(3)))
+    assert(rejection(shuffled).contains("counter 1 out of list order"))
+    assert(rejection(tieSwapped).contains("counter 2 out of list order"))
     val dupSorted = bytesOf(8, sorted :+ ((3L, 1L, 0L)))
     val dupShuffled = bytesOf(8, ((3L, 10L, 0L)) +: sorted)
-    Seq(dupSorted, dupShuffled).foreach { b =>
-      val e = intercept[IllegalArgumentException](SpaceSaving.deserializeLong(b))
-      assert(e.getMessage.contains("duplicate items found"))
-    }
-    assert(intercept[IllegalArgumentException](SpaceSaving.admit(dupSorted))
-      .getMessage.contains("duplicate items found"))
+    Seq(dupSorted, dupShuffled).foreach(b => assert(rejection(b).contains("duplicate items found")))
     // header checks match the decoder's
-    val short = canonical.take(canonical.length - 1)
-    assert(intercept[IllegalArgumentException](SpaceSaving.admit(short)).getMessage ==
-      intercept[IllegalArgumentException](SpaceSaving.deserializeLong(short)).getMessage)
-    // object-arm sketches are never treated as canonical int64 bytes
-    val so = new SpaceSavingObj(4); so.add("a")
-    assert(!SpaceSaving.admit(so.serialize(SpaceSaving.TagString)))
+    rejection(canonical.take(canonical.length - 1))
+
+    val strs = Seq(("x".getBytes, 4L, 0L), ("y".getBytes, 3L, 1L), ("z".getBytes, 3L, 2L))
+    val strCanonical = strBytesOf(4, strs)
+    SpaceSaving.admit(strCanonical)
+    assert(SpaceSaving.serialize(SpaceSaving.deserialize(strCanonical)).toSeq == strCanonical.toSeq)
+    assert(rejection(strBytesOf(4, strs.reverse)).contains("counter 1 out of list order"))
+    assert(rejection(strBytesOf(4, Seq(strs(0), strs(2), strs(1)))).contains("out of list order"))
+    assert(rejection(strBytesOf(4, strs :+ (("x".getBytes, 1L, 0L)))).contains("duplicate items found"))
+  }
+
+  test("invalid UTF-8 string items stay distinct and round-trip byte for byte") {
+    val s = new SpaceSavingObj(4)
+    val ff = UTF8String.fromBytes(Array(0xFF.toByte))
+    val fe = UTF8String.fromBytes(Array(0xFE.toByte))
+    s.add(ff, 2L); s.add(fe); s.add(ff)
+    assert(s.size == 2)
+    val bytes = SpaceSaving.serialize(s)
+    val back = SpaceSaving.deserialize(bytes).asInstanceOf[SpaceSavingObj]
+    assert(back.topkSlots(2).map(i => (back.items(i).getBytes.toSeq, back.counts(i))).toSeq ==
+      Seq((Seq(0xFF.toByte), 3L), (Seq(0xFE.toByte), 1L)))
+    assert(SpaceSaving.serialize(back).toSeq == bytes.toSeq)
+  }
+
+  /** Bytes this thread allocates while running f. */
+  private def allocated(f: => Unit): Long = {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val id = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(id)
+    f
+    mx.getThreadAllocatedBytes(id) - before
+  }
+
+  test("storage grows with what is stored, not with the capacity") {
+    val header = bytesOf(SpaceSaving.MaxCapacity, Nil)
+    SpaceSaving.deserialize(header) // warm up
+    assert(allocated(SpaceSaving.deserialize(header)) < (1 << 20))
+    // growth doubles up to the capacity, and eviction keys on the capacity
+    val r = new Random(9)
+    val s = new SpaceSavingLong(40)
+    (0 until 2000).foreach(_ => s.add(r.nextInt(120).toLong))
+    assert(s.size == 40 && s.items.length == 40 && s.counts.length == 40)
+    val d = SpaceSaving.deserializeLong(bytesOf(1000, Seq((1L, 5L, 0L), (2L, 4L, 0L), (3L, 1L, 0L))))
+    assert(d.items.length < 16)
+    (10L until 1500L).foreach(d.add(_))
+    assert(d.size == 1000 && d.items.length == 1000 && d.next.length == 1000)
   }
 }
