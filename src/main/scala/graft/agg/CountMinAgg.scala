@@ -48,16 +48,15 @@ case class CountMinAgg(
   private lazy val width: Int = third.eval().asInstanceOf[Number].intValue()
 
   override protected def codec = CountMin
+  override protected def start = new CountMin(depth, width)
   override protected def sizeParams = Seq("depth" -> second, "width" -> third)
   override def inputTypes: Seq[AbstractDataType] =
     Seq(KmvHash.routedType(first.dataType), IntegerType, IntegerType)
   override def prettyName: String = "cms_agg"
 
-  override def createAggregationBuffer(): CountMin = new CountMin(depth, width)
-
-  override def update(buf: CountMin, input: InternalRow): CountMin = {
+  override def update(buf: MergeBuffer[CountMin], input: InternalRow): MergeBuffer[CountMin] = {
     val v = first.eval(input)
-    if (v != null) buf.add(CmsKey.ofAny(first.dataType, v))
+    if (v != null) writable(buf).add(CmsKey.ofAny(first.dataType, v))
     buf
   }
 

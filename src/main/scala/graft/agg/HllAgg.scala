@@ -25,15 +25,14 @@ case class HllAgg(
   private lazy val p: Int = right.eval().asInstanceOf[Number].intValue()
 
   override protected def codec = Hll
+  override protected def start = new Hll(p)
   override protected def sizeParams = Seq("p" -> right)
   override def inputTypes: Seq[AbstractDataType] = Seq(KmvHash.routedType(left.dataType), IntegerType)
   override def prettyName: String = "hll_agg"
 
-  override def createAggregationBuffer(): Hll = new Hll(p)
-
-  override def update(buf: Hll, input: InternalRow): Hll = {
+  override def update(buf: MergeBuffer[Hll], input: InternalRow): MergeBuffer[Hll] = {
     val v = left.eval(input)
-    if (v != null) buf.add(KmvHash.ofAny(left.dataType, v))
+    if (v != null) writable(buf).add(KmvHash.ofAny(left.dataType, v))
     buf
   }
 

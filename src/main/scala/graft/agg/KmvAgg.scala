@@ -59,15 +59,14 @@ case class KmvAgg(
   private lazy val k: Int = right.eval().asInstanceOf[Number].intValue()
 
   override protected def codec = KmvSketch
+  override protected def start = new KmvSketch(k)
   override protected def sizeParams = Seq("k" -> right)
   override def inputTypes: Seq[AbstractDataType] = Seq(KmvHash.routedType(left.dataType), IntegerType)
   override def prettyName: String = "kmv_agg"
 
-  override def createAggregationBuffer(): KmvSketch = new KmvSketch(k)
-
-  override def update(buf: KmvSketch, input: InternalRow): KmvSketch = {
+  override def update(buf: MergeBuffer[KmvSketch], input: InternalRow): MergeBuffer[KmvSketch] = {
     val v = left.eval(input)
-    if (v != null) buf.add(KmvHash.ofAny(left.dataType, v))
+    if (v != null) writable(buf).add(KmvHash.ofAny(left.dataType, v))
     buf
   }
 

@@ -22,22 +22,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * design hold at 100 TB (SURVEY.md §7.4 item 9). Spill safety comes from the
   * sort-based fallback (spark.sql.objectHashAggregate.sortBased.fallbackThreshold).
   *
-  * Every sketch kind's bytes go through one [[graft.core.SketchCodec]], the
-  * kernel's companion object: the aggregates that build sketches
-  * ([[SketchAddAgg]]) merge, serialize and deserialize through it, and so do
-  * all five merge aggregates over stored sketches (tdigest_merge_agg,
-  * ss_merge_agg, hll_merge_agg, kmv_merge_agg, cms_merge_agg;
-  * [[DecodeOnceMergeAgg]]). Those decode each sketch at most once, and only
-  * when a merge needs it: a buffer keeps the first sketch's bytes, checked
-  * on arrival as decoding would check them, until a second sketch arrives,
-  * which the codec merges from its bytes; serialize / eval of such a buffer
-  * return the bytes and a shuffled buffer's deserialize checks only its
-  * header. Every codec accepts exactly what its encoder writes, so kept
-  * bytes are the bytes decode → serialize would return, for every kind
-  * and every Space-Saving key type, and output stays byte-identical to
-  * decode → merge → serialize.
+  * All twelve sketch aggregates share one buffer lifecycle, [[SketchAgg]]:
+  * a [[MergeBuffer]] whose kind's [[graft.core.SketchCodec]] (the kernel's
+  * companion object) merges, serializes and deserializes it. An aggregate
+  * supplies only `update` and the sketch a group starts from:
+  *   - The five merge aggregates over stored sketches ([[DecodeOnceMergeAgg]])
+  *     start with none. A group adopts its first sketch's bytes, checked as
+  *     decoding would check them, keeps the sketch too when the check built
+  *     it (Space-Saving), and decodes only when a second sketch arrives,
+  *     which the codec merges from its bytes.
+  *   - The six add aggregates ([[SketchAddAgg]]) and stats_merge_agg start
+  *     from the kind's empty sketch and fold everything into it, shuffled
+  *     partials included. Adopting a partial would change output bytes:
+  *     over 200 random t-digests per size (10 to 1000 values, compression
+  *     20 or 100), `TDigest(c).mergeSerialized(x)` re-encoded to x for
+  *     every digest built from whole weights, but for only 23-54 % of those
+  *     built with fractional weights.
+  * Every codec accepts exactly what its encoder writes, so kept bytes are
+  * the bytes decode → serialize would return, and output stays
+  * byte-identical to decoding every sketch first. A shuffled buffer's
+  * deserialize checks only its header.
   *
-  * The five add aggregates declare their size parameters (compression,
+  * The add aggregates declare their size parameters (compression,
   * capacity, p, k, depth, width) to [[SketchAddAgg]], which checks in one
   * place that each is a non-null constant; the kernels' constructors check
   * their ranges.
@@ -63,15 +69,85 @@ object StatsStruct {
     r
   }
 
+  /** The moments kind's checked decode of a stored struct: a NULL field is
+    * rejected, the values as [[MomentsSketch.checked]] checks them. An
+    * empty struct's min and max (NaN) read as the empty sketch's. */
   def fromRow(r: InternalRow): MomentsSketch = {
-    val s = new MomentsSketch
-    s.count = r.getLong(0); s.sum = r.getDouble(1)
-    val mn = r.getDouble(2); val mx = r.getDouble(3)
-    s.min = if (java.lang.Double.isNaN(mn)) Double.MaxValue else mn
-    s.max = if (java.lang.Double.isNaN(mx)) Double.NegativeInfinity else mx
-    s.m2 = r.getDouble(4); s.m3 = r.getDouble(5); s.m4 = r.getDouble(6)
-    s.homogeneous = r.getBoolean(7); s.firstValue = r.getDouble(8)
-    s
+    if (r.anyNull) throw new IllegalArgumentException("corrupt summary_stats struct: NULL " +
+      schema.fields.indices.filter(r.isNullAt).map(schema(_).name).mkString(", "))
+    val count = r.getLong(0)
+    MomentsSketch.checked(count, r.getDouble(1),
+      if (count == 0L) Double.MaxValue else r.getDouble(2),
+      if (count == 0L) Double.NegativeInfinity else r.getDouble(3),
+      r.getDouble(4), r.getDouble(5), r.getDouble(6), r.getBoolean(7), r.getDouble(8))
+  }
+}
+
+/** A sketch aggregate's buffer: empty (both null), a sketch's checked
+  * bytes, the decoded sketch, or both while the sketch is unmodified. */
+final class MergeBuffer[S >: Null <: AnyRef](var bytes: Array[Byte], var sketch: S) {
+  def isEmpty: Boolean = bytes == null && sketch == null
+}
+
+/** The one buffer lifecycle of the sketch aggregates (see the file header).
+  * `codec` is a def returning the kernel's companion object, so it takes no
+  * part in case-class equality or task serialization. */
+trait SketchAgg[S >: Null <: AnyRef] extends TypedImperativeAggregate[MergeBuffer[S]] {
+  protected def codec: SketchCodec[S]
+  /** The sketch a group starts from: the kind's empty sketch, or null for a
+    * group that adopts its first stored sketch. */
+  protected def start: S
+
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+
+  override def createAggregationBuffer(): MergeBuffer[S] = new MergeBuffer[S](null, start)
+
+  /** The buffer's sketch, decoded from its bytes once. */
+  protected def sketch(buf: MergeBuffer[S]): S = {
+    if (buf.sketch == null) buf.sketch = codec.deserialize(buf.bytes)
+    buf.sketch
+  }
+
+  /** The buffer's sketch, to be added or merged into: the kept bytes no
+    * longer stand for it. */
+  protected def writable(buf: MergeBuffer[S]): S = { val s = sketch(buf); buf.bytes = null; s }
+
+  override def merge(b1: MergeBuffer[S], b2: MergeBuffer[S]): MergeBuffer[S] = {
+    if (b1.isEmpty) { b1.bytes = b2.bytes; b1.sketch = b2.sketch }
+    else if (b2.sketch != null) codec.mergeSketch(writable(b1), b2.sketch)
+    else if (b2.bytes != null) codec.mergeBytes(writable(b1), b2.bytes)
+    b1
+  }
+
+  /** The buffer's bytes, null when it is empty. */
+  private def encoded(buf: MergeBuffer[S]): Array[Byte] =
+    if (buf.bytes != null) buf.bytes
+    else if (buf.sketch != null) codec.serialize(buf.sketch)
+    else null
+
+  override def eval(buf: MergeBuffer[S]): Any = encoded(buf)
+  override def serialize(buf: MergeBuffer[S]): Array[Byte] =
+    if (buf.isEmpty) Array.emptyByteArray else encoded(buf)
+  override def deserialize(b: Array[Byte]): MergeBuffer[S] =
+    if (b.isEmpty) createAggregationBuffer()
+    else { codec.checkSerialized(b); new MergeBuffer[S](b, null) }
+}
+
+/** An aggregate that adds values into a sketch, starting from the kind's
+  * empty sketch. */
+trait SketchAddAgg[S >: Null <: AnyRef] extends SketchAgg[S] with ImplicitCastInputTypes {
+  /** The arguments that size the sketch, by name: analysis rejects any that
+    * is not a non-null constant. Each aggregate reads them in a lazy val. */
+  protected def sizeParams: Seq[(String, Expression)]
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val base = super.checkInputDataTypes()
+    if (base.isFailure) base
+    else sizeParams.collectFirst {
+      case (name, e) if !e.foldable || e.eval() == null =>
+        TypeCheckResult.TypeCheckFailure(s"$name must be a non-null constant")
+    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
   }
 }
 
@@ -82,38 +158,32 @@ case class SummaryStatsAgg(
     right: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MomentsSketch]
-  with BinaryLike[Expression] with ImplicitCastInputTypes {
+  extends SketchAddAgg[MomentsSketch] with BinaryLike[Expression] {
 
   def this(child: Expression) = this(child, Literal(1L))
 
+  override protected def codec = MomentsSketch
+  override protected def start = new MomentsSketch
+  override protected def sizeParams = Nil
   override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, LongType)
   override def dataType: DataType = StatsStruct.schema
-  override def nullable: Boolean = false
   override def prettyName: String = "summary_stats"
 
-  override def createAggregationBuffer(): MomentsSketch = new MomentsSketch
-
-  override def update(buf: MomentsSketch, input: InternalRow): MomentsSketch = {
+  override def update(buf: MergeBuffer[MomentsSketch],
+      input: InternalRow): MergeBuffer[MomentsSketch] = {
     val v = left.eval(input)
     if (v != null) {
       val w = right.eval(input)
       if (w != null) {
         val c = w.asInstanceOf[Long]
         if (c <= 0) throw new IllegalArgumentException("count must be > 0")
-        buf.add(v.asInstanceOf[Double], c)
+        writable(buf).add(v.asInstanceOf[Double], c)
       }
     }
     buf
   }
 
-  override def merge(b1: MomentsSketch, b2: MomentsSketch): MomentsSketch = {
-    b1.merge(b2); b1
-  }
-
-  override def eval(buf: MomentsSketch): Any = StatsStruct.toRow(buf)
-  override def serialize(buf: MomentsSketch): Array[Byte] = buf.serialize()
-  override def deserialize(b: Array[Byte]): MomentsSketch = MomentsSketch.deserialize(b)
+  override def eval(buf: MergeBuffer[MomentsSketch]): Any = StatsStruct.toRow(sketch(buf))
 
   override def withNewMutableAggBufferOffset(n: Int): SummaryStatsAgg =
     copy(mutableAggBufferOffset = n)
@@ -129,10 +199,11 @@ case class StatsMergeAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MomentsSketch] with UnaryLike[Expression] {
+  extends SketchAgg[MomentsSketch] with UnaryLike[Expression] {
 
+  override protected def codec = MomentsSketch
+  override protected def start = new MomentsSketch
   override def dataType: DataType = StatsStruct.schema
-  override def nullable: Boolean = false
   override def prettyName: String = "stats_merge_agg"
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -147,55 +218,21 @@ case class StatsMergeAgg(
           s"${StatsStruct.schema.simpleString}, got ${other.simpleString}")
     }
 
-  override def createAggregationBuffer(): MomentsSketch = new MomentsSketch
-
-  override def update(buf: MomentsSketch, input: InternalRow): MomentsSketch = {
+  override def update(buf: MergeBuffer[MomentsSketch],
+      input: InternalRow): MergeBuffer[MomentsSketch] = {
     val v = child.eval(input)
-    if (v != null) buf.merge(StatsStruct.fromRow(v.asInstanceOf[InternalRow]))
+    if (v != null) writable(buf).merge(StatsStruct.fromRow(v.asInstanceOf[InternalRow]))
     buf
   }
 
-  override def merge(b1: MomentsSketch, b2: MomentsSketch): MomentsSketch = {
-    b1.merge(b2); b1
-  }
-  override def eval(buf: MomentsSketch): Any = StatsStruct.toRow(buf)
-  override def serialize(buf: MomentsSketch): Array[Byte] = buf.serialize()
-  override def deserialize(b: Array[Byte]): MomentsSketch = MomentsSketch.deserialize(b)
+  override def eval(buf: MergeBuffer[MomentsSketch]): Any = StatsStruct.toRow(sketch(buf))
+
   override def withNewMutableAggBufferOffset(n: Int): StatsMergeAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): StatsMergeAgg =
     copy(inputAggBufferOffset = n)
   override protected def withNewChildInternal(c: Expression): StatsMergeAgg =
     copy(child = c)
-}
-
-/** An aggregate that adds values into a sketch and returns its bytes; the
-  * kind's codec merges, serializes and deserializes the buffers. `codec` is
-  * a def returning the kernel's companion object, so it takes no part in
-  * case-class equality or task serialization. */
-trait SketchAddAgg[S <: AnyRef] extends TypedImperativeAggregate[S]
-  with ImplicitCastInputTypes {
-  protected def codec: SketchCodec[S]
-  /** The arguments that size the sketch, by name: analysis rejects any that
-    * is not a non-null constant. Each aggregate reads them in a lazy val. */
-  protected def sizeParams: Seq[(String, Expression)]
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else sizeParams.collectFirst {
-      case (name, e) if !e.foldable || e.eval() == null =>
-        TypeCheckResult.TypeCheckFailure(s"$name must be a non-null constant")
-    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
-  }
-
-  override def merge(b1: S, b2: S): S = { codec.mergeSketch(b1, b2); b1 }
-  override def eval(buf: S): Any = codec.serialize(buf)
-  override def serialize(buf: S): Array[Byte] = codec.serialize(buf)
-  override def deserialize(b: Array[Byte]): S = codec.deserialize(b)
 }
 
 /** tdigest(x[, w][, compression]) → serialized t-digest sketch (BinaryType).
@@ -215,13 +252,12 @@ case class TDigestAgg(
     third.eval().asInstanceOf[Number].doubleValue()
 
   override protected def codec = TDigest
+  override protected def start = TDigest(compression)
   override protected def sizeParams = Seq("compression" -> third)
   override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, DoubleType, DoubleType)
   override def prettyName: String = "tdigest"
 
-  override def createAggregationBuffer(): TDigest = TDigest(compression)
-
-  override def update(buf: TDigest, input: InternalRow): TDigest = {
+  override def update(buf: MergeBuffer[TDigest], input: InternalRow): MergeBuffer[TDigest] = {
     val v = first.eval(input)
     if (v != null) {
       val w = second.eval(input)
@@ -230,7 +266,7 @@ case class TDigestAgg(
         // reference contract: w must be finite and > 0 (tdigest.pyx:278-279)
         if (wd <= 0 || java.lang.Double.isInfinite(wd) || java.lang.Double.isNaN(wd))
           throw new IllegalArgumentException("weight must be finite and > 0")
-        buf.add(v.asInstanceOf[Double], wd)
+        writable(buf).add(v.asInstanceOf[Double], wd)
       }
     }
     buf
@@ -245,63 +281,24 @@ case class TDigestAgg(
     copy(first = f, second = s, third = t)
 }
 
-/** Buffer of a merge aggregate ([[DecodeOnceMergeAgg]]): empty (both
-  * null), the first sketch's checked bytes, or the decoded sketch. */
-final class MergeBuffer[S >: Null <: AnyRef](var bytes: Array[Byte], var sketch: S)
+/** A merge aggregate over stored sketches: a group starts with no sketch
+  * and adopts its first one (see the file header). */
+trait DecodeOnceMergeAgg[S >: Null <: AnyRef] extends SketchAgg[S]
+  with UnaryLike[Expression] with ImplicitCastInputTypes {
 
-/** The decode-once buffer lifecycle of the merge aggregates (see the file
-  * header), over the kind's codec. A first sketch's bytes are kept once the
-  * codec admits them (then `serialize(deserialize(b)) == b`), and every
-  * merge runs the same kernel calls as decoding first would, so output is
-  * byte-identical to decode → merge → serialize. In a rollup where most
-  * partial-stage groups see one stored sketch, most sketches are never
-  * decoded at all.
-  * `codec` is a def returning an object, as in [[SketchAddAgg]]. */
-trait DecodeOnceMergeAgg[S >: Null <: AnyRef]
-  extends TypedImperativeAggregate[MergeBuffer[S]] with UnaryLike[Expression]
-  with ImplicitCastInputTypes {
-
-  protected def codec: SketchCodec[S]
-
+  override protected def start: S = null
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
-
-  override def createAggregationBuffer(): MergeBuffer[S] = new MergeBuffer[S](null, null)
-
-  private def decoded(buf: MergeBuffer[S]): S = {
-    if (buf.sketch == null) { buf.sketch = codec.deserialize(buf.bytes); buf.bytes = null }
-    buf.sketch
-  }
 
   override def update(buf: MergeBuffer[S], input: InternalRow): MergeBuffer[S] = {
     val v = child.eval(input)
     if (v != null) {
       val b = v.asInstanceOf[Array[Byte]]
-      if (buf.bytes != null || buf.sketch != null) codec.mergeBytes(decoded(buf), b)
-      else { codec.admit(b); buf.bytes = b }
+      if (buf.isEmpty) { buf.sketch = codec.admit(b); buf.bytes = b }
+      else codec.mergeBytes(writable(buf), b)
     }
     buf
   }
-
-  override def merge(b1: MergeBuffer[S], b2: MergeBuffer[S]): MergeBuffer[S] = {
-    if (b1.bytes == null && b1.sketch == null) { b1.bytes = b2.bytes; b1.sketch = b2.sketch }
-    else if (b2.sketch != null) codec.mergeSketch(decoded(b1), b2.sketch)
-    else if (b2.bytes != null) codec.mergeBytes(decoded(b1), b2.bytes)
-    b1
-  }
-
-  override def eval(buf: MergeBuffer[S]): Any =
-    if (buf.bytes != null) buf.bytes
-    else if (buf.sketch != null) codec.serialize(buf.sketch)
-    else null
-  override def serialize(buf: MergeBuffer[S]): Array[Byte] =
-    if (buf.bytes != null) buf.bytes
-    else if (buf.sketch != null) codec.serialize(buf.sketch)
-    else Array.emptyByteArray
-  override def deserialize(b: Array[Byte]): MergeBuffer[S] =
-    if (b.isEmpty) createAggregationBuffer()
-    else { codec.checkSerialized(b); new MergeBuffer[S](b, null) }
 }
 
 /** tdigest_merge_agg(sketch_col) → merged sketch: re-aggregates stored
@@ -355,30 +352,31 @@ case class SpaceSavingAgg(
   private lazy val tag: Byte = SpaceSavingAgg.tagFor(first.dataType)
 
   override protected def codec = SpaceSaving
+  override protected def start = SpaceSaving.empty(tag, capacity)
   override protected def sizeParams = Seq("capacity" -> third)
   override def inputTypes: Seq[AbstractDataType] =
     Seq(TypeCollection(LongType, DoubleType, StringType, BinaryType), LongType, IntegerType)
   override def prettyName: String = "ss_topk_agg"
 
-  override def createAggregationBuffer(): SpaceSavingBase = SpaceSaving.empty(tag, capacity)
-
-  override def update(buf: SpaceSavingBase, input: InternalRow): SpaceSavingBase = {
+  override def update(buf: MergeBuffer[SpaceSavingBase],
+      input: InternalRow): MergeBuffer[SpaceSavingBase] = {
     val v = first.eval(input)
     if (v != null) {
       val w = second.eval(input)
       if (w != null) {
         val c = w.asInstanceOf[Long]
         if (c <= 0) throw new IllegalArgumentException("count must be > 0")
+        val s = writable(buf)
         tag match {
           case SpaceSaving.TagLong =>
-            buf.asInstanceOf[SpaceSavingLong].add(v.asInstanceOf[Long], c)
+            s.asInstanceOf[SpaceSavingLong].add(v.asInstanceOf[Long], c)
           case SpaceSaving.TagDouble =>
-            buf.asInstanceOf[SpaceSavingLong]
+            s.asInstanceOf[SpaceSavingLong]
               .add(SpaceSaving.doubleKey(v.asInstanceOf[Double]), c)
           case SpaceSaving.TagBinary =>
-            buf.asInstanceOf[SpaceSavingObj].add(UTF8String.fromBytes(v.asInstanceOf[Array[Byte]]), c)
+            s.asInstanceOf[SpaceSavingObj].add(UTF8String.fromBytes(v.asInstanceOf[Array[Byte]]), c)
           case _ =>
-            buf.asInstanceOf[SpaceSavingObj].add(v.asInstanceOf[UTF8String], c)
+            s.asInstanceOf[SpaceSavingObj].add(v.asInstanceOf[UTF8String], c)
         }
       }
     }
@@ -753,7 +751,7 @@ case class SpaceSavingMergeAgg(
     inputAggBufferOffset: Int = 0)
   extends DecodeOnceMergeAgg[SpaceSavingBase] {
 
-  override protected def codec = SpaceSaving
+  override protected def codec: SketchCodec[SpaceSavingBase] = SpaceSaving
   override def prettyName: String = "ss_merge_agg"
 
   override def withNewMutableAggBufferOffset(n: Int): SpaceSavingMergeAgg =

@@ -3,8 +3,10 @@ package graft.core
 /** The byte side of a sketch kind's monoid contract (value-only serialize,
   * merge; PAPER.md §0): the one owner of the kind's serialized format, so
   * every byte that crosses a storage or shuffle boundary is checked in one
-  * place. Each kernel's companion object implements it, and every
-  * aggregate and finisher decodes through it.
+  * place. Six kinds implement it, each in its kernel's companion object:
+  * t-digest, Space-Saving, HLL, KMV, Count-Min and moments
+  * ([[MomentsSketch]], whose shuffle form is 65 bytes). Every aggregate and
+  * every byte finisher decodes through it.
   *
   * Each decoder accepts exactly what its encoder writes, so every blob it
   * accepts re-encodes to itself, byte for byte: anything else (a bad
@@ -12,16 +14,18 @@ package graft.core
   * keeps, duplicate items, impossible values) is rejected with an
   * IllegalArgumentException naming the kind. Decoders bound what they
   * allocate by the blob's length. */
-trait SketchCodec[S <: AnyRef] {
+trait SketchCodec[S >: Null <: AnyRef] {
   /** O(1) check of a blob's header and length, as [[deserialize]] runs it
     * first; returns the number of entries the body holds (centroids,
-    * counters, registers, hashes or cells). */
+    * counters, registers, hashes or cells; one for moments). */
   def checkSerialized(bytes: Array[Byte]): Int
 
   /** Check a blob, throwing exactly what [[deserialize]] would throw. A
     * blob that passes is what `serialize(deserialize(bytes))` returns, so
-    * the bytes may stand for the sketch until it has to be merged into. */
-  def admit(bytes: Array[Byte]): Unit = { checkSerialized(bytes); () }
+    * the bytes may stand for the sketch until it has to be merged into.
+    * Returns the decoded sketch when the check had to build it anyway
+    * (Space-Saving, moments), else null. */
+  def admit(bytes: Array[Byte]): S = { checkSerialized(bytes); null }
 
   def deserialize(bytes: Array[Byte]): S
   def serialize(s: S): Array[Byte]

@@ -484,8 +484,9 @@ object SpaceSaving extends SketchCodec[SpaceSavingBase] {
   }
 
   /** The decoder's own scan: its counters hold the item index that finds
-    * duplicates, so checking costs what decoding does. */
-  override def admit(bytes: Array[Byte]): Unit = deserialize(bytes)
+    * duplicates, so checking costs what decoding does, and the sketch it
+    * builds is handed over. */
+  override def admit(bytes: Array[Byte]): SpaceSavingBase = deserialize(bytes)
 
   /** The one arm dispatch: int64 and float64 keys decode to
     * [[SpaceSavingLong]], strings and binaries to [[SpaceSavingObj]]. */

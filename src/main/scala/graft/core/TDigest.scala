@@ -472,7 +472,7 @@ object TDigest extends SketchCodec[TDigest] {
     n
   }
 
-  override def admit(bytes: Array[Byte]): Unit = { checkValues(bytes); () }
+  override def admit(bytes: Array[Byte]): TDigest = { checkValues(bytes); null }
 
   /** Decode into centroid arrays of exactly n entries; scratch and ingest
     * buffers are allocated only if the digest is later added to or queried. */

@@ -215,7 +215,7 @@ class AggregatesSpec extends SparkTestBase {
     def fill(): Unit = {
       val buf = agg.createAggregationBuffer()
       rows.foreach(agg.update(buf, _))
-      assert(buf.size == 3)
+      assert(buf.sketch.size == 3)
     }
     fill() // warm up: class loading and the capacity's lazy val
     val mx = java.lang.management.ManagementFactory.getThreadMXBean

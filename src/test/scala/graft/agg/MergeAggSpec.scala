@@ -2,18 +2,37 @@ package graft.agg
 
 import graft.SparkTestBase
 import graft.api.{functions => gf}
-import graft.core.{CountMin, Hll, KmvSketch, SpaceSaving, SpaceSavingLong, SpaceSavingObj, TDigest}
+import graft.core._
 import java.nio.{ByteBuffer, ByteOrder}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 import scala.util.Random
 
-/** The decode-once merge aggregates (tdigest_merge_agg, ss_merge_agg,
-  * hll_merge_agg, kmv_merge_agg, cms_merge_agg) against the kernel fold
-  * deserialize → merge → serialize, byte for byte, on the hash path and on
-  * the sort-based fallback. */
+object MergeAggSpec {
+  /** A stored summary_stats struct, field for field. */
+  case class St(count: Long, sum: Double, min: Double, max: Double, m2: Double, m3: Double,
+      m4: Double, homogeneous: Boolean, first_value: Double)
+
+  /** One input row: a stored sketch of each byte kind, a weighted value,
+    * an item and a stored moments struct. */
+  case class In(g: Int, td: Array[Byte], ss: Array[Byte], sss: Array[Byte], hll: Array[Byte],
+      kmv: Array[Byte], cms: Array[Byte], x: Double, w: Double, item: Long, st: St)
+}
+
+/** All twelve sketch aggregates against the kernels, byte for byte, on the
+  * hash path and on the sort-based fallback. The five merge aggregates over
+  * stored sketches equal the fold deserialize → merge → serialize, which
+  * adopts a group's first sketch. The six add aggregates and
+  * stats_merge_agg equal a fold from the kind's empty sketch: each partial
+  * folds its rows into the empty sketch, and the final stage merges every
+  * shuffled partial, decoded, into the empty sketch again. */
 class MergeAggSpec extends SparkTestBase {
+  import MergeAggSpec._
   import spark.implicits._
 
   // with the fallback threshold at 2 the hash map spills right after the
@@ -59,6 +78,28 @@ class MergeAggSpec extends SparkTestBase {
     c.serialize()
   }
 
+  private def stStruct(r: Random, i: Int): St = {
+    val m = new MomentsSketch
+    (0 until 1 + r.nextInt(30)).foreach(_ => m.add(r.nextGaussian() * 5 + i, 1L + r.nextInt(2)))
+    St(m.count, m.sum, m.min, m.max, m.m2, m.m3, m.m4, m.homogeneous, m.firstValue)
+  }
+
+  /** The sketch a stored struct holds, copied field by field. */
+  private def moments(st: St): MomentsSketch = {
+    val m = new MomentsSketch
+    m.count = st.count; m.sum = st.sum; m.min = st.min; m.max = st.max
+    m.m2 = st.m2; m.m3 = st.m3; m.m4 = st.m4
+    m.homogeneous = st.homogeneous; m.firstValue = st.first_value
+    m
+  }
+
+  private def input(r: Random, g: Int, i: Int): In =
+    In(g, tdBytes(r, i), ssBytes(r), ssStrBytes(r), hllBytes(r), kmvBytes(r, i), cmsBytes(r),
+      // fractional weights: merged into the empty digest, most such digests
+      // re-encode to other bytes, so adopting a partial would show
+      r.nextGaussian() * 10 + i % 3, 0.5 + r.nextDouble(),
+      math.abs(r.nextGaussian() * 12).toLong, stStruct(r, i))
+
   /** Fixed-width entries after a header written back in reverse order,
     * which no encoder writes. */
   private def reversed(canonical: Array[Byte], header: Int, width: Int): Array[Byte] = {
@@ -70,56 +111,114 @@ class MergeAggSpec extends SparkTestBase {
   }
   private def reversed(canonical: Array[Byte]): Array[Byte] = reversed(canonical, 9, 24)
 
-  /** Rows (g, td, ss, sss, hll, kmv, cms), each group's rows contiguous. */
-  private lazy val rows: Seq[(Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte],
-      Array[Byte], Array[Byte])] = {
+  /** Each group's rows, contiguous. */
+  private lazy val rows: Seq[In] = {
     val r = new Random(17)
     var i = 0
     GroupSizes.zipWithIndex.flatMap { case (n, g) =>
-      (0 until n).map { _ =>
-        i += 1
-        (g, tdBytes(r, i), ssBytes(r), ssStrBytes(r), hllBytes(r), kmvBytes(r, i), cmsBytes(r))
-      }
+      (0 until n).map { _ => i += 1; input(r, g, i) }
     }
   }
 
-  private def ssObj(b: Array[Byte]) = SpaceSaving.deserialize(b).asInstanceOf[SpaceSavingObj]
-
-  private def fold[S](bs: Seq[Array[Byte]], de: Array[Byte] => S)(merge: (S, S) => Unit): S = {
-    val acc = de(bs.head)
-    bs.tail.foreach(b => merge(acc, de(b)))
-    acc
+  /** decode → merge → serialize over stored sketches, in order. */
+  private def fold[S >: Null <: AnyRef](codec: SketchCodec[S], bs: Seq[Array[Byte]]): Array[Byte] = {
+    val acc = codec.deserialize(bs.head)
+    bs.tail.foreach(b => codec.mergeSketch(acc, codec.deserialize(b)))
+    codec.serialize(acc)
   }
 
-  private def expected(g: Int): Seq[Seq[Byte]] = {
-    val rs = rows.filter(_._1 == g)
-    Seq(
-      fold(rs.map(_._2), TDigest.deserialize)(_.merge(_)).serialize(),
-      fold(rs.map(_._3), SpaceSaving.deserializeLong)(_.merge(_)).serialize(SpaceSaving.TagLong),
-      fold(rs.map(_._4), ssObj)(_.merge(_)).serialize(SpaceSaving.TagString),
-      fold(rs.map(_._5), Hll.deserialize)(_.merge(_)).serialize(),
-      fold(rs.map(_._6), KmvSketch.deserialize)(_.merge(_)).serialize(),
-      fold(rs.map(_._7), CountMin.deserialize)(_.merge(_)).serialize()).map(_.toSeq)
+  /** A merge aggregate's result for a tree of partials: the fold of each
+    * partial's stored sketches, then of the partials. */
+  private def merges[S >: Null <: AnyRef](codec: SketchCodec[S], bytes: In => Array[Byte])(
+      parts: Seq[Seq[In]]): Array[Byte] =
+    fold(codec, parts.map(p => fold(codec, p.map(bytes))))
+
+  /** An add aggregate's sketch for a tree of partials, from the empty
+    * sketch (see the class doc). */
+  private def fromEmpty[S >: Null <: AnyRef](codec: SketchCodec[S], empty: => S)(
+      add: (S, In) => Unit)(parts: Seq[Seq[In]]): S = {
+    val fin = empty
+    parts.foreach { p =>
+      val partial = empty
+      p.foreach(add(partial, _))
+      codec.mergeSketch(fin, codec.deserialize(codec.serialize(partial)))
+    }
+    fin
+  }
+
+  /** [[fromEmpty]], encoded. */
+  private def adds[S >: Null <: AnyRef](codec: SketchCodec[S], empty: => S)(add: (S, In) => Unit)(
+      parts: Seq[Seq[In]]): Array[Byte] = codec.serialize(fromEmpty(codec, empty)(add)(parts))
+
+  type Agg = TypedImperativeAggregate[AnyRef]
+
+  /** A sketch aggregate in SQL and driven directly over the same input, and
+    * the kernels' result for a tree of partials. */
+  private case class Kind(name: String, sql: Column, agg: TypedImperativeAggregate[_],
+      row: In => InternalRow, want: Seq[Seq[In]] => Any)
+
+  private def bound(dt: org.apache.spark.sql.types.DataType) = BoundReference(0, dt, nullable = true)
+  private def one(v: Any): InternalRow = new GenericInternalRow(Array[Any](v))
+  private val bin = bound(BinaryType)
+  private val long = bound(LongType)
+
+  private lazy val kinds: Seq[Kind] = Seq(
+    Kind("tdigest_merge_agg", gf.tdigest_merge_agg(col("td")), TDigestMergeAgg(bin),
+      in => one(in.td), merges(TDigest, _.td)),
+    Kind("ss_merge_agg(long)", gf.ss_merge_agg(col("ss")), SpaceSavingMergeAgg(bin),
+      in => one(in.ss), merges(SpaceSaving, _.ss)),
+    Kind("ss_merge_agg(string)", gf.ss_merge_agg(col("sss")), SpaceSavingMergeAgg(bin),
+      in => one(in.sss), merges(SpaceSaving, _.sss)),
+    Kind("hll_merge_agg", gf.hll_merge_agg(col("hll")), HllMergeAgg(bin),
+      in => one(in.hll), merges(Hll, _.hll)),
+    Kind("kmv_merge_agg", gf.kmv_merge_agg(col("kmv")), KmvMergeAgg(bin),
+      in => one(in.kmv), merges(KmvSketch, _.kmv)),
+    Kind("cms_merge_agg", gf.cms_merge_agg(col("cms")), CountMinMergeAgg(bin),
+      in => one(in.cms), merges(CountMin, _.cms)),
+    Kind("tdigest(x, w)", gf.tdigest(col("x"), col("w")),
+      TDigestAgg(bound(DoubleType), BoundReference(1, DoubleType, nullable = true), Literal(100.0)),
+      in => new GenericInternalRow(Array[Any](in.x, in.w)),
+      adds(TDigest, TDigest())((t, in) => t.add(in.x, in.w))),
+    Kind("ss_topk_agg", gf.ss_topk_agg(col("item")), new SpaceSavingAgg(long),
+      in => one(in.item), adds(SpaceSaving, SpaceSaving.empty(SpaceSaving.TagLong, 20))(
+        (s, in) => s.asInstanceOf[SpaceSavingLong].add(in.item))),
+    Kind("hll_agg", gf.hll_agg(col("item")), new HllAgg(long),
+      in => one(in.item), adds(Hll, new Hll(12))((h, in) => h.add(KmvHash.ofLong(in.item)))),
+    Kind("kmv_agg", gf.kmv_agg(col("item"), 8), KmvAgg(long, Literal(8)),
+      in => one(in.item), adds(KmvSketch, new KmvSketch(8))((s, in) => s.add(KmvHash.ofLong(in.item)))),
+    Kind("cms_agg", gf.cms_agg(col("item"), 3, 64), CountMinAgg(long, Literal(3), Literal(64)),
+      in => one(in.item), adds(CountMin, new CountMin(3, 64))((c, in) => c.add(in.item))),
+    Kind("summary_stats", gf.summary_stats(col("x")), new SummaryStatsAgg(bound(DoubleType)),
+      in => one(in.x), parts => StatsStruct.toRow(
+        fromEmpty(MomentsSketch, new MomentsSketch)((m, in) => m.add(in.x))(parts))),
+    Kind("stats_merge_agg", gf.stats_merge_agg(col("st")), StatsMergeAgg(bound(StatsStruct.schema)),
+      in => one(StatsStruct.toRow(moments(in.st))), parts => StatsStruct.toRow(
+        fromEmpty(MomentsSketch, new MomentsSketch)((m, in) => m.merge(moments(in.st)))(parts))))
+
+  /** An output as comparable values: a sketch's bytes, or a moments
+    * struct's fields with every double as its bits. */
+  private def comparable(v: Any): Seq[Any] = v match {
+    case b: Array[Byte] => b.toSeq
+    case r: Row => comparable(InternalRow.fromSeq(r.toSeq))
+    case r: InternalRow => Seq(r.getLong(0)) ++
+      (1 to 6).map(i => java.lang.Double.doubleToRawLongBits(r.getDouble(i))) ++
+      Seq(r.getBoolean(7), java.lang.Double.doubleToRawLongBits(r.getDouble(8)))
   }
 
   /** One partition, rows in group order: every group's fold order is its
     * row order, on the hash path and on the sort fallback alike. */
-  private def merged(): Map[Int, Seq[Seq[Byte]]] =
-    rows.toDF("g", "td", "ss", "sss", "hll", "kmv", "cms").coalesce(1)
-      .groupBy("g").agg(
-        gf.tdigest_merge_agg(col("td")), gf.ss_merge_agg(col("ss")),
-        gf.ss_merge_agg(col("sss")), gf.hll_merge_agg(col("hll")),
-        gf.kmv_merge_agg(col("kmv")), gf.cms_merge_agg(col("cms")))
-      .collect().map(r => r.getInt(0) -> (1 to 6).map(r.getAs[Array[Byte]](_).toSeq)).toMap
+  private def merged(): Map[Int, Seq[Seq[Any]]] =
+    rows.toDF().coalesce(1).groupBy("g").agg(kinds.head.sql, kinds.tail.map(_.sql): _*)
+      .collect().map(r => r.getInt(0) -> kinds.indices.map(i => comparable(r.get(i + 1)))).toMap
 
   private def checkAll(): Unit = {
     val got = merged()
     assert(got.keySet == GroupSizes.indices.toSet)
-    val names = Seq("tdigest_merge_agg", "ss_merge_agg(long)", "ss_merge_agg(string)",
-      "hll_merge_agg", "kmv_merge_agg", "cms_merge_agg")
     GroupSizes.indices.foreach { g =>
-      expected(g).zip(got(g)).zip(names).foreach { case ((e, a), name) =>
-        assert(a == e, s"$name: group $g (${GroupSizes(g)} sketches) differs from the kernel fold")
+      val group = Seq(rows.filter(_.g == g))
+      kinds.zip(got(g)).foreach { case (k, a) =>
+        assert(a == comparable(k.want(group)),
+          s"${k.name}: group $g (${GroupSizes(g)} rows) differs from the kernel fold")
       }
     }
   }
@@ -136,39 +235,51 @@ class MergeAggSpec extends SparkTestBase {
   }
 
   test("buffer lifecycle equals the kernel fold for any partial/final tree") {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
-    import org.apache.spark.sql.types.BinaryType
     val r = new Random(23)
-    val in = BoundReference(0, BinaryType, nullable = true)
-    type Agg = org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[AnyRef]
-    val kinds: Seq[(Agg, Int => Array[Byte], Seq[Array[Byte]] => Array[Byte])] = Seq(
-      (TDigestMergeAgg(in).asInstanceOf[Agg], (i: Int) => tdBytes(r, i),
-        (bs: Seq[Array[Byte]]) => fold(bs, TDigest.deserialize)(_.merge(_)).serialize()),
-      (SpaceSavingMergeAgg(in).asInstanceOf[Agg], (_: Int) => ssBytes(r),
-        (bs: Seq[Array[Byte]]) =>
-          fold(bs, SpaceSaving.deserializeLong)(_.merge(_)).serialize(SpaceSaving.TagLong)),
-      (HllMergeAgg(in).asInstanceOf[Agg], (_: Int) => hllBytes(r),
-        (bs: Seq[Array[Byte]]) => fold(bs, Hll.deserialize)(_.merge(_)).serialize()),
-      (KmvMergeAgg(in).asInstanceOf[Agg], (i: Int) => kmvBytes(r, i),
-        (bs: Seq[Array[Byte]]) => fold(bs, KmvSketch.deserialize)(_.merge(_)).serialize()),
-      (CountMinMergeAgg(in).asInstanceOf[Agg], (_: Int) => cmsBytes(r),
-        (bs: Seq[Array[Byte]]) => fold(bs, CountMin.deserialize)(_.merge(_)).serialize()))
-    for ((agg, gen, fold1) <- kinds; trial <- 0 until 12) {
-      val bs = (0 until 1 + r.nextInt(12)).map(gen)
+    for (k <- kinds; trial <- 0 until 12) {
+      val agg = k.agg.asInstanceOf[Agg]
+      val ins = (0 until 1 + r.nextInt(12)).map(i => input(r, 0, i))
       // split into partials, each updated row by row and shuffled as bytes
-      val cuts = (0 +: (1 until bs.length).filter(_ => r.nextInt(3) == 0) :+ bs.length).distinct
-      val parts = cuts.zip(cuts.tail).map { case (a, b) => bs.slice(a, b) }
+      val cuts = (0 +: (1 until ins.length).filter(_ => r.nextInt(3) == 0) :+ ins.length).distinct
+      val parts = cuts.zip(cuts.tail).map { case (a, b) => ins.slice(a, b) }
       val shuffled = parts.map { p =>
         val buf = agg.createAggregationBuffer()
-        p.foreach(b => agg.update(buf, new GenericInternalRow(Array[Any](b)): InternalRow))
+        p.foreach(in => agg.update(buf, k.row(in)))
         agg.serialize(buf)
       }
       val fin = shuffled.foldLeft(agg.createAggregationBuffer())((acc, b) =>
         agg.merge(acc, agg.deserialize(b)))
-      val want = fold1(parts.map(p => fold1(p)))
-      assert(agg.eval(fin).asInstanceOf[Array[Byte]].toSeq == want.toSeq,
-        s"${agg.prettyName}: partials of ${parts.map(_.size)} differ from the kernel fold")
+      assert(comparable(agg.eval(fin)) == comparable(k.want(parts)),
+        s"${k.name}: partials of ${parts.map(_.size)} differ from the kernel fold")
+    }
+  }
+
+  test("ss_merge_agg decodes a group's first sketch once, and a lone sketch never") {
+    // admit, Space-Saving's full decode, checks every first sketch; what is
+    // counted is every later decode, the ones inside mergeBytes included
+    var decodes = 0
+    val counting = new SketchCodec[SpaceSavingBase] {
+      override def checkSerialized(b: Array[Byte]): Int = SpaceSaving.checkSerialized(b)
+      override def admit(b: Array[Byte]): SpaceSavingBase = SpaceSaving.admit(b)
+      override def deserialize(b: Array[Byte]): SpaceSavingBase = {
+        decodes += 1; SpaceSaving.deserialize(b)
+      }
+      override def serialize(s: SpaceSavingBase): Array[Byte] = SpaceSaving.serialize(s)
+      override def mergeSketch(into: SpaceSavingBase, other: SpaceSavingBase): Unit =
+        SpaceSaving.mergeSketch(into, other)
+    }
+    val agg = new SpaceSavingMergeAgg(bin) {
+      override protected def codec: SketchCodec[SpaceSavingBase] = counting
+    }
+    val r = new Random(29)
+    for (n <- Seq(1, 2)) {
+      val bs = Seq.fill(n)(ssBytes(r))
+      decodes = 0
+      val buf = agg.createAggregationBuffer()
+      bs.foreach(b => agg.update(buf, one(b)))
+      val out = agg.eval(buf).asInstanceOf[Array[Byte]]
+      assert(decodes == n - 1, s"a group of $n stored sketches decoded $decodes times")
+      assert(out.toSeq == fold(SpaceSaving, bs).toSeq)
     }
   }
 

@@ -4,30 +4,36 @@ import graft.SparkTestBase
 import graft.api.{functions => gf}
 import graft.core._
 import java.nio.{ByteBuffer, ByteOrder}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import scala.util.{Failure, Random, Success, Try}
 
-/** Seeded mutation property over the five sketch codecs: valid sketches of
+/** Seeded mutation property over the six sketch codecs: valid sketches of
   * every kind are truncated, extended, bit-flipped, have their length
   * fields inflated and (Space-Saving, KMV) their entries written back to
-  * front; the three blobs that once killed an executor ride along byte for
-  * byte, with hand-built out-of-order ones. Each codec accepts exactly what
-  * its encoder writes: every blob either re-encodes to itself, byte for
-  * byte, or is rejected with an IllegalArgumentException naming the kind,
-  * and the codec's other entry points agree with it. The same inputs then
-  * run through each merge aggregate (one- and two-sketch groups) and each
-  * finisher in SQL. */
+  * front or (moments) their min and max swapped; the three blobs that once
+  * killed an executor ride along byte for byte, with hand-built
+  * out-of-order and impossible ones. Each codec accepts exactly what its
+  * encoder writes: every blob either re-encodes to itself, byte for byte,
+  * or is rejected with an IllegalArgumentException naming the kind, and
+  * the codec's other entry points agree with it. The same inputs of the
+  * five stored byte kinds then run through each merge aggregate (one- and
+  * two-sketch groups) and each finisher in SQL; moments are stored as a
+  * struct, which has tests of its own. */
 class SketchCodecPropSpec extends SparkTestBase {
   import spark.implicits._
 
   /** A length field: byte offset, width (1 or 4) and byte order. */
   private case class Field(offset: Int, width: Int, bigEndian: Boolean = false)
 
-  private case class Kind(word: String, codec: SketchCodec[_ <: AnyRef],
-      valid: Seq[Array[Byte]], fields: Array[Byte] => Seq[Field],
-      mergeAgg: Column => Column, finishers: (Column, Array[Byte]) => Seq[Column])
+  /** A stored kind's SQL: its merge aggregate and finishers. */
+  private case class Sql(mergeAgg: Column => Column, finishers: (Column, Array[Byte]) => Seq[Column])
+
+  private case class Kind(word: String, codec: SketchCodec[_ >: Null <: AnyRef],
+      valid: Seq[Array[Byte]], fields: Array[Byte] => Seq[Field], sql: Option[Sql])
 
   private val r0 = new Random(0x5eed)
 
@@ -67,34 +73,55 @@ class SketchCodecPropSpec extends SparkTestBase {
     c.serialize()
   }
 
+  /** Empty, NaN-only, one value, Gaussian, infinite, near-constant (1e9 plus
+    * noise near its ulp), and weighted. */
+  private def momentss: Seq[Array[Byte]] = Seq[Seq[(Double, Long)]](
+    Nil, Seq((Double.NaN, 1L)), Seq((2.5, 1L)), Seq.fill(100)((r0.nextGaussian(), 1L)),
+    Seq((1.0, 1L), (Double.PositiveInfinity, 1L), (-3.0, 1L)),
+    Seq.fill(20)((1e9 + r0.nextGaussian() * 1e-7, 1L)),
+    Seq.fill(10)((r0.nextGaussian(), 1L + r0.nextInt(1000)))).map { xs =>
+    val m = new MomentsSketch
+    xs.foreach { case (x, c) => m.add(x, c) }
+    m.serialize()
+  }
+
+  /** A moments blob with sum and m3 zero. */
+  private def momentsBlob(count: Long, min: Double, max: Double, m2: Double, m4: Double,
+      homogeneity: Byte = 0): Array[Byte] =
+    ByteBuffer.allocate(65).order(ByteOrder.LITTLE_ENDIAN).putLong(count).putDouble(0.0)
+      .putDouble(min).putDouble(max).putDouble(m2).putDouble(0.0).putDouble(m4)
+      .put(homogeneity).putDouble(min).array()
+
   private def le(b: Array[Byte]) = ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
 
   private lazy val kinds: Seq[Kind] = Seq(
-    Kind("t-digest", TDigest, tdigests, _ => Seq(Field(32, 4)), gf.tdigest_merge_agg,
+    Kind("t-digest", TDigest, tdigests, _ => Seq(Field(32, 4)), Some(Sql(gf.tdigest_merge_agg,
       (s, _) => Seq(gf.tdigest_quantile(s, 0.5), gf.tdigest_quantiles(s, Seq(0.1, 0.9)),
         gf.tdigest_cdf(s, lit(0.0)), gf.tdigest_cdfs(s, array(lit(0.0), lit(1.0))),
         gf.tdigest_histogram(s, 4), gf.tdigest_histogram_at(s, array(lit(-1.0), lit(1.0))),
         gf.tdigest_scale(s, 2.0), gf.tdigest_centroids(s), gf.tdigest_size(s),
-        gf.tdigest_min(s), gf.tdigest_max(s))),
+        gf.tdigest_min(s), gf.tdigest_max(s))))),
     Kind("space-saving", SpaceSaving, spaceSavings,
       b => Seq(Field(1, 4), Field(5, 4)) ++
         (if (b(0) >= SpaceSaving.TagString && le(b).getInt(5) > 0) Seq(Field(9, 4)) else Nil),
-      gf.ss_merge_agg,
+      Some(Sql(gf.ss_merge_agg,
       (s, b) => Seq(gf.ss_size(s), gf.ss_capacity(s)) ++ (b.headOption.getOrElse(0) match {
         case SpaceSaving.TagLong => Seq(gf.ss_topk_long(s, 3), gf.ss_counters_long(s))
         case SpaceSaving.TagDouble => Seq(gf.ss_topk_double(s, 3), gf.ss_counters_double(s))
         case SpaceSaving.TagString => Seq(gf.ss_topk_string(s, 3), gf.ss_counters_string(s))
         case _ => Seq(gf.ss_topk_binary(s, 3), gf.ss_counters_binary(s))
-      })),
-    Kind("HLL", Hll, hlls, _ => Seq(Field(0, 1)), gf.hll_merge_agg,
+      })))),
+    Kind("HLL", Hll, hlls, _ => Seq(Field(0, 1)), Some(Sql(gf.hll_merge_agg,
       (s, _) => Seq(gf.hll_distinct(s), gf.hll_nonzero(s), gf.hll_register_xor(s),
-        gf.hll_union(s, s), gf.hll_intersect_est(s, s))),
-    Kind("KMV", KmvSketch, kmvs, _ => Seq(Field(0, 4), Field(4, 4)), gf.kmv_merge_agg,
+        gf.hll_union(s, s), gf.hll_intersect_est(s, s))))),
+    Kind("KMV", KmvSketch, kmvs, _ => Seq(Field(0, 4), Field(4, 4)), Some(Sql(gf.kmv_merge_agg,
       (s, _) => Seq(gf.kmv_distinct(s), gf.kmv_size(s), gf.kmv_jaccard(s, s),
-        gf.kmv_set_ops(s, s))),
+        gf.kmv_set_ops(s, s))))),
     Kind("CMS", CountMin, cmss, _ => Seq(Field(1, 4, bigEndian = true),
-      Field(5, 4, bigEndian = true)), gf.cms_merge_agg,
-      (s, _) => Seq(gf.cms_count(s, lit(7L)), gf.cms_total(s), gf.cms_dot(s, s))))
+      Field(5, 4, bigEndian = true)), Some(Sql(gf.cms_merge_agg,
+      (s, _) => Seq(gf.cms_count(s, lit(7L)), gf.cms_total(s), gf.cms_dot(s, s))))),
+    // the count's high word (so -1 makes it negative) and the homogeneity byte
+    Kind("summary_stats", MomentsSketch, momentss, _ => Seq(Field(4, 4), Field(56, 1)), None))
 
   /** Little-endian header ints followed by little-endian longs. */
   private def leBlob(head: Array[Byte], ints: Seq[Int], longs: Seq[Long]): Array[Byte] = {
@@ -116,12 +143,21 @@ class SketchCodecPropSpec extends SparkTestBase {
     "CMS" -> Seq(Array[Byte](0x43, 0, 0, 0, 16, 1, 0, 0, 0) ++ new Array[Byte](8)),
     // too short; then n > k; a repeated hash; hashes out of unsigned order
     "KMV" -> Seq(Array[Byte](1, 2, 3), leBlob(Array.empty, Seq(2, 3), Seq(1L, 2L, 3L)),
-      leBlob(Array.empty, Seq(4, 2), Seq(7L, 7L)), leBlob(Array.empty, Seq(4, 2), Seq(-1L, 1L))))
+      leBlob(Array.empty, Seq(4, 2), Seq(7L, 7L)), leBlob(Array.empty, Seq(4, 2), Seq(-1L, 1L))),
+    // count -5 with min > max and m2 < 0, which merged silently once; then
+    // each alone: a negative count, min > max beside a positive count,
+    // m2 < 0; m4 < 0; a homogeneity byte of 2; 64 and 66 bytes
+    "summary_stats" -> Seq(momentsBlob(-5, 3.0, 1.0, -2.0, 1.0),
+      momentsBlob(-1, Double.MaxValue, Double.NegativeInfinity, 0.0, 0.0),
+      momentsBlob(3, 3.0, 1.0, 2.0, 2.0), momentsBlob(3, 1.0, 3.0, -2.0, 2.0),
+      momentsBlob(3, 1.0, 3.0, 2.0, -1.0), momentsBlob(3, 1.0, 3.0, 2.0, 2.0, homogeneity = 2),
+      momentsBlob(3, 1.0, 3.0, 2.0, 2.0).take(64), momentsBlob(3, 1.0, 3.0, 2.0, 2.0) :+ 0.toByte))
 
   /** A Space-Saving or KMV blob with its entries (counters or hashes)
-    * written back to front. */
+    * written back to front; a moments blob with min and max swapped. */
   private def reversed(k: Kind, b: Array[Byte]): Seq[Array[Byte]] = {
     val (header, ends) = k.word match {
+      case "summary_stats" => return Seq(b.take(16) ++ b.slice(24, 32) ++ b.slice(16, 24) ++ b.drop(32))
       case "KMV" => (8, (8 to b.length by 8).drop(1))
       case "space-saving" if b(0) >= SpaceSaving.TagString =>
         (9, Iterator.iterate(9)(o => o + 20 + le(b).getInt(o)).drop(1).take(le(b).getInt(5)).toSeq)
@@ -177,12 +213,12 @@ class SketchCodecPropSpec extends SparkTestBase {
     case _ => false
   }
 
-  private def roundTrip[S <: AnyRef](c: SketchCodec[S], b: Array[Byte]): Array[Byte] =
+  private def roundTrip[S >: Null <: AnyRef](c: SketchCodec[S], b: Array[Byte]): Array[Byte] =
     c.serialize(c.deserialize(b))
 
   /** mergeBytes(into, b) and mergeSketch(into, deserialize(b)) into a fresh
     * decode of `into`: the merged bytes, or the IllegalArgumentException. */
-  private def mergeBoth[S <: AnyRef](c: SketchCodec[S], into: Array[Byte],
+  private def mergeBoth[S >: Null <: AnyRef](c: SketchCodec[S], into: Array[Byte],
       b: Array[Byte]): (Try[Seq[Byte]], Try[Seq[Byte]]) = {
     def run(f: S => Unit): Try[Seq[Byte]] = Try { val s = c.deserialize(into); f(s); c.serialize(s).toSeq }
     (run(c.mergeBytes(_, b)), run(s => c.mergeSketch(s, c.deserialize(b))))
@@ -273,7 +309,7 @@ class SketchCodecPropSpec extends SparkTestBase {
   }
 
   test("SQL: merge aggregates over mutated sketches, one- and two-sketch groups") {
-    for (k <- kinds) {
+    for (k <- kinds; sql <- k.sql) {
       val partner = k.valid.head
       // (group, rows in order, expected output or the kernel's error)
       val cases = sqlInputs(k, 10).zipWithIndex.flatMap { case (b, i) =>
@@ -283,33 +319,140 @@ class SketchCodecPropSpec extends SparkTestBase {
       }
       val (good, bad) = cases.partition(_._3.isSuccess)
       val got = good.flatMap { case (g, bs, _) => bs.map(b => (g, b)) }.toDF("g", "b").coalesce(1)
-        .groupBy("g").agg(k.mergeAgg(col("b")).as("m")).collect()
+        .groupBy("g").agg(sql.mergeAgg(col("b")).as("m")).collect()
         .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
       good.foreach { case (g, bs, want) =>
         assert(got(g) == want.get, s"${k.word}: group of ${bs.size} differs from the kernel")
       }
       bad.foreach { case (g, bs, err) =>
         assertRejected(k, s"${k.word} merge of ${bs.size}", Some(err.failed.get.getMessage)) {
-          bs.map(b => (g, b)).toDF("g", "b").coalesce(1).groupBy("g").agg(k.mergeAgg(col("b"))).collect()
+          bs.map(b => (g, b)).toDF("g", "b").coalesce(1).groupBy("g").agg(sql.mergeAgg(col("b"))).collect()
         }
       }
     }
   }
 
   test("SQL: finishers over mutated sketches succeed or reject naming the kind") {
-    for (k <- kinds) {
+    for (k <- kinds; sql <- k.sql) {
       val (ok, bad) = sqlInputs(k, 10).partition(b => Try(k.codec.deserialize(b)).isSuccess)
       // one query per leading byte: Space-Saving's ss_topk variant follows the tag
       ok.groupBy(_.head).values.foreach { bs =>
-        val cols = k.finishers(col("s"), bs.head)
+        val cols = sql.finishers(col("s"), bs.head)
         val rows = bs.map(Tuple1(_)).toDF("s").select(cols: _*).collect()
         assert(rows.length == bs.length)
       }
       bad.foreach { b =>
         assertRejected(k, s"${k.word} finishers on ${b.length} bytes", None) {
-          Seq(Tuple1(b)).toDF("s").select(k.finishers(col("s"), b): _*).collect()
+          Seq(Tuple1(b)).toDF("s").select(sql.finishers(col("s"), b): _*).collect()
         }
       }
     }
+  }
+
+  /** A summary_stats struct in SQL: `edits` replace fields' SQL values. */
+  private def statsStruct(edits: (String, String)*): String = {
+    val valid = Seq("count" -> "3", "sum" -> "6", "min" -> "1", "max" -> "3", "m2" -> "2",
+      "m3" -> "0", "m4" -> "2", "homogeneous" -> "false", "first_value" -> "1")
+    val fields = StatsStruct.schema.fields.zip(valid).map { case (f, (name, v)) =>
+      s"'$name', CAST(${edits.toMap.getOrElse(name, v)} AS ${f.dataType.sql})"
+    }
+    fields.mkString("named_struct(", ", ", ")")
+  }
+
+  test("summary_stats structs: stats_merge_agg rejects NULL fields and impossible values") {
+    val cases = Seq(
+      Seq("count" -> "-5", "min" -> "3", "max" -> "1", "m2" -> "-2") -> "count -5",
+      Seq("min" -> "3", "max" -> "1") -> "min 3.0, max 1.0",
+      Seq("min" -> "'NaN'") -> "min NaN",
+      Seq("m2" -> "-2") -> "m2 -2.0",
+      Seq("m4" -> "-1e-300") -> "m4 -1.0E-300") ++
+      StatsStruct.schema.fieldNames.map(f => Seq(f -> "NULL") -> s"struct: NULL $f")
+    for ((edits, message) <- cases; order <- Seq(true, false)) {
+      val (a, b) = (statsStruct(), statsStruct(edits: _*))
+      val (first, second) = if (order) (a, b) else (b, a)
+      val e = intercept[Exception](spark.sql(
+        s"SELECT stats_merge_agg(s) FROM (SELECT $first AS s UNION ALL SELECT $second AS s)").collect())
+      assert(causes(e).exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains("corrupt summary_stats") && t.getMessage.contains(message)),
+        s"$edits: ${causes(e).map(_.toString).mkString(" | ")}")
+    }
+  }
+
+  /** The unchecked decode structs once had: the fields as they are, NaN
+    * bounds as the empty sketch's. */
+  private def unchecked(r: Row): MomentsSketch = {
+    val m = new MomentsSketch
+    m.count = r.getLong(0); m.sum = r.getDouble(1)
+    m.min = if (r.getDouble(2).isNaN) Double.MaxValue else r.getDouble(2)
+    m.max = if (r.getDouble(3).isNaN) Double.NegativeInfinity else r.getDouble(3)
+    m.m2 = r.getDouble(4); m.m3 = r.getDouble(5); m.m4 = r.getDouble(6)
+    m.homogeneous = r.getBoolean(7); m.firstValue = r.getDouble(8)
+    m
+  }
+
+  private def bits(r: Row): Seq[Long] = Seq(r.getLong(0)) ++
+    (1 to 6).map(i => java.lang.Double.doubleToRawLongBits(r.getDouble(i))) ++
+    Seq(if (r.getBoolean(7)) 1L else 0L, java.lang.Double.doubleToRawLongBits(r.getDouble(8)))
+
+  test("summary_stats: every output is accepted and merges to the bits of the unchecked fold") {
+    val r = new Random(0x57a75)
+    // each group draws from one mode: Gaussian at a random scale, NaNs mixed
+    // in, one infinity, near-constant (1e9 plus noise near its ulp), all NaN,
+    // constant; weights up to 1000
+    val input = (0 until 4000).map { i =>
+      val g = i % 60
+      val x = g % 6 match {
+        case 0 => r.nextGaussian() * math.pow(10, r.nextInt(12) - 6)
+        case 1 => if (r.nextInt(10) == 0) Double.NaN else r.nextGaussian()
+        case 2 => if (i / 60 == 7) (if (g % 12 == 2) Double.PositiveInfinity else Double.NegativeInfinity)
+                  else r.nextGaussian()
+        case 3 => 1e9 + r.nextGaussian() * 1e-7
+        case 4 => Double.NaN
+        case _ => 42.0
+      }
+      (g, x, if (r.nextBoolean()) 1L else 1L + r.nextInt(1000))
+    }
+    val stored = input.toDF("g", "x", "c").repartition(3)
+      .groupBy("g").agg(gf.summary_stats(col("x"), col("c")).as("s")).orderBy("g").collect()
+    assert(stored.length == 60)
+    // every output decodes, and the decode is the unchecked one
+    stored.foreach { row =>
+      val s = row.getStruct(1)
+      assert(StatsStruct.fromRow(InternalRow.fromSeq(s.toSeq)).serialize().toSeq ==
+        unchecked(s).serialize().toSeq)
+    }
+    // merged in one partition in g order: each partial folds from the empty
+    // sketch, and the final stage merges it into the empty sketch again
+    val schema = StructType(Seq(StructField("k", IntegerType), StructField("s", StatsStruct.schema)))
+    val rows = stored.map(row => Row(row.getInt(0) % 4, row.getStruct(1))).toSeq
+    val got = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1)
+      .groupBy("k").agg(gf.stats_merge_agg(col("s"))).collect()
+      .map(row => row.getInt(0) -> bits(row.getStruct(1))).toMap
+    (0 until 4).foreach { k =>
+      val partial = new MomentsSketch
+      rows.filter(_.getInt(0) == k).foreach(row => partial.merge(unchecked(row.getStruct(1))))
+      val fin = new MomentsSketch
+      fin.merge(partial)
+      assert(got(k) == bits(Row.fromSeq(StatsStruct.toRow(fin).toSeq(StatsStruct.schema))), s"k=$k")
+    }
+  }
+
+  test("summary_stats: a count that would overflow is rejected, not wrapped") {
+    val big = Long.MaxValue / 2 + 1
+    def overflows(q: => Any): Unit = {
+      val e = intercept[Exception](q)
+      assert(causes(e).exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains("summary_stats count overflows")), causes(e).mkString(" | "))
+    }
+    val df = Seq((0, 1.0, big), (1, 2.0, big)).toDF("g", "x", "c")
+    overflows(df.coalesce(1).agg(gf.summary_stats(col("x"), col("c"))).collect())
+    // a merge of two large partials
+    overflows(df.groupBy("g").agg(gf.summary_stats(col("x"), col("c")).as("s"))
+      .agg(gf.stats_merge_agg(col("s"))).collect())
+    val m = new MomentsSketch
+    m.add(1.0, big)
+    val before = m.serialize().toSeq
+    intercept[IllegalArgumentException](m.add(2.0, big))
+    assert(m.count == big && m.serialize().toSeq.take(56) == before.take(56))
   }
 }
