@@ -28,16 +28,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * supplies only `update` and the sketch a group starts from:
   *   - The five merge aggregates over stored sketches ([[DecodeOnceMergeAgg]])
   *     start with none. A group adopts its first sketch's bytes, checked as
-  *     decoding would check them, keeps the sketch too when the check built
-  *     it (Space-Saving), and decodes only when a second sketch arrives,
-  *     which the codec merges from its bytes.
+  *     decoding would check them but not decoded, and decodes only when a
+  *     second sketch arrives, which the codec merges from its bytes.
   *   - The six add aggregates ([[SketchAddAgg]]) and stats_merge_agg start
   *     from the kind's empty sketch and fold everything into it, shuffled
   *     partials included. Adopting a partial would change output bytes:
-  *     over 200 random t-digests per size (10 to 1000 values, compression
-  *     20 or 100), `TDigest(c).mergeSerialized(x)` re-encoded to x for
-  *     every digest built from whole weights, but for only 23-54 % of those
-  *     built with fractional weights.
+  *     over 200 random t-digests per size (10, 100 or 1000 values,
+  *     compression 20 or 100), `TDigest(c).mergeSerialized(x)` re-encoded
+  *     to x for every digest built from whole weights, but for only
+  *     17-56 % of those built with fractional weights.
   * Every codec accepts exactly what its encoder writes, so kept bytes are
   * the bytes decode → serialize would return, and output stays
   * byte-identical to decoding every sketch first. A shuffled buffer's
@@ -59,6 +58,13 @@ object StatsStruct {
     StructField("m4", DoubleType, nullable = false),
     StructField("homogeneous", BooleanType, nullable = false),
     StructField("first_value", DoubleType, nullable = false)))
+
+  /** A struct with the summary_stats field types in order; names are free. */
+  def hasFieldTypes(dt: DataType): Boolean = dt match {
+    case s: StructType => s.length == schema.length &&
+      s.fields.iterator.zip(schema.fields.iterator).forall { case (a, b) => a.dataType == b.dataType }
+    case _ => false
+  }
 
   def toRow(s: MomentsSketch): InternalRow = {
     val r = new GenericInternalRow(9)
@@ -205,18 +211,12 @@ case class StatsMergeAgg(
   override protected def start = new MomentsSketch
   override def dataType: DataType = StatsStruct.schema
   override def prettyName: String = "stats_merge_agg"
+  // field types must match exactly — a loose 9-field check would defer
+  // the mismatch to a ClassCastException in executors
   override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      // field types must match exactly (names are free) — a loose 9-field
-      // check would defer the mismatch to a ClassCastException in executors
-      case s: StructType if s.length == StatsStruct.schema.length &&
-          s.fields.iterator.zip(StatsStruct.schema.fields.iterator)
-            .forall { case (a, b) => a.dataType == b.dataType } =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"stats_merge_agg expects a summary_stats struct " +
-          s"${StatsStruct.schema.simpleString}, got ${other.simpleString}")
-    }
+    if (StatsStruct.hasFieldTypes(child.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"stats_merge_agg expects a summary_stats struct " +
+      s"${StatsStruct.schema.simpleString}, got ${child.dataType.simpleString}")
 
   override def update(buf: MergeBuffer[MomentsSketch],
       input: InternalRow): MergeBuffer[MomentsSketch] = {
@@ -294,7 +294,7 @@ trait DecodeOnceMergeAgg[S >: Null <: AnyRef] extends SketchAgg[S]
     val v = child.eval(input)
     if (v != null) {
       val b = v.asInstanceOf[Array[Byte]]
-      if (buf.isEmpty) { buf.sketch = codec.admit(b); buf.bytes = b }
+      if (buf.isEmpty) { codec.admit(b); buf.bytes = b }
       else codec.mergeBytes(writable(buf), b)
     }
     buf

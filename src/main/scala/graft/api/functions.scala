@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
 
 /** Column DSL mirroring org.apache.spark.sql.functions for the graft sketch
   * library, plus SQL registration. Stats finishers are plain Catalyst
-  * arithmetic over the summary_stats struct ([[StatsFinishers]], shared
-  * with SQL) — fully codegen'd, no custom expression in the hot path. */
+  * arithmetic over the summary_stats struct after one checked read of it
+  * ([[StatsFinishers]], shared with SQL), all codegen'd. */
 object functions {
   private def agg(e: Expression): Column =
     toColumn(e.asInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction]
@@ -26,11 +26,11 @@ object functions {
   def stats_merge_agg(statsStruct: Column): Column =
     agg(StatsMergeAgg(toExpr(statsStruct)))
 
-  /** Finishers over the summary_stats struct. */
-  def stats_count(s: Column): Column = s("count")
-  def stats_sum(s: Column): Column = s("sum")
-  def stats_min(s: Column): Column = s("min")
-  def stats_max(s: Column): Column = s("max")
+  /** Finishers over the summary_stats struct, each reading it checked. */
+  def stats_count(s: Column): Column = toColumn(StatsFinishers.field(toExpr(s), "count"))
+  def stats_sum(s: Column): Column = toColumn(StatsFinishers.field(toExpr(s), "sum"))
+  def stats_min(s: Column): Column = toColumn(StatsFinishers.field(toExpr(s), "min"))
+  def stats_max(s: Column): Column = toColumn(StatsFinishers.field(toExpr(s), "max"))
   def stats_mean(s: Column): Column = toColumn(StatsFinishers.mean(toExpr(s)))
   def stats_var(s: Column, ddof: Int = 0): Column = toColumn(StatsFinishers.variance(toExpr(s), ddof))
   def stats_std(s: Column, ddof: Int = 0): Column = toColumn(StatsFinishers.std(toExpr(s), ddof))

@@ -135,7 +135,7 @@ object KmvSketch extends SketchCodec[KmvSketch] {
     n
   }
 
-  override def admit(bytes: Array[Byte]): KmvSketch = { checkHashes(bytes); null }
+  override def admit(bytes: Array[Byte]): Unit = checkHashes(bytes)
 
   override def deserialize(bytes: Array[Byte]): KmvSketch = {
     val n = checkHashes(bytes)

@@ -71,6 +71,13 @@ final class MomentsSketch extends Serializable {
     m2 += m2_2 + n1n2 * delta * deltaDivN
     count = n
     sum += sum2
+    // a NaN result (from infinite inputs) is stored as the one canonical
+    // NaN: which operand's NaN an operation returns depends on the order
+    // the JIT gives commutative operands, and the bytes must not
+    if (java.lang.Double.isNaN(sum)) sum = Double.NaN
+    if (java.lang.Double.isNaN(m2)) m2 = Double.NaN
+    if (java.lang.Double.isNaN(m3)) m3 = Double.NaN
+    if (java.lang.Double.isNaN(m4)) m4 = Double.NaN
   }
 
   /** Add `c` repeats of value `x`. NaN is skipped (but tracked for
@@ -161,8 +168,8 @@ object MomentsSketch extends SketchCodec[MomentsSketch] {
     1
   }
 
-  /** Reading the fields is the whole check, so it builds the sketch. */
-  override def admit(bytes: Array[Byte]): MomentsSketch = deserialize(bytes)
+  /** Reading the fields is the whole check. */
+  override def admit(bytes: Array[Byte]): Unit = deserialize(bytes)
 
   override def deserialize(bytes: Array[Byte]): MomentsSketch = {
     checkSerialized(bytes)

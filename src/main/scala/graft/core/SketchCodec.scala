@@ -20,12 +20,12 @@ trait SketchCodec[S >: Null <: AnyRef] {
     * counters, registers, hashes or cells; one for moments). */
   def checkSerialized(bytes: Array[Byte]): Int
 
-  /** Check a blob, throwing exactly what [[deserialize]] would throw. A
-    * blob that passes is what `serialize(deserialize(bytes))` returns, so
-    * the bytes may stand for the sketch until it has to be merged into.
-    * Returns the decoded sketch when the check had to build it anyway
-    * (Space-Saving, moments), else null. */
-  def admit(bytes: Array[Byte]): S = { checkSerialized(bytes); null }
+  /** Check a blob, throwing exactly what [[deserialize]] would throw,
+    * without building the sketch where the kind can read its bytes in
+    * place. A blob that passes is what `serialize(deserialize(bytes))`
+    * returns, so the bytes may stand for the sketch until it has to be
+    * merged into. */
+  def admit(bytes: Array[Byte]): Unit = checkSerialized(bytes)
 
   def deserialize(bytes: Array[Byte]): S
   def serialize(s: S): Array[Byte]

@@ -3,6 +3,23 @@ package graft.core
 import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.unsafe.types.UTF8String
 
+/** A Space-Saving sketch's counters in list order (count desc, error asc),
+  * as a merge or a finisher reads them: a decoded sketch, whose positions
+  * are slots, or a checked blob ([[SpaceSaving.Blob]]), whose positions
+  * are counter indices. Each key arm reads its own item kind. */
+trait SpaceSavingCounters {
+  def tag: Byte
+  def capacity: Int
+  def size: Int
+  /** The first counter's position, and the position after p's. */
+  def first: Int
+  def after(p: Int): Int
+  def count(p: Int): Long
+  def error(p: Int): Long
+  def longItem(p: Int): Long
+  def objItem(p: Int): UTF8String
+}
+
 /** Space-Saving heavy-hitter sketch (Metwally et al.) with the Cafaro et al.
   * parallel merge, ported semantically from the reference kernel
   * `crick/space_saving_stubs.c.in`.
@@ -33,7 +50,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * doubled up to `capacity` ([[reserve]]), so a sketch costs what it holds;
   * eviction keys on `capacity`, never on the arrays' length.
   */
-abstract class SpaceSavingBase(val capacity: Int, val tag: Byte) extends Serializable {
+abstract class SpaceSavingBase(val capacity: Int, val tag: Byte)
+  extends SpaceSavingCounters with Serializable {
   require(capacity > 0 && capacity <= SpaceSaving.MaxCapacity,
     s"capacity must be in [1, ${SpaceSaving.MaxCapacity}]")
   final val NIL = -1
@@ -175,80 +193,93 @@ abstract class SpaceSavingBase(val capacity: Int, val tag: Byte) extends Seriali
     counterInsert(index, p)
   }
 
-  // --- item hooks for the shared merge loop (concrete arms own key storage) ---
-  /** slot of other's item (at other-slot) in THIS sketch, or NIL. */
-  protected def slotOfOtherItem(other: SpaceSavingBase, otherSlot: Int): Int
-  /** evict this.slot's item and take other's item (at other-slot). */
-  protected def replaceItemFrom(slot: Int, other: SpaceSavingBase, otherSlot: Int): Unit
-  /** append other's item (at other-slot) as a new counter with (count, error). */
-  protected def appendItemFrom(other: SpaceSavingBase, otherSlot: Int,
-      count: Long, error: Long): Unit
-  /** Store slot's item read from a checked blob at `off` (slot of n),
-    * rejecting a duplicate; returns the offset of the slot's count. */
-  protected def takeItem(bytes: Array[Byte], bb: ByteBuffer, slot: Int, off: Int, n: Int): Int
+  // --- this sketch as a merge's other side: positions are slots ---
+  final def first: Int = head
+  final def after(p: Int): Int = next(p)
+  final def count(p: Int): Long = counts(p)
+  final def error(p: Int): Long = errors(p)
 
-  /** Link a checked blob's n counters into slots 0..n-1 in one pass. The
-    * encoder writes them in list order with distinct items and no byte to
-    * spare, so anything else is rejected: every blob that links re-encodes
-    * to itself. */
-  private[core] final def linkAll(bytes: Array[Byte], n: Int): Unit = {
+  // --- item hooks: each arm stores and finds its own keys ---
+  /** Slot of `other`'s item at position p in THIS sketch, or NIL. */
+  protected def slotOf(other: SpaceSavingCounters, p: Int): Int
+  /** Store `other`'s item at position p in slot and index it. */
+  protected def putItem(slot: Int, other: SpaceSavingCounters, p: Int): Unit
+  /** Drop slot's item from the index. */
+  protected def dropItem(slot: Int): Unit
+
+  /** Link a checked blob's counters into slots 0..n-1 in one pass. */
+  private[core] final def linkAll(blob: SpaceSaving.Blob): Unit = {
+    val n = blob.size
     reserve(n)
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    var off = 9
     var i = 0
     while (i < n) {
-      off = takeItem(bytes, bb, i, off, n)
-      val c = bb.getLong(off); val e = bb.getLong(off + 8)
-      require(i == 0 || counterGe(i - 1, c, e, 0L),
-        s"corrupt space-saving sketch: counter $i out of list order")
-      counts(i) = c; errors(i) = e
+      putItem(i, blob, i)
+      counts(i) = blob.count(i); errors(i) = blob.error(i)
       prev(i) = if (i == 0) n - 1 else i - 1
       next(i) = if (i == n - 1) 0 else i + 1
-      off += 16; i += 1
+      i += 1
     }
-    require(off == bytes.length,
-      s"corrupt space-saving sketch: ${bytes.length - off} trailing bytes")
     size = n
     head = if (n == 0) NIL else 0
   }
 
   /** Cafaro parallel merge, in place into this (spsv_merge,
-    * space_saving_stubs.c.in:289-364). `other` is not mutated. One shared
-    * implementation for both key arms. */
-  final def mergeBase(other: SpaceSavingBase): Unit = {
-    if (other.size == 0) return
+    * space_saving_stubs.c.in:289-364), from a decoded sketch or straight
+    * from a checked blob; `other` is not mutated. One implementation for
+    * both key arms. Each of the other's items is looked up once, in this
+    * sketch's index; the matches are applied in this sketch's slot order,
+    * unmatched slots taking +m2. Then the other's counters are walked in
+    * list order: one whose item this sketch holds at that moment (matched,
+    * and not evicted since) adds nothing, the rest are appended or evict
+    * the tail as spsv_merge does. */
+  final def mergeBase(other: SpaceSavingCounters): Unit = {
+    val n2 = other.size
+    if (n2 == 0) return
     val m1 = minOffset
-    val m2 = other.minOffset
 
+    // positions of `other` are below n2: slots of a decoded sketch,
+    // counter indices of a blob
+    val slotFor = new Array[Int](n2)
+    val posFor = new Array[Int](size)
+    java.util.Arrays.fill(posFor, NIL)
+    var p = other.first
+    var last = p
+    var c = 0
+    while (c < n2) {
+      val s = slotOf(other, p)
+      slotFor(p) = s
+      if (s != NIL) posFor(s) = p
+      last = p; p = other.after(p); c += 1
+    }
+    val m2 = if (n2 < other.capacity) 0L else other.count(last)
     var i1 = 0
     while (i1 < size) {
-      val i2 = other.slotOfOtherItem(this, i1)
-      if (i2 != NIL) {
-        updateCounter(i1, counts(i1) + other.counts(i2),
-          errors(i1) + other.errors(i2))
-      } else {
-        updateCounter(i1, counts(i1) + m2, errors(i1) + m2)
-      }
+      val q = posFor(i1)
+      if (q != NIL) updateCounter(i1, counts(i1) + other.count(q), errors(i1) + other.error(q))
+      else updateCounter(i1, counts(i1) + m2, errors(i1) + m2)
       i1 += 1
     }
 
-    var i2 = other.head
-    var c = 0
+    p = other.first
+    c = 0
     var break = false
-    while (c < other.size && !break) {
-      if (slotOfOtherItem(other, i2) == NIL) {
+    while (c < n2 && !break) {
+      if (slotFor(p) == NIL) {
+        val oc = other.count(p) + m1
+        val oe = other.error(p) + m1
         if (size == capacity) {
           val t = prev(head)
-          if (counterGe(t, other.counts(i2), other.errors(i2), m1)) break = true
+          if (counterGe(t, oc, oe, 0L)) break = true
           else {
-            replaceItemFrom(t, other, i2)
-            updateCounter(t, other.counts(i2) + m1, other.errors(i2) + m1)
+            // the evicted item, if the other holds it too, is no longer here
+            if (t < posFor.length && posFor(t) != NIL) { slotFor(posFor(t)) = NIL; posFor(t) = NIL }
+            dropItem(t); putItem(t, other, p); updateCounter(t, oc, oe)
           }
         } else {
-          appendItemFrom(other, i2, other.counts(i2) + m1, other.errors(i2) + m1)
+          putItem(counterNew(oc, oe), other, p)
         }
       }
-      i2 = other.next(i2)
+      p = other.after(p)
       c += 1
     }
   }
@@ -309,31 +340,17 @@ final class SpaceSavingLong(capacity0: Int, tag0: Byte = SpaceSaving.TagLong)
 
   def merge(other: SpaceSavingLong): Unit = mergeBase(other)
 
-  override protected def slotOfOtherItem(other: SpaceSavingBase, otherSlot: Int): Int =
-    lookup(other.asInstanceOf[SpaceSavingLong].items(otherSlot))
-  override protected def replaceItemFrom(slot: Int, other: SpaceSavingBase,
-      otherSlot: Int): Unit = {
-    val item = other.asInstanceOf[SpaceSavingLong].items(otherSlot)
-    index.remove(items(slot))
-    items(slot) = item
-    index.put(item, slot)
-  }
-  override protected def appendItemFrom(other: SpaceSavingBase, otherSlot: Int,
-      count: Long, error: Long): Unit = {
-    val item = other.asInstanceOf[SpaceSavingLong].items(otherSlot)
-    val idx = counterNew(count, error)
-    items(idx) = item
-    index.put(item, idx)
-  }
+  def longItem(p: Int): Long = items(p)
+  def objItem(p: Int): UTF8String = throw SpaceSaving.otherArm(tag)
 
-  override protected def takeItem(bytes: Array[Byte], bb: ByteBuffer, slot: Int,
-      off: Int, n: Int): Int = {
-    val item = bb.getLong(off)
-    require(index.get(item) == NIL, SpaceSaving.Duplicates)
-    index.put(item, slot)
+  override protected def slotOf(other: SpaceSavingCounters, p: Int): Int =
+    index.get(other.longItem(p))
+  override protected def putItem(slot: Int, other: SpaceSavingCounters, p: Int): Unit = {
+    val item = other.longItem(p)
     items(slot) = item
-    off + 8
+    index.put(item, slot)
   }
+  override protected def dropItem(slot: Int): Unit = index.remove(items(slot))
 
   def serialize(tag: Byte): Array[Byte] = {
     val bb = ByteBuffer.allocate(1 + 4 + 4 + 24 * size)
@@ -393,35 +410,17 @@ final class SpaceSavingObj(capacity0: Int, tag0: Byte = SpaceSaving.TagString)
 
   def merge(other: SpaceSavingObj): Unit = mergeBase(other)
 
-  override protected def slotOfOtherItem(other: SpaceSavingBase, otherSlot: Int): Int =
-    lookup(other.asInstanceOf[SpaceSavingObj].items(otherSlot))
-  override protected def replaceItemFrom(slot: Int, other: SpaceSavingBase,
-      otherSlot: Int): Unit = {
-    val item = other.asInstanceOf[SpaceSavingObj].items(otherSlot)
-    index.remove(items(slot))
+  def longItem(p: Int): Long = throw SpaceSaving.otherArm(tag)
+  def objItem(p: Int): UTF8String = items(p)
+
+  override protected def slotOf(other: SpaceSavingCounters, p: Int): Int =
+    lookup(other.objItem(p))
+  override protected def putItem(slot: Int, other: SpaceSavingCounters, p: Int): Unit = {
+    val item = other.objItem(p)
     items(slot) = item
     index.put(item, slot)
   }
-  override protected def appendItemFrom(other: SpaceSavingBase, otherSlot: Int,
-      count: Long, error: Long): Unit = {
-    val item = other.asInstanceOf[SpaceSavingObj].items(otherSlot)
-    val idx = counterNew(count, error)
-    items(idx) = item
-    index.put(item, idx)
-  }
-
-  /** The item's length is bounded by the bytes left after it, less the
-    * 20-byte minimum of every later counter. */
-  override protected def takeItem(bytes: Array[Byte], bb: ByteBuffer, slot: Int,
-      off: Int, n: Int): Int = {
-    val len = bb.getInt(off)
-    require(len >= 0 && len <= bytes.length - off - 20 - 20 * (n - 1 - slot),
-      s"corrupt space-saving sketch: item $slot of $len bytes in ${bytes.length} bytes")
-    val item = UTF8String.fromBytes(bytes, off + 4, len)
-    require(index.putIfAbsent(item, slot) == null, SpaceSaving.Duplicates)
-    items(slot) = item
-    off + 4 + len
-  }
+  override protected def dropItem(slot: Int): Unit = index.remove(items(slot))
 
   def serialize(tag: Byte): Array[Byte] = {
     val slots = topkSlots(size)
@@ -483,23 +482,108 @@ object SpaceSaving extends SketchCodec[SpaceSavingBase] {
     n
   }
 
-  /** The decoder's own scan: its counters hold the item index that finds
-    * duplicates, so checking costs what decoding does, and the sketch it
-    * builds is handed over. */
-  override def admit(bytes: Array[Byte]): SpaceSavingBase = deserialize(bytes)
+  /** The one checked read of a blob, which `admit`, `deserialize`,
+    * `mergeBytes` and the finishers share: the header, then one walk over
+    * the counters that rejects an object-arm item longer than the bytes
+    * left, counters out of list order (count desc, error asc), duplicate
+    * items and trailing bytes, each with the message the first fault in
+    * counter order would raise. It builds no sketch: the blob's counters
+    * are read in place, and it allocates O(blob length). */
+  def walk(bytes: Array[Byte]): Blob = {
+    val n = checkSerialized(bytes)
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    val long = isLongTag(bytes(0))
+    val blob = new Blob(bytes, bb, bytes(0), bb.getInt(1), n, if (long) null else new Array[Int](n))
+    var read = 0
+    var fault: String = null
+    var off = 9
+    var prevCount = 0L; var prevError = 0L
+    while (read < n && fault == null) {
+      val i = read
+      if (long) off += 8
+      else {
+        // an item is bounded by the bytes left after it, less the 20-byte
+        // minimum of every later counter
+        val len = bb.getInt(off)
+        if (len >= 0 && len <= bytes.length - off - 20 - 20 * (n - 1 - i)) off += 4 + len
+        else fault = s"corrupt space-saving sketch: item $i of $len bytes in ${bytes.length} bytes"
+      }
+      if (fault == null) {
+        if (!long) blob.countAt(i) = off
+        read += 1
+        val c = bb.getLong(off); val e = bb.getLong(off + 8)
+        if (i > 0 && !(prevCount > c || (prevCount == c && prevError <= e)))
+          fault = s"corrupt space-saving sketch: counter $i out of list order"
+        prevCount = c; prevError = e
+        off += 16
+      }
+    }
+    require(!hasDuplicates(blob, read), Duplicates)
+    require(fault == null, fault)
+    require(off == bytes.length, s"corrupt space-saving sketch: ${bytes.length - off} trailing bytes")
+    blob
+  }
+
+  /** Do the first m items of the blob repeat one? int64 items go through
+    * an item set, object items are sorted by their bytes. */
+  private def hasDuplicates(b: Blob, m: Int): Boolean = {
+    var i = 0
+    if (isLongTag(b.tag)) {
+      val seen = new LongIntMap(m)
+      while (i < m && seen.get(b.longItem(i)) < 0) { seen.put(b.longItem(i), i); i += 1 }
+      i < m
+    } else {
+      val items = new Array[UTF8String](m)
+      while (i < m) { items(i) = b.objItem(i); i += 1 }
+      java.util.Arrays.sort(items, (x: UTF8String, y: UTF8String) => x.binaryCompare(y))
+      i = 1
+      while (i < m && !items(i).equals(items(i - 1))) i += 1
+      i < m
+    }
+  }
+
+  /** A checked blob's counters, read in place: positions are counter
+    * indices in list order. Counter p's count is at a fixed offset on the
+    * int64 arm and at `countAt(p)` on the object arm; its item's bytes
+    * precede it. */
+  final class Blob private[SpaceSaving] (bytes: Array[Byte], bb: ByteBuffer, val tag: Byte,
+      val capacity: Int, val size: Int, private[SpaceSaving] val countAt: Array[Int])
+    extends SpaceSavingCounters {
+    def first: Int = 0
+    def after(p: Int): Int = p + 1
+    @inline private def at(p: Int): Int = if (countAt == null) 17 + 24 * p else countAt(p)
+    def count(p: Int): Long = bb.getLong(at(p))
+    def error(p: Int): Long = bb.getLong(at(p) + 8)
+    def longItem(p: Int): Long = bb.getLong(at(p) - 8)
+    /** A view of the item's bytes, not a copy. */
+    def objItem(p: Int): UTF8String = {
+      val start = if (p == 0) 9 else countAt(p - 1) + 16
+      UTF8String.fromBytes(bytes, start + 4, countAt(p) - start - 4)
+    }
+  }
+
+  private[core] def otherArm(tag: Byte): IllegalArgumentException =
+    new IllegalArgumentException(s"space-saving sketch with tag $tag holds the other key arm")
+
+  /** [[walk]]: checking needs no sketch, so none is built. */
+  override def admit(bytes: Array[Byte]): Unit = walk(bytes)
 
   /** The one arm dispatch: int64 and float64 keys decode to
     * [[SpaceSavingLong]], strings and binaries to [[SpaceSavingObj]]. */
   override def deserialize(bytes: Array[Byte]): SpaceSavingBase = {
-    val n = checkSerialized(bytes)
-    val s = empty(bytes(0), ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).getInt(1))
-    s.linkAll(bytes, n)
+    val blob = walk(bytes)
+    val s = empty(blob.tag, blob.capacity)
+    s.linkAll(blob)
     s
   }
 
   override def serialize(s: SpaceSavingBase): Array[Byte] = s.serialize(s.tag)
 
-  override def mergeSketch(into: SpaceSavingBase, other: SpaceSavingBase): Unit = {
+  /** The Cafaro merge straight from the checked bytes. */
+  override def mergeBytes(into: SpaceSavingBase, bytes: Array[Byte]): Unit = merge(into, walk(bytes))
+  override def mergeSketch(into: SpaceSavingBase, other: SpaceSavingBase): Unit = merge(into, other)
+
+  private def merge(into: SpaceSavingBase, other: SpaceSavingCounters): Unit = {
     require(into.tag == other.tag, "All arguments to merge must have same dtype")
     into.mergeBase(other)
   }

@@ -21,10 +21,14 @@ import java.nio.{ByteBuffer, ByteOrder}
   *    (tdigest_stubs.c:483-516)
   *  - cdf: empty→NaN; single-centroid min/max ramp; duplicate-mean runs via
   *    rightmost-equal bisect (tdigest_stubs.c:355-407)
-  *  - merge re-adds the other digest's centroids as weighted points and folds
-  *    min/max (tdigest_stubs.c:592-606)
   *  - scale multiplies weights, dropping centroids whose scaled weight
   *    <= DBL_EPSILON (tdigest_stubs.c:609-629)
+  *
+  * One departure: merge does not re-add the other digest's centroids
+  * through `add` (tdigest_stubs.c:592-606). It runs the flush's merge pass
+  * once over the union of both sorted centroid runs, the MergingDigest
+  * merge of arXiv:1902.04023, keeping add's drops, total and min/max fold.
+  * Merged bytes therefore differ from crick's; add-built bytes do not.
   */
 final class TDigest private (val compression: Double, val size: Int,
                              val bufferSize: Int) extends Serializable {
@@ -59,19 +63,13 @@ final class TDigest private (val compression: Double, val size: Int,
   def minOrNaN: Double = { flush(); if (totalWeight > 0) min else Double.NaN }
   def maxOrNaN: Double = { flush(); if (totalWeight > 0) max else Double.NaN }
 
-  /** Bottom-up mergesort of the parallel (means, weights) buffer prefix
-    * [0, n), stable, using (sortMeans, sortWeights) as scratch —
-    * mirrors centroid_sort (tdigest_stubs.c:116-175). */
-  private def sortBuffer(n: Int): Unit = {
-    // a stable sort of already-sorted input is the identity
-    var s = 1
-    while (s < n && !(bufMeans(s) < bufMeans(s - 1))) s += 1
-    if (s >= n) return
-    if (sortMeans == null) {
-      sortMeans = new Array[Double](bufferSize); sortWeights = new Array[Double](bufferSize)
-    }
-    var aM = bufMeans; var aW = bufWeights
-    var bM = sortMeans; var bW = sortWeights
+  /** Stable bottom-up mergesort of the parallel (ms, ws) prefix [0, n) by
+    * mean, through scratch (tm, tw) of length >= n — mirrors centroid_sort
+    * (tdigest_stubs.c:116-175). Callers skip it for a sorted prefix. */
+  private def sortByMean(ms: Array[Double], ws: Array[Double], n: Int,
+                         tm: Array[Double], tw: Array[Double]): Unit = {
+    var aM = ms; var aW = ws
+    var bM = tm; var bW = tw
     var width = 1
     while (width < n) {
       var i = 0
@@ -91,83 +89,82 @@ final class TDigest private (val compression: Double, val size: Int,
       val tM = aM; val tW = aW; aM = bM; aW = bW; bM = tM; bW = tW
       width *= 2
     }
-    if (!(aM eq bufMeans)) {
-      System.arraycopy(aM, 0, bufMeans, 0, n)
-      System.arraycopy(aW, 0, bufWeights, 0, n)
+    if (!(aM eq ms)) {
+      System.arraycopy(aM, 0, ms, 0, n)
+      System.arraycopy(aW, 0, ws, 0, n)
     }
   }
 
   /** k-scale function (tdigest_stubs.c:178-189). Uses [[TDigest.fastAsin]]:
     * Math.asin is a non-intrinsified native call on the JVM and dominates
-    * flush cost (~10 calls per add amortized); the polynomial is within
-    * ~2 ulp, far inside the k-scale bound's tolerance. */
+    * the merge pass; the polynomial is within ~2 ulp, far inside the
+    * k-scale bound's tolerance. */
   @inline private def integrate(q0: Double): Double = {
     val q = if (q0 > 1) 1.0 else q0
     compression * (TDigest.fastAsin(2 * q - 1) + math.Pi / 2) / math.Pi
   }
 
-  // state for the in-progress merge pass
-  private var mergeN = 0
-
-  /** One step of the merge pass (centroid_merge, tdigest_stubs.c:192-216). */
-  private def centroidMerge(weightSoFar: Double, k1: Double,
-                            u: Double, w: Double): Double = {
-    val k2 = integrate((weightSoFar + w) / totalWeight)
-    if (mergeN == 0) {
-      mergeN = 1
-      mergeMeans(0) = u; mergeWeights(0) = w
-      k1
-    } else if ((k2 - k1) <= 1) {
-      val i = mergeN - 1
-      mergeWeights(i) += w
-      mergeMeans(i) += (u - mergeMeans(i)) * w / mergeWeights(i)
-      k1
-    } else {
-      val i = mergeN
-      mergeN += 1
-      mergeMeans(i) = u; mergeWeights(i) = w
-      integrate(weightSoFar / totalWeight)
+  /** The one k-scale merge pass (tdigest_flush and centroid_merge,
+    * tdigest_stubs.c:192-273) over the union of the centroids and a sorted
+    * run (rm, rw)[0, rn) whose weight totalWeight already counts; on equal
+    * means the centroid goes first. A step that starts a centroid takes
+    * the previous step's k2 as its k1: both integrate the same weightSoFar
+    * double, so the pass evaluates the k-scale once a step. */
+  private def mergePass(rm: Array[Double], rw: Array[Double], rn: Int): Unit = {
+    if (mergeMeans == null || mergeMeans.length < size) {
+      mergeMeans = new Array[Double](size); mergeWeights = new Array[Double](size)
     }
+    if (min > rm(0)) min = rm(0)
+    if (max < rm(rn - 1)) max = rm(rn - 1)
+    val n = nCentroids
+    var out = 0
+    var k1 = 0.0
+    var lastK2 = 0.0
+    var weightSoFar = 0.0
+    var i = 0; var j = 0
+    while (i < rn || j < n) {
+      var u = 0.0; var w = 0.0
+      if (j == n || (i < rn && rm(i) < means(j))) { u = rm(i); w = rw(i); i += 1 }
+      else { u = means(j); w = weights(j); j += 1 }
+      val k2 = integrate((weightSoFar + w) / totalWeight)
+      if (out == 0) {
+        mergeMeans(0) = u; mergeWeights(0) = w; out = 1
+      } else if (k2 - k1 <= 1) {
+        val c = out - 1
+        mergeWeights(c) += w
+        mergeMeans(c) += (u - mergeMeans(c)) * w / mergeWeights(c)
+      } else {
+        mergeMeans(out) = u; mergeWeights(out) = w; out += 1
+        k1 = lastK2
+      }
+      lastK2 = k2
+      weightSoFar += w
+    }
+    nCentroids = out
+    var t = means; means = mergeMeans; mergeMeans = t
+    t = weights; weights = mergeWeights; mergeWeights = t
+  }
+
+  @inline private def isSorted(ms: Array[Double], n: Int): Boolean = {
+    var s = 1
+    while (s < n && !(ms(s) < ms(s - 1))) s += 1
+    s >= n
   }
 
   /** Merge the ingest buffer into the centroid array (tdigest_flush,
     * tdigest_stubs.c:219-273). */
   def flush(): Unit = {
     if (bufN == 0) return
-    sortBuffer(bufN)
-    if (mergeMeans == null || mergeMeans.length < size) {
-      mergeMeans = new Array[Double](size); mergeWeights = new Array[Double](size)
+    if (!isSorted(bufMeans, bufN)) {
+      if (sortMeans == null) {
+        sortMeans = new Array[Double](bufferSize); sortWeights = new Array[Double](bufferSize)
+      }
+      sortByMean(bufMeans, bufWeights, bufN, sortMeans, sortWeights)
     }
-    if (min > bufMeans(0)) min = bufMeans(0)
-    if (max < bufMeans(bufN - 1)) max = bufMeans(bufN - 1)
-
-    val n = nCentroids
-    nCentroids = 0
-    mergeN = 0
     totalWeight += bufTotalWeight
     bufTotalWeight = 0.0
-
-    var k1 = 0.0
-    var weightSoFar = 0.0
-    var i = 0; var j = 0
-    while (i < bufN && j < n) {
-      var m = 0.0; var w = 0.0
-      if (bufMeans(i) < means(j)) { m = bufMeans(i); w = bufWeights(i); i += 1 }
-      else { m = means(j); w = weights(j); j += 1 }
-      k1 = centroidMerge(weightSoFar, k1, m, w)
-      weightSoFar += w
-    }
-    while (i < bufN) {
-      k1 = centroidMerge(weightSoFar, k1, bufMeans(i), bufWeights(i)); weightSoFar += bufWeights(i); i += 1
-    }
-    while (j < n) {
-      k1 = centroidMerge(weightSoFar, k1, means(j), weights(j)); weightSoFar += weights(j); j += 1
-    }
+    mergePass(bufMeans, bufWeights, bufN)
     bufN = 0
-    nCentroids = mergeN
-
-    var t = means; means = mergeMeans; mergeMeans = t
-    t = weights; weights = mergeWeights; mergeWeights = t
   }
 
   /** Point add (tdigest_add, tdigest_stubs.c:276-298). Caller guarantees
@@ -315,37 +312,72 @@ final class TDigest private (val compression: Double, val size: Int,
     edges
   }
 
-  /** In-place merge (tdigest_merge, tdigest_stubs.c:592-606). `other` is
-    * flushed but not otherwise mutated. */
+  // the other digest's centroids as one run, kept as `add` would keep them
+  private var runMeans: Array[Double] = TDigest.NoCentroids
+  private var runWeights: Array[Double] = TDigest.NoCentroids
+  private var runN = 0
+  private var runWeight = 0.0
+
+  private def openRun(n: Int): Unit = {
+    if (runMeans.length < n) { runMeans = new Array[Double](n); runWeights = new Array[Double](n) }
+    runN = 0; runWeight = 0.0
+  }
+
+  /** Keep a centroid of the run unless `add` would drop it. */
+  @inline private def take(u: Double, w: Double): Unit =
+    if (!(java.lang.Double.isInfinite(u) || java.lang.Double.isNaN(u) ||
+          w <= TDigest.DblEpsilon)) {
+      runMeans(runN) = u; runWeights(runN) = w; runN += 1; runWeight += w
+    }
+
+  /** Merge the run in one pass after the ingest buffer, sorting it first if
+    * rounding left it out of order, and fold the other's min and max. */
+  private def closeRun(otherMin: Double, otherMax: Double): Unit = {
+    flush()
+    if (runN > 0) {
+      if (!isSorted(runMeans, runN))
+        sortByMean(runMeans, runWeights, runN, new Array[Double](runN), new Array[Double](runN))
+      totalWeight += runWeight
+      mergePass(runMeans, runWeights, runN)
+    }
+    if (min > otherMin) min = otherMin
+    if (max < otherMax) max = otherMax
+  }
+
+  /** In-place merge; `other` is flushed but not otherwise mutated. This
+    * departs from crick's tdigest_merge (tdigest_stubs.c:592-606), which
+    * re-adds the other's centroids through `add` and flushes once per
+    * buffer-full: here one k-scale pass runs over the union of both sorted
+    * centroid runs, as in the MergingDigest of Dunning & Ertl, "Computing
+    * extremely accurate quantiles using t-digests" (arXiv:1902.04023). What
+    * `add` does is kept: centroids with a non-finite mean or a weight
+    * <= DBL_EPSILON are dropped, the total grows by the weights kept, and
+    * min and max are folded. */
   def merge(other: TDigest): Unit = {
     other.flush()
     if (other.totalWeight != 0) {
+      openRun(other.nCentroids)
       var i = 0
-      while (i < other.nCentroids) {
-        add(other.means(i), other.weights(i))
-        i += 1
-      }
-      if (min > other.min) min = other.min
-      if (max < other.max) max = other.max
+      while (i < other.nCentroids) { take(other.means(i), other.weights(i)); i += 1 }
+      closeRun(other.min, other.max)
     }
   }
 
   /** `merge(TDigest.deserialize(bytes))` without building the other digest:
-    * the same checks, then the same `add` sequence straight from the bytes,
-    * so the result is byte-identical. */
+    * the same checks, then the same run read straight from the bytes, so
+    * the result is byte-identical. */
   def mergeSerialized(bytes: Array[Byte]): Unit = {
     val n = TDigest.checkValues(bytes)
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     if (bb.getDouble(24) != 0) {
+      openRun(n)
       var i = 0
       var off = 36
       while (i < n) {
-        add(bb.getDouble(off), bb.getDouble(off + 8))
+        take(bb.getDouble(off), bb.getDouble(off + 8))
         off += 16; i += 1
       }
-      val oMin = bb.getDouble(8); val oMax = bb.getDouble(16)
-      if (min > oMin) min = oMin
-      if (max < oMax) max = oMax
+      closeRun(bb.getDouble(8), bb.getDouble(16))
     }
   }
 
@@ -472,7 +504,7 @@ object TDigest extends SketchCodec[TDigest] {
     n
   }
 
-  override def admit(bytes: Array[Byte]): TDigest = { checkValues(bytes); null }
+  override def admit(bytes: Array[Byte]): Unit = checkValues(bytes)
 
   /** Decode into centroid arrays of exactly n entries; scratch and ingest
     * buffers are allocated only if the digest is later added to or queried. */

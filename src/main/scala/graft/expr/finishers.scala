@@ -14,7 +14,8 @@ import org.apache.spark.sql.types._
   * variants amortize one query-prep pass over all probes
   * (tdigest_stubs.c:560). Every finisher reads a sketch through its kind's
   * codec ([[graft.core.SketchCodec]]) on one path for every key type, and
-  * reads no byte of it directly. */
+  * reads no byte of it directly; the Space-Saving finishers read the
+  * counters in place through the codec's checked walk. */
 
 /** tdigest_quantile(sketch, q) → double (T5, tdigest_stubs.c:483-516). */
 case class TDigestQuantile(left: Expression, right: Expression)
@@ -189,22 +190,22 @@ case class SSTopK(left: Expression, right: Expression, itemType: DataType)
   override protected def nullSafeEval(sketch: Any, kAny: Any): Any = {
     val k = kAny.asInstanceOf[Int]
     if (k < 0) throw new IllegalArgumentException("k must be >= 0")
-    val s = SpaceSaving.deserialize(sketch.asInstanceOf[Array[Byte]])
+    val s = SpaceSaving.walk(sketch.asInstanceOf[Array[Byte]])
     val expected = SpaceSavingAgg.itemTypeFor(s.tag)
     require(expected == itemType,
       s"sketch holds ${expected.simpleString} items; use the matching " +
         s"ss_topk variant (got ${itemType.simpleString})")
-    new GenericArrayData(s.topkSlots(k).map { i =>
+    // the blob's counters are in list order: the first k are the top k
+    new GenericArrayData(Array.tabulate[Any](math.min(k, s.size)) { p =>
       val r = new GenericInternalRow(3)
-      s match {
-        case l: SpaceSavingLong =>
-          if (itemType == DoubleType) r.setDouble(0, SpaceSaving.keyToDouble(l.items(i)))
-          else r.setLong(0, l.items(i))
-        case o: SpaceSavingObj =>
-          r.update(0, if (itemType == BinaryType) o.items(i).getBytes else o.items(i))
+      s.tag match {
+        case SpaceSaving.TagLong => r.setLong(0, s.longItem(p))
+        case SpaceSaving.TagDouble => r.setDouble(0, SpaceSaving.keyToDouble(s.longItem(p)))
+        case SpaceSaving.TagString => r.update(0, s.objItem(p))
+        case _ => r.update(0, s.objItem(p).getBytes)
       }
-      r.setLong(1, s.counts(i)); r.setLong(2, s.errors(i))
-      r: Any
+      r.setLong(1, s.count(p)); r.setLong(2, s.error(p))
+      r
     })
   }
 
@@ -219,7 +220,7 @@ case class SSCapacity(child: Expression)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "ss_capacity"
   override protected def nullSafeEval(sketch: Any): Any =
-    SpaceSaving.deserialize(sketch.asInstanceOf[Array[Byte]]).capacity
+    SpaceSaving.walk(sketch.asInstanceOf[Array[Byte]]).capacity
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -230,6 +231,6 @@ case class SSSize(child: Expression)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "ss_size"
   override protected def nullSafeEval(sketch: Any): Any =
-    SpaceSaving.deserialize(sketch.asInstanceOf[Array[Byte]]).size
+    SpaceSaving.walk(sketch.asInstanceOf[Array[Byte]]).size
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }

@@ -255,12 +255,14 @@ class MergeAggSpec extends SparkTestBase {
   }
 
   test("ss_merge_agg decodes a group's first sketch once, and a lone sketch never") {
-    // admit, Space-Saving's full decode, checks every first sketch; what is
-    // counted is every later decode, the ones inside mergeBytes included
+    // admit checks every first sketch without building it, and mergeBytes
+    // merges from the bytes; what is counted is every decode
     var decodes = 0
     val counting = new SketchCodec[SpaceSavingBase] {
       override def checkSerialized(b: Array[Byte]): Int = SpaceSaving.checkSerialized(b)
-      override def admit(b: Array[Byte]): SpaceSavingBase = SpaceSaving.admit(b)
+      override def admit(b: Array[Byte]): Unit = SpaceSaving.admit(b)
+      override def mergeBytes(into: SpaceSavingBase, b: Array[Byte]): Unit =
+        SpaceSaving.mergeBytes(into, b)
       override def deserialize(b: Array[Byte]): SpaceSavingBase = {
         decodes += 1; SpaceSaving.deserialize(b)
       }

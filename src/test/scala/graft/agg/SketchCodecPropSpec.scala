@@ -7,7 +7,10 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import graft.expr.{SSCapacity, SSSize, SSTopK, StatsChecked}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import scala.util.{Failure, Random, Success, Try}
 
@@ -19,7 +22,8 @@ import scala.util.{Failure, Random, Success, Try}
   * out-of-order and impossible ones. Each codec accepts exactly what its
   * encoder writes: every blob either re-encodes to itself, byte for byte,
   * or is rejected with an IllegalArgumentException naming the kind, and
-  * the codec's other entry points agree with it. The same inputs of the
+  * the codec's other entry points (and the Space-Saving finishers, which
+  * read a blob in place) agree with it. The same inputs of the
   * five stored byte kinds then run through each merge aggregate (one- and
   * two-sketch groups) and each finisher in SQL; moments are stored as a
   * struct, which has tests of its own. */
@@ -224,6 +228,35 @@ class SketchCodecPropSpec extends SparkTestBase {
     (run(c.mergeBytes(_, b)), run(s => c.mergeSketch(s, c.deserialize(b))))
   }
 
+  /** The Space-Saving finishers on a blob, evaluated in place: ss_topk
+    * (k = 3 and every counter) as (item, count, error) rows, ss_size and
+    * ss_capacity, each as its value or its failure. */
+  private def ssFinishers(b: Array[Byte]): Seq[Try[Any]] = {
+    val t = if (b.nonEmpty && b(0) >= 0 && b(0) <= 3) SpaceSavingAgg.itemTypeFor(b(0)) else LongType
+    def rows(k: Int) = SSTopK(Literal(b), Literal(k), t).eval().asInstanceOf[ArrayData]
+      .toObjectArray(SSTopK(Literal(b), Literal(k), t).dataType.asInstanceOf[ArrayType].elementType)
+      .map { case r: InternalRow => (item(r.get(0, t)), r.getLong(1), r.getLong(2)) }.toSeq
+    Seq(Try(rows(3)), Try(rows(Int.MaxValue)), Try(SSSize(Literal(b)).eval()), Try(SSCapacity(Literal(b)).eval()))
+  }
+
+  private def item(x: Any): Any = x match {
+    case a: Array[Byte] => a.toSeq
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case other => other
+  }
+
+  /** What the finishers read from a decoded sketch. */
+  private def ssDecoded(s: SpaceSavingBase): Seq[Any] = {
+    def rows(k: Int) = s.topkSlots(k).toSeq.map { p =>
+      val it = s match {
+        case l: SpaceSavingLong => l.items(p)
+        case o: SpaceSavingObj => if (s.tag == SpaceSaving.TagBinary) o.items(p).getBytes.toSeq else o.items(p)
+      }
+      (it, s.counts(p), s.errors(p))
+    }
+    Seq(rows(3), rows(Int.MaxValue), s.size, s.capacity)
+  }
+
   test("kernels: every mutated blob round-trips or is rejected naming its kind") {
     for (k <- kinds; b <- mutations(k)) {
       val what = s"${k.word} blob ${b.take(40).mkString(",")} (${b.length} bytes)"
@@ -232,9 +265,14 @@ class SketchCodecPropSpec extends SparkTestBase {
           assert(out.toSeq == b.toSeq, s"$what: accepted bytes do not re-encode to themselves")
           assert(k.codec.checkSerialized(b) >= 0)
           k.codec.admit(b)
+          if (k.codec == SpaceSaving)
+            assert(ssFinishers(b).map(_.get) == ssDecoded(SpaceSaving.deserialize(b)), s"$what: finishers differ")
         case Failure(e) =>
           assert(rejects(k, e), s"$what: $e")
           assert(intercept[IllegalArgumentException](k.codec.admit(b)).getMessage == e.getMessage, what)
+          if (k.codec == SpaceSaving)
+            ssFinishers(b).foreach(f => assert(f.failed.toOption.exists(t =>
+              t.isInstanceOf[IllegalArgumentException] && t.getMessage == e.getMessage), s"$what: finishers fail differently"))
       }
       for (into <- k.valid) {
         val (viaBytes, viaSketch) = mergeBoth(k.codec, into, b)
@@ -375,6 +413,68 @@ class SketchCodecPropSpec extends SparkTestBase {
       assert(causes(e).exists(t => t.isInstanceOf[IllegalArgumentException] &&
         t.getMessage.contains("corrupt summary_stats") && t.getMessage.contains(message)),
         s"$edits: ${causes(e).map(_.toString).mkString(" | ")}")
+    }
+  }
+
+  /** A summary_stats struct as a Row: count 3, sum 6, min 1, max 3, m2 2,
+    * m3 0, m4 2, not homogeneous, with `edits` replacing fields. */
+  private def statsRow(edits: (String, Any)*): Row = {
+    val valid = Seq[Any](3L, 6.0, 1.0, 3.0, 2.0, 0.0, 2.0, false, 1.0)
+    Row.fromSeq(StatsStruct.schema.fieldNames.toSeq.zip(valid).map { case (f, v) => edits.toMap.getOrElse(f, v) })
+  }
+
+  private val nullableStats = StructType(StatsStruct.schema.fields.map(_.copy(nullable = true)))
+
+  /** Rows of structs as a frame no optimizer rule evaluates at planning. */
+  private def statsFrame(structs: Row*) =
+    spark.createDataFrame(java.util.Arrays.asList(structs.map(Row(_)): _*),
+      StructType(Seq(StructField("s", nullableStats)))).repartition(1)
+
+  private val statsFinishers: Seq[(String, Column => Column)] = Seq(
+    "stats_count" -> gf.stats_count, "stats_sum" -> gf.stats_sum, "stats_min" -> gf.stats_min,
+    "stats_max" -> gf.stats_max, "stats_mean" -> gf.stats_mean,
+    "stats_var" -> (gf.stats_var(_, 1)), "stats_std" -> (gf.stats_std(_, 0)),
+    "stats_skew" -> (gf.stats_skew(_, false)), "stats_kurt" -> (gf.stats_kurt(_, true, false)))
+
+  /** Whole-stage codegen, and interpreted projections. */
+  private def bothPaths(f: => Unit): Unit =
+    for ((wholeStage, mode) <- Seq(("true", "CODEGEN_ONLY"), ("false", "NO_CODEGEN"))) {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try f finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage"); spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+
+  test("stats finishers reject what stats_merge_agg rejects, checking once per finisher") {
+    val cases = Seq(
+      Seq("count" -> -5L, "min" -> 3.0, "max" -> 1.0, "m2" -> -2.0) -> "count -5",
+      Seq("min" -> 3.0, "max" -> 1.0) -> "min 3.0, max 1.0",
+      Seq("min" -> Double.NaN) -> "min NaN",
+      Seq("m2" -> -2.0) -> "m2 -2.0",
+      Seq("m4" -> -1e-300) -> "m4 -1.0E-300") ++
+      StatsStruct.schema.fieldNames.map(f => Seq(f -> null) -> s"struct: NULL $f")
+    bothPaths {
+      for ((edits, message) <- cases; (name, f) <- statsFinishers) {
+        val e = intercept[Exception](statsFrame(statsRow(edits: _*)).select(f(col("s"))).collect())
+        assert(causes(e).exists(t => t.isInstanceOf[IllegalArgumentException] &&
+          t.getMessage.contains("corrupt summary_stats") && t.getMessage.contains(message)),
+          s"$name $edits: ${causes(e).map(_.toString).mkString(" | ")}")
+      }
+      // a valid struct reads as the kernel's formulas read it, a NULL one as NULL
+      val m = StatsStruct.fromRow(InternalRow.fromSeq(statsRow().toSeq))
+      val got = statsFrame(statsRow(), null).select(statsFinishers.map { case (_, f) => f(col("s")) }: _*)
+        .collect()
+      assert(got(0).toSeq == Seq(3L, 6.0, 1.0, 3.0, m.mean, m.variance(1), m.stddev(0), m.skew(false),
+        m.kurt(true, false)))
+      assert(got(1).toSeq.forall(_ == null))
+    }
+    // SQL too; and each finisher's tree reads the struct once
+    assert(Try(spark.sql(s"SELECT stats_kurt(s) FROM (SELECT ${statsStruct("m4" -> "-1")} AS s)").collect())
+      .failed.toOption.exists(causes(_).exists(_.getMessage.contains("corrupt summary_stats"))))
+    for ((name, f) <- statsFinishers) {
+      val plan = statsFrame(statsRow()).select(f(col("s"))).queryExecution.analyzed
+      assert(plan.expressions.map(_.collect { case c: StatsChecked => c }.size).sum == 1, name)
     }
   }
 

@@ -92,30 +92,36 @@ class SpaceSavingSpec extends AnyFunSuite {
     out.sortBy { case (_, c, e) => (-c, e) }.take(s1.capacity).map(c => (c._2, c._3))
   }
 
-  test("merge against model across curated pairs (test_space_saving.py:265-363)") {
-    def build(cap: Int, data: Seq[Long]): SpaceSavingLong = {
-      val s = new SpaceSavingLong(cap)
-      data.foreach(s.add(_))
-      s
-    }
+  private def build(cap: Int, data: Seq[Long]): SpaceSavingLong = {
+    val s = new SpaceSavingLong(cap)
+    data.foreach(s.add(_))
+    s
+  }
+
+  /** The curated merge pairs (test_space_saving.py:299-342) as (capacity,
+    * stream) specs: empty, self, partial and full sketches on each side. */
+  private lazy val curatedSpecs: Seq[((Int, Seq[Long]), (Int, Seq[Long]))] = {
     val d1 = Seq(1L, 2, 3, 4, 5, 5, 5, 6)
     val d2 = Seq(1L, 2, 3, 5, 5, 6, 6, 7)
     val big1 = skewedData(42, 10000).toSeq
     val big2 = skewedData(7, 10000).toSeq
-    val pairs = Seq(
-      (build(5, d1), build(5, d2)),
-      (build(5, Nil), build(5, Nil)),
-      (build(5, d1), build(5, d1)),
-      (build(5, d1), build(5, Nil)),
-      (build(5, Nil), build(5, d1)),
-      (build(7, Nil), build(7, Seq(1L, 2))),
-      (build(20, Nil), build(20, big1)),
-      (build(20, Seq(1L, 2)), build(20, big1)),
-      (build(20, big1), build(20, Seq(1L, 2))),
-      (build(10, d1), build(10, d1)),
-      (build(20, big1), build(20, big2))
-    )
-    pairs.foreach { case (a, b) =>
+    Seq(
+      ((5, d1), (5, d2)),
+      ((5, Nil), (5, Nil)),
+      ((5, d1), (5, d1)),
+      ((5, d1), (5, Nil)),
+      ((5, Nil), (5, d1)),
+      ((7, Nil), (7, Seq(1L, 2))),
+      ((20, Nil), (20, big1)),
+      ((20, Seq(1L, 2)), (20, big1)),
+      ((20, big1), (20, Seq(1L, 2))),
+      ((10, d1), (10, d1)),
+      ((20, big1), (20, big2)))
+  }
+
+  test("merge against model across curated pairs (test_space_saving.py:265-363)") {
+    curatedSpecs.foreach { case ((c1, d1), (c2, d2)) =>
+      val (a, b) = (build(c1, d1), build(c2, d2))
       val model = modelMerge(a, b)
       a.merge(b)
       val res = counters(a)
@@ -133,6 +139,104 @@ class SpaceSavingSpec extends AnyFunSuite {
             s"counter ($c,$e) below model cutoff $worst")
         }
       }
+    }
+  }
+
+  /** mergeBytes(into, b) against mergeSketch into an equal sketch of
+    * deserialize(b): byte for byte, or the same rejection. */
+  private def assertMergeBytes(into: () => SpaceSavingBase, b: Array[Byte], what: String): Unit = {
+    val (x, y) = (into(), into())
+    val viaBytes = scala.util.Try { SpaceSaving.mergeBytes(x, b); SpaceSaving.serialize(x).toSeq }
+    val viaSketch = scala.util.Try {
+      SpaceSaving.mergeSketch(y, SpaceSaving.deserialize(b)); SpaceSaving.serialize(y).toSeq
+    }
+    assert(viaBytes.toOption == viaSketch.toOption, what)
+    assert(viaBytes.failed.toOption.map(_.getMessage) == viaSketch.failed.toOption.map(_.getMessage), what)
+  }
+
+  /** A sketch of `tag`'s key type over small integer keys. */
+  private def keyed(tag: Byte, cap: Int, data: Seq[(Int, Long)]): SpaceSavingBase = {
+    val s = SpaceSaving.empty(tag, cap)
+    data.foreach { case (x, c) =>
+      s match {
+        case l: SpaceSavingLong =>
+          l.add(if (tag == SpaceSaving.TagDouble) SpaceSaving.doubleKey(x * 0.5 - 3) else x.toLong, c)
+        case o: SpaceSavingObj =>
+          o.add(UTF8String.fromBytes(if (tag == SpaceSaving.TagString) s"key$x".getBytes else Array(x.toByte)), c)
+      }
+    }
+    s
+  }
+
+  private val keyTags = Seq(SpaceSaving.TagLong, SpaceSaving.TagDouble, SpaceSaving.TagString,
+    SpaceSaving.TagBinary)
+
+  test("mergeBytes equals decode-then-merge byte for byte over the curated pairs, both arms") {
+    // the eleven int64 pairs, into a sketch built by adds (slots out of list
+    // order) and into a decoded one (slots in list order)
+    curatedSpecs.foreach { case ((c1, d1), (c2, d2)) =>
+      val b = SpaceSaving.serialize(build(c2, d2))
+      assertMergeBytes(() => build(c1, d1), b, s"built into ($c1, ${d1.size}) <- ($c2, ${d2.size})")
+      val a = SpaceSaving.serialize(build(c1, d1))
+      assertMergeBytes(() => SpaceSaving.deserialize(a), b, s"decoded into ($c1, ${d1.size})")
+    }
+    // the object pair: both full, partly shared, on string and binary keys
+    for (tag <- Seq(SpaceSaving.TagString, SpaceSaving.TagBinary)) {
+      val d1 = Seq(1, 2, 3, 4, 5, 5, 5, 6).map((_, 1L))
+      val d2 = Seq(1, 2, 3, 5, 5, 6, 6, 7).map((_, 1L))
+      assertMergeBytes(() => keyed(tag, 5, d1), SpaceSaving.serialize(keyed(tag, 5, d2)), s"object pair, tag $tag")
+    }
+  }
+
+  test("mergeBytes equals decode-then-merge byte for byte: random full, evicting and tied pairs") {
+    val r = new Random(77)
+    var (full, evicting, tied) = (0, 0, 0)
+    for (trial <- 0 until 400) {
+      val tag = keyTags(trial % 4)
+      val (c1, c2) = (1 + r.nextInt(12), 1 + r.nextInt(12))
+      val keys = 1 + r.nextInt(30)
+      // unit counts tie often; weighted ones tie less
+      val weighted = r.nextBoolean()
+      def stream = Seq.fill(r.nextInt(80))((r.nextInt(keys), if (weighted) 1L + r.nextInt(4) else 1L))
+      val (d1, d2) = (stream, stream)
+      val (a, o) = (keyed(tag, c1, d1), keyed(tag, c2, d2))
+      if (a.size == c1 && o.size == c2) full += 1
+      if (d1.map(_._1).distinct.size > c1) evicting += 1
+      if (o.topkSlots(o.size).map(o.counts(_)).sliding(2).exists(c => c.length == 2 && c(0) == c(1))) tied += 1
+      val b = SpaceSaving.serialize(o)
+      assertMergeBytes(() => keyed(tag, c1, d1), b, s"trial $trial built into")
+      val ab = SpaceSaving.serialize(a)
+      assertMergeBytes(() => SpaceSaving.deserialize(ab), b, s"trial $trial decoded into")
+      // a sketch of another key type is refused alike
+      assertMergeBytes(() => keyed(keyTags((trial + 1) % 4), c1, d1), b, s"trial $trial other tag")
+    }
+    assert(full > 50 && evicting > 100 && tied > 100, s"full $full, evicting $evicting, tied $tied")
+  }
+
+  test("an item evicted during a merge is looked up anew when the other reaches it") {
+    // decodable counters with error > count: X is matched, evicted for Y,
+    // and then, no longer held, evicts A (spsv_merge looks each item up at
+    // its turn)
+    val into = bytesOf(2, Seq((1L, 1L, 1L), (2L, 1L, 5L)))
+    val other = bytesOf(2, Seq((3L, 2L, 0L), (2L, 2L, 0L)))
+    assertMergeBytes(() => SpaceSaving.deserialize(into), other, "evicted match")
+    val s = SpaceSaving.deserializeLong(into)
+    SpaceSaving.mergeBytes(s, other)
+    assert(counters(s).toSet == Set((3L, 3L, 1L), (2L, 3L, 1L)))
+  }
+
+  test("the checked walk allocates under a fixed multiple of the blob's length") {
+    val r = new Random(3)
+    val long = new SpaceSavingLong(4096)
+    (0 until 40000).foreach(_ => long.add(r.nextInt(20000).toLong))
+    val str = new SpaceSavingObj(4096)
+    (0 until 40000).foreach(_ => str.add(UTF8String.fromString(s"k${r.nextInt(20000)}")))
+    for (b <- Seq(SpaceSaving.serialize(long), SpaceSaving.serialize(str))) {
+      (0 until 5).foreach(_ => SpaceSaving.walk(b)) // warm up
+      val walked = (0 until 3).map(_ => allocated(SpaceSaving.walk(b))).min
+      assert(walked < 3L * b.length, s"the walk of ${b.length} bytes allocated $walked")
+      // it builds no sketch: a decode allocates more
+      assert(allocated(SpaceSaving.deserialize(b)) > walked)
     }
   }
 

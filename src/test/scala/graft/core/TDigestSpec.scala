@@ -166,6 +166,120 @@ class TDigestSpec extends AnyFunSuite {
     }
   }
 
+  /** The merge crick runs (tdigest_stubs.c:592-606), rebuilt through the
+    * public `add`: the other's centroids re-added one by one, then min and
+    * max folded. */
+  private def reAddMerge(into: TDigest, other: TDigest): Unit = {
+    other.flush()
+    if (other.totalWeight != 0) {
+      (0 until other.nCentroids).foreach(i => into.add(other.means(i), other.weights(i)))
+      if (into.min > other.min) into.min = other.min
+      if (into.max < other.max) into.max = other.max
+    }
+  }
+
+  /** One digest per contiguous part, merged pairwise level by level
+    * (balanced) or one after another into the first (left-deep). */
+  private def mergeTree(xs: Array[Double], parts: Int, balanced: Boolean,
+                        merge: (TDigest, TDigest) => Unit): TDigest = {
+    var level = xs.grouped(xs.length / parts).map { p => val t = TDigest(); p.foreach(t.add(_)); t }.toSeq
+    if (balanced) {
+      while (level.size > 1) level = level.grouped(2).map { g => g.tail.foreach(merge(g.head, _)); g.head }.toSeq
+      level.head
+    } else {
+      level.tail.foreach(merge(level.head, _))
+      level.head
+    }
+  }
+
+  /** Largest quantile (q-space) and cdf errors over the probes. */
+  private def errors(t: TDigest, sorted: Array[Double]): (Double, Double) = {
+    val qErr = probes.map(q => qSpaceError(sorted, t.quantile(q), q)).max
+    val cErr = probes.map { q =>
+      val x = exactQuantile(sorted, q)
+      math.abs(t.cdf(x) - sorted.count(_ <= x).toDouble / sorted.length)
+    }.max
+    (qErr, cErr)
+  }
+
+  test("merge trees of 2, 16 and 256 parts, balanced and left-deep, stay accurate") {
+    var (oldQ, oldC, newQ, newC) = (0.0, 0.0, 0.0, 0.0)
+    for ((name, xs) <- distributions; parts <- Seq(2, 16, 256); balanced <- Seq(true, false)) {
+      val what = s"$name, $parts parts, ${if (balanced) "balanced" else "left-deep"}"
+      val sorted = xs.sorted
+      val t = mergeTree(xs, parts, balanced, _.merge(_))
+      t.flush()
+      assert(t.totalSize == xs.length, what)
+      assert(t.minOrNaN == sorted.head && t.maxOrNaN == sorted.last, what)
+      assert(t.nCentroids <= 2 * math.ceil(t.compression).toInt, what)
+      val (q, c) = errors(t, sorted)
+      assert(q <= 0.012, s"$what: quantile error $q")
+      assert(c <= 0.005, s"$what: cdf error $c")
+      newQ = math.max(newQ, q); newC = math.max(newC, c)
+      val (oq, oc) = errors(mergeTree(xs, parts, balanced, reAddMerge), sorted)
+      oldQ = math.max(oldQ, oq); oldC = math.max(oldC, oc)
+    }
+    // single trees move either way; the grid's worst case may not get worse
+    assert(newQ <= oldQ, s"quantile: one-pass merge $newQ, re-add merge $oldQ")
+    assert(newC <= oldC, s"cdf: one-pass merge $newC, re-add merge $oldC")
+  }
+
+  test("merge and mergeSerialized: drops, total weight, min/max and out-of-order runs as add") {
+    val other = TDigest()
+    (0 until 500).foreach(i => other.add(i * 0.5, 1.0 + i % 3))
+    val b = other.serialize()
+    val n = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(32)
+    def edit(f: java.nio.ByteBuffer => Unit): Array[Byte] = {
+      val c = b.clone(); f(java.nio.ByteBuffer.wrap(c).order(java.nio.ByteOrder.LITTLE_ENDIAN)); c
+    }
+    // centroid 1 given a NaN mean, centroid 2 an infinite one, centroid 3
+    // a weight of DBL_EPSILON; centroids 4 and 5 swapped
+    val edited = edit { bb =>
+      bb.putDouble(36 + 16, Double.NaN); bb.putDouble(36 + 32, Double.PositiveInfinity)
+      bb.putDouble(36 + 48 + 8, TDigest.DblEpsilon)
+      val (m4, w4) = (bb.getDouble(36 + 64), bb.getDouble(44 + 64))
+      bb.putDouble(36 + 64, bb.getDouble(36 + 80)); bb.putDouble(44 + 64, bb.getDouble(44 + 80))
+      bb.putDouble(36 + 80, m4); bb.putDouble(44 + 80, w4)
+    }
+    val stored = TDigest.deserialize(edited)
+    val kept = (0 until n).filterNot(Set(1, 2, 3)).map(stored.weights(_)).sum
+    for (into <- Seq(TDigest(), { val t = TDigest(50.0); (0 until 30).foreach(i => t.add(-i.toDouble)); t })) {
+      val before = into.totalSize
+      val (x, y) = (TDigest.deserialize(into.serialize()), TDigest.deserialize(into.serialize()))
+      x.merge(TDigest.deserialize(edited)); y.mergeSerialized(edited)
+      assert(x.serialize().toSeq == y.serialize().toSeq)
+      assert(x.totalSize == before + kept)
+      assert(x.minOrNaN == (if (into.isEmpty) 0.0 else math.min(into.minOrNaN, 0.0)))
+      assert(x.maxOrNaN == 249.5)
+      assert((1 until x.nCentroids).forall(i => x.means(i - 1) <= x.means(i)), "merged means out of order")
+      assert(x.nCentroids <= x.size)
+    }
+  }
+
+  /** SHA-256 over 400 add-built digests: compression 20 to 1000, whole and
+    * fractional weights, empty to 3000 points, queried between adds. */
+  private def addBuiltSha: String = {
+    val r = new Random(0x7d)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    for (i <- 0 until 400) {
+      val c = Seq(20.0, 37.5, 100.0, 333.0, 1000.0)(i % 5)
+      val t = TDigest(c)
+      val n = Seq(0, 1, 5, 50, 500, 3000)(i % 6)
+      (0 until n).foreach { j =>
+        val x = if (i % 7 == 0) r.nextGaussian() else r.nextDouble() * 100
+        t.add(x, if (i % 2 == 0) 1.0 + r.nextInt(3) else 0.01 + r.nextDouble() * 3)
+        if (j % 997 == 996) t.quantile(0.5)
+      }
+      md.update(t.serialize())
+    }
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  // recorded with the flush that ran before flush and merge shared one pass
+  test("add-built digests keep their bytes") {
+    assert(addBuiltSha == "7757992acf61b1f05093d9a2d450ac21b03768154f7f925e83e1a03d862ed5aa")
+  }
+
   test("scale multiplies weights and drops ~zero centroids (tdigest_stubs.c:609-629)") {
     val t = TDigest()
     (1 to 1000).foreach(i => t.add(i.toDouble))
