@@ -11,9 +11,9 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.functions._
 
 /** Column DSL mirroring org.apache.spark.sql.functions for the graft sketch
-  * library, plus SQL registration. Stats finishers are plain Catalyst
-  * arithmetic over the summary_stats struct after one checked read of it
-  * ([[StatsFinishers]], shared with SQL), all codegen'd. */
+  * library, plus SQL registration. Each stats finisher is one codegen'd
+  * node ([[StatsFinisher]], shared with SQL) that reads the summary_stats
+  * struct once, checked, and computes its statistic. */
 object functions {
   private def agg(e: Expression): Column =
     toColumn(e.asInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction]
@@ -27,17 +27,17 @@ object functions {
     agg(StatsMergeAgg(toExpr(statsStruct)))
 
   /** Finishers over the summary_stats struct, each reading it checked. */
-  def stats_count(s: Column): Column = toColumn(StatsFinishers.field(toExpr(s), "count"))
-  def stats_sum(s: Column): Column = toColumn(StatsFinishers.field(toExpr(s), "sum"))
-  def stats_min(s: Column): Column = toColumn(StatsFinishers.field(toExpr(s), "min"))
-  def stats_max(s: Column): Column = toColumn(StatsFinishers.field(toExpr(s), "max"))
-  def stats_mean(s: Column): Column = toColumn(StatsFinishers.mean(toExpr(s)))
-  def stats_var(s: Column, ddof: Int = 0): Column = toColumn(StatsFinishers.variance(toExpr(s), ddof))
-  def stats_std(s: Column, ddof: Int = 0): Column = toColumn(StatsFinishers.std(toExpr(s), ddof))
+  def stats_count(s: Column): Column = toColumn(StatsFinisher(toExpr(s), "count"))
+  def stats_sum(s: Column): Column = toColumn(StatsFinisher(toExpr(s), "sum"))
+  def stats_min(s: Column): Column = toColumn(StatsFinisher(toExpr(s), "min"))
+  def stats_max(s: Column): Column = toColumn(StatsFinisher(toExpr(s), "max"))
+  def stats_mean(s: Column): Column = toColumn(StatsFinisher(toExpr(s), "mean"))
+  def stats_var(s: Column, ddof: Int = 0): Column = toColumn(StatsFinisher(toExpr(s), "var", ddof))
+  def stats_std(s: Column, ddof: Int = 0): Column = toColumn(StatsFinisher(toExpr(s), "std", ddof))
   def stats_skew(s: Column, bias: Boolean = true): Column =
-    toColumn(StatsFinishers.skew(toExpr(s), bias))
+    toColumn(StatsFinisher(toExpr(s), "skew", bias = bias))
   def stats_kurt(s: Column, fisher: Boolean = true, bias: Boolean = true): Column =
-    toColumn(StatsFinishers.kurt(toExpr(s), fisher, bias))
+    toColumn(StatsFinisher(toExpr(s), "kurt", bias = bias, fisher = fisher))
 
   // ---- TDigest (T1–T13) ----
   def tdigest(x: Column): Column = agg(new TDigestAgg(toExpr(x)))
@@ -359,26 +359,26 @@ object GraftFunctions {
     "vec_norm" -> { case Seq(a) => VecNorm(a) },
     "srp_signature" -> { case Seq(v, b, s) => SrpSignature(v, b, s) },
     "nearest_centroids" -> { case Seq(v, c, k) => NearestCentroids(v, c, k) },
-    // stats finishers as SQL functions (the DSL's trees; optional args
+    // stats finishers as SQL functions (the DSL's nodes; optional args
     // must be non-null constants)
-    "stats_mean" -> { case Seq(st) => StatsFinishers.mean(st) },
+    "stats_mean" -> { case Seq(st) => StatsFinisher(st, "mean") },
     "stats_var" -> {
-      case Seq(st) => StatsFinishers.variance(st, 0)
-      case Seq(st, d) => StatsFinishers.variance(st, foldInt(d, "ddof"))
+      case Seq(st) => StatsFinisher(st, "var")
+      case Seq(st, d) => StatsFinisher(st, "var", foldInt(d, "ddof"))
     },
     "stats_std" -> {
-      case Seq(st) => StatsFinishers.std(st, 0)
-      case Seq(st, d) => StatsFinishers.std(st, foldInt(d, "ddof"))
+      case Seq(st) => StatsFinisher(st, "std")
+      case Seq(st, d) => StatsFinisher(st, "std", foldInt(d, "ddof"))
     },
     "stats_skew" -> {
-      case Seq(st) => StatsFinishers.skew(st, bias = true)
-      case Seq(st, b) => StatsFinishers.skew(st, foldBool(b, "bias"))
+      case Seq(st) => StatsFinisher(st, "skew")
+      case Seq(st, b) => StatsFinisher(st, "skew", bias = foldBool(b, "bias"))
     },
     "stats_kurt" -> {
-      case Seq(st) => StatsFinishers.kurt(st, fisher = true, bias = true)
-      case Seq(st, fi) => StatsFinishers.kurt(st, foldBool(fi, "fisher"), bias = true)
-      case Seq(st, fi, b) => StatsFinishers.kurt(st, foldBool(fi, "fisher"),
-        foldBool(b, "bias"))
+      case Seq(st) => StatsFinisher(st, "kurt")
+      case Seq(st, fi) => StatsFinisher(st, "kurt", fisher = foldBool(fi, "fisher"))
+      case Seq(st, fi, b) => StatsFinisher(st, "kurt", bias = foldBool(b, "bias"),
+        fisher = foldBool(fi, "fisher"))
     },
     // text/web compositions: built from stock codegen'd expressions, so
     // SQL users get the identical tree the Column DSL builds (toExprTree

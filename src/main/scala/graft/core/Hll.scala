@@ -57,31 +57,9 @@ final class Hll private (val p: Int, val registers: Array[Byte]) {
   }
 
   /** Registers with ρ > 0 — the linear-counting occupancy. */
-  def nonzero: Int = {
-    var n = 0
-    var i = 0
-    while (i < registers.length) { if (registers(i) != 0) n += 1; i += 1 }
-    n
-  }
+  def nonzero: Int = Hll.nonzero(registers, 0, m)
 
-  def estimate: Double = {
-    val mm = m.toDouble
-    val alpha = m match {
-      case 16 => 0.673
-      case 32 => 0.697
-      case 64 => 0.709
-      case _ => 0.7213 / (1.0 + 1.079 / mm)
-    }
-    var sum = 0.0
-    var i = 0
-    while (i < registers.length) {
-      sum += Hll.InversePow2(registers(i) & 0xFF)
-      i += 1
-    }
-    val raw = alpha * mm * mm / sum
-    val zeros = m - nonzero
-    if (raw <= 2.5 * mm && zeros > 0) mm * math.log(mm / zeros) else raw
-  }
+  def estimate: Double = Hll.estimate(registers, 0, m)
 
   def serialize(): Array[Byte] = {
     val out = new Array[Byte](1 + registers.length)
@@ -98,6 +76,41 @@ object Hll extends SketchCodec[Hll] {
     * `r & 0xFF`: the estimator's harmonic-sum terms, bit-for-bit. */
   private val InversePow2: Array[Double] =
     Array.tabulate(256)(i => java.lang.Math.pow(2.0, -i.toByte.toDouble))
+
+  /** Registers with ρ > 0 among the m registers at `from`: a sketch's own
+    * array, or a blob's after its precision byte. */
+  private def nonzero(regs: Array[Byte], from: Int, m: Int): Int = {
+    var n = 0
+    var i = from
+    while (i < from + m) { if (regs(i) != 0) n += 1; i += 1 }
+    n
+  }
+
+  /** The estimate over the m registers at `from`. */
+  private def estimate(regs: Array[Byte], from: Int, m: Int): Double = {
+    val mm = m.toDouble
+    val alpha = m match {
+      case 16 => 0.673
+      case 32 => 0.697
+      case 64 => 0.709
+      case _ => 0.7213 / (1.0 + 1.079 / mm)
+    }
+    var sum = 0.0
+    var i = from
+    while (i < from + m) {
+      sum += InversePow2(regs(i) & 0xFF)
+      i += 1
+    }
+    val raw = alpha * mm * mm / sum
+    val zeros = m - nonzero(regs, from, m)
+    if (raw <= 2.5 * mm && zeros > 0) mm * math.log(mm / zeros) else raw
+  }
+
+  /** `deserialize(bytes).estimate`, reading the registers in place. */
+  def estimate(bytes: Array[Byte]): Double = estimate(bytes, 1, checkSerialized(bytes))
+
+  /** `deserialize(bytes).nonzero`, reading the registers in place. */
+  def nonzero(bytes: Array[Byte]): Int = nonzero(bytes, 1, checkSerialized(bytes))
 
   /** `p` once it is in [4, 16], checked before the registers are allocated. */
   private def checkPrecision(p: Int): Int = {

@@ -202,18 +202,21 @@ abstract class SpaceSavingBase(val capacity: Int, val tag: Byte)
   // --- item hooks: each arm stores and finds its own keys ---
   /** Slot of `other`'s item at position p in THIS sketch, or NIL. */
   protected def slotOf(other: SpaceSavingCounters, p: Int): Int
-  /** Store `other`'s item at position p in slot and index it. */
-  protected def putItem(slot: Int, other: SpaceSavingCounters, p: Int): Unit
+  /** Store `other`'s item at position p in slot and index it; false if the
+    * index already held the item. */
+  protected def putItem(slot: Int, other: SpaceSavingCounters, p: Int): Boolean
   /** Drop slot's item from the index. */
   protected def dropItem(slot: Int): Unit
 
-  /** Link a checked blob's counters into slots 0..n-1 in one pass. */
-  private[core] final def linkAll(blob: SpaceSaving.Blob): Unit = {
+  /** Link a blob's counters, read but not yet checked for duplicate items,
+    * into slots 0..n-1 in one pass; false if an item repeats, which the
+    * index finds as it is built. */
+  private[core] final def linkAll(blob: SpaceSaving.Blob): Boolean = {
     val n = blob.size
     reserve(n)
     var i = 0
     while (i < n) {
-      putItem(i, blob, i)
+      if (!putItem(i, blob, i)) return false
       counts(i) = blob.count(i); errors(i) = blob.error(i)
       prev(i) = if (i == 0) n - 1 else i - 1
       next(i) = if (i == n - 1) 0 else i + 1
@@ -221,6 +224,7 @@ abstract class SpaceSavingBase(val capacity: Int, val tag: Byte)
     }
     size = n
     head = if (n == 0) NIL else 0
+    true
   }
 
   /** Cafaro parallel merge, in place into this (spsv_merge,
@@ -345,7 +349,7 @@ final class SpaceSavingLong(capacity0: Int, tag0: Byte = SpaceSaving.TagLong)
 
   override protected def slotOf(other: SpaceSavingCounters, p: Int): Int =
     index.get(other.longItem(p))
-  override protected def putItem(slot: Int, other: SpaceSavingCounters, p: Int): Unit = {
+  override protected def putItem(slot: Int, other: SpaceSavingCounters, p: Int): Boolean = {
     val item = other.longItem(p)
     items(slot) = item
     index.put(item, slot)
@@ -415,10 +419,10 @@ final class SpaceSavingObj(capacity0: Int, tag0: Byte = SpaceSaving.TagString)
 
   override protected def slotOf(other: SpaceSavingCounters, p: Int): Int =
     lookup(other.objItem(p))
-  override protected def putItem(slot: Int, other: SpaceSavingCounters, p: Int): Unit = {
+  override protected def putItem(slot: Int, other: SpaceSavingCounters, p: Int): Boolean = {
     val item = other.objItem(p)
     items(slot) = item
-    index.put(item, slot)
+    index.put(item, slot) == null
   }
   override protected def dropItem(slot: Int): Unit = index.remove(items(slot))
 
@@ -482,14 +486,29 @@ object SpaceSaving extends SketchCodec[SpaceSavingBase] {
     n
   }
 
-  /** The one checked read of a blob, which `admit`, `deserialize`,
-    * `mergeBytes` and the finishers share: the header, then one walk over
-    * the counters that rejects an object-arm item longer than the bytes
-    * left, counters out of list order (count desc, error asc), duplicate
-    * items and trailing bytes, each with the message the first fault in
-    * counter order would raise. It builds no sketch: the blob's counters
-    * are read in place, and it allocates O(blob length). */
+  /** The one checked read of a blob, which `admit`, `mergeBytes` and the
+    * finishers share: the header, then one walk over the counters that
+    * rejects an object-arm item longer than the bytes left, counters out of
+    * list order (count desc, error asc), duplicate items and trailing
+    * bytes, each with the message the first fault in counter order would
+    * raise. It builds no sketch: the blob's counters are read in place, and
+    * it allocates O(blob length). */
   def walk(bytes: Array[Byte]): Blob = {
+    val blob = scan(bytes)
+    check(blob)
+    blob
+  }
+
+  /** Raise the walk's first fault: duplicates among the counters read, then
+    * the fault that stopped the scan. */
+  private def check(blob: Blob): Unit = {
+    require(!hasDuplicates(blob, blob.read), Duplicates)
+    require(blob.fault == null, blob.fault)
+  }
+
+  /** The walk up to its duplicate check: the header, then the counters
+    * until the first fault, which it records with the counters read. */
+  private def scan(bytes: Array[Byte]): Blob = {
     val n = checkSerialized(bytes)
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val long = isLongTag(bytes(0))
@@ -518,9 +537,10 @@ object SpaceSaving extends SketchCodec[SpaceSavingBase] {
         off += 16
       }
     }
-    require(!hasDuplicates(blob, read), Duplicates)
-    require(fault == null, fault)
-    require(off == bytes.length, s"corrupt space-saving sketch: ${bytes.length - off} trailing bytes")
+    blob.read = read
+    blob.fault =
+      if (fault == null && off != bytes.length) s"corrupt space-saving sketch: ${bytes.length - off} trailing bytes"
+      else fault
     blob
   }
 
@@ -530,7 +550,7 @@ object SpaceSaving extends SketchCodec[SpaceSavingBase] {
     var i = 0
     if (isLongTag(b.tag)) {
       val seen = new LongIntMap(m)
-      while (i < m && seen.get(b.longItem(i)) < 0) { seen.put(b.longItem(i), i); i += 1 }
+      while (i < m && seen.put(b.longItem(i), i)) i += 1
       i < m
     } else {
       val items = new Array[UTF8String](m)
@@ -549,6 +569,9 @@ object SpaceSaving extends SketchCodec[SpaceSavingBase] {
   final class Blob private[SpaceSaving] (bytes: Array[Byte], bb: ByteBuffer, val tag: Byte,
       val capacity: Int, val size: Int, private[SpaceSaving] val countAt: Array[Int])
     extends SpaceSavingCounters {
+    // the scan's counters read and first fault, if any
+    private[SpaceSaving] var read = 0
+    private[SpaceSaving] var fault: String = null
     def first: Int = 0
     def after(p: Int): Int = p + 1
     @inline private def at(p: Int): Int = if (countAt == null) 17 + 24 * p else countAt(p)
@@ -569,11 +592,14 @@ object SpaceSaving extends SketchCodec[SpaceSavingBase] {
   override def admit(bytes: Array[Byte]): Unit = walk(bytes)
 
   /** The one arm dispatch: int64 and float64 keys decode to
-    * [[SpaceSavingLong]], strings and binaries to [[SpaceSavingObj]]. */
+    * [[SpaceSavingLong]], strings and binaries to [[SpaceSavingObj]]. The
+    * walk's checks, with a clean scan's duplicates found by the index the
+    * sketch builds, not by an item set of their own. */
   override def deserialize(bytes: Array[Byte]): SpaceSavingBase = {
-    val blob = walk(bytes)
+    val blob = scan(bytes)
+    if (blob.fault != null) check(blob)
     val s = empty(blob.tag, blob.capacity)
-    s.linkAll(blob)
+    require(s.linkAll(blob), Duplicates)
     s
   }
 
@@ -621,9 +647,12 @@ private[core] final class LongIntMap(maxKeys: Int) extends Serializable {
 
   def get(k: Long): Int = vals(find(k)) - 1
 
-  def put(k: Long, v: Int): Unit = {
+  /** Map k to v; false if k was mapped already. */
+  def put(k: Long, v: Int): Boolean = {
     val i = find(k)
+    val absent = vals(i) == 0
     keys(i) = k; vals(i) = v + 1
+    absent
   }
 
   /** Make room for n keys. */

@@ -9,13 +9,25 @@ import org.apache.spark.sql.graftshim.AbstractDataType
 import org.apache.spark.sql.types._
 
 /** Scalar finalizer expressions over serialized sketches (SURVEY.md §2 T5–T12,
-  * S5–S6). These run post-aggregation on a handful of rows, so per-call
-  * deserialization is cheap relative to the aggregation itself; the array
-  * variants amortize one query-prep pass over all probes
-  * (tdigest_stubs.c:560). Every finisher reads a sketch through its kind's
-  * codec ([[graft.core.SketchCodec]]) on one path for every key type, and
-  * reads no byte of it directly; the Space-Saving finishers read the
-  * counters in place through the codec's checked walk. */
+  * S5–S6). Every finisher reads a sketch through its kind's codec
+  * ([[graft.core.SketchCodec]]) on one path for every key type, and reads
+  * no byte of it directly. Over stored sketches a finisher runs once per
+  * group, not once per aggregation: in `sketch_rollup`'s result stage
+  * (6 000 groups) the finisher projection took 40 % of the JFR samples,
+  * second to the merges' 47 %, when the finishers decoded what they read.
+  * So no finisher decodes what it only reads: the t-digest finishers query
+  * the checked blob in place ([[graft.core.TDigest.blob]]) and the
+  * Space-Saving ones read the codec's checked walk. */
+
+/** A finisher's right argument, an array of doubles: read (and checked)
+  * once per expression instance when it is constant, else per row. */
+trait DoublesArg { self: BinaryExpression =>
+  protected def checkArg(xs: Array[Double]): Array[Double] = xs
+  @transient private lazy val constant: Array[Double] =
+    if (right.foldable) checkArg(right.eval().asInstanceOf[ArrayData].toDoubleArray()) else null
+  protected def doubles(a: Any): Array[Double] =
+    if (constant != null) constant else checkArg(a.asInstanceOf[ArrayData].toDoubleArray())
+}
 
 /** tdigest_quantile(sketch, q) → double (T5, tdigest_stubs.c:483-516). */
 case class TDigestQuantile(left: Expression, right: Expression)
@@ -24,23 +36,19 @@ case class TDigestQuantile(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "tdigest_quantile"
   override protected def nullSafeEval(sketch: Any, q: Any): Any =
-    TDigest.deserialize(sketch.asInstanceOf[Array[Byte]])
-      .quantile(q.asInstanceOf[Double])
+    TDigest.blob(sketch.asInstanceOf[Array[Byte]]).quantile(q.asInstanceOf[Double])
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
 
 /** tdigest_quantiles(sketch, array<double>) → array<double> (T5 vectorized). */
 case class TDigestQuantiles(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
+  extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback with DoublesArg {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "tdigest_quantiles"
-  override protected def nullSafeEval(sketch: Any, qs: Any): Any = {
-    val t = TDigest.deserialize(sketch.asInstanceOf[Array[Byte]])
-    val arr = qs.asInstanceOf[ArrayData].toDoubleArray()
-    new GenericArrayData(t.quantiles(arr))
-  }
+  override protected def nullSafeEval(sketch: Any, qs: Any): Any =
+    new GenericArrayData(TDigest.blob(sketch.asInstanceOf[Array[Byte]]).quantiles(doubles(qs)))
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
@@ -52,21 +60,19 @@ case class TDigestCdf(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "tdigest_cdf"
   override protected def nullSafeEval(sketch: Any, x: Any): Any =
-    TDigest.deserialize(sketch.asInstanceOf[Array[Byte]]).cdf(x.asInstanceOf[Double])
+    TDigest.blob(sketch.asInstanceOf[Array[Byte]]).cdf(x.asInstanceOf[Double])
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
 
 /** tdigest_cdfs(sketch, array<double>) → array<double>. */
 case class TDigestCdfs(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
+  extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback with DoublesArg {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "tdigest_cdfs"
-  override protected def nullSafeEval(sketch: Any, xs: Any): Any = {
-    val t = TDigest.deserialize(sketch.asInstanceOf[Array[Byte]])
-    new GenericArrayData(t.cdfs(xs.asInstanceOf[ArrayData].toDoubleArray()))
-  }
+  override protected def nullSafeEval(sketch: Any, xs: Any): Any =
+    new GenericArrayData(TDigest.blob(sketch.asInstanceOf[Array[Byte]]).cdfs(doubles(xs)))
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
@@ -81,15 +87,11 @@ case class TDigestHistogram(left: Expression, right: Expression)
     StructField("edges", ArrayType(DoubleType, containsNull = false), nullable = false)))
   override def prettyName: String = "tdigest_histogram"
   override protected def nullSafeEval(sketch: Any, bins: Any): Any = {
-    val t = TDigest.deserialize(sketch.asInstanceOf[Array[Byte]])
+    val t = TDigest.blob(sketch.asInstanceOf[Array[Byte]])
     val nb = bins.asInstanceOf[Int]
     if (nb < 1) throw new IllegalArgumentException("bins must be >= 1")
     val edges = t.histogramEdges(nb)
-    val hist = t.histogram(edges)
-    val row = new GenericInternalRow(2)
-    row.update(0, new GenericArrayData(hist))
-    row.update(1, new GenericArrayData(edges))
-    row
+    new GenericInternalRow(Array[Any](new GenericArrayData(t.histogram(edges)), new GenericArrayData(edges)))
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
@@ -97,19 +99,21 @@ case class TDigestHistogram(left: Expression, right: Expression)
 
 /** tdigest_histogram_at(sketch, array<double> edges) → array<double> hist. */
 case class TDigestHistogramAt(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
+  extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback with DoublesArg {
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "tdigest_histogram_at"
-  override protected def nullSafeEval(sketch: Any, edgesAny: Any): Any = {
-    val t = TDigest.deserialize(sketch.asInstanceOf[Array[Byte]])
-    val edges = edgesAny.asInstanceOf[ArrayData].toDoubleArray()
+  override protected def checkArg(edges: Array[Double]): Array[Double] = {
     require(edges.length >= 2, "need at least 2 edges")
     var i = 1
     while (i < edges.length) {
       require(edges(i) >= edges(i - 1), "bins must increase monotonically"); i += 1
     }
-    new GenericArrayData(t.histogram(edges))
+    edges
+  }
+  override protected def nullSafeEval(sketch: Any, edges: Any): Any = {
+    val t = TDigest.blob(sketch.asInstanceOf[Array[Byte]])
+    new GenericArrayData(t.histogram(doubles(edges)))
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
@@ -143,17 +147,12 @@ case class TDigestCentroids(child: Expression)
     StructField("weight", DoubleType, nullable = false))), containsNull = false)
   override def prettyName: String = "tdigest_centroids"
   override protected def nullSafeEval(sketch: Any): Any = {
-    val t = TDigest.deserialize(sketch.asInstanceOf[Array[Byte]])
-    t.flush()
-    val out = new Array[Any](t.nCentroids)
-    var i = 0
-    while (i < t.nCentroids) {
+    val t = TDigest.blob(sketch.asInstanceOf[Array[Byte]])
+    new GenericArrayData(Array.tabulate[Any](t.nCentroids) { i =>
       val r = new GenericInternalRow(2)
-      r.setDouble(0, t.means(i)); r.setDouble(1, t.weights(i))
-      out(i) = r
-      i += 1
-    }
-    new GenericArrayData(out)
+      r.setDouble(0, t.mean(i)); r.setDouble(1, t.weight(i))
+      r
+    })
   }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -165,7 +164,7 @@ case class TDigestStat(child: Expression, stat: String)
   override def dataType: DataType = DoubleType
   override def prettyName: String = s"tdigest_$stat"
   override protected def nullSafeEval(sketch: Any): Any = {
-    val t = TDigest.deserialize(sketch.asInstanceOf[Array[Byte]])
+    val t = TDigest.blob(sketch.asInstanceOf[Array[Byte]])
     stat match {
       case "size" => t.totalSize
       case "min" => t.minOrNaN

@@ -15,7 +15,7 @@ case class HllDistinct(child: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "hll_distinct"
   override protected def nullSafeEval(sketch: Any): Any =
-    Hll.deserialize(sketch.asInstanceOf[Array[Byte]]).estimate
+    Hll.estimate(sketch.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -28,7 +28,7 @@ case class HllNonzero(child: Expression)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "hll_nonzero"
   override protected def nullSafeEval(sketch: Any): Any =
-    Hll.deserialize(sketch.asInstanceOf[Array[Byte]]).nonzero
+    Hll.nonzero(sketch.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 

@@ -2,96 +2,42 @@ package graft.expr
 
 import graft.agg.StatsStruct
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.{TypeCheckResult, UnresolvedExtractValue}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.MathUtils
+import org.apache.spark.sql.graftshim
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-/** The summary_stats finishers, built once as Catalyst trees for both the
-  * Column DSL (graft.api.functions.stats_*) and the SQL function registry.
-  * Each finisher's tree reads the struct once through [[StatsChecked]], so
-  * it rejects what `stats_merge_agg` rejects, and its formula is plain
-  * codegen'd arithmetic over the fields. Field extraction is left
-  * unresolved so the analyzer resolves it against the actual struct, and
-  * the repeated aggregate child dedups in the Aggregate operator. */
-object StatsFinishers {
-  private def fld(st: Expression, n: String): Expression =
-    UnresolvedExtractValue(st, Literal(n))
-  private def d(x: Double): Expression = Literal(x)
-  private val nan: Expression = Literal(Double.NaN)
+/** stats_count, stats_sum, stats_min, stats_max, stats_mean, stats_var,
+  * stats_std, stats_skew or stats_kurt (by `stat`) as one node, for the
+  * Column DSL and SQL alike. It reads the struct once, checked
+  * ([[graft.agg.StatsStruct.fromRow]]), so it rejects what
+  * `stats_merge_agg` rejects; a NULL struct gives NULL. The struct must
+  * have the summary_stats field names and types in order. Its code is one
+  * static call, so a projection of finishers stays in whole-stage codegen.
+  * `ddof` applies to var and std, `bias` to skew and kurt, `fisher` to
+  * kurt; `ansi` is the session's ANSI mode when the node is built, as
+  * Catalyst's arithmetic records it. */
+case class StatsFinisher(child: Expression, stat: String, ddof: Int = 0, bias: Boolean = true,
+    fisher: Boolean = true, ansi: Boolean = SQLConf.get.ansiEnabled) extends UnaryExpression {
+  override def dataType: DataType = if (stat == "count") LongType else DoubleType
+  override def nullable: Boolean = child.nullable || (!ansi && (stat == "skew" || stat == "kurt"))
+  override def prettyName: String = s"stats_$stat"
 
-  private def emptyGuard(st: Expression, res: Expression): Expression =
-    If(EqualTo(fld(st, "count"), Literal(0L)), nan, res)
-
-  /** One stored field: count, sum, min or max. */
-  def field(st: Expression, name: String): Expression = StatsChecked(st, fld(st, name))
-
-  def mean(st: Expression): Expression =
-    StatsChecked(st, emptyGuard(st, Divide(fld(st, "sum"), Cast(fld(st, "count"), DoubleType))))
-
-  // IEEE division via pow(denom, -1): count == ddof → ±Inf/NaN (the
-  // reference's C semantics) instead of an ANSI-mode DIVIDE_BY_ZERO error
-  private def varianceOf(st: Expression, ddof: Int): Expression =
-    emptyGuard(st, Multiply(fld(st, "m2"),
-      Pow(Cast(Subtract(fld(st, "count"), Literal(ddof.toLong)), DoubleType),
-        Literal(-1.0))))
-
-  def variance(st: Expression, ddof: Int): Expression = StatsChecked(st, varianceOf(st, ddof))
-
-  def std(st: Expression, ddof: Int): Expression = StatsChecked(st, Sqrt(varianceOf(st, ddof)))
-
-  /** g1 = m3/m2^1.5 (0 when m2==0); bias=false applies the sample correction
-    * sqrt(n(n−1))/(n−2); NaN when the stream was homogeneous
-    * (stats_stubs.c:113-123). */
-  def skew(st: Expression, bias: Boolean): Expression = {
-    val n = Cast(fld(st, "count"), DoubleType)
-    val m2 = Divide(fld(st, "m2"), n)
-    val m3 = Divide(fld(st, "m3"), n)
-    val g1 = If(EqualTo(m2, d(0.0)), d(0.0), Divide(m3, Multiply(Sqrt(m2), m2)))
-    val res =
-      if (bias) g1
-      else If(And(GreaterThan(n, d(2.0)), GreaterThan(m2, d(0.0))),
-        Multiply(Divide(Sqrt(Multiply(Subtract(n, d(1.0)), n)), Subtract(n, d(2.0))), g1),
-        g1)
-    StatsChecked(st, If(fld(st, "homogeneous"), nan, res))
+  /** The call as written in SQL, options included. */
+  override def sql: String = {
+    val options = stat match {
+      case "var" | "std" => Seq(ddof)
+      case "skew" => Seq(bias)
+      case "kurt" => Seq(fisher, bias)
+      case _ => Nil
+    }
+    (child.sql +: options.map(_.toString)).mkString(s"$prettyName(", ", ", ")")
   }
 
-  /** g2 = m4/m2² (0 when m2==0); bias=false correction
-    * ((n²−1)g2 − 9n + 15)/((n−2)(n−3)); fisher subtracts 3
-    * (stats_stubs.c:126-136). */
-  def kurt(st: Expression, fisher: Boolean, bias: Boolean): Expression = {
-    val n = Cast(fld(st, "count"), DoubleType)
-    val m2 = Divide(fld(st, "m2"), n)
-    val m4 = Divide(fld(st, "m4"), n)
-    val g2 = If(EqualTo(m2, d(0.0)), d(0.0), Divide(m4, Multiply(m2, m2)))
-    val corrected =
-      if (bias) g2
-      else If(And(GreaterThan(n, d(3.0)), GreaterThan(m2, d(0.0))),
-        Divide(
-          Add(Subtract(Multiply(Subtract(Multiply(n, n), d(1.0)), g2),
-            Multiply(d(9.0), n)), d(15.0)),
-          Multiply(Subtract(n, d(2.0)), Subtract(n, d(3.0)))),
-        g2)
-    val res = if (fisher) Subtract(corrected, d(3.0)) else corrected
-    StatsChecked(st, If(fld(st, "homogeneous"), nan, res))
-  }
-}
-
-/** `result`, a finisher's formula over the summary_stats struct `left`,
-  * evaluated after one checked read of the struct
-  * ([[graft.agg.StatsStruct.fromRow]]): a NULL field, a negative count,
-  * min > max beside a positive count, or a negative m2 or m4 fails the
-  * row with an IllegalArgumentException. A NULL struct passes to the
-  * formula, which returns NULL. The struct must have the summary_stats
-  * fields, names and types; the node prints as its formula. */
-case class StatsChecked(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = right.dataType
-  override def nullable: Boolean = right.nullable
-  override def sql: String = right.sql
-
-  // the formula reads fields by name and the check by position
-  override def checkInputDataTypes(): TypeCheckResult = left.dataType match {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case s: StructType if StatsStruct.hasFieldTypes(s) &&
         s.fieldNames.sameElements(StatsStruct.schema.fieldNames) =>
       TypeCheckResult.TypeCheckSuccess
@@ -100,21 +46,72 @@ case class StatsChecked(left: Expression, right: Expression) extends BinaryExpre
         s"got ${other.simpleString}")
   }
 
-  override def eval(input: InternalRow): Any = {
-    val st = left.eval(input)
-    if (st != null) StatsStruct.fromRow(st.asInstanceOf[InternalRow])
-    right.eval(input)
+  override protected def nullSafeEval(st: Any): Any =
+    StatsFinishers.value(st.asInstanceOf[InternalRow], stat, ddof, bias, fisher, ansi)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, st => {
+      val v = ctx.freshName("stat")
+      s"""Object $v = graft.expr.StatsFinishers.value($st, "$stat", $ddof, $bias, $fisher, $ansi);
+         |${if (nullable) s"${ev.isNull} = $v == null; if (!${ev.isNull}) " else ""}
+         |${ev.value} = (${CodeGenerator.boxedType(dataType)}) $v;""".stripMargin
+    })
+
+  override protected def withNewChildInternal(c: Expression): StatsFinisher = copy(child = c)
+}
+
+/** The statistics in the arithmetic the finishers have always used, which
+  * was Catalyst's (each finisher was a tree of its expressions), not
+  * [[graft.core.MomentsSketch]]'s: variance is m2 * (n - ddof)^-1 through
+  * StrictMath.pow (n == ddof gives ±Inf or NaN), which can differ in the
+  * last bit from the kernel's m2 / (n - ddof); under ANSI mode n - ddof
+  * can overflow (ARITHMETIC_OVERFLOW) and a division by zero fails
+  * (DIVIDE_BY_ZERO), without it the latter reads as NULL. (Catalyst orders
+  * NaN above every number, but where m2 is NaN so is g, and either branch
+  * returns that NaN.) */
+object StatsFinishers {
+  /** `stat` of the struct `st`, after its checked read. */
+  def value(st: InternalRow, stat: String, ddof: Int, bias: Boolean, fisher: Boolean,
+      ansi: Boolean): Any = {
+    StatsStruct.fromRow(st)
+    val count = st.getLong(0)
+    stat match {
+      case "count" => count
+      case "sum" => st.getDouble(1)
+      case "min" => st.getDouble(2)
+      case "max" => st.getDouble(3)
+      case "mean" => if (count == 0L) Double.NaN else st.getDouble(1) / count.toDouble
+      case "var" => variance(st, ddof, ansi)
+      case "std" => math.sqrt(variance(st, ddof, ansi))
+      case _ if st.getBoolean(7) => Double.NaN // homogeneous: no skew or kurtosis
+      case _ if count == 0L => divideByZero(ansi)
+      case _ =>
+        // skew: g = m3/m2^1.5, kurt: g = m4/m2² (0 when m2 == 0), with m_k
+        // the k-th central moment over n (stats_stubs.c:113-136)
+        val skew = stat == "skew"
+        val n = count.toDouble
+        val m2 = st.getDouble(4) / n
+        val d = if (skew) math.sqrt(m2) * m2 else m2 * m2
+        if (m2 != 0.0 && d == 0.0) return divideByZero(ansi)
+        val g = if (m2 == 0.0) 0.0 else st.getDouble(if (skew) 5 else 6) / n / d
+        // bias=false: skew × sqrt(n(n−1))/(n−2), kurt ((n²−1)g − 9n + 15)/((n−2)(n−3))
+        val unbias = !bias && n > (if (skew) 2.0 else 3.0) && m2 > 0.0
+        if (skew) { if (unbias) math.sqrt((n - 1.0) * n) / (n - 2.0) * g else g }
+        else {
+          val k = if (unbias) ((n * n - 1.0) * g - 9.0 * n + 15.0) / ((n - 2.0) * (n - 3.0)) else g
+          if (fisher) k - 3.0 else k
+        }
+    }
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val st = left.genCode(ctx)
-    val res = right.genCode(ctx)
-    ev.copy(code = code"""
-      ${st.code}
-      if (!${st.isNull}) graft.agg.StatsStruct.fromRow(${st.value});
-      ${res.code}""", isNull = res.isNull, value = res.value)
+  private def variance(st: InternalRow, ddof: Int, ansi: Boolean): Double = {
+    val count = st.getLong(0)
+    if (count == 0L) Double.NaN
+    else {
+      val d = if (ansi) MathUtils.subtractExact(count, ddof.toLong) else count - ddof
+      st.getDouble(4) * StrictMath.pow(d.toDouble, -1.0)
+    }
   }
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StatsChecked =
-    copy(left = l, right = r)
+  private def divideByZero(ansi: Boolean): Any = if (ansi) throw graftshim.divideByZero() else null
 }

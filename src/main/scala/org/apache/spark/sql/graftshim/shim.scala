@@ -27,6 +27,9 @@ package object graftshim {
   def wrongNumArgs(name: String, expected: Seq[Int], actual: Int): Throwable =
     errors.QueryCompilationErrors.wrongNumArgsError(name, expected.map(_.toString), actual)
 
+  /** Catalyst's DIVIDE_BY_ZERO error, as its division raises it under ANSI mode. */
+  def divideByZero(): ArithmeticException = errors.QueryExecutionErrors.divideByZeroError(null)
+
   /** Driver-side collect in INTERNAL row representation (UnsafeRow copies)
     * — used to build broadcast lookup structures without a detour through
     * external Rows. */

@@ -7,10 +7,12 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import graft.expr.{SSCapacity, SSSize, SSTopK, StatsChecked}
-import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
+import graft.expr._
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GetStructField, Literal}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.{toColumn, toExpr}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import scala.util.{Failure, Random, Success, Try}
 
@@ -22,8 +24,8 @@ import scala.util.{Failure, Random, Success, Try}
   * out-of-order and impossible ones. Each codec accepts exactly what its
   * encoder writes: every blob either re-encodes to itself, byte for byte,
   * or is rejected with an IllegalArgumentException naming the kind, and
-  * the codec's other entry points (and the Space-Saving finishers, which
-  * read a blob in place) agree with it. The same inputs of the
+  * the codec's other entry points (and the Space-Saving, t-digest and HLL
+  * finishers, which read a blob in place) agree with it. The same inputs of the
   * five stored byte kinds then run through each merge aggregate (one- and
   * two-sketch groups) and each finisher in SQL; moments are stored as a
   * struct, which has tests of its own. */
@@ -134,15 +136,29 @@ class SketchCodecPropSpec extends SparkTestBase {
     bb.array()
   }
 
+  /** An object-arm Space-Saving blob of capacity 8 over string items. */
+  private def stringBlob(counters: Seq[(String, Long)]): Array[Byte] = {
+    val bb = ByteBuffer.allocate(9 + counters.map(20 + _._1.length).sum).order(ByteOrder.LITTLE_ENDIAN)
+    bb.put(SpaceSaving.TagString).putInt(8).putInt(counters.size)
+    counters.foreach { case (item, count) => bb.putInt(item.length).put(item.getBytes).putLong(count).putLong(0L) }
+    bb.array()
+  }
+
   /** The blobs that ran an executor out of memory or off the end of its
     * buffer before the decoders bounded their allocations, then blobs no
     * encoder writes that decoders once accepted and re-sorted. */
   private val probes: Map[String, Seq[Array[Byte]]] = Map(
     // [tag 1][capacity 2^31-1][size 0]; then counters (item, count, error)
-    // out of list order: count ascending, and error descending in a tie
+    // out of list order: count ascending, and error descending in a tie;
+    // then a repeated item alone, with trailing bytes, before an order
+    // fault (the duplicate is reported) and after one (the fault is)
     "space-saving" -> Seq(Array[Byte](1, -1, -1, -1, 127, 0, 0, 0, 0),
       leBlob(Array(SpaceSaving.TagLong), Seq(8, 2), Seq(1L, 1L, 0L, 2L, 5L, 0L)),
-      leBlob(Array(SpaceSaving.TagLong), Seq(8, 2), Seq(1L, 5L, 2L, 2L, 5L, 1L))),
+      leBlob(Array(SpaceSaving.TagLong), Seq(8, 2), Seq(1L, 5L, 2L, 2L, 5L, 1L)),
+      leBlob(Array(SpaceSaving.TagLong), Seq(8, 2), Seq(7L, 5L, 0L, 7L, 3L, 0L)),
+      stringBlob(Seq("a" -> 5L, "a" -> 3L)) :+ 0.toByte,
+      leBlob(Array(SpaceSaving.TagLong), Seq(8, 3), Seq(7L, 5L, 0L, 7L, 3L, 0L, 9L, 4L, 0L)),
+      leBlob(Array(SpaceSaving.TagLong), Seq(8, 3), Seq(1L, 5L, 0L, 2L, 6L, 0L, 1L, 4L, 0L))),
     // magic, depth 16, width 2^24, total 0
     "CMS" -> Seq(Array[Byte](0x43, 0, 0, 0, 16, 1, 0, 0, 0) ++ new Array[Byte](8)),
     // too short; then n > k; a repeated hash; hashes out of unsigned order
@@ -257,6 +273,86 @@ class SketchCodecPropSpec extends SparkTestBase {
     Seq(rows(3), rows(Int.MaxValue), s.size, s.capacity)
   }
 
+  private def bits(x: Double): Long = java.lang.Double.doubleToRawLongBits(x)
+  private def bits(xs: Array[Double]): Seq[Long] = xs.toSeq.map(bits)
+
+  private val centroidType = TDigestCentroids(Literal(Array.emptyByteArray)).dataType
+    .asInstanceOf[ArrayType].elementType
+
+  /** Probes: quantiles, cdf points and histogram edges. */
+  private case class TdProbes(qs: Array[Double], xs: Array[Double], edges: Array[Double])
+
+  private val fixedProbes = TdProbes(
+    Array(Double.NaN, -1.0, 0.0, 1e-9, 0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0, 2.0),
+    Array(Double.NaN, Double.NegativeInfinity, -3.0, -1.0, -0.0, 0.0, 0.5, 1.0, 2.5, Double.PositiveInfinity),
+    Array(-3.0, -1.0, 0.0, 0.5, 2.0, 10.0))
+
+  /** The fixed probes plus, for a digest, every centroid's mean, the points
+    * between neighbours, min and max and beyond, and the quantile at each
+    * centroid's mid-weight. */
+  private def probesFor(t: TDigest): TdProbes = {
+    val n = t.nCentroids
+    val means = t.means.take(n)
+    val mids = means.indices.map(i => t.weights.take(i).sum + t.weights(i) / 2.0)
+    val between = means.zip(means.drop(1)).map { case (a, b) => a + (b - a) / 3 }
+    TdProbes(fixedProbes.qs ++ mids.map(_ / t.totalWeight),
+      fixedProbes.xs ++ means ++ between ++ Seq(t.min, t.max, t.min - 1, t.max + 1), fixedProbes.edges)
+  }
+
+  /** Every t-digest finisher on a blob, evaluated in place (a constant
+    * probe array and a per-row one alike), each as its bits or its failure. */
+  private def tdFinishers(b: Array[Byte], p: TdProbes): Seq[Try[Any]] = {
+    val s = Literal(b)
+    def doubles(e: Expression, row: InternalRow = null) = bits(e.eval(row).asInstanceOf[ArrayData].toDoubleArray())
+    def perRow(f: (Expression, Expression) => Expression, xs: Array[Double]) =
+      doubles(f(s, BoundReference(0, ArrayType(DoubleType), nullable = false)),
+        InternalRow(new GenericArrayData(xs)))
+    Seq(
+      Try(p.qs.toSeq.map(q => bits(TDigestQuantile(s, Literal(q)).eval().asInstanceOf[Double]))),
+      Try(doubles(TDigestQuantiles(s, Literal(p.qs)))), Try(perRow(TDigestQuantiles, p.qs)),
+      Try(p.xs.toSeq.map(x => bits(TDigestCdf(s, Literal(x)).eval().asInstanceOf[Double]))),
+      Try(doubles(TDigestCdfs(s, Literal(p.xs)))), Try(perRow(TDigestCdfs, p.xs)),
+      Try(Seq(1, 3, 8).map { n =>
+        val r = TDigestHistogram(s, Literal(n)).eval().asInstanceOf[InternalRow]
+        (bits(r.getArray(0).toDoubleArray()), bits(r.getArray(1).toDoubleArray()))
+      }),
+      Try(doubles(TDigestHistogramAt(s, Literal(p.edges)))), Try(perRow(TDigestHistogramAt, p.edges)),
+      Try(TDigestCentroids(s).eval().asInstanceOf[ArrayData].toObjectArray(centroidType).toSeq
+        .map { case r: InternalRow => (bits(r.getDouble(0)), bits(r.getDouble(1))) }),
+      Try(Seq("size", "min", "max").map(st => bits(TDigestStat(s, st).eval().asInstanceOf[Double]))))
+  }
+
+  /** What the t-digest finishers read by decoding the digest and querying
+    * it with the prep-pass queries ([[FinisherReference.Prepped]]). */
+  private def tdDecoded(t: TDigest, p: TdProbes): Seq[Any] = {
+    val r = new FinisherReference.Prepped(t)
+    val orNaN = (x: Double) => if (t.totalWeight > 0) x else Double.NaN
+    Seq(bits(p.qs.map(r.quantile)), bits(p.qs.map(r.quantile)), bits(p.qs.map(r.quantile)),
+      bits(p.xs.map(r.cdf)), bits(p.xs.map(r.cdf)), bits(p.xs.map(r.cdf)),
+      Seq(1, 3, 8).map { n => val e = r.histogramEdges(n); (bits(r.histogram(e)), bits(e)) },
+      bits(r.histogram(p.edges)), bits(r.histogram(p.edges)),
+      (0 until t.nCentroids).map(i => (bits(t.means(i)), bits(t.weights(i)))),
+      Seq(bits(t.totalWeight + t.bufferedWeight), bits(orNaN(t.min)), bits(orNaN(t.max))))
+  }
+
+  private def hllFinishers(b: Array[Byte]): Seq[Try[Any]] =
+    Seq(Try(bits(HllDistinct(Literal(b)).eval().asInstanceOf[Double])), Try(HllNonzero(Literal(b)).eval()))
+
+  private def hllDecoded(h: Hll): Seq[Any] =
+    Seq(bits(FinisherReference.hllEstimate(h.registers)), h.registers.count(_ != 0))
+
+  /** The finishers that read a kind's blob in place, with what they read
+    * by decoding it; None for the kinds whose finishers decode. */
+  private def inPlace(k: Kind, b: Array[Byte]): Option[(Seq[Try[Any]], () => Seq[Any])] = k.word match {
+    case "space-saving" => Some((ssFinishers(b), () => ssDecoded(SpaceSaving.deserialize(b))))
+    case "t-digest" =>
+      val t = Try(TDigest.deserialize(b))
+      val p = t.map(probesFor).getOrElse(fixedProbes)
+      Some((tdFinishers(b, p), () => tdDecoded(t.get, p)))
+    case "HLL" => Some((hllFinishers(b), () => hllDecoded(Hll.deserialize(b))))
+    case _ => None
+  }
+
   test("kernels: every mutated blob round-trips or is rejected naming its kind") {
     for (k <- kinds; b <- mutations(k)) {
       val what = s"${k.word} blob ${b.take(40).mkString(",")} (${b.length} bytes)"
@@ -265,14 +361,13 @@ class SketchCodecPropSpec extends SparkTestBase {
           assert(out.toSeq == b.toSeq, s"$what: accepted bytes do not re-encode to themselves")
           assert(k.codec.checkSerialized(b) >= 0)
           k.codec.admit(b)
-          if (k.codec == SpaceSaving)
-            assert(ssFinishers(b).map(_.get) == ssDecoded(SpaceSaving.deserialize(b)), s"$what: finishers differ")
+          inPlace(k, b).foreach { case (got, decoded) =>
+            assert(got.map(_.get) == decoded(), s"$what: finishers differ") }
         case Failure(e) =>
           assert(rejects(k, e), s"$what: $e")
           assert(intercept[IllegalArgumentException](k.codec.admit(b)).getMessage == e.getMessage, what)
-          if (k.codec == SpaceSaving)
-            ssFinishers(b).foreach(f => assert(f.failed.toOption.exists(t =>
-              t.isInstanceOf[IllegalArgumentException] && t.getMessage == e.getMessage), s"$what: finishers fail differently"))
+          inPlace(k, b).foreach(_._1.foreach(f => assert(f.failed.toOption.exists(t =>
+            t.isInstanceOf[IllegalArgumentException] && t.getMessage == e.getMessage), s"$what: finishers fail differently")))
       }
       for (into <- k.valid) {
         val (viaBytes, viaSketch) = mergeBoth(k.codec, into, b)
@@ -290,6 +385,40 @@ class SketchCodecPropSpec extends SparkTestBase {
     for (k <- kinds; b <- probes.getOrElse(k.word, Nil))
       assert(Try(k.codec.deserialize(b)).failed.toOption.exists(rejects(k, _)),
         s"${k.word} probe ${b.mkString(",")} accepted")
+    // a Space-Saving blob with several faults reports the first in counter
+    // order, a duplicate among the counters read before an order fault
+    assert(probes("space-saving").takeRight(4).map(b =>
+      Try(SpaceSaving.deserialize(b)).failed.get.getMessage.stripPrefix("requirement failed: ")) ==
+      Seq.fill(3)("corrupt space-saving sketch: duplicate items found") :+
+        "corrupt space-saving sketch: counter 1 out of list order")
+  }
+
+  test("t-digest and HLL finishers read random blobs as decoding and querying them did, bit for bit") {
+    val r = new Random(0x7d1935)
+    val digests = (0 until 240).map { i =>
+      val t = TDigest(Seq(20.0, 50.0, 100.0, 300.0, 1000.0)(i % 5))
+      val n = Seq(0, 1, 2, 3, 10, 100, 1000, 5000)(r.nextInt(8))
+      // few distinct values give runs of equal means
+      val distinct = if (r.nextBoolean()) 1 + r.nextInt(6) else 0
+      (0 until n).foreach { _ =>
+        val x = if (distinct > 0) r.nextInt(distinct).toDouble else r.nextGaussian() * math.pow(10, r.nextInt(7) - 3)
+        t.add(x, if (r.nextBoolean()) 1.0 else 0.25 + r.nextDouble() * 4)
+      }
+      if (i % 7 == 0) { val o = TDigest(t.compression); (0 until 50).foreach(_ => o.add(r.nextGaussian())); t.merge(o) }
+      t.serialize()
+    }
+    val tdKind = kinds.find(_.word == "t-digest").get
+    for (b <- digests) {
+      val (got, decoded) = inPlace(tdKind, b).get
+      assert(got.map(_.get) == decoded(), s"t-digest of ${b.length} bytes")
+    }
+    val hllKind = kinds.find(_.word == "HLL").get
+    for (p <- 4 to 16; fill <- Seq(0, 1, 10, 3 << p)) {
+      val h = new Hll(p)
+      (0 until fill).foreach(_ => h.add(r.nextLong()))
+      val (got, decoded) = inPlace(hllKind, h.serialize()).get
+      assert(got.map(_.get) == decoded(), s"HLL p=$p after $fill adds")
+    }
   }
 
   test("t-digest: impossible weights and bounds are rejected alike by every entry point") {
@@ -469,13 +598,107 @@ class SketchCodecPropSpec extends SparkTestBase {
         m.kurt(true, false)))
       assert(got(1).toSeq.forall(_ == null))
     }
-    // SQL too; and each finisher's tree reads the struct once
+    // SQL too; and each finisher is one node, the struct's one checked
+    // read: nothing else in the plan reads a field of it
     assert(Try(spark.sql(s"SELECT stats_kurt(s) FROM (SELECT ${statsStruct("m4" -> "-1")} AS s)").collect())
       .failed.toOption.exists(causes(_).exists(_.getMessage.contains("corrupt summary_stats"))))
     for ((name, f) <- statsFinishers) {
       val plan = statsFrame(statsRow()).select(f(col("s"))).queryExecution.analyzed
-      assert(plan.expressions.map(_.collect { case c: StatsChecked => c }.size).sum == 1, name)
+      assert(plan.expressions.map(_.collect { case c: StatsFinisher => c }.size).sum == 1, name)
+      assert(plan.expressions.forall(_.collect { case g: GetStructField => g }.isEmpty), name)
     }
+  }
+
+  /** Every stats finisher variant: its name, the node, and its Catalyst
+    * formula tree ([[FinisherReference.StatsTrees]]). Each is built when called, under the session's ANSI mode. */
+  private def statsVariants: Seq[(String, Expression => Expression, Expression => Expression)] = {
+    import FinisherReference.StatsTrees
+    Seq("count", "sum", "min", "max").map(f =>
+      (f, (e: Expression) => StatsFinisher(e, f), (e: Expression) => StatsTrees.field(e, f))) ++
+      Seq(("mean", StatsFinisher(_: Expression, "mean"), StatsTrees.mean _)) ++
+      Seq(0, 1, 2, 5, -1, Int.MinValue).flatMap(d => Seq(
+        (s"var ddof $d", StatsFinisher(_: Expression, "var", d), StatsTrees.variance(_: Expression, d)),
+        (s"std ddof $d", StatsFinisher(_: Expression, "std", d), StatsTrees.std(_: Expression, d)))) ++
+      Seq(true, false).map(b =>
+        (s"skew bias $b", StatsFinisher(_: Expression, "skew", bias = b), StatsTrees.skew(_: Expression, b))) ++
+      (for (f <- Seq(true, false); b <- Seq(true, false)) yield (s"kurt fisher $f bias $b",
+        StatsFinisher(_: Expression, "kurt", bias = b, fisher = f), StatsTrees.kurt(_: Expression, f, b)))
+  }
+
+  /** Structs in one partition, scanned from an RDD: no exchange, and no
+    * optimizer rule evaluates a projection over them at planning. */
+  private def scannedStats(structs: Seq[Row]) =
+    spark.createDataFrame(spark.sparkContext.parallelize(structs.map(Row(_)), 1),
+      StructType(Seq(StructField("s", nullableStats))))
+
+  /** A cell as comparable bits, or the condition of the error it raised. */
+  private def outcome(c: => Any): Any = Try(c) match {
+    case Success(d: Double) => bits(d)
+    case Success(v) => v
+    case Failure(e) => causes(e).collectFirst { case t: SparkThrowable if t.getCondition != null => t.getCondition }
+      .getOrElse(e.toString)
+  }
+
+  test("stats finishers: each node computes the bits and raises the errors of the Catalyst formula trees") {
+    val r = new Random(0x57a7)
+    // encoder outputs: Gaussian at random scales, NaNs and infinities mixed
+    // in, near-constant, constant, weighted, and counts 1-5 (= ddof)
+    val input = (0 until 3000).map { i =>
+      val g = i % 75
+      val x = g % 5 match {
+        case 0 => r.nextGaussian() * math.pow(10, r.nextInt(12) - 6)
+        case 1 => if (r.nextInt(8) == 0) Double.NaN else if (r.nextInt(40) == 0) Double.PositiveInfinity else r.nextGaussian()
+        case 2 => 1e9 + r.nextGaussian() * 1e-7
+        case 3 => 42.0
+        case _ => r.nextGaussian()
+      }
+      (g, x, if (r.nextBoolean()) 1L else 1L + r.nextInt(1000))
+    } ++ (1 to 5).flatMap(n => (0 until n).map(j => (100 + n, j * 1.5, 1L)))
+    val encoded = input.toDF("g", "x", "c").groupBy("g").agg(gf.summary_stats(col("x"), col("c")).as("s"))
+      .collect().map(_.getStruct(1)).toSeq
+    val nan = Double.NaN
+    // hand-built structs the checked read accepts: empty, NaN and infinite
+    // moments, negative zeros, m2 zero beside a spread; then those whose
+    // formulas divide by zero or overflow under ANSI mode (count 0 beside a
+    // spread, an m2 whose powers underflow, a count that n - ddof overflows)
+    val valid = encoded ++ Seq(
+      statsRow("count" -> 0L, "sum" -> 0.0, "min" -> nan, "max" -> nan, "m2" -> 0.0, "m4" -> 0.0,
+        "homogeneous" -> true, "first_value" -> 0.0),
+      statsRow("m2" -> nan, "m3" -> nan, "m4" -> nan), statsRow("m2" -> Double.PositiveInfinity),
+      statsRow("m3" -> Double.NegativeInfinity), statsRow("sum" -> Double.PositiveInfinity),
+      statsRow("m2" -> -0.0, "m4" -> -0.0), statsRow("m2" -> 0.0), statsRow("count" -> 4L, "m2" -> 0.0),
+      statsRow("count" -> 5L, "m2" -> 1e-100, "m4" -> 1e-200))
+    val failing = Seq(statsRow("count" -> 0L), statsRow("m2" -> 1e-300, "m4" -> 0.0),
+      statsRow("count" -> Long.MaxValue))
+    val variants = statsVariants
+    for (ansi <- Seq(true, false)) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      try {
+        val s = toExpr(col("s"))
+        val nodes = variants.map(v => toColumn(v._2(s)))
+        val trees = variants.map(v => toColumn(v._3(s)))
+        bothPaths {
+          // without ANSI mode nothing fails: the failing structs read as NULL or wrap
+          val bulk = if (ansi) valid else valid ++ failing
+          val rows = scannedStats(bulk).select(nodes ++ trees: _*).collect()
+          for ((row, st) <- rows.zip(bulk); i <- variants.indices)
+            assert(outcome(row.get(i)) == outcome(row.get(i + variants.size)), s"${variants(i)._1} ansi=$ansi $st")
+          if (ansi) for (st <- failing; i <- variants.indices) {
+            def cell(c: Column) = outcome(scannedStats(Seq(st)).select(c).collect()(0).get(0))
+            assert(cell(nodes(i)) == cell(trees(i)), s"${variants(i)._1} $st")
+          }
+        }
+      } finally spark.conf.unset("spark.sql.ansi.enabled")
+    }
+    // the failing structs fail with each kind of error somewhere
+    val errors = failing.flatMap(st => variants.map(v =>
+      outcome(scannedStats(Seq(st)).select(toColumn(v._2(toExpr(col("s"))))).collect()(0).get(0))))
+    assert(errors.contains("DIVIDE_BY_ZERO") && errors.contains("ARITHMETIC_OVERFLOW"), errors.distinct)
+    // a projection of finishers alone stays in whole-stage codegen
+    val df = scannedStats(valid).select(gf.stats_mean(col("s")), gf.stats_kurt(col("s")))
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert("""\*\(\d+\) Project""".r.findFirstIn(plan).isDefined && !plan.contains("CodegenFallback"), plan)
   }
 
   /** The unchecked decode structs once had: the fields as they are, NaN
@@ -490,7 +713,7 @@ class SketchCodecPropSpec extends SparkTestBase {
     m
   }
 
-  private def bits(r: Row): Seq[Long] = Seq(r.getLong(0)) ++
+  private def structBits(r: Row): Seq[Long] = Seq(r.getLong(0)) ++
     (1 to 6).map(i => java.lang.Double.doubleToRawLongBits(r.getDouble(i))) ++
     Seq(if (r.getBoolean(7)) 1L else 0L, java.lang.Double.doubleToRawLongBits(r.getDouble(8)))
 
@@ -527,13 +750,13 @@ class SketchCodecPropSpec extends SparkTestBase {
     val rows = stored.map(row => Row(row.getInt(0) % 4, row.getStruct(1))).toSeq
     val got = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1)
       .groupBy("k").agg(gf.stats_merge_agg(col("s"))).collect()
-      .map(row => row.getInt(0) -> bits(row.getStruct(1))).toMap
+      .map(row => row.getInt(0) -> structBits(row.getStruct(1))).toMap
     (0 until 4).foreach { k =>
       val partial = new MomentsSketch
       rows.filter(_.getInt(0) == k).foreach(row => partial.merge(unchecked(row.getStruct(1))))
       val fin = new MomentsSketch
       fin.merge(partial)
-      assert(got(k) == bits(Row.fromSeq(StatsStruct.toRow(fin).toSeq(StatsStruct.schema))), s"k=$k")
+      assert(got(k) == structBits(Row.fromSeq(StatsStruct.toRow(fin).toSeq(StatsStruct.schema))), s"k=$k")
     }
   }
 
